@@ -6980,7 +6980,7 @@ ORDER BY score_x10k DESC, doc_id ASC LIMIT 10
 def wand_grouped_boolean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped boolean on the PHYSICAL segment path:
     '+(spark table^2) -slow data' compiled to per-segment ordinal-set
-    algebra (query/wand.py _search_grouped; quantized norms)."""
+    algebra (query/wand.py PhysicalIndex.search; quantized norms)."""
     from solr_spark.query.wand import open_index
 
     d = _phys_index_dir(spark, sf_dir)
@@ -8407,7 +8407,7 @@ tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
 model AS (SELECT term, sum(tf) AS ctf FROM tf GROUP BY term),
 tot AS (SELECT sum(ctf) AS t FROM model),
 sc AS (
-  SELECT tf.doc_id, sum(tf.tf) AS n_tokens,
+  SELECT tf.doc_id, CAST(sum(tf.tf) AS BIGINT) AS n_tokens,
          -sum(tf.tf * (log2(model.ctf) - log2(tot.t))) / sum(tf.tf) AS nll
   FROM tf JOIN model USING (term), tot GROUP BY tf.doc_id)
 SELECT doc_id AS id, n_tokens, {_sql_scaled('pow(2.0, nll)', 2)} AS ppl_x100
@@ -8964,7 +8964,7 @@ CATALOG["gaussfit_price_hist"].sql = _gaussfit_sql()
 WITH {TOKS},
 dl AS (SELECT doc_id, count(*) AS n_tok FROM toks GROUP BY doc_id),
 per AS (SELECT d.source AS source, count(*) AS n_docs,
-               sum(coalesce(dl.n_tok, 0)) AS tokens
+               CAST(sum(coalesce(dl.n_tok, 0)) AS BIGINT) AS tokens
         FROM documents d LEFT JOIN dl ON dl.doc_id = d.doc_id
         GROUP BY d.source),
 tot AS (SELECT sum(tokens) AS t, count(*) AS g FROM per)

@@ -205,29 +205,7 @@ def _invert_partition(
             np.asarray(term_pay[term], dtype=np.float32)
             if store_payloads else None
         )
-        enc = encode_postings(o, t, pn, positions=pos, payloads=pay)
-        # The norm byte rides WITH the postings (1 byte per posting, like
-        # Lucene's impact pairs): scoring then never touches the doc table —
-        # the doc table is consulted only to map the winning top-k ords back
-        # to docids via a filtered read.
-        n_blk = len(enc.block_first_ord)
-        rows.append(
-            (
-                term, enc.df, enc.ttf, enc.gaps, enc.tfs, pn.tobytes(),
-                enc.block_first_ord.tolist(), enc.block_last_ord.tolist(),
-                enc.block_gap_off.tolist(), enc.block_tf_off.tolist(),
-                enc.block_max_tf.tolist(),
-                enc.block_min_norm.astype(np.int32).tolist(),
-                enc.poss,
-                enc.block_pos_off.tolist() if enc.block_pos_off is not None
-                else [0] * n_blk,
-                enc.pays,
-                enc.block_pay_off.tolist() if enc.block_pay_off is not None
-                else [0] * n_blk,
-                [float(x) for x in enc.block_max_pay]
-                if enc.block_max_pay is not None else [0.0] * n_blk,
-            )
-        )
+        rows.append(_term_row(term, o, t, pn, pos, pay))
     postings = pd.DataFrame(
         rows, columns=_POSTINGS_COLS[2:]
     )
@@ -240,6 +218,45 @@ def _invert_partition(
         }
     )
     return docs, postings
+
+
+def _term_row(
+    term: str,
+    ords: np.ndarray,
+    tfs: np.ndarray,
+    norms: np.ndarray,
+    positions: np.ndarray | None,
+    payloads: np.ndarray | None,
+) -> tuple:
+    """One postings row (the _POSTINGS_COLS after p/gen) of a term's
+    postings; block offsets of absent position/payload streams are zeros.
+
+    The norm byte rides WITH the postings (1 byte per posting, like
+    Lucene's impact pairs): scoring then never touches the doc table — the
+    doc table is consulted only to map the winning top-k ords back to
+    docids via a filtered read."""
+    enc = encode_postings(ords, tfs, norms, positions=positions, payloads=payloads)
+    n_blk = len(enc.block_first_ord)
+    return (
+        term, enc.df, enc.ttf, enc.gaps, enc.tfs, norms.tobytes(),
+        enc.block_first_ord.tolist(), enc.block_last_ord.tolist(),
+        enc.block_gap_off.tolist(), enc.block_tf_off.tolist(),
+        enc.block_max_tf.tolist(),
+        enc.block_min_norm.astype(np.int32).tolist(),
+        enc.poss,
+        enc.block_pos_off.tolist() if enc.block_pos_off is not None
+        else [0] * n_blk,
+        enc.pays,
+        enc.block_pay_off.tolist() if enc.block_pay_off is not None
+        else [0] * n_blk,
+        [float(x) for x in enc.block_max_pay]
+        if enc.block_max_pay is not None else [0.0] * n_blk,
+    )
+
+
+def _docid_checksum(docids: np.ndarray) -> int:
+    """XOR of a segment's docids: the manifest's order-free lineage check."""
+    return int(np.bitwise_xor.reduce(docids.astype(np.uint64)) or 0)
 
 
 def _write_segment(
@@ -341,7 +358,7 @@ def _build_one(index_dir: str, generation: int, analyzer: str,
     final = _seg_dir(index_dir, p, generation)
     mpath = os.path.join(final, "manifest.json")
     docids = pdf["docid"].to_numpy(dtype=np.int64)
-    checksum = int(np.bitwise_xor.reduce(docids.astype(np.uint64)) or 0)
+    checksum = _docid_checksum(docids)
     if os.path.exists(mpath):
         with open(mpath) as f:
             m = json.load(f)
@@ -650,29 +667,7 @@ def merge_index(
                             new_pay = np.concatenate(
                                 [pay_all[starts_all[j]:ends_all[j]] for j in so]
                             )
-                    enc = encode_postings(
-                        o, t, pn, positions=new_flat, payloads=new_pay
-                    )
-                    n_blk = len(enc.block_first_ord)
-                    rows.append(
-                        (
-                            term, enc.df, enc.ttf, enc.gaps, enc.tfs, pn.tobytes(),
-                            enc.block_first_ord.tolist(), enc.block_last_ord.tolist(),
-                            enc.block_gap_off.tolist(), enc.block_tf_off.tolist(),
-                            enc.block_max_tf.tolist(),
-                            enc.block_min_norm.astype(np.int32).tolist(),
-                            enc.poss,
-                            enc.block_pos_off.tolist()
-                            if enc.block_pos_off is not None
-                            else [0] * n_blk,
-                            enc.pays,
-                            enc.block_pay_off.tolist()
-                            if enc.block_pay_off is not None
-                            else [0] * n_blk,
-                            [float(x) for x in enc.block_max_pay]
-                            if enc.block_max_pay is not None else [0.0] * n_blk,
-                        )
-                    )
+                    rows.append(_term_row(term, o, t, pn, new_flat, new_pay))
                 postings = pd.DataFrame(rows, columns=_POSTINGS_COLS[2:])
                 docs = pd.DataFrame(
                     {
@@ -682,13 +677,9 @@ def merge_index(
                         "norm": norms.astype(np.int32),
                     }
                 )
-                checksum = int(
-                    np.bitwise_xor.reduce(
-                        docs["docid"].to_numpy(dtype=np.int64).astype(np.uint64)
-                    ) or 0
-                )
                 m = _write_segment(
-                    out_dir, p, 0, docs, postings, checksum, time.time() - t0,
+                    out_dir, p, 0, docs, postings,
+                    _docid_checksum(docs["docid"].to_numpy()), time.time() - t0,
                     store_positions=merged_has_positions,
                     store_payloads=merged_has_payloads,
                 )

@@ -88,7 +88,7 @@ def weight_map_col(weights: list[tuple[str, float]]) -> "F.Column":
     string literal (quotes, backslashes, control chars) and non-finite
     weights fall back to the per-element form. Keys must be unique —
     every caller folds duplicate query terms into the weight driver-side
-    (query_weights) or draws from a set.
+    (fold_term_weights) or draws from a set.
     """
     vs = [float(w) for _, w in weights]
     safe = all(
@@ -107,31 +107,42 @@ def weight_map_col(weights: list[tuple[str, float]]) -> "F.Column":
     return F.create_map(*args)
 
 
+def fold_term_weights(
+    terms: list[str],
+    dfs: dict[str, int],
+    n_docs: int,
+    boost: float = 1.0,
+) -> list[tuple[str, float]]:
+    """Per-term weights idf × query-tf × boost, sorted by term; terms absent
+    from ``dfs`` are dropped.
+
+    Duplicate query terms are separate clauses in Lucene, i.e. the term's
+    contribution is added once per occurrence — folded into the weight.
+    """
+    return [
+        (t, boost * c * idf(n_docs, dfs[t]))
+        for t, c in sorted(Counter(terms).items())
+        if t in dfs
+    ]
+
+
 def query_weights(
     index: IndexTables,
     terms: list[str],
     n_docs: int,
     boost: float = 1.0,
 ) -> list[tuple[str, float]]:
-    """Driver-side per-term weights: idf × query-tf × boost.
-
-    Duplicate query terms are separate clauses in Lucene, i.e. the term's
-    contribution is added once per occurrence — folded into the weight.
-    """
+    """Driver-side per-term weights of the logical index (fold_term_weights
+    over its term stats)."""
     if not terms:
         return []
-    counts = Counter(terms)
-    stats = {
+    dfs = {
         r["term"]: r["df"]
         for r in index.term_stats()
-        .where(F.col("term").isin(list(counts)))
+        .where(F.col("term").isin(sorted(set(terms))))
         .collect()
     }
-    return [
-        (t, boost * c * idf(n_docs, stats[t]))
-        for t, c in sorted(counts.items())
-        if t in stats
-    ]
+    return fold_term_weights(terms, dfs, n_docs, boost)
 
 
 def bm25_score_df(

@@ -97,7 +97,8 @@ def phrase_match_df(
     A slot may be a LIST of alternative terms (Lucene SpanOr inside a
     SpanNear — the complexphrase parser's wildcard-in-phrase rewrite): the
     slot's positions are the sorted union of the alternatives' positions in
-    that doc. Requires ``index.has_positions``.
+    that doc. Requires ``index.has_positions``. A one-term phrase is a term
+    query (Lucene PhraseQuery.rewrite), so its slop is ignored.
     """
     if not index.has_positions:
         raise ValueError(
@@ -106,6 +107,8 @@ def phrase_match_df(
         )
     if not terms:
         raise ValueError("empty phrase")
+    if len(terms) == 1:
+        slop = 0
     parts = []
     for i, t in enumerate(terms):
         if isinstance(t, str):

@@ -1,7 +1,24 @@
 """Top-k BM25 over the physical segment index, with block-max pruning.
 
-The per-partition scorer is the batch adaptation of block-max WAND
-(reference touch-points: Solr enables Lucene's WAND via minExactCount —
+Every physical query (term ``topk``, boolean ``search``, ``phrase_topk``,
+``payload_topk``) has the same Spark shape: the query's postings rows are
+scanned with a pushed-down term filter, ONE applyInPandas stage runs one
+task per segment partition p, and the global merge is ORDER BY score DESC,
+docid ASC LIMIT k (TakeOrderedAndProject — Spark's built-in two-phase
+top-k, the analogue of Solr's PURPOSE_GET_TOP_IDS merge,
+QueryComponent.java:833-1040).
+
+Inside the task, the BM25 query kinds share one per-segment top-k path
+(``_segment_topk``): each generation's postings rows go to the kind's own
+scorer, which returns (ordinals, scores); the path keeps every doc tied
+with the k-th best score and maps the survivors' ordinals to docids. The
+scorers are ``_term_scores`` (block-max WAND), ``_tree_scores`` (grouped
+boolean ordinal-set algebra) and ``_phrase_scores`` (positions).
+``_payload_partition`` keeps one threshold across generations, so it runs
+its own partition loop and shares only the stage and the result frame.
+
+The term scorer is the batch adaptation of block-max WAND (reference
+touch-points: Solr enables Lucene's WAND via minExactCount —
 handler/component/QueryComponent.java:424-428, TopScoreDocCollector with a
 hits threshold — search/SolrIndexSearcher.java:1508-1525; the block-max
 machinery itself is Lucene's, rebuilt here from the published algorithm
@@ -20,10 +37,12 @@ machinery itself is Lucene's, rebuilt here from the published algorithm
    with partially-skipped blocks accumulate understated scores that are
    still < θ, so they cannot displace the (≥ k) docs scoring ≥ θ. The
    returned top-k is therefore EXACT (proof mirrors WAND's invariant).
-4. Accumulation is one np.add.at over decoded ordinals; partition top-k via
-   argpartition; the global merge is ORDER BY score DESC, docid ASC LIMIT k
-   (TakeOrderedAndProject — Spark's built-in two-phase top-k, the analogue
-   of Solr's PURPOSE_GET_TOP_IDS merge, QueryComponent.java:833-1040).
+4. Accumulation is one np.add.at over decoded ordinals.
+
+A repeated query term is a separate clause, as in Lucene: its weight is
+folded into w_t once per occurrence (query.bm25.fold_term_weights, shared
+with the logical path). A phrase that analyzes to one term runs at slop 0,
+as Lucene's PhraseQuery.rewrite turns it into a TermQuery.
 
 Scores use the SmallFloat-QUANTIZED doc length (Lucene parity). The norm
 byte travels INSIDE the posting list (1 byte per posting, like Lucene's
@@ -39,14 +58,24 @@ exact and the tiebreak (score desc, docid asc) is total.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from solr_spark.index.codec import BLOCK_SIZE, decode_blocks, decode_postings
+from solr_spark.index.codec import (
+    BLOCK_SIZE,
+    decode_blocks,
+    decode_positions,
+    decode_postings,
+)
 from solr_spark.index.norms import DECODE_TABLE
-from solr_spark.query.bm25 import idf
+from solr_spark.query.bm25 import fold_term_weights, idf
+
+_RESULT_SCHEMA = "docid long, score double"
+_NO_HITS = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
 
 
 def _contrib(tf, dl, k1: float, b: float, avgdl: float):
@@ -82,108 +111,124 @@ def _lookup_docids(
     return np.array([m[int(o)] for o in ords], dtype=np.int64)
 
 
-def _score_partition(
-    postings: pd.DataFrame,
+def _result_frame(
+    docids: list[np.ndarray], scores: list[np.ndarray]
+) -> pd.DataFrame:
+    """One task's (docid, score) output, typed even when it is empty."""
+    if not docids:
+        return pd.DataFrame({"docid": pd.Series(dtype="int64"),
+                             "score": pd.Series(dtype="float64")})
+    return pd.DataFrame(
+        {"docid": np.concatenate(docids), "score": np.concatenate(scores)}
+    )
+
+
+def _segment_topk(
+    score_gen, k: int, postings: pd.DataFrame, index_dir: str, p: int
+) -> pd.DataFrame:
+    """The per-segment top-k path of every BM25 query kind: score each
+    generation of partition ``p`` with ``score_gen`` (its postings rows ->
+    (ordinals, scores)), keep the segment's top k, and map the kept
+    ordinals to docids."""
+    out_docids: list[np.ndarray] = []
+    out_scores: list[np.ndarray] = []
+    for gen, pg in postings.groupby("gen", sort=True):
+        ords, scores = score_gen(pg)
+        if scores.size > k:
+            # Keep EVERY doc tied with the k-th best score (argpartition alone
+            # picks an arbitrary subset of boundary ties, which could drop a
+            # tied doc with a smaller docid before the global
+            # (score desc, docid asc) merge — breaking rank-identity).
+            kth = np.partition(scores, -k)[-k]
+            keep = scores >= kth
+            ords, scores = ords[keep], scores[keep]
+        if ords.size:
+            out_docids.append(_lookup_docids(index_dir, p, int(gen), ords))
+            out_scores.append(scores)
+    return _result_frame(out_docids, out_scores)
+
+
+def _term_scores(
+    pg: pd.DataFrame,
     weights: dict[str, float],
     k: int,
     k1: float,
     b: float,
     avgdl: float,
     use_wand: bool,
-    index_dir: str,
-    p: int,
-) -> pd.DataFrame:
-    out_docids: list[np.ndarray] = []
-    out_scores: list[np.ndarray] = []
-    for gen, pg in postings.groupby("gen", sort=True):
-        rows = []
-        for _, r in pg.iterrows():
-            w = weights[r["term"]]
-            bmax_tf = np.asarray(r["block_max_tf"], dtype=np.float64)
-            bmin_dl = DECODE_TABLE[np.asarray(r["block_min_norm"], dtype=np.int64)]
-            ub = w * _contrib(bmax_tf, bmin_dl.astype(np.float64), k1, b, avgdl)
-            rows.append((r, w, ub, float(ub.max())))
+) -> tuple[np.ndarray, np.ndarray]:
+    """Block-max WAND over one generation's postings rows of the query
+    terms (steps 1-4 of the module docstring)."""
+    rows = []
+    for _, r in pg.iterrows():
+        w = weights[r["term"]]
+        bmax_tf = np.asarray(r["block_max_tf"], dtype=np.float64)
+        bmin_dl = DECODE_TABLE[np.asarray(r["block_min_norm"], dtype=np.int64)]
+        ub = w * _contrib(bmax_tf, bmin_dl.astype(np.float64), k1, b, avgdl)
+        rows.append((r, w, ub, float(ub.max())))
 
-        if use_wand and len(rows) > 1:
-            # Seed θ from the term with the fewest postings in this segment.
-            seed_i = min(range(len(rows)), key=lambda i: rows[i][0]["df"])
-        else:
-            seed_i = None
+    if use_wand and len(rows) > 1:
+        # Seed θ from the term with the fewest postings in this segment.
+        seed_i = min(range(len(rows)), key=lambda i: rows[i][0]["df"])
+    else:
+        seed_i = None
 
-        theta = -np.inf
-        decoded: list[tuple[np.ndarray, np.ndarray, np.ndarray, float]] = []
-        if seed_i is not None:
-            r, w, _, _ = rows[seed_i]
-            o, t, nrm = _decode_all(r)
-            s = w * _contrib(
-                t.astype(np.float64), DECODE_TABLE[nrm].astype(np.float64),
-                k1, b, avgdl,
-            )
-            if s.size >= k:
-                theta = float(np.partition(s, -k)[-k])
-            decoded.append((o, t, nrm, w))
-            gmax_sum = sum(x[3] for i, x in enumerate(rows) if i != seed_i)
+    theta = -np.inf
+    decoded: list[tuple[np.ndarray, np.ndarray, np.ndarray, float]] = []
+    if seed_i is not None:
+        r, w, _, _ = rows[seed_i]
+        o, t, nrm = _decode_all(r)
+        s = w * _contrib(
+            t.astype(np.float64), DECODE_TABLE[nrm].astype(np.float64),
+            k1, b, avgdl,
+        )
+        if s.size >= k:
+            theta = float(np.partition(s, -k)[-k])
+        decoded.append((o, t, nrm, w))
+        gmax_sum = sum(x[3] for i, x in enumerate(rows) if i != seed_i)
 
-        for i, (r, w, ub, _) in enumerate(rows):
-            if i == seed_i:
-                continue
-            if seed_i is not None and theta > -np.inf:
-                others = gmax_sum - rows[i][3] + rows[seed_i][3]
-                keep = np.flatnonzero(ub + others >= theta)
-            else:
-                keep = np.arange(ub.size)
-            if keep.size == 0:
-                continue
-            if keep.size == ub.size:
-                o, t, nrm = _decode_all(r)
-            else:
-                df_ = int(r["df"])
-                o, t = decode_blocks(
-                    r["gaps"], r["tfs"], keep,
-                    np.asarray(r["block_first_ord"], dtype=np.int64),
-                    np.asarray(r["block_gap_off"], dtype=np.int64),
-                    np.asarray(r["block_tf_off"], dtype=np.int64),
-                    df_,
-                )
-                all_norms = np.frombuffer(r["norms"], dtype=np.uint8)
-                nrm = np.concatenate(
-                    [
-                        all_norms[bi * BLOCK_SIZE : min((bi + 1) * BLOCK_SIZE, df_)]
-                        for bi in keep
-                    ]
-                )
-            decoded.append((o, t, nrm, w))
-
-        if not decoded:
+    for i, (r, w, ub, _) in enumerate(rows):
+        if i == seed_i:
             continue
-        size = int(max(o.max() for o, _, _, _ in decoded if o.size)) + 1
-        acc = np.zeros(size, dtype=np.float64)
-        for o, t, nrm, w in decoded:
-            acc_contrib = w * _contrib(
-                t.astype(np.float64), DECODE_TABLE[nrm].astype(np.float64),
-                k1, b, avgdl,
-            )
-            np.add.at(acc, o, acc_contrib)
-        nz = np.flatnonzero(acc > 0)
-        if nz.size > k:
-            # Keep EVERY doc tied with the k-th best score (argpartition alone
-            # picks an arbitrary subset of boundary ties, which could drop a
-            # tied doc with a smaller docid before the global
-            # (score desc, docid asc) merge — breaking rank-identity).
-            kth = np.partition(acc[nz], -k)[-k]
-            top = nz[acc[nz] >= kth]
+        if seed_i is not None and theta > -np.inf:
+            others = gmax_sum - rows[i][3] + rows[seed_i][3]
+            keep = np.flatnonzero(ub + others >= theta)
         else:
-            top = nz
-        if top.size:
-            out_docids.append(_lookup_docids(index_dir, p, int(gen), top))
-            out_scores.append(acc[top])
+            keep = np.arange(ub.size)
+        if keep.size == 0:
+            continue
+        if keep.size == ub.size:
+            o, t, nrm = _decode_all(r)
+        else:
+            df_ = int(r["df"])
+            o, t = decode_blocks(
+                r["gaps"], r["tfs"], keep,
+                np.asarray(r["block_first_ord"], dtype=np.int64),
+                np.asarray(r["block_gap_off"], dtype=np.int64),
+                np.asarray(r["block_tf_off"], dtype=np.int64),
+                df_,
+            )
+            all_norms = np.frombuffer(r["norms"], dtype=np.uint8)
+            nrm = np.concatenate(
+                [
+                    all_norms[bi * BLOCK_SIZE : min((bi + 1) * BLOCK_SIZE, df_)]
+                    for bi in keep
+                ]
+            )
+        decoded.append((o, t, nrm, w))
 
-    if not out_docids:
-        return pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                             "score": pd.Series(dtype="float64")})
-    return pd.DataFrame(
-        {"docid": np.concatenate(out_docids), "score": np.concatenate(out_scores)}
-    )
+    if not decoded:
+        return _NO_HITS
+    size = int(max(o.max() for o, _, _, _ in decoded if o.size)) + 1
+    acc = np.zeros(size, dtype=np.float64)
+    for o, t, nrm, w in decoded:
+        acc_contrib = w * _contrib(
+            t.astype(np.float64), DECODE_TABLE[nrm].astype(np.float64),
+            k1, b, avgdl,
+        )
+        np.add.at(acc, o, acc_contrib)
+    nz = np.flatnonzero(acc > 0)
+    return nz, acc[nz]
 
 
 def _phrase_count(
@@ -211,105 +256,77 @@ def _phrase_count(
     return sloppy_freq(pos_lists, offsets, slop, terms)
 
 
-def _phrase_partition(
-    postings: pd.DataFrame,
+def _phrase_scores(
+    pg: pd.DataFrame,
     terms: list[str],
     offsets: list[int],
     slop: int,
     w: float,
-    k: int,
     k1: float,
     b: float,
     avgdl: float,
-    index_dir: str,
-    p: int,
-) -> pd.DataFrame:
-    """Per-partition phrase scoring over compressed segments: full decode of
-    the phrase terms' postings+positions, ordinal-intersection to get the
-    conjunction candidates, then a per-candidate position check. Work is
-    O(postings of the phrase terms) — the doc table is touched only for the
-    final ord→docid lookup of the (few) winners."""
-    from solr_spark.index.codec import decode_positions
-
+) -> tuple[np.ndarray, np.ndarray]:
+    """Phrase scoring of one generation over compressed segments: full
+    decode of the phrase terms' postings+positions, ordinal-intersection to
+    get the conjunction candidates, then a per-candidate position check.
+    Work is O(postings of the phrase terms)."""
     uniq = sorted(set(terms))
-    out_docids: list[np.ndarray] = []
-    out_scores: list[np.ndarray] = []
-    for gen, pg in postings.groupby("gen", sort=True):
-        by_term = {r["term"]: r for _, r in pg.iterrows()}
-        if any(t not in by_term for t in uniq):
-            continue  # a phrase term absent from this segment: no match here
-        dec: dict[str, tuple] = {}
-        for t in uniq:
-            r = by_term[t]
-            o, tf = decode_postings(r["gaps"], r["tfs"])
-            flat, starts = decode_positions(r["poss"], tf)
-            nrm = np.frombuffer(r["norms"], dtype=np.uint8)
-            dec[t] = (o, tf, flat, starts, nrm)
-        # conjunction: ords present in every phrase term's postings
-        common = dec[uniq[0]][0]
-        for t in uniq[1:]:
-            common = np.intersect1d(common, dec[t][0], assume_unique=True)
-        if common.size == 0:
-            continue
-        o0, _, _, _, nrm0 = dec[uniq[0]]
-        idx0 = np.searchsorted(o0, common)
-        if slop > 0 and len(uniq) == len(terms):
-            # distinct-term sloppy phrase: ONE batched numpy sweep over
-            # every conjunction candidate (sloppy_freq_batch) instead of a
-            # per-candidate Python heap loop — the 3+-term hot-phrase path.
-            from solr_spark.query.sloppy import sloppy_freq_batch
+    by_term = {r["term"]: r for _, r in pg.iterrows()}
+    if any(t not in by_term for t in uniq):
+        return _NO_HITS  # a phrase term absent from this segment: no match here
+    dec: dict[str, tuple] = {}
+    for t in uniq:
+        r = by_term[t]
+        o, tf, nrm = _decode_all(r)
+        flat, starts = decode_positions(r["poss"], tf)
+        dec[t] = (o, tf, flat, starts, nrm)
+    # conjunction: ords present in every phrase term's postings
+    common = dec[uniq[0]][0]
+    for t in uniq[1:]:
+        common = np.intersect1d(common, dec[t][0], assume_unique=True)
+    if common.size == 0:
+        return _NO_HITS
+    o0, _, _, _, nrm0 = dec[uniq[0]]
+    idx0 = np.searchsorted(o0, common)
+    if slop > 0 and len(uniq) == len(terms):
+        # distinct-term sloppy phrase: ONE batched numpy sweep over
+        # every conjunction candidate (sloppy_freq_batch) instead of a
+        # per-candidate Python heap loop — the 3+-term hot-phrase path.
+        from solr_spark.query.sloppy import sloppy_freq_batch
 
-            slots = []
-            for i, t in enumerate(terms):
-                o, tf, flat, starts, _ = dec[t]
-                j = np.searchsorted(o, common)
-                slots.append((
-                    flat,
-                    starts[j].astype(np.int64),
-                    tf[j].astype(np.int64),
-                    offsets[i],
-                ))
-            freqs = sloppy_freq_batch(slots, slop)
-            msel = freqs > 0
-            if not msel.any():
-                continue
-            tfv = freqs[msel]
-            dlv = DECODE_TABLE[nrm0[idx0[msel]]].astype(np.float64)
-            acc = w * tfv / (tfv + k1 * (1.0 - b + b * dlv / avgdl))
-            ords_arr = common[msel].astype(np.int64)
-        else:
-            docs_scored: list[int] = []
-            scores: list[float] = []
-            for ci, ordv in enumerate(common):
-                pls = []
-                for t in terms:  # phrase order (dupes share the decode)
-                    o, tf, flat, starts, _ = dec[t]
-                    j = int(np.searchsorted(o, ordv))
-                    s = int(starts[j])
-                    pls.append(flat[s : s + int(tf[j])])
-                tf_p = _phrase_count(pls, offsets, slop, terms)
-                if tf_p:
-                    dl = float(DECODE_TABLE[nrm0[idx0[ci]]])
-                    scores.append(
-                        w * tf_p / (tf_p + k1 * (1.0 - b + b * dl / avgdl))
-                    )
-                    docs_scored.append(int(ordv))
-            if not docs_scored:
-                continue
-            acc = np.asarray(scores)
-            ords_arr = np.asarray(docs_scored, dtype=np.int64)
-        if acc.size > k:
-            kth = np.partition(acc, -k)[-k]
-            keep = acc >= kth  # keep boundary ties (rank-identity)
-            acc, ords_arr = acc[keep], ords_arr[keep]
-        out_docids.append(_lookup_docids(index_dir, p, int(gen), ords_arr))
-        out_scores.append(acc)
-    if not out_docids:
-        return pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                             "score": pd.Series(dtype="float64")})
-    return pd.DataFrame(
-        {"docid": np.concatenate(out_docids), "score": np.concatenate(out_scores)}
-    )
+        slots = []
+        for i, t in enumerate(terms):
+            o, tf, flat, starts, _ = dec[t]
+            j = np.searchsorted(o, common)
+            slots.append((
+                flat,
+                starts[j].astype(np.int64),
+                tf[j].astype(np.int64),
+                offsets[i],
+            ))
+        freqs = sloppy_freq_batch(slots, slop)
+        msel = freqs > 0
+        tfv = freqs[msel]
+        dlv = DECODE_TABLE[nrm0[idx0[msel]]].astype(np.float64)
+        acc = w * tfv / (tfv + k1 * (1.0 - b + b * dlv / avgdl))
+        return common[msel].astype(np.int64), acc
+    docs_scored: list[int] = []
+    scores: list[float] = []
+    for ci, ordv in enumerate(common):
+        pls = []
+        for t in terms:  # phrase order (dupes share the decode)
+            o, tf, flat, starts, _ = dec[t]
+            j = int(np.searchsorted(o, ordv))
+            s = int(starts[j])
+            pls.append(flat[s : s + int(tf[j])])
+        tf_p = _phrase_count(pls, offsets, slop, terms)
+        if tf_p:
+            dl = float(DECODE_TABLE[nrm0[idx0[ci]]])
+            scores.append(
+                w * tf_p / (tf_p + k1 * (1.0 - b + b * dl / avgdl))
+            )
+            docs_scored.append(int(ordv))
+    return np.asarray(docs_scored, dtype=np.int64), np.asarray(scores)
 
 
 def _clause_ords(
@@ -398,55 +415,26 @@ def _eval_node(
     return acc, mask
 
 
-def _tree_partition(
-    postings: pd.DataFrame,
-    root: dict,
-    k: int,
-    k1: float,
-    b: float,
-    avgdl: float,
-    index_dir: str,
-    p: int,
-) -> pd.DataFrame:
-    """Per-partition grouped boolean scoring: decode every scanned term once,
-    evaluate the tree with ordinal-set algebra, keep the per-segment top-k
-    (boundary ties kept for rank-identity)."""
-    out_docids: list[np.ndarray] = []
-    out_scores: list[np.ndarray] = []
-    for gen, pg in postings.groupby("gen", sort=True):
-        size = 0
-        decoded: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-        for _, r in pg.iterrows():
-            o, tf = decode_postings(r["gaps"], r["tfs"])
-            nrm = np.frombuffer(r["norms"], dtype=np.uint8)
-            decoded[r["term"]] = (o, tf, nrm)
-            size = max(size, int(o[-1]) + 1 if o.size else 0)
-        if size == 0:
-            continue
-        acc, mask = _eval_node(root, decoded, size, k1, b, avgdl)
-        cand = np.flatnonzero(mask)
-        if cand.size == 0:
-            continue
-        scores = acc[cand]
-        if cand.size > k:
-            kth = np.partition(scores, -k)[-k]
-            sel = scores >= kth  # keep boundary ties (rank-identity)
-            cand, scores = cand[sel], scores[sel]
-        out_docids.append(_lookup_docids(index_dir, p, int(gen), cand))
-        out_scores.append(scores)
-    if not out_docids:
-        return pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                             "score": pd.Series(dtype="float64")})
-    return pd.DataFrame(
-        {"docid": np.concatenate(out_docids), "score": np.concatenate(out_scores)}
-    )
+def _tree_scores(
+    pg: pd.DataFrame, root: dict, k1: float, b: float, avgdl: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """Grouped boolean scoring of one generation: decode every scanned term
+    once, evaluate the tree with ordinal-set algebra."""
+    decoded = {r["term"]: _decode_all(r) for _, r in pg.iterrows()}
+    size = max((int(o[-1]) + 1 for o, _, _ in decoded.values() if o.size),
+               default=0)
+    if size == 0:
+        return _NO_HITS
+    acc, mask = _eval_node(root, decoded, size, k1, b, avgdl)
+    cand = np.flatnonzero(mask)
+    return cand, acc[cand]
 
 
 _PAYLOAD_BOUNDED = {"max", "sum", "average", "first"}
 
 
 def _payload_partition(
-    pdf: pd.DataFrame, func: str, k: int, index_dir: str, p: int
+    func: str, k: int, pdf: pd.DataFrame, index_dir: str, p: int
 ) -> pd.DataFrame:
     """Top-k (docid, score) for ONE term's payload postings in one segment
     partition, score = ``func`` over the payloads at the term's positions
@@ -533,8 +521,7 @@ def _payload_partition(
                     ]
 
     if not cands_score:
-        return pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                             "score": pd.Series(dtype="float64")})
+        return _result_frame([], [])
     ords = np.concatenate(cands_ord)
     gens = np.concatenate(cands_gen)
     scores = np.concatenate(cands_score)
@@ -545,7 +532,7 @@ def _payload_partition(
         gm = gens == g
         docids[gm] = _lookup_docids(index_dir, p, int(g), ords[gm])
     order = np.lexsort((docids, -scores))[:k]
-    return pd.DataFrame({"docid": docids[order], "score": scores[order]})
+    return _result_frame([docids[order]], [scores[order]])
 
 
 class PhysicalIndex:
@@ -613,27 +600,19 @@ class PhysicalIndex:
         stats = self.stats
         k1, b, avgdl, n = stats["k1"], stats["b"], stats["avgdl"], stats["n_docs"]
         terms = (
-            sorted(set(analyze(query, stats["analyzer"])))
-            if isinstance(query, str)
-            else sorted(set(query))
+            analyze(query, stats["analyzer"]) if isinstance(query, str)
+            else list(query)
         )
-        empty = self.spark.createDataFrame([], "docid long, score double")
-        dfs = self._df_for_terms(terms)
-        weights = {t: idf(n, df_) for t, df_ in dfs.items()}
+        dfs = self._df_for_terms(sorted(set(terms)))
+        weights = dict(fold_term_weights(terms, dfs, n))
         if not weights or n == 0:
-            return empty
+            return self._empty()
+
+        def score_gen(pg: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+            return _term_scores(pg, weights, k, k1, b, avgdl, use_wand)
 
         postings = self._postings.where(F.col("term").isin(list(weights)))
-        index_dir = self.index_dir
-
-        def score(key: tuple, pdf_postings: pd.DataFrame) -> pd.DataFrame:
-            return _score_partition(
-                pdf_postings, weights, k, k1, b, avgdl, use_wand,
-                index_dir, int(key[0]),
-            )
-
-        scored = postings.groupBy("p").applyInPandas(score, "docid long, score double")
-        return scored.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
+        return self._spark_topk(postings, k, partial(_segment_topk, score_gen, k))
 
     def _compile_flat(self, parsed, n: int) -> dict:
         """Compile one flat boolean level into the evaluator's node shape:
@@ -724,20 +703,33 @@ class PhysicalIndex:
             "children": [],
         }
 
-    def _search_grouped(self, query: str, k: int) -> DataFrame:
-        """Parenthesized boolean groups on the physical path: the SAME
-        top-level splitter the logical parser uses builds a tree of flat
-        levels; each segment evaluates the tree with ordinal-set algebra
-        (_eval_node). Group boost multiplies the child's scores; AND
-        adjacency promotes both sides — all inherited from
-        parser._split_top_level, so the two paths' grammars agree."""
+    def search(self, query: str, k: int = 10) -> DataFrame:
+        """Boolean term queries over the compressed segments: the classic
+        parser's term subset — bare terms (SHOULD, summed), ``+``/``AND``
+        (MUST), ``-``/``NOT`` (MUST_NOT), ``term^boost``, ``prefix*``
+        (constant score per matching doc, no expansion), ``term~N``
+        (bounded capped fuzzy), and parenthesized groups with boosts
+        nesting arbitrarily. Stored-field filters and quoted phrases are
+        not in this path (segments store no stored fields; use phrase_topk
+        for phrases).
+
+        One engine for flat AND grouped queries: the SAME top-level
+        splitter the logical parser uses builds a tree of flat levels (a
+        flat query is a root node with no children; group boost multiplies
+        the child's scores; AND adjacency promotes both sides — all
+        inherited from parser._split_top_level, so the two paths' grammars
+        agree). Each segment evaluates the tree with ordinal-set algebra
+        (_eval_node) — decode only the query terms' postings, accumulate
+        BM25 into a dense ordinal array, enforce musts by intersection and
+        must_nots by subtraction; work is O(query term postings), like
+        topk, plus the set ops.
+        """
         from solr_spark.query.parser import _split_top_level, parse_query
 
         stats = self.stats
         k1, b, avgdl, n = stats["k1"], stats["b"], stats["avgdl"], stats["n_docs"]
-        empty = self.spark.createDataFrame([], "docid long, score double")
         if n == 0:
-            return empty
+            return self._empty()
 
         def compile_node(q: str) -> dict:
             if "(" in q:
@@ -768,7 +760,7 @@ class PhysicalIndex:
 
         gather(root)
         if not scan_terms and not scan_prefixes:
-            return empty
+            return self._empty()
         cond = (
             F.col("term").isin(sorted(scan_terms))
             if scan_terms
@@ -776,46 +768,21 @@ class PhysicalIndex:
         )
         for pref in sorted(scan_prefixes):
             cond = cond | F.col("term").startswith(pref)
-        postings = self._postings.where(cond)
-        index_dir = self.index_dir
 
-        def score(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            return _tree_partition(
-                pdf, root, k, k1, b, avgdl, index_dir, int(key[0])
-            )
+        def score_gen(pg: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+            return _tree_scores(pg, root, k1, b, avgdl)
 
-        scored = postings.groupBy("p").applyInPandas(
-            score, "docid long, score double"
+        return self._spark_topk(
+            self._postings.where(cond), k, partial(_segment_topk, score_gen, k)
         )
-        return scored.orderBy(
-            F.col("score").desc(), F.col("docid").asc()
-        ).limit(k)
-
-    def search(self, query: str, k: int = 10) -> DataFrame:
-        """Boolean term queries over the compressed segments: the classic
-        parser's term subset — bare terms (SHOULD, summed), ``+``/``AND``
-        (MUST), ``-``/``NOT`` (MUST_NOT), ``term^boost``, ``prefix*``
-        (constant score per matching doc, no expansion), ``term~N``
-        (bounded capped fuzzy), and parenthesized groups with boosts
-        nesting arbitrarily. Stored-field filters and quoted phrases are
-        not in this path (segments store no stored fields; use phrase_topk
-        for phrases).
-
-        One engine for flat AND grouped queries: the query compiles to a
-        boolean tree (a flat query is a root node with no children) and
-        each segment evaluates it with ordinal-set algebra (_eval_node) —
-        decode only the query terms' postings, accumulate BM25 into a
-        dense ordinal array, enforce musts by intersection and must_nots
-        by subtraction; work is O(query term postings), like topk, plus
-        the set ops.
-        """
-        return self._search_grouped(query, k)
 
     def phrase_topk(self, phrase: str, k: int = 10, slop: int = 0) -> DataFrame:
         """Top-k phrase matches over the compressed segments (PhraseQuery on
         the physical path). Scoring parity with query/phrase.py: tf = phrase
         freq, weight = Σ member idfs, quantized norms. Query-side stopword
-        gaps are preserved in the match pattern."""
+        gaps are preserved in the match pattern. A phrase that analyzes to
+        one term is a term query, so its slop is ignored (Lucene
+        PhraseQuery.rewrite)."""
         from solr_spark.analysis.chain import analyze_pos
 
         stats = self.stats
@@ -825,31 +792,27 @@ class PhysicalIndex:
                 "store_positions=False (same contract as the logical path)"
             )
         k1, b, avgdl, n = stats["k1"], stats["b"], stats["avgdl"], stats["n_docs"]
-        empty = self.spark.createDataFrame([], "docid long, score double")
         tp = analyze_pos(phrase, stats["analyzer"])
         if not tp or n == 0:
-            return empty
+            return self._empty()
         terms = [t for t, _ in tp]
         offsets = [p - tp[0][1] for _, p in tp]
+        if len(terms) == 1:
+            slop = 0
         dfs = self._df_for_terms(sorted(set(terms)))
         if any(t not in dfs for t in terms):
-            return empty
+            return self._empty()
         w = sum(idf(n, dfs[t]) for t in terms)
         # Positions column only on THIS scan — term-query WAND never pays
         # for the .pos bytes (parquet column pruning).
         postings = self._scan.select(
             "p", "gen", "term", "gaps", "tfs", "norms", "poss"
         ).where(F.col("term").isin(sorted(set(terms))))
-        index_dir = self.index_dir
 
-        def score(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            return _phrase_partition(
-                pdf, terms, offsets, slop, w, k, k1, b, avgdl,
-                index_dir, int(key[0]),
-            )
+        def score_gen(pg: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+            return _phrase_scores(pg, terms, offsets, slop, w, k1, b, avgdl)
 
-        scored = postings.groupBy("p").applyInPandas(score, "docid long, score double")
-        return scored.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
+        return self._spark_topk(postings, k, partial(_segment_topk, score_gen, k))
 
     def payload_topk(self, term: str, func: str = "max", k: int = 10) -> DataFrame:
         """Top-k `{!payload_score}` over the physical payload stream
@@ -869,10 +832,9 @@ class PhysicalIndex:
                 "payload query needs payloads: this index was built with "
                 "store_payloads=False"
             )
-        empty = self.spark.createDataFrame([], "docid long, score double")
         t = term.lower()
         if not t or not self._df_for_terms([t]):
-            return empty
+            return self._empty()
         # Payload columns only on THIS scan (parquet column pruning keeps
         # BM25/phrase queries from ever reading the .pay bytes).
         postings = self._scan.select(
@@ -880,12 +842,21 @@ class PhysicalIndex:
             "block_first_ord", "block_gap_off", "block_tf_off",
             "block_max_tf", "pays", "block_pay_off", "block_max_pay",
         ).where(F.col("term") == t)
+        return self._spark_topk(postings, k, partial(_payload_partition, func, k))
+
+    def _empty(self) -> DataFrame:
+        return self.spark.createDataFrame([], _RESULT_SCHEMA)
+
+    def _spark_topk(self, postings: DataFrame, k: int, partition) -> DataFrame:
+        """The Spark shape of every physical query: one applyInPandas task
+        per segment partition p runs ``partition(pdf, index_dir, p)``, then
+        ORDER BY score DESC, docid ASC LIMIT k (TakeOrderedAndProject)."""
         index_dir = self.index_dir
 
         def score(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            return _payload_partition(pdf, func, k, index_dir, int(key[0]))
+            return partition(pdf, index_dir, int(key[0]))
 
-        scored = postings.groupBy("p").applyInPandas(score, "docid long, score double")
+        scored = postings.groupBy("p").applyInPandas(score, _RESULT_SCHEMA)
         return scored.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
 
 

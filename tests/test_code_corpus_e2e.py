@@ -54,7 +54,8 @@ def test_docid_stability_across_partitioning(spark, code_corpus):
     assert len(a) == 800  # no collisions at this scale
 
 
-@pytest.mark.parametrize("qid,qtext", REFERENCE_QUERIES[:8])
+# 11: a repeated term counts once per occurrence on both paths
+@pytest.mark.parametrize("qid,qtext", REFERENCE_QUERIES[:8] + [(11, "def def return")])
 def test_wand_matches_dataframe_text_en(spark, phys_dir, logical, qid, qtext):
     ix = PhysicalIndex(spark, phys_dir)
     got = [(r.docid, round(r.score, 9)) for r in ix.topk(qtext, k=10).collect()]

@@ -24,7 +24,10 @@ from solr_spark.index.segments import (
 from solr_spark.query.bm25 import bm25_topk
 from solr_spark.query.wand import wand_topk
 
-QUERIES = ["spark join data", "table", "window batch order", "zzznotaterm"]
+# "spark spark join": a repeated term is a separate clause (Lucene), so the
+# physical weight counts it twice, like the logical query_weights.
+QUERIES = ["spark join data", "table", "window batch order", "zzznotaterm",
+           "spark spark join"]
 
 
 @pytest.fixture(scope="module")
@@ -54,8 +57,7 @@ def _rows(df):
 
 @pytest.mark.parametrize("q", QUERIES)
 def test_wand_matches_dataframe(spark, idx_dir, logical, q):
-    terms = sorted(set(q.split()))
-    want = _rows(bm25_topk(logical, terms, k=10, quantize_norms=True))
+    want = _rows(bm25_topk(logical, q.split(), k=10, quantize_norms=True))
     got = _rows(wand_topk(spark, idx_dir, q, k=10))
     assert got == want
 
@@ -189,7 +191,10 @@ PHRASES = [("part filter scan", 0), ("spark join", 0), ("spark join", 2),
            # 3-term sloppy: physical = batched numpy sweep, logical = the
            # n-iterator JVM fold — rank/score identity closes the loop on
            # both new paths at once
-           ("part filter scan", 2), ("part filter scan", 5)]
+           ("part filter scan", 2), ("part filter scan", 5),
+           # one-term phrase = term query (Lucene PhraseQuery.rewrite): the
+           # slop is ignored on both paths
+           ("spark", 1), ("table", 2)]
 
 
 @pytest.mark.parametrize("q,slop", PHRASES)

@@ -84,7 +84,8 @@ with open(os.environ["OUT"], "w") as fh:
 
 def run_level(cpus: int, sf_dir: str, names: list[str]) -> dict:
     env = dict(os.environ)
-    out_path = tempfile.mktemp(suffix=f"_det_{cpus}.json")
+    fd, out_path = tempfile.mkstemp(suffix=f"_det_{cpus}.json")
+    os.close(fd)
     env.update({
         "CPUS": str(cpus),
         "SF_DIR": sf_dir,
@@ -119,6 +120,10 @@ def main() -> int:
             cpus = [int(x) for x in args[i + 1].split(",")]
             args = args[:i] + args[i + 2:]
             break
+    if len(set(cpus)) < 2:
+        print(f"--cpus needs at least two distinct levels, got {cpus}",
+              file=sys.stderr)
+        return 2
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     names = args[1:]
 
