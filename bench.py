@@ -133,7 +133,7 @@ def main() -> None:
     # parallelism is given there; repartition once (outside every timed
     # region, like the sf1/sf10 replicas which are written pre-partitioned)
     # to restore that property on the bench box.
-    n_cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n_cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     docs = docs.repartition(n_cores).persist()
     docs.count()
 

@@ -20,7 +20,8 @@ Mirrors the Lucene/Solr indexing lifecycle (SURVEY.md §3.2) Spark-first:
 - ``merge_index``: k-way merge of generations within each partition
   (= TieredMergePolicy's role, index/TieredMergePolicyFactory.java:27):
   re-rank the union of docids, remap ordinals, concatenate+sort postings,
-  re-encode. Runs as one Spark job, one task per partition.
+  re-encode. Runs as one Spark job of one stage (``per_partition``, the
+  same per-partition driver the physical queries use).
 
 Layout:
     index_dir/
@@ -41,7 +42,6 @@ import os
 import re
 import time
 import uuid
-from collections.abc import Iterable
 
 import numpy as np
 import pandas as pd
@@ -65,6 +65,8 @@ _POSTINGS_COLS = [
 ]
 
 _WS_RE = re.compile(r"\s+")
+_PART_RE = re.compile(r"p=(\d+)")
+_GEN_RE = re.compile(r"gen=(\d+)")
 
 
 def _payload_tokens(
@@ -97,6 +99,47 @@ def _payload_tokens(
 
 def _seg_dir(index_dir: str, p: int, gen: int) -> str:
     return os.path.join(index_dir, "seg", f"p={p:05d}", f"gen={gen}")
+
+
+def committed_segments(index_dir: str) -> dict[int, list[int]]:
+    """Each partition's committed generations, ``{p: [gen, ...]}`` ascending.
+
+    A segment dir counts as committed when its name is exactly
+    ``gen=<int>`` and it holds manifest.json, which ``_write_segment``
+    writes before the atomic rename. A ``gen=<G>.tmp-<hex>`` dir left by a
+    build killed before its rename is therefore never read."""
+    seg = os.path.join(index_dir, "seg")
+    out: dict[int, list[int]] = {}
+    for pname in sorted(os.listdir(seg)) if os.path.isdir(seg) else ():
+        pm = _PART_RE.fullmatch(pname)
+        if pm is None:
+            continue
+        pdir = os.path.join(seg, pname)
+        gens = sorted(
+            int(gm.group(1))
+            for gm in map(_GEN_RE.fullmatch, os.listdir(pdir))
+            if gm and os.path.exists(os.path.join(pdir, gm.group(0), "manifest.json"))
+        )
+        if gens:
+            out[int(pm.group(1))] = gens
+    return out
+
+
+def per_partition(spark: SparkSession, ps: list[int], fn, schema: str) -> DataFrame:
+    """``fn(p)`` (a pandas frame of ``schema``) for every segment partition
+    ``p`` in ``ps``, as ONE stage: Range -> MapInPandas with
+    min(len(ps), defaultParallelism) tasks, each looping over its slice of
+    ``ps``. Never one task per partition: every wave of Python tasks pays a
+    fixed cost (~150 ms on a 4-core host), and P is often many times the
+    core count."""
+    n_tasks = max(1, min(len(ps), spark.sparkContext.defaultParallelism))
+
+    def run(batches):
+        for batch in batches:
+            for i in batch["id"]:
+                yield fn(ps[int(i)])
+
+    return spark.range(len(ps), numPartitions=n_tasks).mapInPandas(run, schema)
 
 
 def _invert_partition(
@@ -463,21 +506,24 @@ def finalize_index(
     b: float = 0.75,
 ) -> dict:
     """Compute global exact stats from committed segments and publish them."""
-    postings = spark.read.parquet(f"{index_dir}/seg/*/*/postings.parquet")
+    seg_dirs = [
+        _seg_dir(index_dir, p, g)
+        for p, gens in committed_segments(index_dir).items()
+        for g in gens
+    ]
+    postings = spark.read.parquet(*[f"{d}/postings.parquet" for d in seg_dirs])
     (
         postings.groupBy("term")
         .agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
         .write.mode("overwrite")
         .parquet(f"{index_dir}/term_stats.parquet")
     )
-    import glob
-
     n_docs = sum_dl = 0
     gens: set[int] = set()
     positions_all = True
     payloads_all = True
-    for mp in glob.glob(f"{index_dir}/seg/*/*/manifest.json"):
-        with open(mp) as f:
+    for d in seg_dirs:
+        with open(os.path.join(d, "manifest.json")) as f:
             m = json.load(f)
         n_docs += m["n_docs"]
         sum_dl += m["sum_dl"]
@@ -536,13 +582,12 @@ def merge_index(
 ) -> dict:
     """Merge all generations of every partition into gen=0 under ``out_dir``.
 
-    One Spark task per partition: re-rank the docid union, remap each
-    generation's ordinals (order-preserving, so remapped lists stay sorted),
-    concatenate + merge per term, re-encode. Equivalent to a full Lucene
-    forceMerge(1) per shard.
+    Per partition, inside ``per_partition``'s one stage: re-rank the docid
+    union of its committed generations, remap each generation's ordinals
+    (order-preserving, so remapped lists stay sorted), concatenate + merge
+    per term, re-encode. Equivalent to a full Lucene forceMerge(1) per
+    shard.
     """
-    import glob as _glob
-
     from solr_spark.index.codec import (
         decode_payloads,
         decode_positions,
@@ -551,142 +596,134 @@ def merge_index(
 
     stats = read_corpus_stats(index_dir)
     analyzer = analyzer or stats["analyzer"]
-    pdirs = sorted(_glob.glob(f"{index_dir}/seg/p=*"))
-    ps = [int(os.path.basename(d).split("=")[1]) for d in pdirs]
+    segs = committed_segments(index_dir)
 
-    def merge_one(pdf_iter: Iterable[pd.DataFrame]):
+    def merge_one(p: int) -> pd.DataFrame:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         pa.set_cpu_count(1)
-        for pdf in pdf_iter:
-            for p in pdf["p"]:
-                p = int(p)
-                final = _seg_dir(out_dir, p, 0)
-                if os.path.exists(os.path.join(final, "manifest.json")):
-                    with open(os.path.join(final, "manifest.json")) as f:
-                        yield _manifest_row(json.load(f), skipped=True)
-                    continue
-                t0 = time.time()
-                merged_has_positions = True
-                merged_has_payloads = True
-                gen_dirs = sorted(_glob.glob(f"{index_dir}/seg/p={p:05d}/gen=*"))
-                docs_parts, post_parts = [], []
-                for gd in gen_dirs:
-                    docs_parts.append(pq.read_table(f"{gd}/docs.parquet").to_pandas())
-                    tbl = pq.read_table(f"{gd}/postings.parquet")
-                    cols = ["gen", "term", "gaps", "tfs", "poss"]
-                    if "pays" in tbl.schema.names:
-                        cols.append("pays")
-                    part = tbl.select(cols).to_pandas()
-                    if "pays" not in part.columns:  # pre-payload segment
-                        part["pays"] = b""
-                    post_parts.append(part)
-                all_docs = pd.concat(docs_parts, ignore_index=True)
-                order = np.argsort(all_docs["docid"].to_numpy(), kind="stable")
-                all_docs = all_docs.iloc[order].reset_index(drop=True)
-                # old (gen, ord) -> new ord
-                remap: dict[int, np.ndarray] = {}
-                new_ord = np.arange(len(all_docs), dtype=np.int64)
-                for g in all_docs["gen"].unique():
-                    mask = (all_docs["gen"] == g).to_numpy()
-                    old = all_docs["ord"].to_numpy()[mask]
-                    m = np.empty(old.max() + 1 if old.size else 0, dtype=np.int64)
-                    m[old] = new_ord[mask]
-                    remap[int(g)] = m
-                norms = all_docs["norm"].to_numpy(dtype=np.uint8)
-                dl = all_docs["dl"].to_numpy(dtype=np.int64)
+        final = _seg_dir(out_dir, p, 0)
+        if os.path.exists(os.path.join(final, "manifest.json")):
+            with open(os.path.join(final, "manifest.json")) as f:
+                return _manifest_row(json.load(f), skipped=True)
+        t0 = time.time()
+        merged_has_positions = True
+        merged_has_payloads = True
+        gen_dirs = [_seg_dir(index_dir, p, g) for g in segs[p]]
+        docs_parts, post_parts = [], []
+        for gd in gen_dirs:
+            docs_parts.append(pq.read_table(f"{gd}/docs.parquet").to_pandas())
+            tbl = pq.read_table(f"{gd}/postings.parquet")
+            cols = ["gen", "term", "gaps", "tfs", "poss"]
+            if "pays" in tbl.schema.names:
+                cols.append("pays")
+            part = tbl.select(cols).to_pandas()
+            if "pays" not in part.columns:  # pre-payload segment
+                part["pays"] = b""
+            post_parts.append(part)
+        all_docs = pd.concat(docs_parts, ignore_index=True)
+        order = np.argsort(all_docs["docid"].to_numpy(), kind="stable")
+        all_docs = all_docs.iloc[order].reset_index(drop=True)
+        # old (gen, ord) -> new ord
+        remap: dict[int, np.ndarray] = {}
+        new_ord = np.arange(len(all_docs), dtype=np.int64)
+        for g in all_docs["gen"].unique():
+            mask = (all_docs["gen"] == g).to_numpy()
+            old = all_docs["ord"].to_numpy()[mask]
+            m = np.empty(old.max() + 1 if old.size else 0, dtype=np.int64)
+            m[old] = new_ord[mask]
+            remap[int(g)] = m
+        norms = all_docs["norm"].to_numpy(dtype=np.uint8)
+        dl = all_docs["dl"].to_numpy(dtype=np.int64)
 
-                all_posts = pd.concat(post_parts, ignore_index=True)
-                rows = []
-                for term, grp in all_posts.groupby("term", sort=True):
-                    os_, ts_, flats, seg_starts, pay_flats = [], [], [], [], []
-                    pos_off = 0
-                    for _, r in grp.iterrows():
-                        o, t = decode_postings(r["gaps"], r["tfs"])
-                        flat, starts = decode_positions(r["poss"], t)
-                        if flat.size == 0 and t.size > 0:
-                            flat = None  # this gen stored no positions
-                        pay_flat = decode_payloads(r["pays"] or b"", t)[0]
-                        if pay_flat.size == 0:
-                            pay_flat = None  # this gen stored no payloads
-                        os_.append(remap[int(r["gen"])][o])
-                        ts_.append(t)
-                        flats.append(flat)
-                        pay_flats.append(pay_flat)
-                        if flat is not None:
-                            seg_starts.append(starts + pos_off)
-                            pos_off += flat.size
-                    if any(f is not None for f in flats) and any(
-                        f is None for f in flats
-                    ):
-                        raise RuntimeError(
-                            f"merge p={p} term={term!r}: generations mix "
-                            "store_positions=True and False — a merged "
-                            "position list would silently misalign; rebuild "
-                            "the positionless generation with positions (or "
-                            "all without)"
-                        )
-                    if not any(f is not None for f in flats):
-                        merged_has_positions = False
-                    if any(f is not None for f in pay_flats) and any(
-                        f is None for f in pay_flats
-                    ):
-                        raise RuntimeError(
-                            f"merge p={p} term={term!r}: generations mix "
-                            "store_payloads=True and False — a merged "
-                            "payload stream would silently misalign; rebuild "
-                            "the payload-less generation with payloads (or "
-                            "all without)"
-                        )
-                    if not any(f is not None for f in pay_flats):
-                        merged_has_payloads = False
-                    pay_flats = [f for f in pay_flats if f is not None]
-                    flats = [f for f in flats if f is not None]
-                    o = np.concatenate(os_)
-                    t = np.concatenate(ts_)
-                    so = np.argsort(o, kind="stable")
-                    o, t = o[so], t[so]
-                    pn = norms[o]
-                    # Positions travel with their posting through the merge
-                    # reorder: gather each posting's position segment in the
-                    # new order, then re-encode.
-                    flat_all = np.concatenate(flats) if flats else np.empty(0, np.int64)
-                    new_flat = None
-                    new_pay = None
-                    if flat_all.size:
-                        starts_all = np.concatenate(seg_starts)
-                        ends_all = starts_all + np.concatenate(ts_)
-                        new_flat = np.concatenate(
-                            [flat_all[starts_all[j]:ends_all[j]] for j in so]
-                        )
-                        if pay_flats:
-                            # Payloads are position-aligned, so the same
-                            # gather order re-sorts them.
-                            pay_all = np.concatenate(pay_flats)
-                            new_pay = np.concatenate(
-                                [pay_all[starts_all[j]:ends_all[j]] for j in so]
-                            )
-                    rows.append(_term_row(term, o, t, pn, new_flat, new_pay))
-                postings = pd.DataFrame(rows, columns=_POSTINGS_COLS[2:])
-                docs = pd.DataFrame(
-                    {
-                        "ord": new_ord,
-                        "docid": all_docs["docid"].to_numpy(dtype=np.int64),
-                        "dl": dl,
-                        "norm": norms.astype(np.int32),
-                    }
+        all_posts = pd.concat(post_parts, ignore_index=True)
+        rows = []
+        for term, grp in all_posts.groupby("term", sort=True):
+            os_, ts_, flats, seg_starts, pay_flats = [], [], [], [], []
+            pos_off = 0
+            for _, r in grp.iterrows():
+                o, t = decode_postings(r["gaps"], r["tfs"])
+                flat, starts = decode_positions(r["poss"], t)
+                if flat.size == 0 and t.size > 0:
+                    flat = None  # this gen stored no positions
+                pay_flat = decode_payloads(r["pays"] or b"", t)[0]
+                if pay_flat.size == 0:
+                    pay_flat = None  # this gen stored no payloads
+                os_.append(remap[int(r["gen"])][o])
+                ts_.append(t)
+                flats.append(flat)
+                pay_flats.append(pay_flat)
+                if flat is not None:
+                    seg_starts.append(starts + pos_off)
+                    pos_off += flat.size
+            if any(f is not None for f in flats) and any(
+                f is None for f in flats
+            ):
+                raise RuntimeError(
+                    f"merge p={p} term={term!r}: generations mix "
+                    "store_positions=True and False — a merged "
+                    "position list would silently misalign; rebuild "
+                    "the positionless generation with positions (or "
+                    "all without)"
                 )
-                m = _write_segment(
-                    out_dir, p, 0, docs, postings,
-                    _docid_checksum(docs["docid"].to_numpy()), time.time() - t0,
-                    store_positions=merged_has_positions,
-                    store_payloads=merged_has_payloads,
+            if not any(f is not None for f in flats):
+                merged_has_positions = False
+            if any(f is not None for f in pay_flats) and any(
+                f is None for f in pay_flats
+            ):
+                raise RuntimeError(
+                    f"merge p={p} term={term!r}: generations mix "
+                    "store_payloads=True and False — a merged "
+                    "payload stream would silently misalign; rebuild "
+                    "the payload-less generation with payloads (or "
+                    "all without)"
                 )
-                yield _manifest_row(m, skipped=False)
+            if not any(f is not None for f in pay_flats):
+                merged_has_payloads = False
+            pay_flats = [f for f in pay_flats if f is not None]
+            flats = [f for f in flats if f is not None]
+            o = np.concatenate(os_)
+            t = np.concatenate(ts_)
+            so = np.argsort(o, kind="stable")
+            o, t = o[so], t[so]
+            pn = norms[o]
+            # Positions travel with their posting through the merge
+            # reorder: gather each posting's position segment in the
+            # new order, then re-encode.
+            flat_all = np.concatenate(flats) if flats else np.empty(0, np.int64)
+            new_flat = None
+            new_pay = None
+            if flat_all.size:
+                starts_all = np.concatenate(seg_starts)
+                ends_all = starts_all + np.concatenate(ts_)
+                new_flat = np.concatenate(
+                    [flat_all[starts_all[j]:ends_all[j]] for j in so]
+                )
+                if pay_flats:
+                    # Payloads are position-aligned, so the same
+                    # gather order re-sorts them.
+                    pay_all = np.concatenate(pay_flats)
+                    new_pay = np.concatenate(
+                        [pay_all[starts_all[j]:ends_all[j]] for j in so]
+                    )
+            rows.append(_term_row(term, o, t, pn, new_flat, new_pay))
+        postings = pd.DataFrame(rows, columns=_POSTINGS_COLS[2:])
+        docs = pd.DataFrame(
+            {
+                "ord": new_ord,
+                "docid": all_docs["docid"].to_numpy(dtype=np.int64),
+                "dl": dl,
+                "norm": norms.astype(np.int32),
+            }
+        )
+        m = _write_segment(
+            out_dir, p, 0, docs, postings,
+            _docid_checksum(docs["docid"].to_numpy()), time.time() - t0,
+            store_positions=merged_has_positions,
+            store_payloads=merged_has_payloads,
+        )
+        return _manifest_row(m, skipped=False)
 
-    pdf = spark.createDataFrame([(p,) for p in ps], "p int").repartition(
-        min(len(ps), spark.sparkContext.defaultParallelism), "p"
-    )
-    pdf.mapInPandas(merge_one, MANIFEST_SCHEMA).collect()
+    per_partition(spark, sorted(segs), merge_one, MANIFEST_SCHEMA).collect()
     return finalize_index(spark, out_dir, analyzer, stats["k1"], stats["b"])

@@ -1,11 +1,22 @@
 """Top-k BM25 over the physical segment index, with block-max pruning.
 
+Opening a searcher (``PhysicalIndex``) launches no Spark work: it reads
+corpus_stats.json and lists the committed segments, and that listing is the
+searcher's snapshot, as Lucene's IndexSearcher pins its segments. Term df
+comes from a term-IN filtered pyarrow read of term_stats.parquet on the
+driver, so it launches no job either.
+
 Every physical query (term ``topk``, boolean ``search``, ``phrase_topk``,
-``payload_topk``) has the same Spark shape: the query's postings rows are
-scanned with a pushed-down term filter, ONE applyInPandas stage runs one
-task per segment partition p, and the global merge is ORDER BY score DESC,
-docid ASC LIMIT k (TakeOrderedAndProject — Spark's built-in two-phase
-top-k, the analogue of Solr's PURPOSE_GET_TOP_IDS merge,
+``payload_topk``) is then ONE Spark job of ONE stage: Range ->
+MapInPandas -> TakeOrderedAndProject. The Range holds one row per segment
+partition p and is split into min(P, defaultParallelism) tasks
+(segments.per_partition). Each task loops over its partitions; for each,
+it reads the committed postings.parquet files with pyarrow (column pruning
++ the query's term filter; row groups prune on ``term`` because postings
+are written sorted), in (gen, file row) order, and runs the query kind's
+per-partition function. The global merge is ORDER BY score DESC, docid ASC
+LIMIT k (TakeOrderedAndProject -- Spark's built-in two-phase top-k, the
+analogue of Solr's PURPOSE_GET_TOP_IDS merge,
 QueryComponent.java:833-1040).
 
 Inside the task, the BM25 query kinds share one per-segment top-k path
@@ -58,7 +69,7 @@ exact and the tiebreak (score desc, docid asc) is total.
 
 from __future__ import annotations
 
-from functools import partial
+from functools import cached_property, partial
 
 import numpy as np
 import pandas as pd
@@ -72,9 +83,28 @@ from solr_spark.index.codec import (
     decode_postings,
 )
 from solr_spark.index.norms import DECODE_TABLE
+from solr_spark.index.segments import (
+    _seg_dir,
+    committed_segments,
+    per_partition,
+    read_corpus_stats,
+)
 from solr_spark.query.bm25 import fold_term_weights, idf
 
 _RESULT_SCHEMA = "docid long, score double"
+# Postings columns each query kind reads (parquet column pruning: only
+# phrase queries read the positions, only payload queries the payloads).
+_SCORE_COLS = [
+    "gen", "term", "df", "gaps", "tfs", "norms",
+    "block_first_ord", "block_gap_off", "block_tf_off",
+    "block_max_tf", "block_min_norm",
+]
+_PHRASE_COLS = ["gen", "term", "gaps", "tfs", "norms", "poss"]
+_PAYLOAD_COLS = [
+    "gen", "term", "df", "gaps", "tfs",
+    "block_first_ord", "block_gap_off", "block_tf_off",
+    "block_max_tf", "pays", "block_pay_off", "block_max_pay",
+]
 _NO_HITS = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
 
 
@@ -100,15 +130,43 @@ def _lookup_docids(
     # thread pool (defaults to ALL machine cores, PER task process) would
     # oversubscribe the box n_tasks × n_cores-fold.
     pa.set_cpu_count(1)
-    path = f"{index_dir}/seg/p={p:05d}/gen={gen}/docs.parquet"
     tbl = pq.read_table(
-        path,
+        f"{_seg_dir(index_dir, p, gen)}/docs.parquet",
         columns=["ord", "docid"],
         filters=[("ord", "in", [int(o) for o in ords])],
         use_threads=False,
     )
     m = dict(zip(tbl["ord"].to_pylist(), tbl["docid"].to_pylist()))
     return np.array([m[int(o)] for o in ords], dtype=np.int64)
+
+
+def _read_postings(
+    index_dir: str,
+    p: int,
+    gens: list[int],
+    columns: list[str],
+    terms: list[str],
+    prefixes: list[str],
+) -> pd.DataFrame:
+    """Partition ``p``'s postings rows whose term is in ``terms`` or starts
+    with one of ``prefixes``, read generation by generation (ascending) in
+    file row order."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    pa.set_cpu_count(1)  # executor-side, as in _lookup_docids
+    term = pc.field("term")
+    cond = term.isin(pa.array(terms, pa.string()))
+    for pref in prefixes:
+        cond = cond | pc.starts_with(term, pref)
+    return pa.concat_tables(
+        pq.read_table(
+            f"{_seg_dir(index_dir, p, gen)}/postings.parquet",
+            columns=columns, filters=cond, use_threads=False,
+        )
+        for gen in gens
+    ).to_pandas()
 
 
 def _result_frame(
@@ -536,12 +594,14 @@ def _payload_partition(
 
 
 class PhysicalIndex:
-    """Searcher over a physical index directory.
+    """Point-in-time searcher over a physical index directory.
 
-    Opening is the expensive part (parquet file listing + schema + the
-    term-stats cache), exactly like opening a Lucene IndexSearcher — so open
-    once and reuse. The opened postings scan DataFrame caches its file index;
-    per-query work is just a filtered scan + one applyInPandas stage.
+    Opening does no Spark work: it reads corpus_stats.json and lists the
+    committed segments (``committed_segments``). That listing is the
+    searcher's snapshot, as Lucene's IndexSearcher pins its segments; a
+    generation committed later is seen after a reopen, which ``open_index``
+    decides from the commit token. Each query runs as one Spark job of one
+    stage over the snapshot (module docstring).
     """
 
     # Driver-side per-term df cache cap. Query workloads touch a tiny,
@@ -551,37 +611,37 @@ class PhysicalIndex:
     TERM_CACHE_MAX = 262_144
 
     def __init__(self, spark: SparkSession, index_dir: str):
-        from solr_spark.index.segments import read_corpus_stats
-
         self.spark = spark
         self.index_dir = index_dir
         self.commit_token = _commit_token(index_dir)
         self.stats = read_corpus_stats(index_dir)
-        self._scan = spark.read.parquet(f"{index_dir}/seg/*/*/postings.parquet")
-        self._postings = self._scan.select(
-            "p", "gen", "term", "df", "gaps", "tfs", "norms",
-            "block_first_ord", "block_gap_off", "block_tf_off",
-            "block_max_tf", "block_min_norm",
-        )
-        self._term_stats = spark.read.parquet(
-            f"{index_dir}/term_stats.parquet"
-        ).select("term", "df")
+        self.segments = committed_segments(index_dir)
         # term -> global df, or None for a term known absent from the corpus
-        # (negative caching avoids re-scanning for repeated OOV query terms).
+        # (negative caching avoids re-reading for repeated OOV query terms).
         # Insertion-ordered dict doubles as the LRU eviction order.
         self._term_df_cache: dict[str, int | None] = {}
 
+    @cached_property
+    def _term_stats(self) -> DataFrame:
+        """term_stats as a Spark frame, built only for the fuzzy probe."""
+        return self.spark.read.parquet(
+            f"{self.index_dir}/term_stats.parquet"
+        ).select("term", "df")
+
     def _df_for_terms(self, terms: list[str]) -> dict[str, int]:
-        """Global df for ``terms`` via a term-IN filtered (row-group pruned)
-        read of term_stats — never a full dictionary collect."""
+        """Global df for ``terms`` via a term-IN filtered pyarrow read of
+        term_stats on the driver — no Spark job, and never a full
+        dictionary collect."""
         missing = [t for t in terms if t not in self._term_df_cache]
         if missing:
-            found = {
-                r["term"]: r["df"]
-                for r in self._term_stats.where(
-                    F.col("term").isin(missing)
-                ).collect()
-            }
+            import pyarrow.parquet as pq
+
+            tbl = pq.read_table(
+                f"{self.index_dir}/term_stats.parquet",
+                columns=["term", "df"],
+                filters=[("term", "in", missing)],
+            )
+            found = dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
             for t in missing:
                 self._term_df_cache[t] = found.get(t)
             while len(self._term_df_cache) > self.TERM_CACHE_MAX:
@@ -611,8 +671,9 @@ class PhysicalIndex:
         def score_gen(pg: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
             return _term_scores(pg, weights, k, k1, b, avgdl, use_wand)
 
-        postings = self._postings.where(F.col("term").isin(list(weights)))
-        return self._spark_topk(postings, k, partial(_segment_topk, score_gen, k))
+        return self._spark_topk(
+            _SCORE_COLS, list(weights), [], k, partial(_segment_topk, score_gen, k)
+        )
 
     def _compile_flat(self, parsed, n: int) -> dict:
         """Compile one flat boolean level into the evaluator's node shape:
@@ -761,19 +822,13 @@ class PhysicalIndex:
         gather(root)
         if not scan_terms and not scan_prefixes:
             return self._empty()
-        cond = (
-            F.col("term").isin(sorted(scan_terms))
-            if scan_terms
-            else F.lit(False)
-        )
-        for pref in sorted(scan_prefixes):
-            cond = cond | F.col("term").startswith(pref)
 
         def score_gen(pg: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
             return _tree_scores(pg, root, k1, b, avgdl)
 
         return self._spark_topk(
-            self._postings.where(cond), k, partial(_segment_topk, score_gen, k)
+            _SCORE_COLS, sorted(scan_terms), sorted(scan_prefixes), k,
+            partial(_segment_topk, score_gen, k),
         )
 
     def phrase_topk(self, phrase: str, k: int = 10, slop: int = 0) -> DataFrame:
@@ -803,16 +858,14 @@ class PhysicalIndex:
         if any(t not in dfs for t in terms):
             return self._empty()
         w = sum(idf(n, dfs[t]) for t in terms)
-        # Positions column only on THIS scan — term-query WAND never pays
-        # for the .pos bytes (parquet column pruning).
-        postings = self._scan.select(
-            "p", "gen", "term", "gaps", "tfs", "norms", "poss"
-        ).where(F.col("term").isin(sorted(set(terms))))
 
         def score_gen(pg: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
             return _phrase_scores(pg, terms, offsets, slop, w, k1, b, avgdl)
 
-        return self._spark_topk(postings, k, partial(_segment_topk, score_gen, k))
+        return self._spark_topk(
+            _PHRASE_COLS, sorted(set(terms)), [], k,
+            partial(_segment_topk, score_gen, k),
+        )
 
     def payload_topk(self, term: str, func: str = "max", k: int = 10) -> DataFrame:
         """Top-k `{!payload_score}` over the physical payload stream
@@ -835,28 +888,33 @@ class PhysicalIndex:
         t = term.lower()
         if not t or not self._df_for_terms([t]):
             return self._empty()
-        # Payload columns only on THIS scan (parquet column pruning keeps
-        # BM25/phrase queries from ever reading the .pay bytes).
-        postings = self._scan.select(
-            "p", "gen", "term", "df", "gaps", "tfs",
-            "block_first_ord", "block_gap_off", "block_tf_off",
-            "block_max_tf", "pays", "block_pay_off", "block_max_pay",
-        ).where(F.col("term") == t)
-        return self._spark_topk(postings, k, partial(_payload_partition, func, k))
+        return self._spark_topk(
+            _PAYLOAD_COLS, [t], [], k, partial(_payload_partition, func, k)
+        )
 
     def _empty(self) -> DataFrame:
         return self.spark.createDataFrame([], _RESULT_SCHEMA)
 
-    def _spark_topk(self, postings: DataFrame, k: int, partition) -> DataFrame:
-        """The Spark shape of every physical query: one applyInPandas task
-        per segment partition p runs ``partition(pdf, index_dir, p)``, then
-        ORDER BY score DESC, docid ASC LIMIT k (TakeOrderedAndProject)."""
-        index_dir = self.index_dir
+    def _spark_topk(
+        self,
+        columns: list[str],
+        terms: list[str],
+        prefixes: list[str],
+        k: int,
+        partition,
+    ) -> DataFrame:
+        """The Spark shape of every physical query, one job of one stage:
+        per snapshot partition p (``per_partition``), read p's postings
+        ``columns`` for ``terms``/``prefixes`` and run
+        ``partition(pdf, index_dir, p)``; then ORDER BY score DESC,
+        docid ASC LIMIT k (TakeOrderedAndProject)."""
+        index_dir, segments = self.index_dir, self.segments
 
-        def score(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            return partition(pdf, index_dir, int(key[0]))
+        def score(p: int) -> pd.DataFrame:
+            pdf = _read_postings(index_dir, p, segments[p], columns, terms, prefixes)
+            return partition(pdf, index_dir, p)
 
-        scored = postings.groupBy("p").applyInPandas(score, _RESULT_SCHEMA)
+        scored = per_partition(self.spark, sorted(segments), score, _RESULT_SCHEMA)
         return scored.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
 
 
@@ -870,8 +928,6 @@ def _commit_token(index_dir: str) -> tuple:
     import os
 
     st = os.stat(f"{index_dir}/corpus_stats.json")
-    from solr_spark.index.segments import read_corpus_stats
-
     gens = tuple(read_corpus_stats(index_dir).get("generations", ()))
     return (st.st_mtime_ns, st.st_size, gens)
 

@@ -27,4 +27,25 @@ def tiny_corpus(spark):
     return df
 
 
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> (fn(), ids of the Spark jobs it launched),
+    counted by job group (setJobGroup + statusTracker)."""
+    sc = spark.sparkContext
+    n = [0]
+
+    def run(fn):
+        n[0] += 1
+        gid = f"count_jobs_{n[0]}"
+        sc.setJobGroup(gid, gid)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, sorted(sc.statusTracker().getJobIdsForGroup(gid))
+
+    return run
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

@@ -119,6 +119,16 @@ def test_payload_topk_absent_and_bad_func(pay_setup, spark):
         ix.payload_topk("t0", "median")
 
 
+def test_payload_topk_is_one_job(pay_setup, spark, count_jobs):
+    """From the call to collect(), with a cold term cache: one Spark job."""
+    from solr_spark.query.wand import PhysicalIndex
+
+    _, idx_dir, _ = pay_setup
+    ix = PhysicalIndex(spark, idx_dir)
+    rows, jobs = count_jobs(lambda: ix.payload_topk("t0", "sum", k=5).collect())
+    assert len(rows) == 5 and len(jobs) == 1
+
+
 def test_payload_query_on_payloadless_index(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("nopay") / "idx")
     plain = spark.createDataFrame(

@@ -22,7 +22,7 @@ from solr_spark.index.segments import (
     merge_index,
 )
 from solr_spark.query.bm25 import bm25_topk
-from solr_spark.query.wand import wand_topk
+from solr_spark.query.wand import PhysicalIndex, wand_topk
 
 # "spark spark join": a repeated term is a separate clause (Lucene), so the
 # physical weight counts it twice, like the logical query_weights.
@@ -139,6 +139,63 @@ def test_open_no_full_dictionary_collect(spark, idx_dir):
     # OOV terms are negative-cached, not re-scanned.
     ix.topk("zzznotaterm", k=5).collect()
     assert ix._term_df_cache["zzznotaterm"] is None
+
+
+def test_open_launches_no_job(spark, idx_dir, count_jobs):
+    ix, jobs = count_jobs(lambda: PhysicalIndex(spark, idx_dir))
+    assert jobs == [] and ix.segments
+
+
+@pytest.mark.parametrize("kind,call", [
+    ("topk", lambda ix: ix.topk("spark join data", k=10)),
+    ("search", lambda ix: ix.search("+spark +join -slow data", k=10)),
+    ("phrase_topk", lambda ix: ix.phrase_topk("spark join", k=10, slop=2)),
+])
+def test_query_is_one_job(spark, idx_dir, count_jobs, kind, call):
+    """From the call to collect(), with a cold term cache: one Spark job."""
+    ix = PhysicalIndex(spark, idx_dir)
+    rows, jobs = count_jobs(lambda: call(ix).collect())
+    assert rows and len(jobs) == 1, (kind, jobs)
+
+
+def test_query_tasks_capped_at_parallelism(spark, docs, count_jobs,
+                                           tmp_path_factory):
+    """A 32-partition index runs min(32, defaultParallelism) tasks, not 32."""
+    d = str(tmp_path_factory.mktemp("p32") / "phys")
+    build_index_dir(docs, d, n_partitions=32, analyzer="simple",
+                    id_col="doc_id", text_col="text")
+    ix = PhysicalIndex(spark, d)
+    assert len(ix.segments) == 32
+    rows, jobs = count_jobs(lambda: ix.topk("spark join data", k=10).collect())
+    tracker = spark.sparkContext.statusTracker()
+    tasks = sum(tracker.getStageInfo(s).numTasks
+                for s in tracker.getJobInfo(jobs[0]).stageIds)
+    assert rows and len(jobs) == 1
+    assert tasks == min(32, spark.sparkContext.defaultParallelism)
+
+
+def test_uncommitted_segment_dir_ignored(spark, docs, tmp_path_factory):
+    """A gen=<G>.tmp-<hex> dir left by a build killed before its rename is
+    not a committed segment: queries, finalize and merge all skip it."""
+    base = tmp_path_factory.mktemp("tmpseg")
+    d = str(base / "phys")
+    build_index_dir(docs.where(F.col("doc_id") < 100), d, n_partitions=4,
+                    analyzer="simple", id_col="doc_id", text_col="text")
+
+    def answers():
+        ix = PhysicalIndex(spark, d)
+        return (_rows(ix.topk("spark join data", k=10)),
+                _rows(ix.search("spark +data", k=10)),
+                _rows(ix.phrase_topk("spark join", k=10)))
+
+    want = answers()
+    assert all(want)
+    seg0 = f"{d}/seg/p=00000"
+    shutil.copytree(f"{seg0}/gen=0", f"{seg0}/gen=0.tmp-deadbeef")
+    assert answers() == want
+    assert finalize_index(spark, d, "simple")["n_docs"] == 100
+    assert answers() == want
+    assert merge_index(spark, d, str(base / "merged"))["n_docs"] == 100
 
 
 def test_reader_cache_invalidation(spark, docs, tmp_path_factory):

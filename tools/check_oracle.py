@@ -10,13 +10,16 @@ Usage: python tools/check_oracle.py [sf_dir] [name_filter...]
 --skip drops entries whose name contains any given substring (for
 oracles that are impractical at a large sf, e.g. the cubic geometry
 CTEs); --resume-log skips entries already reported ok/okR in a previous
-run's log, so an interrupted sweep continues where it stopped.
+run's log, so an interrupted sweep continues where it stopped. The first
+line printed is ``sf_dir <path>``; a resume log whose header is missing or
+names a different sf_dir is refused (exit 2).
 """
 
 from __future__ import annotations
 
 import datetime
 import math
+import os
 import sys
 import time
 from decimal import Decimal
@@ -88,15 +91,25 @@ def main() -> int:
         i = args.index("--skip")
         skips.append(args[i + 1])
         del args[i:i + 2]
+    resume_log = None
     if "--resume-log" in args:
         i = args.index("--resume-log")
-        with open(args[i + 1]) as fh:
-            for line in fh:
-                if line.startswith(("ok ", "okR")):
-                    done.add(line.split()[1].rstrip(":"))
+        resume_log = args[i + 1]
         del args[i:i + 2]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     name_filter = args[1:]
+    header = f"sf_dir {os.path.abspath(sf_dir)}"
+    if resume_log is not None:
+        with open(resume_log) as fh:
+            first = fh.readline().rstrip("\n")
+            if first != header:
+                print(f"refusing --resume-log {resume_log}: its first line is "
+                      f"{first!r}, expected {header!r}", file=sys.stderr)
+                return 2
+            for line in fh:
+                if line.startswith(("ok ", "okR")):
+                    done.add(line.split()[1].rstrip(":"))
+    print(header, flush=True)
 
     import duckdb
 
