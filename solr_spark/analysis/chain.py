@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import re
 from collections import Counter
-from collections.abc import Callable, Iterable
+from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -200,9 +200,3 @@ def analyze_terms_positions_udf(analyzer: str = "text_en"):
         return col.map(_one)
 
     return _terms
-
-
-def analyze_queries(queries: Iterable[str], analyzer: str = "text_en") -> list[list[str]]:
-    """Driver-side helper: analyze query strings with the same chain."""
-    fn = ANALYZERS[analyzer]
-    return [fn(q) for q in queries]

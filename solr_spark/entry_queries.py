@@ -1531,8 +1531,8 @@ def _phys_index_dir(spark: SparkSession, sf_dir: str) -> str:
 
     from solr_spark.index.segments import build_index_dir
 
-    # v2: segment schema gained the positions blob (poss/block_pos_off)
-    d = f"/tmp/solr_spark_phys_v2_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
+    # v3: segments no longer write p, block_last_ord or block_pos_off
+    d = f"/tmp/solr_spark_phys_v3_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
     if not os.path.exists(f"{d}/corpus_stats.json"):
         docs = _t(spark, sf_dir, "documents")
         build_index_dir(

@@ -31,29 +31,6 @@ def describe(df: DataFrame, col: str) -> DataFrame:
     )
 
 
-def corr_matrix(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """Pairwise Pearson correlations: (col_a, col_b, corr)."""
-    spark = df.sparkSession
-    aggs = []
-    names = []
-    for i, a in enumerate(cols):
-        for b in cols[i + 1 :]:
-            aggs.append(F.corr(F.col(a), F.col(b)).alias(f"{a}|{b}"))
-            names.append((a, b))
-    row = df.agg(*aggs).collect()[0]
-    return spark.createDataFrame(
-        [(a, b, float(row[f"{a}|{b}"])) for a, b in names],
-        "col_a string, col_b string, corr double",
-    )
-
-
-def covariance(df: DataFrame, a: str, b: str) -> DataFrame:
-    return df.agg(
-        F.covar_samp(F.col(a), F.col(b)).alias("cov"),
-        F.corr(F.col(a), F.col(b)).alias("corr"),
-    )
-
-
 def moving_avg(
     df: DataFrame, value: str, order_by: str, window: int,
     partition_by: str | None = None,

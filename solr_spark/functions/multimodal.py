@@ -101,14 +101,6 @@ def decode_image_batch(df: DataFrame, fake: bool = False) -> DataFrame:
     return df.mapInPandas(run, IMAGE_META_SCHEMA)
 
 
-def resize_stub(df: DataFrame, target: tuple[int, int] = (224, 224)) -> DataFrame:
-    """Resize stage stub: emits the target dims (pixel resample would run
-    here); keeps schema/partitioning identical to the real operator."""
-    return df.withColumn("width", F.lit(target[0])).withColumn(
-        "height", F.lit(target[1])
-    )
-
-
 def frame_sample_plan(df: DataFrame, every_n_seconds: float = 1.0,
                       duration_col: str = "duration_s") -> DataFrame:
     """Video frame-sampling PLAN: explodes (id, frame_ts) rows for each

@@ -77,9 +77,10 @@ class EncodedPostings:
     """One term's compressed posting list + block skip metadata.
 
     gaps/tfs are varbyte blobs; block_* arrays have one entry per 128-posting
-    block: byte offsets into the blobs (so a block can be decoded without its
-    predecessors), the first ordinal (to rebase the delta cumsum), the last
-    ordinal (doc-range pruning), max tf and min norm byte (impact bounds).
+    block and hold exactly what the block-max scorers read: byte offsets
+    into the blobs (so a block can be decoded without its predecessors), the
+    first ordinal (to rebase the delta cumsum), max tf and min norm byte
+    (impact bounds).
     """
 
     df: int
@@ -87,26 +88,25 @@ class EncodedPostings:
     gaps: bytes
     tfs: bytes
     block_first_ord: np.ndarray  # int64, absolute ord of block's first posting
-    block_last_ord: np.ndarray  # int64
     block_gap_off: np.ndarray  # int64 byte offset into gaps blob
     block_tf_off: np.ndarray  # int64 byte offset into tfs blob
     block_max_tf: np.ndarray  # int32
     block_min_norm: np.ndarray  # uint8 (smaller norm byte == shorter doc)
     # Term positions (Lucene .pos-file role): per posting, tf positions,
-    # first absolute then delta-encoded, all varbyte in one blob; per-block
-    # byte offsets allow decoding a block's positions without predecessors.
-    # Empty when the index is built without positions.
-    poss: bytes = b""
-    block_pos_off: np.ndarray | None = None  # int64
+    # first absolute then delta-encoded, all varbyte in one blob, decoded
+    # whole by the phrase scorer. Empty when the index is built without
+    # positions.
+    poss: bytes
     # Per-position payloads (Lucene .pay-file role): one float32 per
     # position, position-aligned with the poss blob (fixed width, so a
     # block's payload slice is addressable by byte offset alone); per-block
     # MAX payload is the impact bound a top-k payload scorer prunes with
     # (max/first/average <= block_max_pay; sum <= block_max_tf *
-    # block_max_pay). Empty when built without payloads.
-    pays: bytes = b""
-    block_pay_off: np.ndarray | None = None  # int64 byte offset into pays
-    block_max_pay: np.ndarray | None = None  # float32
+    # block_max_pay). Empty, with zero offsets and maxima, when built
+    # without payloads.
+    pays: bytes
+    block_pay_off: np.ndarray  # int64 byte offset into pays
+    block_max_pay: np.ndarray  # float32
 
 
 def encode_postings(
@@ -138,7 +138,6 @@ def encode_postings(
     n_blocks = (n + BLOCK_SIZE - 1) // BLOCK_SIZE
     starts = np.arange(n_blocks, dtype=np.int64) * BLOCK_SIZE
     b_first = ords[::BLOCK_SIZE].copy()
-    b_last = ords[np.minimum(starts + BLOCK_SIZE, n) - 1].copy()
 
     gap_blob, gap_ends = _vb_encode_with_ends(gaps)
     tf_blob, tf_ends = _vb_encode_with_ends(tfs.astype(np.uint64))
@@ -151,7 +150,6 @@ def encode_postings(
     min_norm = np.minimum.reduceat(norms.astype(np.uint8), starts)
 
     pos_blob = b""
-    pos_off = np.zeros(n_blocks, dtype=np.int64)
     pay_blob = b""
     pay_off = np.zeros(n_blocks, dtype=np.int64)
     max_pay = np.zeros(n_blocks, dtype=np.float32)
@@ -165,10 +163,7 @@ def encode_postings(
         pgaps[0] = flat[0]
         pgaps[1:] = flat[1:] - flat[:-1]
         pgaps[pstarts] = flat[pstarts]
-        pos_blob, pos_ends = _vb_encode_with_ends(pgaps.astype(np.uint64))
-        # Block b's positions start after all positions of earlier blocks.
-        first_pos_idx = pstarts[starts[1:]]  # flat index of each block's 1st pos
-        pos_off[1:] = np.where(first_pos_idx > 0, pos_ends[first_pos_idx - 1], 0)
+        pos_blob = vb_encode(pgaps)
         if payloads is not None:
             pay = np.ascontiguousarray(payloads, dtype=np.float32)
             if pay.size != flat.size:
@@ -190,13 +185,11 @@ def encode_postings(
         gaps=gap_blob,
         tfs=tf_blob,
         block_first_ord=b_first,
-        block_last_ord=b_last,
         block_gap_off=gap_off,
         block_tf_off=tf_off,
         block_max_tf=max_tf,
         block_min_norm=min_norm,
         poss=pos_blob,
-        block_pos_off=pos_off,
         pays=pay_blob,
         block_pay_off=pay_off,
         block_max_pay=max_pay,

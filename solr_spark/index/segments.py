@@ -2,14 +2,17 @@
 
 Mirrors the Lucene/Solr indexing lifecycle (SURVEY.md §3.2) Spark-first:
 
-- ``build_segments``: corpus → repartition by hash(docid) → one SEGMENT per
-  partition, built inside ``applyInPandas`` (the Arrow-vectorized analogue of
-  IndexWriter's flush: analyze, invert, compress posting lists, write files).
-  Each segment = postings.parquet + docs.parquet + manifest.json, committed
-  by an atomic directory rename; the manifest carries row counts, a docid
-  checksum (lineage), sizes and timing (metrics). RESUME = re-running the
-  build skips every partition whose manifest already exists — the
-  per-partition checkpoint protocol that replaces Solr's tlog replay
+- ``build_segments``: one Spark shape, ``groupBy(partition_col)
+  .applyInPandas``, one SEGMENT per partition (the Arrow-vectorized
+  analogue of IndexWriter's flush: analyze, invert, compress posting lists,
+  write files). Input already laid out by ``partition_col`` (persisted, or
+  a table bucketed by docid hash) builds with no shuffle; any other layout
+  is shuffled once on p. Each segment = postings.parquet + docs.parquet +
+  manifest.json, committed by an atomic directory rename; the manifest
+  carries row counts, a docid checksum (lineage), sizes and timing
+  (metrics). RESUME = re-running the build skips every partition whose
+  manifest already exists — the per-partition checkpoint protocol that
+  replaces Solr's tlog replay
   (solr/core/src/java/org/apache/solr/update/UpdateLog.java:912-947).
 - ``finalize_index``: global exact term stats (term, df, ttf) via one
   column-pruned groupBy over segment stats columns (= ExactStatsCache,
@@ -17,17 +20,26 @@ Mirrors the Lucene/Solr indexing lifecycle (SURVEY.md §3.2) Spark-first:
   dance; Spark's partial+final combine makes hot terms a non-issue because
   each task emits at most one partial row per term), plus corpus_stats.json
   (N, sumdl, avgdl).
-- ``merge_index``: k-way merge of generations within each partition
+- ``merge_index``: merge of generations within each partition
   (= TieredMergePolicy's role, index/TieredMergePolicyFactory.java:27):
-  re-rank the union of docids, remap ordinals, concatenate+sort postings,
-  re-encode. Runs as one Spark job of one stage (``per_partition``, the
-  same per-partition driver the physical queries use).
+  re-rank the union of docids, decode every generation's postings into
+  flat arrays, order them with one lexsort on (term, new ord), re-encode.
+  Runs as one Spark job of one stage (``per_partition``, which the
+  physical queries also use).
 
-Layout:
+Layout (every column is read by a scorer, the merge or finalize_index):
     index_dir/
       corpus_stats.json
       term_stats.parquet/            (term, df, ttf)
-      seg/p=<P>/gen=<G>/             postings.parquet docs.parquet manifest.json
+      seg/p=<P>/gen=<G>/
+        postings.parquet             one row per term, sorted by term:
+                                     gen, term, df, ttf, gaps, tfs, norms,
+                                     block_first_ord, block_gap_off,
+                                     block_tf_off, block_max_tf,
+                                     block_min_norm, poss, pays,
+                                     block_pay_off, block_max_pay
+        docs.parquet                 gen, ord, docid, dl, norm
+        manifest.json
 
 Scale notes: P is chosen so one partition's docs fit an executor (at 10^12
 docs → P in the tens of thousands; parquet + manifests shard naturally).
@@ -49,18 +61,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from solr_spark.analysis.chain import ANALYZERS, ANALYZERS_POS
-from solr_spark.index.codec import encode_postings
-from solr_spark.index.norms import DECODE_TABLE, norm_byte_array
+from solr_spark.index.codec import decode_positions, encode_postings, vb_decode
+from solr_spark.index.norms import norm_byte_array
 
 MANIFEST_SCHEMA = (
     "p int, gen int, n_docs long, n_terms long, n_postings long, "
     "sum_dl long, docid_checksum long, skipped boolean, wall_s double, bytes long"
 )
 
+# postings.parquet columns after ``gen``: one row per term (``_term_row``).
 _POSTINGS_COLS = [
-    "p", "gen", "term", "df", "ttf", "gaps", "tfs", "norms",
-    "block_first_ord", "block_last_ord", "block_gap_off", "block_tf_off",
-    "block_max_tf", "block_min_norm", "poss", "block_pos_off",
+    "term", "df", "ttf", "gaps", "tfs", "norms",
+    "block_first_ord", "block_gap_off", "block_tf_off",
+    "block_max_tf", "block_min_norm", "poss",
     "pays", "block_pay_off", "block_max_pay",
 ]
 
@@ -152,7 +165,7 @@ def _invert_partition(
     """Analyze + invert one partition. Returns (docs_table, postings_table).
 
     docs_table: (ord, docid, dl, norm) sorted by docid (ord = rank).
-    postings_table: one row per term, columns per _POSTINGS_COLS minus p/gen.
+    postings_table: one row per term, columns per _POSTINGS_COLS.
 
     ``store_payloads=True`` switches the analysis to the
     ``delimited_payload`` chain (whitespace ``term|payload`` tokens; the
@@ -249,9 +262,7 @@ def _invert_partition(
             if store_payloads else None
         )
         rows.append(_term_row(term, o, t, pn, pos, pay))
-    postings = pd.DataFrame(
-        rows, columns=_POSTINGS_COLS[2:]
-    )
+    postings = pd.DataFrame(rows, columns=_POSTINGS_COLS)
     docs = pd.DataFrame(
         {
             "ord": np.arange(len(docids), dtype=np.int64),
@@ -271,29 +282,22 @@ def _term_row(
     positions: np.ndarray | None,
     payloads: np.ndarray | None,
 ) -> tuple:
-    """One postings row (the _POSTINGS_COLS after p/gen) of a term's
-    postings; block offsets of absent position/payload streams are zeros.
+    """One postings row (the _POSTINGS_COLS) of a term's postings; block
+    offsets and maxima of an absent payload stream are zeros.
 
     The norm byte rides WITH the postings (1 byte per posting, like
     Lucene's impact pairs): scoring then never touches the doc table — the
     doc table is consulted only to map the winning top-k ords back to
     docids via a filtered read."""
     enc = encode_postings(ords, tfs, norms, positions=positions, payloads=payloads)
-    n_blk = len(enc.block_first_ord)
     return (
         term, enc.df, enc.ttf, enc.gaps, enc.tfs, norms.tobytes(),
-        enc.block_first_ord.tolist(), enc.block_last_ord.tolist(),
+        enc.block_first_ord.tolist(),
         enc.block_gap_off.tolist(), enc.block_tf_off.tolist(),
         enc.block_max_tf.tolist(),
         enc.block_min_norm.astype(np.int32).tolist(),
-        enc.poss,
-        enc.block_pos_off.tolist() if enc.block_pos_off is not None
-        else [0] * n_blk,
-        enc.pays,
-        enc.block_pay_off.tolist() if enc.block_pay_off is not None
-        else [0] * n_blk,
-        [float(x) for x in enc.block_max_pay]
-        if enc.block_max_pay is not None else [0.0] * n_blk,
+        enc.poss, enc.pays, enc.block_pay_off.tolist(),
+        [float(x) for x in enc.block_max_pay],
     )
 
 
@@ -319,10 +323,8 @@ def _write_segment(
     os.makedirs(tmp, exist_ok=True)
     postings = postings.copy()
     postings.insert(0, "gen", np.int32(gen))
-    postings.insert(0, "p", np.int32(p))
     docs = docs.copy()
     docs.insert(0, "gen", np.int32(gen))
-    docs.insert(0, "p", np.int32(p))
     pq.write_table(pa.Table.from_pandas(postings, preserve_index=False),
                    os.path.join(tmp, "postings.parquet"))
     # Small row groups on the doc table: queries read it only to map top-k
@@ -353,9 +355,8 @@ def _write_segment(
     except OSError:
         # A concurrent attempt won the rename. Legitimate only when both
         # attempts indexed the SAME rows (speculative re-execution of one
-        # task); if the winner saw a different row set, the precondition
-        # (each p fully co-located in one task) was violated and adopting
-        # the winner would silently drop our rows.
+        # task); if the winner saw a different row set, adopting it would
+        # silently drop our rows.
         import shutil
 
         shutil.rmtree(tmp, ignore_errors=True)
@@ -368,9 +369,9 @@ def _write_segment(
             raise RuntimeError(
                 f"segment p={p} gen={gen}: concurrent build committed a "
                 f"DIFFERENT row set (n_docs {winner['n_docs']} vs "
-                f"{manifest['n_docs']}, checksum mismatch) — rows for this "
-                "partition are not co-located; rebuild without "
-                "assume_partitioned or fix the input layout"
+                f"{manifest['n_docs']}, checksum mismatch) — the input is not "
+                "deterministic across task attempts; persist the corpus "
+                "before building"
             )
         manifest = winner
     return manifest
@@ -406,17 +407,14 @@ def _build_one(index_dir: str, generation: int, analyzer: str,
         with open(mpath) as f:
             m = json.load(f)
         # Resume is only valid if the committed segment covers EXACTLY the
-        # rows this task holds — a cheap lineage check (no re-analysis) that
-        # also catches an assume_partitioned layout violation, where two
-        # tasks each hold part of p and the second would otherwise silently
-        # drop its rows.
+        # rows this task holds — a cheap lineage check (no re-analysis).
         if m["n_docs"] != len(docids) or m["docid_checksum"] != checksum:
             raise RuntimeError(
                 f"segment p={p} gen={generation}: committed manifest covers "
                 f"{m['n_docs']} docs (checksum {m['docid_checksum']}) but "
                 f"this task holds {len(docids)} (checksum {checksum}) — "
-                "input changed since the checkpoint, or rows for this "
-                "partition are not co-located (assume_partitioned violated)"
+                "input changed since the checkpoint; build the changed rows "
+                "as a new generation or into a new index_dir"
             )
         return _manifest_row(m, skipped=True)
     t0 = time.time()
@@ -439,7 +437,6 @@ def build_segments(
     generation: int = 0,
     id_col: str = "docid",
     text_col: str = "content",
-    assume_partitioned: bool = False,
     store_positions: bool = True,
     store_payloads: bool = False,
 ) -> pd.DataFrame:
@@ -456,32 +453,12 @@ def build_segments(
     Returns the manifest table (one row per partition; ``skipped=True`` rows
     were already committed by a previous run — the resume path).
 
-    ``assume_partitioned=True`` is the bucketed-input fast path: when the
-    corpus is already laid out by ``partition_col`` (an Iceberg table
-    bucketed by docid hash, or a caller-side ``repartition(n, "p")``), the
-    build runs as mapInPandas with ZERO shuffle — each task groups its
-    co-located rows by p locally. The default path shuffles once on p.
+    One Spark shape: ``groupBy(partition_col).applyInPandas``, one segment
+    per group. Input already laid out by the partition expression (e.g.
+    ``corpus.repartition(n, partition_col("docid", n))``, persisted) builds
+    with no shuffle: Spark sees the required distribution is met and plans
+    no Exchange. Any other layout is shuffled once on p.
     """
-    if assume_partitioned:
-        df = corpus.select(
-            F.col(id_col).cast("long").alias("docid"),
-            F.col(text_col).alias("text"),
-            F.col("p").cast("int").alias("p"),
-        )
-
-        def writer_local(batches):
-            parts = list(batches)
-            if not parts:
-                return
-            pdf = pd.concat(parts, ignore_index=True)
-            for p, grp in pdf.groupby("p", sort=True):
-                yield _build_one(
-                    index_dir, generation, analyzer, int(p), grp,
-                    store_positions, store_payloads,
-                )
-
-        return df.mapInPandas(writer_local, MANIFEST_SCHEMA).toPandas()
-
     df = corpus.select(
         F.col(id_col).cast("long").alias("docid"), F.col(text_col).alias("text")
     ).withColumn("p", partition_col("docid", n_partitions))
@@ -492,10 +469,7 @@ def build_segments(
             store_positions, store_payloads,
         )
 
-    manifests = (
-        df.groupBy("p").applyInPandas(writer, MANIFEST_SCHEMA).toPandas()
-    )
-    return manifests
+    return df.groupBy("p").applyInPandas(writer, MANIFEST_SCHEMA).toPandas()
 
 
 def finalize_index(
@@ -505,19 +479,23 @@ def finalize_index(
     k1: float = 1.2,
     b: float = 0.75,
 ) -> dict:
-    """Compute global exact stats from committed segments and publish them."""
+    """Compute global exact stats from committed segments and publish them.
+    An index with no committed segment gets an empty term_stats and
+    ``n_docs`` 0."""
     seg_dirs = [
         _seg_dir(index_dir, p, g)
         for p, gens in committed_segments(index_dir).items()
         for g in gens
     ]
-    postings = spark.read.parquet(*[f"{d}/postings.parquet" for d in seg_dirs])
-    (
-        postings.groupBy("term")
-        .agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/term_stats.parquet")
-    )
+    if seg_dirs:
+        term_stats = (
+            spark.read.parquet(*[f"{d}/postings.parquet" for d in seg_dirs])
+            .groupBy("term")
+            .agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
+        )
+    else:
+        term_stats = spark.createDataFrame([], "term string, df long, ttf long")
+    term_stats.write.mode("overwrite").parquet(f"{index_dir}/term_stats.parquet")
     n_docs = sum_dl = 0
     gens: set[int] = set()
     positions_all = True
@@ -583,17 +561,12 @@ def merge_index(
     """Merge all generations of every partition into gen=0 under ``out_dir``.
 
     Per partition, inside ``per_partition``'s one stage: re-rank the docid
-    union of its committed generations, remap each generation's ordinals
-    (order-preserving, so remapped lists stay sorted), concatenate + merge
-    per term, re-encode. Equivalent to a full Lucene forceMerge(1) per
-    shard.
+    union of its committed generations; decode every generation's postings
+    into flat (term, new ord, tf) arrays plus the flat position and payload
+    streams; order the postings with one lexsort on (term, new ord), gather
+    positions and payloads with one index, and re-encode term by term.
+    Equivalent to a full Lucene forceMerge(1) per shard.
     """
-    from solr_spark.index.codec import (
-        decode_payloads,
-        decode_positions,
-        decode_postings,
-    )
-
     stats = read_corpus_stats(index_dir)
     analyzer = analyzer or stats["analyzer"]
     segs = committed_segments(index_dir)
@@ -608,120 +581,85 @@ def merge_index(
             with open(os.path.join(final, "manifest.json")) as f:
                 return _manifest_row(json.load(f), skipped=True)
         t0 = time.time()
-        merged_has_positions = True
-        merged_has_payloads = True
         gen_dirs = [_seg_dir(index_dir, p, g) for g in segs[p]]
-        docs_parts, post_parts = [], []
+        flags = []
         for gd in gen_dirs:
-            docs_parts.append(pq.read_table(f"{gd}/docs.parquet").to_pandas())
-            tbl = pq.read_table(f"{gd}/postings.parquet")
-            cols = ["gen", "term", "gaps", "tfs", "poss"]
-            if "pays" in tbl.schema.names:
-                cols.append("pays")
-            part = tbl.select(cols).to_pandas()
-            if "pays" not in part.columns:  # pre-payload segment
-                part["pays"] = b""
-            post_parts.append(part)
-        all_docs = pd.concat(docs_parts, ignore_index=True)
-        order = np.argsort(all_docs["docid"].to_numpy(), kind="stable")
-        all_docs = all_docs.iloc[order].reset_index(drop=True)
-        # old (gen, ord) -> new ord
-        remap: dict[int, np.ndarray] = {}
-        new_ord = np.arange(len(all_docs), dtype=np.int64)
-        for g in all_docs["gen"].unique():
-            mask = (all_docs["gen"] == g).to_numpy()
-            old = all_docs["ord"].to_numpy()[mask]
-            m = np.empty(old.max() + 1 if old.size else 0, dtype=np.int64)
-            m[old] = new_ord[mask]
-            remap[int(g)] = m
-        norms = all_docs["norm"].to_numpy(dtype=np.uint8)
-        dl = all_docs["dl"].to_numpy(dtype=np.int64)
+            with open(os.path.join(gd, "manifest.json")) as f:
+                m = json.load(f)
+            flags.append((m.get("positions", True), m.get("payloads", False)))
+        for i, opt in enumerate(("store_positions", "store_payloads")):
+            if len({fl[i] for fl in flags}) > 1:
+                raise RuntimeError(
+                    f"merge p={p}: generations mix {opt}=True and False — a "
+                    "merged stream would silently misalign; rebuild them "
+                    "all with one setting"
+                )
+        positions, payloads = flags[0]
+        cols = ["term", "df", "gaps", "tfs"] + ["poss"] * positions
+        cols += ["pays"] * payloads
 
-        all_posts = pd.concat(post_parts, ignore_index=True)
-        rows = []
-        for term, grp in all_posts.groupby("term", sort=True):
-            os_, ts_, flats, seg_starts, pay_flats = [], [], [], [], []
-            pos_off = 0
-            for _, r in grp.iterrows():
-                o, t = decode_postings(r["gaps"], r["tfs"])
-                flat, starts = decode_positions(r["poss"], t)
-                if flat.size == 0 and t.size > 0:
-                    flat = None  # this gen stored no positions
-                pay_flat = decode_payloads(r["pays"] or b"", t)[0]
-                if pay_flat.size == 0:
-                    pay_flat = None  # this gen stored no payloads
-                os_.append(remap[int(r["gen"])][o])
-                ts_.append(t)
-                flats.append(flat)
-                pay_flats.append(pay_flat)
-                if flat is not None:
-                    seg_starts.append(starts + pos_off)
-                    pos_off += flat.size
-            if any(f is not None for f in flats) and any(
-                f is None for f in flats
-            ):
-                raise RuntimeError(
-                    f"merge p={p} term={term!r}: generations mix "
-                    "store_positions=True and False — a merged "
-                    "position list would silently misalign; rebuild "
-                    "the positionless generation with positions (or "
-                    "all without)"
+        docs = [
+            pq.read_table(f"{gd}/docs.parquet", columns=["ord", "docid", "dl", "norm"])
+            for gd in gen_dirs
+        ]
+        merged = pa.concat_tables(docs).to_pandas()
+        doc_order = np.argsort(merged["docid"].to_numpy(), kind="stable")
+        new_ord = np.empty(doc_order.size, dtype=np.int64)
+        new_ord[doc_order] = np.arange(doc_order.size)
+        terms, dfs, ords, tfs, poss, pays = [], [], [], [], [], []
+        off = 0
+        for gd, d in zip(gen_dirs, docs, strict=True):
+            remap = np.empty(d.num_rows, dtype=np.int64)
+            remap[d["ord"].to_numpy()] = new_ord[off:off + d.num_rows]
+            off += d.num_rows
+            t = pq.read_table(f"{gd}/postings.parquet", columns=cols)
+            df = t["df"].to_numpy()
+            # Each term's gap list restarts at an absolute ord, as each
+            # posting's position list restarts at an absolute position, so
+            # decode_positions decodes the whole column in one pass.
+            o = decode_positions(b"".join(t["gaps"].to_pylist()), df)[0]
+            tf = vb_decode(b"".join(t["tfs"].to_pylist())).astype(np.int64)
+            terms.append(t["term"].to_numpy())
+            dfs.append(df)
+            ords.append(remap[o])
+            tfs.append(tf)
+            if positions:
+                poss.append(
+                    decode_positions(b"".join(t["poss"].to_pylist()), tf)[0]
                 )
-            if not any(f is not None for f in flats):
-                merged_has_positions = False
-            if any(f is not None for f in pay_flats) and any(
-                f is None for f in pay_flats
-            ):
-                raise RuntimeError(
-                    f"merge p={p} term={term!r}: generations mix "
-                    "store_payloads=True and False — a merged "
-                    "payload stream would silently misalign; rebuild "
-                    "the payload-less generation with payloads (or "
-                    "all without)"
-                )
-            if not any(f is not None for f in pay_flats):
-                merged_has_payloads = False
-            pay_flats = [f for f in pay_flats if f is not None]
-            flats = [f for f in flats if f is not None]
-            o = np.concatenate(os_)
-            t = np.concatenate(ts_)
-            so = np.argsort(o, kind="stable")
-            o, t = o[so], t[so]
-            pn = norms[o]
-            # Positions travel with their posting through the merge
-            # reorder: gather each posting's position segment in the
-            # new order, then re-encode.
-            flat_all = np.concatenate(flats) if flats else np.empty(0, np.int64)
-            new_flat = None
-            new_pay = None
-            if flat_all.size:
-                starts_all = np.concatenate(seg_starts)
-                ends_all = starts_all + np.concatenate(ts_)
-                new_flat = np.concatenate(
-                    [flat_all[starts_all[j]:ends_all[j]] for j in so]
-                )
-                if pay_flats:
-                    # Payloads are position-aligned, so the same
-                    # gather order re-sorts them.
-                    pay_all = np.concatenate(pay_flats)
-                    new_pay = np.concatenate(
-                        [pay_all[starts_all[j]:ends_all[j]] for j in so]
-                    )
-            rows.append(_term_row(term, o, t, pn, new_flat, new_pay))
-        postings = pd.DataFrame(rows, columns=_POSTINGS_COLS[2:])
-        docs = pd.DataFrame(
-            {
-                "ord": new_ord,
-                "docid": all_docs["docid"].to_numpy(dtype=np.int64),
-                "dl": dl,
-                "norm": norms.astype(np.int32),
-            }
-        )
+            if payloads:
+                pays.append(np.frombuffer(
+                    b"".join(t["pays"].to_pylist()), dtype=np.float32
+                ))
+        uniq, term_code = np.unique(np.concatenate(terms), return_inverse=True)
+        code = np.repeat(term_code, np.concatenate(dfs))
+        o, tf = np.concatenate(ords), np.concatenate(tfs)
+        order = np.lexsort((o, code))
+        # Positions (and their aligned payloads) travel with their posting:
+        # one index gathers every posting's run in the new order.
+        run_start = (np.cumsum(tf) - tf)[order]
+        o, tf = o[order], tf[order]
+        gather = np.repeat(run_start - (np.cumsum(tf) - tf), tf) + np.arange(tf.sum())
+        pos = np.concatenate(poss)[gather] if positions else None
+        pay = np.concatenate(pays)[gather] if payloads else None
+        cut = np.concatenate([[0], np.cumsum(np.bincount(code, minlength=uniq.size))])
+        pcut = np.concatenate([[0], np.cumsum(tf)])
+        merged = merged.iloc[doc_order].reset_index(drop=True)
+        merged["ord"] = np.arange(len(merged), dtype=np.int64)
+        norms = merged["norm"].to_numpy(dtype=np.uint8)
+        rows = [
+            _term_row(
+                term, o[a:b], tf[a:b], norms[o[a:b]],
+                None if pos is None else pos[pcut[a]:pcut[b]],
+                None if pay is None else pay[pcut[a]:pcut[b]],
+            )
+            for term, a, b in zip(uniq, cut[:-1], cut[1:])
+        ]
+        postings = pd.DataFrame(rows, columns=_POSTINGS_COLS)
         m = _write_segment(
-            out_dir, p, 0, docs, postings,
-            _docid_checksum(docs["docid"].to_numpy()), time.time() - t0,
-            store_positions=merged_has_positions,
-            store_payloads=merged_has_payloads,
+            out_dir, p, 0, merged, postings,
+            _docid_checksum(merged["docid"].to_numpy()), time.time() - t0,
+            store_positions=positions, store_payloads=payloads,
         )
         return _manifest_row(m, skipped=False)
 

@@ -43,10 +43,6 @@ _MAX_CODEGEN_NODES = 10_000
 # --------------------------------------------------------------------------
 
 
-def identity_norm() -> Callable[[Column], Column]:
-    return lambda c: c
-
-
 def minmax_norm(lo: float, hi: float) -> Callable[[Column], Column]:
     """(v - min) / (max - min) — MinMaxNormalizer.java."""
     if hi == lo:

@@ -58,21 +58,6 @@ def suggest_infix(
     )
 
 
-def terms_browse(
-    index: IndexTables,
-    lower: str | None = None,
-    upper: str | None = None,
-    limit: int = 20,
-) -> DataFrame:
-    """TermsComponent: dictionary slice [lower, upper) in term order."""
-    t = index.term_stats()
-    if lower is not None:
-        t = t.where(F.col("term") >= lower)
-    if upper is not None:
-        t = t.where(F.col("term") < upper)
-    return t.orderBy("term").limit(limit).select("term", "df", "ttf")
-
-
 def realtime_get(index: IndexTables, ids: list) -> DataFrame:
     """Point lookup of stored docs by uniqueKey (id IN (...) pushes down)."""
     return index.docs.where(F.col("docid").isin(ids))

@@ -69,6 +69,7 @@ exact and the tiebreak (score desc, docid asc) is total.
 
 from __future__ import annotations
 
+import os
 from functools import cached_property, partial
 
 import numpy as np
@@ -597,10 +598,12 @@ class PhysicalIndex:
     """Point-in-time searcher over a physical index directory.
 
     Opening does no Spark work: it reads corpus_stats.json and lists the
-    committed segments (``committed_segments``). That listing is the
-    searcher's snapshot, as Lucene's IndexSearcher pins its segments; a
-    generation committed later is seen after a reopen, which ``open_index``
-    decides from the commit token. Each query runs as one Spark job of one
+    committed segments (``committed_segments``) and term_stats' part files.
+    Those listings are the searcher's snapshot, as Lucene's IndexSearcher
+    pins its segments; a generation committed later is seen after a reopen,
+    which ``open_index`` decides from the commit token. A searcher whose
+    term_stats files a later commit replaced raises rather than mix that
+    commit's df with its own N. Each query runs as one Spark job of one
     stage over the snapshot (module docstring).
     """
 
@@ -616,28 +619,40 @@ class PhysicalIndex:
         self.commit_token = _commit_token(index_dir)
         self.stats = read_corpus_stats(index_dir)
         self.segments = committed_segments(index_dir)
+        ts = f"{index_dir}/term_stats.parquet"
+        self._term_stats_files = [
+            f"{ts}/{f}" for f in sorted(os.listdir(ts))
+            if not f.startswith(("_", "."))
+        ]
         # term -> global df, or None for a term known absent from the corpus
         # (negative caching avoids re-reading for repeated OOV query terms).
         # Insertion-ordered dict doubles as the LRU eviction order.
         self._term_df_cache: dict[str, int | None] = {}
 
+    def _stats_files(self) -> list[str]:
+        """The snapshot's term_stats part files, still on disk."""
+        if not all(map(os.path.exists, self._term_stats_files)):
+            raise RuntimeError(
+                f"stale searcher over {self.index_dir}: a later commit "
+                "replaced its term_stats; reopen it with open_index"
+            )
+        return self._term_stats_files
+
     @cached_property
     def _term_stats(self) -> DataFrame:
         """term_stats as a Spark frame, built only for the fuzzy probe."""
-        return self.spark.read.parquet(
-            f"{self.index_dir}/term_stats.parquet"
-        ).select("term", "df")
+        return self.spark.read.parquet(*self._stats_files()).select("term", "df")
 
     def _df_for_terms(self, terms: list[str]) -> dict[str, int]:
         """Global df for ``terms`` via a term-IN filtered pyarrow read of
-        term_stats on the driver — no Spark job, and never a full
+        the snapshot's term_stats files — no Spark job, and never a full
         dictionary collect."""
         missing = [t for t in terms if t not in self._term_df_cache]
         if missing:
             import pyarrow.parquet as pq
 
             tbl = pq.read_table(
-                f"{self.index_dir}/term_stats.parquet",
+                self._stats_files(),
                 columns=["term", "df"],
                 filters=[("term", "in", missing)],
             )
@@ -925,8 +940,6 @@ def _commit_token(index_dir: str) -> tuple:
     """Identity of the index's committed state: corpus_stats.json mtime +
     the committed generation list. Changes on every finalize_index/merge, so
     a cached reader can detect staleness without re-listing segments."""
-    import os
-
     st = os.stat(f"{index_dir}/corpus_stats.json")
     gens = tuple(read_corpus_stats(index_dir).get("generations", ()))
     return (st.st_mtime_ns, st.st_size, gens)
@@ -966,13 +979,3 @@ def wand_phrase_topk(
     """Top-k phrase matches from a physical index directory."""
     return open_index(spark, index_dir).phrase_topk(phrase, k=k, slop=slop)
 
-
-def wand_payload_topk(
-    spark: SparkSession,
-    index_dir: str,
-    term: str,
-    func: str = "max",
-    k: int = 10,
-) -> DataFrame:
-    """Top-k payload_score matches from a physical payload index."""
-    return open_index(spark, index_dir).payload_topk(term, func=func, k=k)

@@ -53,7 +53,6 @@ def test_partial_block_decode():
         assert enc.block_max_tf[b] == tfs[lo:hi].max()
         assert enc.block_min_norm[b] == norms[lo:hi].min()
         assert enc.block_first_ord[b] == ords[lo]
-        assert enc.block_last_ord[b] == ords[hi - 1]
 
 
 def test_varbyte_extremes():
@@ -113,7 +112,6 @@ def test_property_full_codec_roundtrip():
             assert enc.block_max_tf[b] == tfs[lo:hi].max()
             assert enc.block_min_norm[b] == norms[lo:hi].min()
             assert enc.block_first_ord[b] == ords[lo]
-            assert enc.block_last_ord[b] == ords[hi - 1]
         # Every block decodes standalone through its byte offsets.
         sel = np.arange(nb, dtype=np.int64)
         ob, tb = decode_blocks(
@@ -155,11 +153,9 @@ def test_positions_roundtrip():
     import numpy as np
 
     from solr_spark.index.codec import (
-        BLOCK_SIZE,
         decode_positions,
         decode_postings,
         encode_postings,
-        vb_decode,
     )
 
     rng = np.random.default_rng(7)
@@ -176,10 +172,3 @@ def test_positions_roundtrip():
     assert (f2 == flat).all()
     for i in (0, 1, 57, n - 1):
         assert (f2[starts[i]:starts[i] + tfs[i]] == pls[i]).all()
-    # block offsets let a block's positions decode without predecessors
-    bi = 3
-    s, e = int(enc.block_pos_off[bi]), int(enc.block_pos_off[bi + 1])
-    gaps_blk = vb_decode(enc.poss[s:e])
-    assert gaps_blk.size == tfs[bi * BLOCK_SIZE:(bi + 1) * BLOCK_SIZE].sum()
-    first = np.cumsum(gaps_blk.astype(np.int64))[: int(tfs[bi * BLOCK_SIZE])]
-    assert (first == pls[bi * BLOCK_SIZE]).all()

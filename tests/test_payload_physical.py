@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -165,6 +166,14 @@ def test_merge_preserves_payloads(spark, tmp_path_factory):
                    id_col="docid", text_col="text", store_payloads=True)
     finalize_index(spark, idx_dir)
     merge_index(spark, idx_dir, out_dir)
+    # The merged segments are exactly those of one build of both corpora.
+    build_index_dir(c1.unionByName(c2), f"{base}/one", n_partitions=2,
+                    id_col="docid", text_col="text", store_payloads=True)
+    for p in range(2):
+        for f in ("postings.parquet", "docs.parquet"):
+            seg = f"seg/p={p:05d}/gen=0/{f}"
+            assert pq.read_table(f"{out_dir}/{seg}").equals(
+                pq.read_table(f"{base}/one/{seg}"))
     ix = open_index(spark, out_dir)
     assert ix.stats["payloads"] is True
     got = ix.payload_topk("t0", func="max", k=10).toPandas()

@@ -104,27 +104,71 @@ def test_merge_generations(spark, docs, idx_dir, tmp_path_factory):
     shutil.rmtree(gen_dir, ignore_errors=True)
 
 
-def test_bucketed_build_equivalent(spark, docs, idx_dir, tmp_path_factory):
-    """The zero-shuffle bucketed-input path must produce an index that
-    answers identically to the shuffled default path."""
-    from pyspark.sql import functions as F
+def _stages(spark, jobs):
+    """(stages run, shuffle-map stages among them) over ``jobs``; stages
+    Spark skipped because their output already exists do not count."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    tracker = spark.sparkContext.statusTracker()
+    ran = [
+        st for j in jobs for st in map(store.lastStageAttempt,
+                                       tracker.getJobInfo(j).stageIds)
+        if st.status().toString() != "SKIPPED"
+    ]
+    return len(ran), sum(st.shuffleWriteBytes() > 0 for st in ran)
 
+
+@pytest.mark.parametrize("positions", [True, False])
+def test_merge_equals_one_shot_build(spark, docs, tmp_path_factory, positions):
+    """Merging generations writes exactly the segments that one build of
+    the same docs writes: the inversion loop is the merge's reference."""
+    import pyarrow.parquet as pq
+
+    base = tmp_path_factory.mktemp("mergeref")
+    kw = dict(analyzer="simple", id_col="doc_id", text_col="text",
+              store_positions=positions)
+    for g in range(3):
+        build_segments(docs.where(F.col("doc_id") % 3 == g), str(base / "gens"),
+                       2, generation=g, **kw)
+    finalize_index(spark, str(base / "gens"), "simple")
+    merge_index(spark, str(base / "gens"), str(base / "merged"))
+    build_index_dir(docs, str(base / "one"), n_partitions=2, **kw)
+    for p in range(2):
+        for f in ("postings.parquet", "docs.parquet"):
+            seg = f"seg/p={p:05d}/gen=0/{f}"
+            assert pq.read_table(base / "merged" / seg).equals(
+                pq.read_table(base / "one" / seg)), seg
+
+
+def test_bucketed_build_equivalent(spark, docs, idx_dir, count_jobs,
+                                   tmp_path_factory):
+    """Persisted input laid out by partition_col builds in ONE stage with no
+    shuffle; other input is shuffled once; both answer identically."""
     from solr_spark.index.segments import partition_col
 
-    d2 = str(tmp_path_factory.mktemp("idx") / "bucketed")
-    bucketed = (
+    base = tmp_path_factory.mktemp("bucketed")
+    laid_out = (
         docs.select(
             F.col("doc_id").cast("long").alias("docid"),
             F.col("text").alias("content"),
         )
-        .withColumn("p", partition_col("docid", 8))
-        .repartition(8, "p")
+        .repartition(8, partition_col("docid", 8))
+        .persist()
     )
-    m = build_segments(bucketed, d2, 8, "simple", assume_partitioned=True)
+    laid_out.count()
+    m, jobs = count_jobs(
+        lambda: build_segments(laid_out, str(base / "laid"), 8, "simple")
+    )
     assert m["n_docs"].sum() == 500
-    finalize_index(spark, d2, "simple")
+    assert _stages(spark, jobs) == (1, 0)
+    m, jobs = count_jobs(lambda: build_segments(
+        docs, str(base / "shuffled"), 8, "simple", 0, "doc_id", "text"))
+    assert m["n_docs"].sum() == 500
+    assert _stages(spark, jobs)[1] == 1
+    laid_out.unpersist()
     want = _rows(wand_topk(spark, idx_dir, "spark join data", k=10))
-    assert _rows(wand_topk(spark, d2, "spark join data", k=10)) == want
+    for d in ("laid", "shuffled"):
+        finalize_index(spark, str(base / d), "simple")
+        assert _rows(wand_topk(spark, str(base / d), "spark join data", k=10)) == want
 
 
 def test_open_no_full_dictionary_collect(spark, idx_dir):
@@ -231,17 +275,59 @@ def test_topk_tie_break_at_boundary(spark, tmp_path_factory):
     assert got == list(range(10))
 
 
-def test_assume_partitioned_violation_raises(spark, tmp_path_factory):
-    """Rows of one p split across two Spark partitions must RAISE, not
-    silently drop the losing task's rows."""
-    d = str(tmp_path_factory.mktemp("viol") / "phys")
-    rows = [(i, f"word{i} common", 0) for i in range(100)]
-    corpus = spark.createDataFrame(
-        rows, "doc_id long, text string, p int"
-    ).repartition(4, "doc_id")  # p=0 rows scattered over 4 partitions
-    with pytest.raises(Exception, match="not co-located|checksum|DIFFERENT"):
-        build_segments(corpus, d, analyzer="simple", id_col="doc_id",
-                       text_col="text", assume_partitioned=True)
+def test_resume_with_changed_input_raises(docs, tmp_path_factory):
+    """Resuming a generation over changed input must RAISE (the manifest's
+    lineage check), not adopt the committed segment and drop the new row."""
+    d = str(tmp_path_factory.mktemp("changed") / "phys")
+    build_segments(docs.where(F.col("doc_id") < 100), d, 4, "simple", 0,
+                   "doc_id", "text")
+    with pytest.raises(Exception, match="input changed since the checkpoint"):
+        build_segments(docs.where(F.col("doc_id") < 101), d, 4, "simple", 0,
+                       "doc_id", "text")
+
+
+def test_searcher_never_mixes_commits(spark, tmp_path_factory):
+    """A searcher opened before a later commit must not score with that
+    commit's df and its own N (at 10 docs vs df 40, idf < 0 and every hit
+    was dropped): it raises until reopened, and the reopened searcher
+    answers over the new commit."""
+    from solr_spark.query.wand import open_index
+
+    d = str(tmp_path_factory.mktemp("stale") / "phys")
+    kw = dict(analyzer="simple", id_col="doc_id", text_col="text")
+    build_index_dir(spark.createDataFrame(
+        [(i, f"alpha w{i}") for i in range(10)], "doc_id long, text string"),
+        d, n_partitions=2, **kw)
+    old = open_index(spark, d)
+    assert len(old.topk("alpha", k=50).collect()) == 10
+    build_segments(spark.createDataFrame(
+        [(i, f"alpha x{i}") for i in range(10, 40)], "doc_id long, text string"),
+        d, 2, generation=1, **kw)
+    finalize_index(spark, d, "simple")
+    # "alpha" alone is in old's df cache from its own commit; "w3" is not.
+    for call in (lambda: old.topk("alpha w3", k=50),
+                 lambda: old.search("alpha~1", k=50)):
+        with pytest.raises(RuntimeError, match="stale searcher.*open_index"):
+            call().collect()
+    assert len(open_index(spark, d).topk("alpha", k=50).collect()) == 40
+
+
+def test_empty_index(spark, tmp_path_factory):
+    """An index over an empty corpus builds, answers every query kind with
+    no rows, and merges."""
+    from solr_spark.query.wand import open_index
+
+    base = tmp_path_factory.mktemp("empty")
+    d = str(base / "phys")
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    stats = build_index_dir(empty, d, n_partitions=4, analyzer="simple",
+                            id_col="doc_id", text_col="text")
+    assert stats["n_docs"] == 0
+    ix = open_index(spark, d)
+    assert ix.topk("spark join", k=10).collect() == []
+    assert ix.search("+spark -join tabel~1", k=10).collect() == []
+    assert ix.phrase_topk("spark join", k=10).collect() == []
+    assert merge_index(spark, d, str(base / "merged"))["n_docs"] == 0
 
 
 PHRASES = [("part filter scan", 0), ("spark join", 0), ("spark join", 2),

@@ -17,12 +17,11 @@ names a different sf_dir is refused (exit 2).
 
 from __future__ import annotations
 
-import datetime
 import math
 import os
+import re
 import sys
 import time
-from decimal import Decimal
 
 sys.path.insert(0, ".")
 
@@ -45,41 +44,43 @@ def rowset(cols, rows):
     return sorted(tuple(norm(r[i]) for i in order) for r in rows)
 
 
-def kind(v):
-    """Coarse Python type class of a fetched cell. The driver's value hash
-    is TYPE-sensitive (r4's frequency_table_quantity: identical values, red
-    hash because DuckDB returned float64 where Spark emitted int64), while
-    norm() above collapses 3.0 and 3 to the same string — so the sweep also
-    compares per-column type classes to catch that hazard before the driver
-    samples an entry."""
-    if isinstance(v, bool):
-        return "bool"
-    if isinstance(v, int):
-        return "int"
-    if isinstance(v, float):
-        return "float"
-    if isinstance(v, Decimal):
-        return "decimal"
-    if isinstance(v, datetime.datetime):
-        return "timestamp"
-    if isinstance(v, datetime.date):
-        return "date"
-    if isinstance(v, (bytes, bytearray)):
-        return "bytes"
-    if isinstance(v, (list, tuple)):
+# Coarse type classes. Result value hashes are TYPE-sensitive (r4's
+# frequency_table_quantity: identical values, red hash because DuckDB
+# returned float64 where Spark emitted int64), while norm() above collapses
+# 3.0 and 3 to the same string — so the sweep also compares each column's
+# binder type class. Integer widths are one class; HUGEINT is its own: it
+# fetches as a Python int, so comparing fetched values cannot see it.
+_DUCK_CLASS = {
+    **dict.fromkeys(["TINYINT", "SMALLINT", "INTEGER", "BIGINT", "UTINYINT",
+                     "USMALLINT", "UINTEGER", "UBIGINT"], "int"),
+    "HUGEINT": "hugeint", "UHUGEINT": "hugeint", "FLOAT": "float",
+    "DOUBLE": "float", "VARCHAR": "str", "BOOLEAN": "bool", "BLOB": "bytes",
+}
+_SPARK_CLASS = {
+    **dict.fromkeys(["byte", "short", "integer", "long"], "int"),
+    "float": "float", "double": "float", "string": "str", "boolean": "bool",
+    "binary": "bytes", "array": "list", "timestamp_ntz": "timestamp",
+}
+
+
+def duck_class(t) -> str:
+    """Coarse class of a DuckDB binder type (an entry of ``rel.types``)."""
+    name = str(t).upper()
+    if name.endswith("]"):
         return "list"
-    if isinstance(v, str):
-        return "str"
-    return type(v).__name__
+    base = re.match(r"[A-Z]*", name).group(0)
+    return _DUCK_CLASS.get(base, base.lower())
 
 
-def colkinds(cols, rows):
-    """column name -> set of non-null value type classes."""
-    out = {c: set() for c in cols}
-    for r in rows:
-        for c, v in zip(cols, r):
-            if v is not None:
-                out[c].add(kind(v))
+def type_mismatches(schema, rel) -> list[str]:
+    """Columns whose Spark type class (``schema``, a StructType) differs
+    from the DuckDB relation ``rel``'s binder type class."""
+    oracle = dict(zip(rel.columns, map(duck_class, rel.types)))
+    out = []
+    for f in schema.fields:
+        s = _SPARK_CLASS.get(f.dataType.typeName(), f.dataType.typeName())
+        if f.name in oracle and s != oracle[f.name]:
+            out.append(f"coltype {f.name}: spark={s} oracle={oracle[f.name]}")
     return out
 
 
@@ -148,9 +149,9 @@ def main() -> int:
                   f"({time.time() - t0:.1f}s)", flush=True)
             continue
         try:
-            res = con.execute(oracles[name])
-            ocols = [d[0] for d in res.description]
-            orows = res.fetchall()
+            rel = con.sql(oracles[name])
+            ocols = rel.columns
+            orows = rel.fetchall()
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: duckdb error: {exc}", flush=True)
             failures.append(name)
@@ -161,13 +162,7 @@ def main() -> int:
         if len(srows) != len(orows):
             problems.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
         if not problems:
-            sk, ok = colkinds(scols, srows), colkinds(ocols, orows)
-            for c in sorted(sk):
-                if c in ok and sk[c] and ok[c] and sk[c] != ok[c]:
-                    problems.append(
-                        f"coltype {c}: spark={sorted(sk[c])} "
-                        f"oracle={sorted(ok[c])}"
-                    )
+            problems += type_mismatches(sdf.schema, rel)
         if not problems:
             a, b = rowset(scols, srows), rowset(ocols, orows)
             if a != b:

@@ -57,8 +57,7 @@ def main() -> None:
     raw = corpus_df(spark, args.n_docs, seed=args.seed)
     corpus = (
         with_docid_long(raw)
-        .withColumn("p", partition_col("docid", args.partitions))
-        .repartition(args.partitions, "p")
+        .repartition(args.partitions, partition_col("docid", args.partitions))
         .persist()
     )
     # Per-row invariant (north rule): an order-independent checksum over
@@ -76,7 +75,7 @@ def main() -> None:
     t0 = time.perf_counter()
     manifests = build_segments(
         corpus, args.out, n_partitions=args.partitions,
-        analyzer=args.analyzer, assume_partitioned=True,
+        analyzer=args.analyzer,
     )
     build_s = time.perf_counter() - t0
     t0 = time.perf_counter()
