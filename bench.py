@@ -114,6 +114,57 @@ def _replicate_docs(spark, docs, n_docs: int, factor: int, n_parts: int,
     return d, d.count()
 
 
+def _growth_decade(spark, docs, n_docs: int, tag: str, factor: int,
+                   n_parts: int, phys_parts: int, jobs) -> tuple[dict, dict]:
+    """One single-run growth decade: the documents replicated ``factor``x
+    through the tightest representative subset — both index builds, one
+    BM25 probe per path, and the two heaviest pipeline ``jobs``. Returns
+    (per-query seconds, ``<tag>_*`` build stats)."""
+    from solr_spark.index.segments import build_index_dir
+    from solr_spark.query.wand import open_index
+
+    out_dir = f"/tmp/solr_spark_bench_{tag}_{os.getpid()}"
+    rdocs, n = _replicate_docs(spark, docs, n_docs, factor, n_parts, out_dir)
+    timings: dict[str, float] = {}
+    stats: dict[str, float] = {}
+
+    def _build():
+        idx = build_index(rdocs, id_col="doc_id", text_col="text",
+                          analyzer="simple")
+        _materialize_index(idx)
+        return idx
+
+    build_sec, idx = _timed(_build)
+    stats[f"{tag}_index_build_sec"] = round(build_sec, 3)
+    terms = sorted(set(analyze("spark join data", "simple")))
+    sec, _ = _timed(lambda: bm25_topk(idx, terms, k=10,
+                                      quantize_norms=False).collect())
+    timings["bm25_3term"] = round(sec, 3)
+    idx.postings.unpersist()
+    idx.doclens.unpersist()
+
+    phys_dir = f"{out_dir}/phys"
+    phys_sec, _ = _timed(
+        lambda: build_index_dir(rdocs, phys_dir, n_partitions=phys_parts,
+                                analyzer="simple", id_col="doc_id",
+                                text_col="text"))
+    stats[f"{tag}_phys_build_sec"] = round(phys_sec, 3)
+    ix = open_index(spark, phys_dir)
+    sec, _ = _timed(lambda: ix.topk("spark join data", k=10).collect())
+    timings["wand_bm25_3term"] = round(sec, 3)
+
+    for name, job in jobs:
+        sec, _ = _timed(lambda: job(rdocs))
+        timings[name] = round(sec, 3)
+
+    stats[f"{tag}_n_docs"] = n
+    # docs/sec from the UNROUNDED seconds, same as the 10x decade
+    stats[f"{tag}_docs_per_sec"] = round(n / build_sec, 1)
+    stats[f"{tag}_phys_docs_per_sec"] = round(n / phys_sec, 1)
+    shutil.rmtree(out_dir, ignore_errors=True)
+    return timings, stats
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0)
@@ -357,101 +408,22 @@ def main() -> None:
     # ------------------------------------------------------------------
     # 100x growth-rate series (VERDICT r4 task #8): a SECOND decade —
     # documents replicated 100x (sf10-class, 500k docs at the default
-    # sf0.1) through the tightest representative subset: both index
-    # builds, one BM25 probe per path, and the two heaviest pipeline
-    # jobs. Single-run growth probe like the 10x series. Skippable with
-    # SPARK_GRAFT_SF10=0 when iterating locally.
+    # sf0.1). Skippable with SPARK_GRAFT_SF10=0 when iterating locally.
+    # 1000x series: a THIRD decade (5M docs at the default sf0.1), OPT-IN
+    # via SPARK_GRAFT_SF100=1 — it adds ~10 min, so default runs keep two
+    # decades; the recorded three-decade evidence lives in tools/ +
+    # BASELINE.md.
     # ------------------------------------------------------------------
-    timings_sf10: dict[str, float] = {}
-    sf10_stats: dict[str, float] = {}
+    jobs = [("gopher_repetition_full", _gopher_job),
+            ("minhash_sigs_full", _minhash_job)]
+    timings_sf10, sf10_stats = {}, {}
     if os.environ.get("SPARK_GRAFT_SF10", "1") != "0":
-        sf10_dir = f"/tmp/solr_spark_bench_sf10_{os.getpid()}"
-        docs10, n10 = _replicate_docs(spark, docs, n_docs, 100, 128, sf10_dir)
-
-        def _build10():
-            idx = build_index(docs10, id_col="doc_id", text_col="text",
-                              analyzer="simple")
-            _materialize_index(idx)
-            return idx
-
-        sf10_build_sec, idx10 = _timed(_build10)
-        sf10_stats["sf10_index_build_sec"] = round(sf10_build_sec, 3)
-        terms = sorted(set(analyze("spark join data", "simple")))
-        sec, _ = _timed(lambda: bm25_topk(idx10, terms, k=10,
-                                          quantize_norms=False).collect())
-        timings_sf10["bm25_3term"] = round(sec, 3)
-        idx10.postings.unpersist()
-        idx10.doclens.unpersist()
-
-        phys10_dir = f"{sf10_dir}/phys"
-        sf10_phys_sec, _ = _timed(
-            lambda: build_index_dir(docs10, phys10_dir, n_partitions=64,
-                                    analyzer="simple", id_col="doc_id",
-                                    text_col="text"))
-        sf10_stats["sf10_phys_build_sec"] = round(sf10_phys_sec, 3)
-        ix10 = open_index(spark, phys10_dir)
-        sec, _ = _timed(lambda: ix10.topk("spark join data", k=10).collect())
-        timings_sf10["wand_bm25_3term"] = round(sec, 3)
-
-        for name, job in [("gopher_repetition_full", _gopher_job),
-                          ("minhash_sigs_full", _minhash_job)]:
-            sec, _ = _timed(lambda: job(docs10))
-            timings_sf10[name] = round(sec, 3)
-
-        sf10_stats["sf10_n_docs"] = n10
-        # docs/sec from the UNROUNDED seconds, same as the 10x decade
-        sf10_stats["sf10_docs_per_sec"] = round(n10 / sf10_build_sec, 1)
-        sf10_stats["sf10_phys_docs_per_sec"] = round(n10 / sf10_phys_sec, 1)
-        shutil.rmtree(sf10_dir, ignore_errors=True)
-
-    # ------------------------------------------------------------------
-    # 1000x growth-rate series: a THIRD decade (5M docs at the default
-    # sf0.1) through the same representative subset. OPT-IN via
-    # SPARK_GRAFT_SF100=1 — it adds ~10 min, so per-round driver runs
-    # keep their two-decade default; the recorded three-decade evidence
-    # lives in tools/ + BASELINE.md.
-    # ------------------------------------------------------------------
-    timings_sf100: dict[str, float] = {}
-    sf100_stats: dict[str, float] = {}
+        timings_sf10, sf10_stats = _growth_decade(
+            spark, docs, n_docs, "sf10", 100, 128, 64, jobs)
+    timings_sf100, sf100_stats = {}, {}
     if os.environ.get("SPARK_GRAFT_SF100", "0") == "1":
-        sf100_dir = f"/tmp/solr_spark_bench_sf100_{os.getpid()}"
-        docs100, n100 = _replicate_docs(spark, docs, n_docs, 1000, 256,
-                                        sf100_dir)
-
-        def _build100():
-            idx = build_index(docs100, id_col="doc_id", text_col="text",
-                              analyzer="simple")
-            _materialize_index(idx)
-            return idx
-
-        sf100_build_sec, idx100 = _timed(_build100)
-        sf100_stats["sf100_index_build_sec"] = round(sf100_build_sec, 3)
-        terms = sorted(set(analyze("spark join data", "simple")))
-        sec, _ = _timed(lambda: bm25_topk(idx100, terms, k=10,
-                                          quantize_norms=False).collect())
-        timings_sf100["bm25_3term"] = round(sec, 3)
-        idx100.postings.unpersist()
-        idx100.doclens.unpersist()
-
-        phys100_dir = f"{sf100_dir}/phys"
-        sf100_phys_sec, _ = _timed(
-            lambda: build_index_dir(docs100, phys100_dir, n_partitions=128,
-                                    analyzer="simple", id_col="doc_id",
-                                    text_col="text"))
-        sf100_stats["sf100_phys_build_sec"] = round(sf100_phys_sec, 3)
-        ix100 = open_index(spark, phys100_dir)
-        sec, _ = _timed(lambda: ix100.topk("spark join data", k=10).collect())
-        timings_sf100["wand_bm25_3term"] = round(sec, 3)
-
-        for name, job in [("gopher_repetition_full", _gopher_job),
-                          ("minhash_sigs_full", _minhash_job)]:
-            sec, _ = _timed(lambda: job(docs100))
-            timings_sf100[name] = round(sec, 3)
-
-        sf100_stats["sf100_n_docs"] = n100
-        sf100_stats["sf100_docs_per_sec"] = round(n100 / sf100_build_sec, 1)
-        sf100_stats["sf100_phys_docs_per_sec"] = round(n100 / sf100_phys_sec, 1)
-        shutil.rmtree(sf100_dir, ignore_errors=True)
+        timings_sf100, sf100_stats = _growth_decade(
+            spark, docs, n_docs, "sf100", 1000, 256, 128, jobs)
 
     total = round(sum(timings.values()), 3)
     print(

@@ -1531,8 +1531,8 @@ def _phys_index_dir(spark: SparkSession, sf_dir: str) -> str:
 
     from solr_spark.index.segments import build_index_dir
 
-    # v3: segments no longer write p, block_last_ord or block_pos_off
-    d = f"/tmp/solr_spark_phys_v3_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
+    # v4: corpus_stats.json names the committed segments
+    d = f"/tmp/solr_spark_phys_v4_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
     if not os.path.exists(f"{d}/corpus_stats.json"):
         docs = _t(spark, sf_dir, "documents")
         build_index_dir(
@@ -2079,18 +2079,31 @@ def fuzzy_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     k=10 boundary with raw scores 1.9e-05 apart that quantize EQUAL, so
     the two orderings pick different docs. The entry therefore takes a
     headroom top-30 raw and applies the oracle's exact (scaled desc,
-    doc_id asc) order over it — sound while every doc whose scaled score
-    ties the 10th lies inside the raw top-30 (quantization groups here
-    span ≤3 adjacent raw ranks; 20 ranks of headroom)."""
+    doc_id asc) order over it (``_top10_over_headroom``, which raises if
+    the headroom is too small)."""
     from solr_spark.query.parser import search
 
     idx, _, _ = documents_index(spark, sf_dir)
-    out = search(idx, "tabel~2", k=30)
-    return (
-        out.select(F.col("docid").alias("doc_id"), scaled("score").alias("score_x10k"))
-        .orderBy(F.col("score_x10k").desc(), F.col("doc_id").asc())
-        .limit(10)
-    )
+    return _top10_over_headroom(search(idx, "tabel~2", k=30), 30)
+
+
+def _top10_over_headroom(out: DataFrame, headroom: int) -> DataFrame:
+    """The oracle's top 10 (score_x10k desc, doc_id asc) of a search's raw
+    top-``headroom`` ``out`` (docid, score). Sound only while every doc
+    whose scaled score ties the 10th lies inside the raw top-``headroom``;
+    when that tie group reaches the last raw rank, a doc past it may tie
+    too, so this raises instead of answering."""
+    got = out.select(F.col("docid").alias("doc_id"), scaled("score").alias("score_x10k"))
+    rows = got.collect()
+    top = sorted(rows, key=lambda r: (-r.score_x10k, r.doc_id))[:10]
+    if len(rows) == headroom and len(top) == 10 and min(
+        r.score_x10k for r in rows
+    ) == top[-1].score_x10k:
+        raise RuntimeError(
+            f"quantized-score tie group at rank 10 reaches raw rank {headroom}: "
+            "the headroom is too small to order it like the oracle"
+        )
+    return out.sparkSession.createDataFrame(top, got.schema)
 
 
 @register(
@@ -7152,7 +7165,7 @@ def wand_payload_score_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from solr_spark.index.segments import build_index_dir
     from solr_spark.query.wand import open_index
 
-    d = f"/tmp/solr_spark_payphys_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
+    d = f"/tmp/solr_spark_payphys_v4_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
     if not os.path.exists(f"{d}/corpus_stats.json"):
         docs = _t(spark, sf_dir, "documents")
         ptext = docs.select(

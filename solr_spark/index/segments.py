@@ -14,22 +14,29 @@ Mirrors the Lucene/Solr indexing lifecycle (SURVEY.md §3.2) Spark-first:
   manifest already exists — the per-partition checkpoint protocol that
   replaces Solr's tlog replay
   (solr/core/src/java/org/apache/solr/update/UpdateLog.java:912-947).
-- ``finalize_index``: global exact term stats (term, df, ttf) via one
-  column-pruned groupBy over segment stats columns (= ExactStatsCache,
-  search/stats/ExactStatsCache.java:150-206, without the two-phase HTTP
-  dance; Spark's partial+final combine makes hot terms a non-issue because
-  each task emits at most one partial row per term), plus corpus_stats.json
-  (N, sumdl, avgdl).
+- ``finalize_index``: the commit. Global exact term stats (term, df, ttf)
+  via one column-pruned groupBy over segment stats columns
+  (= ExactStatsCache, search/stats/ExactStatsCache.java:150-206, without
+  the two-phase HTTP dance; Spark's partial+final combine makes hot terms
+  cheap because each task emits at most one partial row per term),
+  plus corpus_stats.json (N, sumdl, avgdl, and the ``segments`` map of
+  committed generations), replaced atomically. Searchers and merges read
+  only the segments corpus_stats.json names.
 - ``merge_index``: merge of generations within each partition
   (= TieredMergePolicy's role, index/TieredMergePolicyFactory.java:27):
-  re-rank the union of docids, decode every generation's postings into
-  flat arrays, order them with one lexsort on (term, new ord), re-encode.
-  Runs as one Spark job of one stage (``per_partition``, which the
-  physical queries also use).
+  re-rank the union of docids, decode every generation's postings back to
+  per-token streams, re-encode. Runs as one Spark job of one stage
+  (``per_partition``, which the physical queries also use).
+
+Build and merge share one postings writer (``_postings_table``), as
+Lucene's flush and merge share one codec consumer: flat per-token (term,
+ord, position[, payload]) streams in, one stable sort on (term, ord), one
+posting per (term, ord) run, one row per term out.
 
 Layout (every column is read by a scorer, the merge or finalize_index):
     index_dir/
-      corpus_stats.json
+      corpus_stats.json              n_docs, sum_dl, avgdl, payloads, ...,
+                                     segments {p: [gen, ...]} (the commit)
       term_stats.parquet/            (term, df, ttf)
       seg/p=<P>/gen=<G>/
         postings.parquet             one row per term, sorted by term:
@@ -54,13 +61,14 @@ import os
 import re
 import time
 import uuid
+from functools import partial
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from solr_spark.analysis.chain import ANALYZERS, ANALYZERS_POS
+from solr_spark.analysis.chain import ANALYZERS_POS
 from solr_spark.index.codec import decode_positions, encode_postings, vb_decode
 from solr_spark.index.norms import norm_byte_array
 
@@ -114,13 +122,14 @@ def _seg_dir(index_dir: str, p: int, gen: int) -> str:
     return os.path.join(index_dir, "seg", f"p={p:05d}", f"gen={gen}")
 
 
-def committed_segments(index_dir: str) -> dict[int, list[int]]:
-    """Each partition's committed generations, ``{p: [gen, ...]}`` ascending.
+def _written_segments(index_dir: str) -> dict[int, list[int]]:
+    """Each partition's written generations, ``{p: [gen, ...]}`` ascending:
+    what the next ``finalize_index`` commits.
 
-    A segment dir counts as committed when its name is exactly
-    ``gen=<int>`` and it holds manifest.json, which ``_write_segment``
-    writes before the atomic rename. A ``gen=<G>.tmp-<hex>`` dir left by a
-    build killed before its rename is therefore never read."""
+    A segment dir counts as written when its name is exactly ``gen=<int>``
+    and it holds manifest.json, which ``_write_segment`` writes before the
+    atomic rename. A ``gen=<G>.tmp-<hex>`` dir left by a build killed before
+    its rename is therefore never committed."""
     seg = os.path.join(index_dir, "seg")
     out: dict[int, list[int]] = {}
     for pname in sorted(os.listdir(seg)) if os.path.isdir(seg) else ():
@@ -157,7 +166,6 @@ def per_partition(spark: SparkSession, ps: list[int], fn, schema: str) -> DataFr
 
 def _invert_partition(
     docids: np.ndarray, texts: pd.Series, analyzer: str,
-    store_positions: bool = True,
     store_payloads: bool = False,
     payload_delimiter: str = "|",
     default_payload: float = 1.0,
@@ -172,97 +180,32 @@ def _invert_partition(
     ``analyzer`` argument is ignored) and writes the position-aligned
     payload stream — the Lucene .pay-file role.
     """
-    from collections import Counter
-
-    if store_payloads and not store_positions:
-        raise ValueError("store_payloads requires store_positions")
-
     order = np.argsort(docids, kind="stable")
     docids = docids[order]
-    texts = texts.iloc[order].reset_index(drop=True)
-
-    # Invert doc-at-a-time into per-term (ord, tf[, positions]) builders.
-    # Docs arrive in ord order, so each term's ord list is born sorted — no
-    # global object-dtype flatten/sort (a pandas groupby over the flattened
-    # token stream was the memory-bandwidth hot spot at high concurrency).
-    # Positions likewise arrive sorted within each doc (token order).
-    term_ords: dict[str, list[int]] = {}
-    term_tfs: dict[str, list[int]] = {}
-    term_pos: dict[str, list[int]] = {}
-    term_pay: dict[str, list[float]] = {}
+    texts = texts.iloc[order]
+    analyze = (
+        partial(_payload_tokens, delim=payload_delimiter, default=default_payload)
+        if store_payloads else ANALYZERS_POS[analyzer]
+    )
+    # One analysis loop for every chain: each chain yields (term, position
+    # [, payload]) tuples, appended column-wise to flat per-token streams in
+    # (ord, token) order; a doc's dl is its token count.
+    streams: tuple[list, ...] = ([], [], []) if store_payloads else ([], [])
     dl = np.zeros(len(docids), dtype=np.int64)
-    if store_payloads:
-        for ord_, s in enumerate(texts):
-            doc_pos: dict[str, list[int]] = {}
-            doc_pay: dict[str, list[float]] = {}
-            ntok = 0
-            if s is not None:
-                for t, i, pay in _payload_tokens(
-                    s, payload_delimiter, default_payload
-                ):
-                    doc_pos.setdefault(t, []).append(i)
-                    doc_pay.setdefault(t, []).append(pay)
-                    ntok += 1
-            dl[ord_] = ntok
-            for t, ps in doc_pos.items():
-                if t in term_ords:
-                    term_ords[t].append(ord_)
-                    term_tfs[t].append(len(ps))
-                    term_pos[t].extend(ps)
-                    term_pay[t].extend(doc_pay[t])
-                else:
-                    term_ords[t] = [ord_]
-                    term_tfs[t] = [len(ps)]
-                    term_pos[t] = list(ps)
-                    term_pay[t] = list(doc_pay[t])
-    elif store_positions:
-        fn_pos = ANALYZERS_POS[analyzer]
-        for ord_, s in enumerate(texts):
-            doc_pos: dict[str, list[int]] = {}
-            ntok = 0
-            if s is not None:
-                for t, i in fn_pos(s):
-                    doc_pos.setdefault(t, []).append(i)
-                    ntok += 1
-            dl[ord_] = ntok
-            for t, ps in doc_pos.items():
-                if t in term_ords:
-                    term_ords[t].append(ord_)
-                    term_tfs[t].append(len(ps))
-                    term_pos[t].extend(ps)
-                else:
-                    term_ords[t] = [ord_]
-                    term_tfs[t] = [len(ps)]
-                    term_pos[t] = list(ps)
-    else:
-        fn = ANALYZERS[analyzer]
-        for ord_, s in enumerate(texts):
-            counts = Counter(fn(s)) if s is not None else {}
-            dl[ord_] = sum(counts.values())
-            for t, c in counts.items():
-                if t in term_ords:
-                    term_ords[t].append(ord_)
-                    term_tfs[t].append(c)
-                else:
-                    term_ords[t] = [ord_]
-                    term_tfs[t] = [c]
+    for ord_, s in enumerate(texts):
+        toks = analyze(s) if s is not None else ()
+        dl[ord_] = len(toks)
+        for stream, col in zip(streams, zip(*toks)):
+            stream.extend(col)
+    terms = sorted(set(streams[0]))
+    rank = dict(zip(terms, range(len(terms))))
+    code = np.fromiter(map(rank.__getitem__, streams[0]), np.int64, len(streams[0]))
     norms = norm_byte_array(dl)
-
-    rows = []
-    for term in sorted(term_ords):
-        o = np.asarray(term_ords[term], dtype=np.int64)
-        t = np.asarray(term_tfs[term], dtype=np.int64)
-        pn = norms[o]
-        pos = (
-            np.asarray(term_pos[term], dtype=np.int64)
-            if store_positions else None
-        )
-        pay = (
-            np.asarray(term_pay[term], dtype=np.float32)
-            if store_payloads else None
-        )
-        rows.append(_term_row(term, o, t, pn, pos, pay))
-    postings = pd.DataFrame(rows, columns=_POSTINGS_COLS)
+    postings = _postings_table(
+        terms, code, np.repeat(np.arange(len(docids)), dl), norms,
+        np.asarray(streams[1], dtype=np.int64),
+        np.asarray(streams[2], dtype=np.float32) if store_payloads else None,
+    )
     docs = pd.DataFrame(
         {
             "ord": np.arange(len(docids), dtype=np.int64),
@@ -274,12 +217,43 @@ def _invert_partition(
     return docs, postings
 
 
+def _postings_table(
+    terms, code: np.ndarray, ords: np.ndarray, norms: np.ndarray,
+    positions: np.ndarray, payloads: np.ndarray | None,
+) -> pd.DataFrame:
+    """The one postings writer of build and merge: flat per-token streams
+    (term code into the sorted ``terms``, doc ord, position[, payload]) to
+    the postings table, one ``_term_row`` per term.
+
+    Each (term, ord)'s tokens must come in position order; a stable sort
+    on (term, ord) keeps that order, so each run of equal (term, ord) is one
+    posting with tf = the run length. ``norms`` is indexed by ord."""
+    order = np.lexsort((ords, code))
+    code, ords, positions = code[order], ords[order], positions[order]
+    if payloads is not None:
+        payloads = payloads[order]
+    new = np.ones(code.size, dtype=bool)
+    new[1:] = (code[1:] != code[:-1]) | (ords[1:] != ords[:-1])
+    pcut = np.append(np.flatnonzero(new), code.size)  # token offset per posting
+    ords, tfs = ords[pcut[:-1]], np.diff(pcut)
+    cut = np.searchsorted(code[pcut[:-1]], np.arange(len(terms) + 1))
+    rows = [
+        _term_row(
+            term, ords[a:b], tfs[a:b], norms[ords[a:b]],
+            positions[pcut[a]:pcut[b]],
+            None if payloads is None else payloads[pcut[a]:pcut[b]],
+        )
+        for term, a, b in zip(terms, cut[:-1], cut[1:])
+    ]
+    return pd.DataFrame(rows, columns=_POSTINGS_COLS)
+
+
 def _term_row(
     term: str,
     ords: np.ndarray,
     tfs: np.ndarray,
     norms: np.ndarray,
-    positions: np.ndarray | None,
+    positions: np.ndarray,
     payloads: np.ndarray | None,
 ) -> tuple:
     """One postings row (the _POSTINGS_COLS) of a term's postings; block
@@ -306,10 +280,14 @@ def _docid_checksum(docids: np.ndarray) -> int:
     return int(np.bitwise_xor.reduce(docids.astype(np.uint64)) or 0)
 
 
+def _read_manifest(seg_dir: str) -> dict:
+    with open(os.path.join(seg_dir, "manifest.json")) as f:
+        return json.load(f)
+
+
 def _write_segment(
     index_dir: str, p: int, gen: int, docs: pd.DataFrame, postings: pd.DataFrame,
-    docid_checksum: int, wall_s: float, store_positions: bool = True,
-    store_payloads: bool = False,
+    docid_checksum: int, wall_s: float, store_payloads: bool = False,
 ) -> dict:
     """Atomically commit one segment directory (tmp write + rename)."""
     import pyarrow as pa
@@ -340,7 +318,6 @@ def _write_segment(
         "n_postings": int(postings["df"].sum()) if len(postings) else 0,
         "sum_dl": int(docs["dl"].sum()) if len(docs) else 0,
         "docid_checksum": int(docid_checksum),
-        "positions": bool(store_positions),
         "payloads": bool(store_payloads),
         "bytes": int(
             postings["gaps"].map(len).sum() + postings["tfs"].map(len).sum()
@@ -360,8 +337,7 @@ def _write_segment(
         import shutil
 
         shutil.rmtree(tmp, ignore_errors=True)
-        with open(os.path.join(final, "manifest.json")) as f:
-            winner = json.load(f)
+        winner = _read_manifest(final)
         if (
             winner["n_docs"] != manifest["n_docs"]
             or winner["docid_checksum"] != manifest["docid_checksum"]
@@ -397,15 +373,12 @@ def partition_col(id_col: str = "docid", n_partitions: int = 32):
 
 def _build_one(index_dir: str, generation: int, analyzer: str,
                p: int, pdf: pd.DataFrame,
-               store_positions: bool = True,
                store_payloads: bool = False) -> pd.DataFrame:
     final = _seg_dir(index_dir, p, generation)
-    mpath = os.path.join(final, "manifest.json")
     docids = pdf["docid"].to_numpy(dtype=np.int64)
     checksum = _docid_checksum(docids)
-    if os.path.exists(mpath):
-        with open(mpath) as f:
-            m = json.load(f)
+    if os.path.exists(os.path.join(final, "manifest.json")):
+        m = _read_manifest(final)
         # Resume is only valid if the committed segment covers EXACTLY the
         # rows this task holds — a cheap lineage check (no re-analysis).
         if m["n_docs"] != len(docids) or m["docid_checksum"] != checksum:
@@ -419,12 +392,11 @@ def _build_one(index_dir: str, generation: int, analyzer: str,
         return _manifest_row(m, skipped=True)
     t0 = time.time()
     docs, postings = _invert_partition(
-        docids, pdf["text"], analyzer, store_positions,
-        store_payloads=store_payloads,
+        docids, pdf["text"], analyzer, store_payloads=store_payloads,
     )
     m = _write_segment(
         index_dir, p, generation, docs, postings, checksum, time.time() - t0,
-        store_positions, store_payloads,
+        store_payloads,
     )
     return _manifest_row(m, skipped=False)
 
@@ -437,15 +409,12 @@ def build_segments(
     generation: int = 0,
     id_col: str = "docid",
     text_col: str = "content",
-    store_positions: bool = True,
     store_payloads: bool = False,
 ) -> pd.DataFrame:
     """Build one generation of segments from ``corpus`` (docid must be int64).
 
-    ``store_positions=True`` (Lucene's text-field default,
-    DOCS_AND_FREQS_AND_POSITIONS) writes the per-posting positions blob that
-    phrase queries need; term-only workloads can disable it to cut segment
-    bytes and build cost (Lucene's IndexOptions.DOCS_AND_FREQS equivalent).
+    Every segment stores term positions (Lucene's text-field default,
+    DOCS_AND_FREQS_AND_POSITIONS), which phrase queries read.
     ``store_payloads=True`` additionally writes the position-aligned payload
     stream via the ``delimited_payload`` chain (whitespace ``term|payload``
     tokens — the ``analyzer`` argument is ignored), Lucene's .pay-file role.
@@ -465,8 +434,7 @@ def build_segments(
 
     def writer(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         return _build_one(
-            index_dir, generation, analyzer, int(key[0]), pdf,
-            store_positions, store_payloads,
+            index_dir, generation, analyzer, int(key[0]), pdf, store_payloads,
         )
 
     return df.groupBy("p").applyInPandas(writer, MANIFEST_SCHEMA).toPandas()
@@ -479,14 +447,14 @@ def finalize_index(
     k1: float = 1.2,
     b: float = 0.75,
 ) -> dict:
-    """Compute global exact stats from committed segments and publish them.
-    An index with no committed segment gets an empty term_stats and
+    """Commit: compute global exact stats over every segment on disk and
+    publish them. corpus_stats.json is the commit point: its ``segments``
+    map ``{p: [gen, ...]}`` names the committed segments, the only ones
+    searchers and merges read, and it is replaced atomically (tmp write +
+    rename). An index with no segment gets an empty term_stats and
     ``n_docs`` 0."""
-    seg_dirs = [
-        _seg_dir(index_dir, p, g)
-        for p, gens in committed_segments(index_dir).items()
-        for g in gens
-    ]
+    segs = _written_segments(index_dir)
+    seg_dirs = [_seg_dir(index_dir, p, g) for p, gens in segs.items() for g in gens]
     if seg_dirs:
         term_stats = (
             spark.read.parquet(*[f"{d}/postings.parquet" for d in seg_dirs])
@@ -496,37 +464,34 @@ def finalize_index(
     else:
         term_stats = spark.createDataFrame([], "term string, df long, ttf long")
     term_stats.write.mode("overwrite").parquet(f"{index_dir}/term_stats.parquet")
-    n_docs = sum_dl = 0
-    gens: set[int] = set()
-    positions_all = True
-    payloads_all = True
-    for d in seg_dirs:
-        with open(os.path.join(d, "manifest.json")) as f:
-            m = json.load(f)
-        n_docs += m["n_docs"]
-        sum_dl += m["sum_dl"]
-        positions_all = positions_all and m.get("positions", True)
-        payloads_all = payloads_all and m.get("payloads", False)
-        gens.add(m["gen"])
+    manifests = [_read_manifest(d) for d in seg_dirs]
+    n_docs = sum(m["n_docs"] for m in manifests)
+    sum_dl = sum(m["sum_dl"] for m in manifests)
     stats = {
         "n_docs": n_docs,
         "sum_dl": sum_dl,
-        "positions": positions_all,
-        "payloads": payloads_all,
+        "payloads": all(m.get("payloads", False) for m in manifests),
         "avgdl": (sum_dl / n_docs) if n_docs else 0.0,
         "analyzer": analyzer,
         "k1": k1,
         "b": b,
-        "generations": sorted(gens),
+        "generations": sorted({g for gens in segs.values() for g in gens}),
+        "segments": segs,
     }
-    with open(f"{index_dir}/corpus_stats.json", "w") as f:
+    tmp = f"{index_dir}/corpus_stats.json.tmp"
+    with open(tmp, "w") as f:
         json.dump(stats, f)
+    os.replace(tmp, f"{index_dir}/corpus_stats.json")
     return stats
 
 
 def read_corpus_stats(index_dir: str) -> dict:
+    """The index's last commit (``finalize_index``), ``segments`` keyed by
+    int partition."""
     with open(f"{index_dir}/corpus_stats.json") as f:
-        return json.load(f)
+        stats = json.load(f)
+    stats["segments"] = {int(p): gens for p, gens in stats["segments"].items()}
+    return stats
 
 
 def build_index_dir(
@@ -538,14 +503,13 @@ def build_index_dir(
     text_col: str = "content",
     k1: float = 1.2,
     b: float = 0.75,
-    store_positions: bool = True,
     store_payloads: bool = False,
 ) -> dict:
     """build_segments + finalize_index in one call. Idempotent/resumable."""
     build_segments(
         corpus, index_dir, n_partitions, analyzer,
         generation=0, id_col=id_col, text_col=text_col,
-        store_positions=store_positions, store_payloads=store_payloads,
+        store_payloads=store_payloads,
     )
     return finalize_index(corpus.sparkSession, index_dir, analyzer, k1, b)
 
@@ -561,15 +525,15 @@ def merge_index(
     """Merge all generations of every partition into gen=0 under ``out_dir``.
 
     Per partition, inside ``per_partition``'s one stage: re-rank the docid
-    union of its committed generations; decode every generation's postings
-    into flat (term, new ord, tf) arrays plus the flat position and payload
-    streams; order the postings with one lexsort on (term, new ord), gather
-    positions and payloads with one index, and re-encode term by term.
-    Equivalent to a full Lucene forceMerge(1) per shard.
+    union of the generations the last commit names; decode every
+    generation's postings back into flat per-token streams (term, new ord,
+    position[, payload]) and hand them to the build's postings writer
+    (``_postings_table``). Equivalent to a full Lucene forceMerge(1) per
+    shard.
     """
     stats = read_corpus_stats(index_dir)
     analyzer = analyzer or stats["analyzer"]
-    segs = committed_segments(index_dir)
+    segs = stats["segments"]
 
     def merge_one(p: int) -> pd.DataFrame:
         import pyarrow as pa
@@ -578,25 +542,18 @@ def merge_index(
         pa.set_cpu_count(1)
         final = _seg_dir(out_dir, p, 0)
         if os.path.exists(os.path.join(final, "manifest.json")):
-            with open(os.path.join(final, "manifest.json")) as f:
-                return _manifest_row(json.load(f), skipped=True)
+            return _manifest_row(_read_manifest(final), skipped=True)
         t0 = time.time()
         gen_dirs = [_seg_dir(index_dir, p, g) for g in segs[p]]
-        flags = []
-        for gd in gen_dirs:
-            with open(os.path.join(gd, "manifest.json")) as f:
-                m = json.load(f)
-            flags.append((m.get("positions", True), m.get("payloads", False)))
-        for i, opt in enumerate(("store_positions", "store_payloads")):
-            if len({fl[i] for fl in flags}) > 1:
-                raise RuntimeError(
-                    f"merge p={p}: generations mix {opt}=True and False — a "
-                    "merged stream would silently misalign; rebuild them "
-                    "all with one setting"
-                )
-        positions, payloads = flags[0]
-        cols = ["term", "df", "gaps", "tfs"] + ["poss"] * positions
-        cols += ["pays"] * payloads
+        flags = {_read_manifest(gd).get("payloads", False) for gd in gen_dirs}
+        if len(flags) > 1:
+            raise RuntimeError(
+                f"merge p={p}: generations mix store_payloads=True and False "
+                "— a merged stream would silently misalign; rebuild them all "
+                "with one setting"
+            )
+        payloads = flags.pop()
+        cols = ["term", "df", "gaps", "tfs", "poss"] + ["pays"] * payloads
 
         docs = [
             pq.read_table(f"{gd}/docs.parquet", columns=["ord", "docid", "dl", "norm"])
@@ -623,43 +580,26 @@ def merge_index(
             dfs.append(df)
             ords.append(remap[o])
             tfs.append(tf)
-            if positions:
-                poss.append(
-                    decode_positions(b"".join(t["poss"].to_pylist()), tf)[0]
-                )
+            poss.append(decode_positions(b"".join(t["poss"].to_pylist()), tf)[0])
             if payloads:
                 pays.append(np.frombuffer(
                     b"".join(t["pays"].to_pylist()), dtype=np.float32
                 ))
         uniq, term_code = np.unique(np.concatenate(terms), return_inverse=True)
-        code = np.repeat(term_code, np.concatenate(dfs))
-        o, tf = np.concatenate(ords), np.concatenate(tfs)
-        order = np.lexsort((o, code))
-        # Positions (and their aligned payloads) travel with their posting:
-        # one index gathers every posting's run in the new order.
-        run_start = (np.cumsum(tf) - tf)[order]
-        o, tf = o[order], tf[order]
-        gather = np.repeat(run_start - (np.cumsum(tf) - tf), tf) + np.arange(tf.sum())
-        pos = np.concatenate(poss)[gather] if positions else None
-        pay = np.concatenate(pays)[gather] if payloads else None
-        cut = np.concatenate([[0], np.cumsum(np.bincount(code, minlength=uniq.size))])
-        pcut = np.concatenate([[0], np.cumsum(tf)])
+        tf = np.concatenate(tfs)
         merged = merged.iloc[doc_order].reset_index(drop=True)
         merged["ord"] = np.arange(len(merged), dtype=np.int64)
-        norms = merged["norm"].to_numpy(dtype=np.uint8)
-        rows = [
-            _term_row(
-                term, o[a:b], tf[a:b], norms[o[a:b]],
-                None if pos is None else pos[pcut[a]:pcut[b]],
-                None if pay is None else pay[pcut[a]:pcut[b]],
-            )
-            for term, a, b in zip(uniq, cut[:-1], cut[1:])
-        ]
-        postings = pd.DataFrame(rows, columns=_POSTINGS_COLS)
+        # Back to per-token streams, the shape the build's analysis yields.
+        postings = _postings_table(
+            uniq, np.repeat(np.repeat(term_code, np.concatenate(dfs)), tf),
+            np.repeat(np.concatenate(ords), tf),
+            merged["norm"].to_numpy(dtype=np.uint8), np.concatenate(poss),
+            np.concatenate(pays) if payloads else None,
+        )
         m = _write_segment(
             out_dir, p, 0, merged, postings,
             _docid_checksum(merged["docid"].to_numpy()), time.time() - t0,
-            store_positions=positions, store_payloads=payloads,
+            store_payloads=payloads,
         )
         return _manifest_row(m, skipped=False)
 

@@ -1,10 +1,11 @@
 """Top-k BM25 over the physical segment index, with block-max pruning.
 
 Opening a searcher (``PhysicalIndex``) launches no Spark work: it reads
-corpus_stats.json and lists the committed segments, and that listing is the
-searcher's snapshot, as Lucene's IndexSearcher pins its segments. Term df
-comes from a term-IN filtered pyarrow read of term_stats.parquet on the
-driver, so it launches no job either.
+corpus_stats.json, whose segment map names the last commit's segments, and
+that map is the searcher's snapshot, as Lucene's IndexSearcher pins its
+segments. A segment written but not yet committed (finalize_index) is not
+read. Term df comes from a term-IN filtered pyarrow read of
+term_stats.parquet on the driver, so it launches no job either.
 
 Every physical query (term ``topk``, boolean ``search``, ``phrase_topk``,
 ``payload_topk``) is then ONE Spark job of ONE stage: Range ->
@@ -84,12 +85,7 @@ from solr_spark.index.codec import (
     decode_postings,
 )
 from solr_spark.index.norms import DECODE_TABLE
-from solr_spark.index.segments import (
-    _seg_dir,
-    committed_segments,
-    per_partition,
-    read_corpus_stats,
-)
+from solr_spark.index.segments import _seg_dir, per_partition, read_corpus_stats
 from solr_spark.query.bm25 import fold_term_weights, idf
 
 _RESULT_SCHEMA = "docid long, score double"
@@ -524,8 +520,7 @@ def _payload_partition(
     for _, r in pdf.iterrows():  # one row per generation holding this term
         if len(r["pays"] or b"") == 0:
             raise ValueError(
-                "payload query on an index built without store_payloads "
-                "(same contract as positions for phrase queries)"
+                "payload query on an index built without store_payloads"
             )
         gen = int(r["gen"])
         pays = np.frombuffer(r["pays"], dtype=np.float32)
@@ -597,9 +592,9 @@ def _payload_partition(
 class PhysicalIndex:
     """Point-in-time searcher over a physical index directory.
 
-    Opening does no Spark work: it reads corpus_stats.json and lists the
-    committed segments (``committed_segments``) and term_stats' part files.
-    Those listings are the searcher's snapshot, as Lucene's IndexSearcher
+    Opening does no Spark work: it reads corpus_stats.json, whose
+    ``segments`` map names the committed segments, and lists term_stats'
+    part files. Those are the searcher's snapshot, as Lucene's IndexSearcher
     pins its segments; a generation committed later is seen after a reopen,
     which ``open_index`` decides from the commit token. A searcher whose
     term_stats files a later commit replaced raises rather than mix that
@@ -618,7 +613,7 @@ class PhysicalIndex:
         self.index_dir = index_dir
         self.commit_token = _commit_token(index_dir)
         self.stats = read_corpus_stats(index_dir)
-        self.segments = committed_segments(index_dir)
+        self.segments = self.stats["segments"]
         ts = f"{index_dir}/term_stats.parquet"
         self._term_stats_files = [
             f"{ts}/{f}" for f in sorted(os.listdir(ts))
@@ -856,11 +851,6 @@ class PhysicalIndex:
         from solr_spark.analysis.chain import analyze_pos
 
         stats = self.stats
-        if not stats.get("positions", True):
-            raise ValueError(
-                "phrase queries need positions: this index was built with "
-                "store_positions=False (same contract as the logical path)"
-            )
         k1, b, avgdl, n = stats["k1"], stats["b"], stats["avgdl"], stats["n_docs"]
         tp = analyze_pos(phrase, stats["analyzer"])
         if not tp or n == 0:

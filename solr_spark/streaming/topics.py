@@ -86,8 +86,9 @@ def incremental_index_sink(
     batch_id maps to the generation number, so replays of a failed batch hit
     the manifest-resume path (already-committed partitions are skipped) —
     exactly-once segment publication on top of Spark's at-least-once
-    foreachBatch contract. Run merge_index periodically to compact
-    generations (the TieredMergePolicy role)."""
+    foreachBatch contract. Segments become searchable at finalize_index,
+    the commit. Run merge_index periodically to compact generations (the
+    TieredMergePolicy role)."""
     from solr_spark.index.segments import build_segments
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:

@@ -1,5 +1,6 @@
 """tools/check_oracle.py: --resume-log refuses a log from another sf_dir;
-the per-column type check compares binder types."""
+the per-column type check compares binder types. Catalog entries that
+reorder a raw top-k by the oracle's quantized score guard their headroom."""
 
 from __future__ import annotations
 
@@ -52,3 +53,23 @@ def test_hugeint_oracle_column_flagged():
     double = StructType([StructField("s", DoubleType())])
     assert co.type_mismatches(double, cast) == [
         "coltype s: spark=float oracle=int"]
+
+
+def test_fuzzy_headroom_guard(spark):
+    """A quantized-score tie group at rank 10 that reaches the last raw rank
+    of the headroom raises; with enough headroom the oracle's order holds.
+    Docs 103..100 quantize equal in falling raw order, so a raw top-12
+    lacks doc 100, which the oracle ranks 10th."""
+    from solr_spark.entry_queries import _top10_over_headroom
+
+    rows = ([(i, 2.0 - i / 10) for i in range(9)]
+            + [(103 - i, 1.00004 - i * 1e-5) for i in range(4)] + [(200, 0.5)])
+
+    def raw(n):
+        return spark.createDataFrame(rows[:n], "docid long, score double")
+
+    with pytest.raises(RuntimeError, match="headroom is too small"):
+        _top10_over_headroom(raw(12), 12)
+    got = _top10_over_headroom(raw(14), 14).collect()
+    assert [r.doc_id for r in got] == [*range(9), 100]
+    assert [r.score_x10k for r in got][-1] == 10000

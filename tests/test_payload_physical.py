@@ -142,15 +142,6 @@ def test_payload_query_on_payloadless_index(spark, tmp_path_factory):
         ix.payload_topk("def", "max")
 
 
-def test_store_payloads_requires_positions(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("badpay") / "idx")
-    corpus = spark.createDataFrame([(0, "a|1.0 b|2.0")], "docid long, text string")
-    with pytest.raises(Exception, match="store_positions"):
-        build_index_dir(corpus, d, n_partitions=1, id_col="docid",
-                        text_col="text", store_payloads=True,
-                        store_positions=False)
-
-
 def test_merge_preserves_payloads(spark, tmp_path_factory):
     from solr_spark.index.segments import build_segments, finalize_index
 

@@ -117,15 +117,16 @@ def _stages(spark, jobs):
     return len(ran), sum(st.shuffleWriteBytes() > 0 for st in ran)
 
 
-@pytest.mark.parametrize("positions", [True, False])
-def test_merge_equals_one_shot_build(spark, docs, tmp_path_factory, positions):
+@pytest.mark.parametrize("payloads", [True, False])
+def test_merge_equals_one_shot_build(spark, docs, tmp_path_factory, payloads):
     """Merging generations writes exactly the segments that one build of
-    the same docs writes: the inversion loop is the merge's reference."""
+    the same docs writes: build and merge share one postings writer, and
+    the build's analysis loop is the merge's reference."""
     import pyarrow.parquet as pq
 
     base = tmp_path_factory.mktemp("mergeref")
     kw = dict(analyzer="simple", id_col="doc_id", text_col="text",
-              store_positions=positions)
+              store_payloads=payloads)
     for g in range(3):
         build_segments(docs.where(F.col("doc_id") % 3 == g), str(base / "gens"),
                        2, generation=g, **kw)
@@ -435,25 +436,72 @@ def test_physical_fuzzy_matches_logical(spark, idx_dir, logical):
         assert got == want and got
 
 
-def test_phrase_raises_on_positionless_index(spark, docs, tmp_path_factory):
-    from solr_spark.query.wand import wand_phrase_topk
-
-    d = str(tmp_path_factory.mktemp("nopos") / "phys")
-    build_index_dir(docs, d, n_partitions=2, analyzer="simple",
-                    id_col="doc_id", text_col="text", store_positions=False)
-    with pytest.raises(ValueError, match="positions"):
-        wand_phrase_topk(spark, d, "spark join", k=5)
-
-
-def test_merge_mixed_positions_raises(spark, docs, tmp_path_factory):
+def test_merge_mixed_payloads_raises(spark, docs, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("mixed") / "multi")
     m = str(tmp_path_factory.mktemp("mixed") / "merged")
     build_segments(docs.where(F.col("doc_id") % 2 == 0), d, n_partitions=2,
                    analyzer="simple", id_col="doc_id", text_col="text",
-                   generation=0, store_positions=False)
+                   generation=0, store_payloads=False)
     build_segments(docs.where(F.col("doc_id") % 2 == 1), d, n_partitions=2,
                    analyzer="simple", id_col="doc_id", text_col="text",
-                   generation=1, store_positions=True)
+                   generation=1, store_payloads=True)
     finalize_index(spark, d, analyzer="simple")
-    with pytest.raises(Exception, match="store_positions"):
+    with pytest.raises(Exception, match="store_payloads"):
         merge_index(spark, d, m)
+
+
+def _alpha_index(spark, d):
+    """10 docs over 2 partitions, every one holding "alpha", committed; and
+    a second generation of 10 more written by a sink that has not
+    committed it yet."""
+    kw = dict(analyzer="simple", id_col="doc_id", text_col="text")
+    build_index_dir(spark.createDataFrame(
+        [(i, f"alpha w{i}") for i in range(10)], "doc_id long, text string"),
+        d, n_partitions=2, **kw)
+    build_segments(spark.createDataFrame(
+        [(i, f"alpha x{i}") for i in range(10, 20)], "doc_id long, text string"),
+        d, 2, generation=1, **kw)
+
+
+def test_searcher_reads_only_committed_segments(spark, tmp_path_factory):
+    """A generation a sink wrote but finalize_index has not committed is not
+    searched or merged: a fresh searcher answers over the last commit, its
+    hits agreeing with its own N."""
+    base = tmp_path_factory.mktemp("uncommitted")
+    d = str(base / "phys")
+    _alpha_index(spark, d)
+    ix = PhysicalIndex(spark, d)
+    assert ix.stats["n_docs"] == 10 and ix.stats["generations"] == [0]
+    assert len(ix.topk("alpha", k=50).collect()) == 10
+    assert len(ix.search("alpha x12", k=50).collect()) == 10
+    assert merge_index(spark, d, str(base / "merged"))["n_docs"] == 10
+    finalize_index(spark, d, "simple")
+    assert len(PhysicalIndex(spark, d).topk("alpha", k=50).collect()) == 20
+
+
+def test_commit_write_failure_keeps_previous_commit(spark, tmp_path_factory,
+                                                    monkeypatch):
+    """A corpus_stats.json write that raises midway leaves the previous
+    commit readable (tmp write + rename), never a truncated file."""
+    import json
+
+    from solr_spark.index.segments import read_corpus_stats
+
+    d = str(tmp_path_factory.mktemp("commitfail") / "phys")
+    _alpha_index(spark, d)
+    before = read_corpus_stats(d)
+    dump = json.dump
+
+    def half_then_raise(obj, f, **kw):
+        f.write(json.dumps(obj)[:20])
+        raise OSError("disk full")
+
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", half_then_raise)
+        with pytest.raises(OSError, match="disk full"):
+            finalize_index(spark, d, "simple")
+    assert json.dump is dump
+    assert read_corpus_stats(d) == before
+    assert PhysicalIndex(spark, d).stats["n_docs"] == 10
+    assert finalize_index(spark, d, "simple")["n_docs"] == 20
+    assert len(PhysicalIndex(spark, d).topk("alpha", k=50).collect()) == 20
