@@ -26,7 +26,8 @@ Mirrors the Lucene/Solr indexing lifecycle (SURVEY.md §3.2) Spark-first:
   (= TieredMergePolicy's role, index/TieredMergePolicyFactory.java:27):
   re-rank the union of docids, decode every generation's postings back to
   per-token streams, re-encode. Runs as one Spark job of one stage
-  (``per_partition``, which the physical queries also use).
+  (``per_partition``, which the physical queries' Spark executor also
+  uses).
 
 Build and merge share one postings writer (``_postings_table``), as
 Lucene's flush and merge share one codec consumer: flat per-token (term,
@@ -157,6 +158,14 @@ def per_partition(spark: SparkSession, ps: list[int], fn, schema: str) -> DataFr
     n_tasks = max(1, min(len(ps), spark.sparkContext.defaultParallelism))
 
     def run(batches):
+        import pyarrow as pa
+
+        # Once per task: Spark supplies the parallelism, and pyarrow's own
+        # thread pool (all machine cores, per worker process) would
+        # oversubscribe the host n_tasks x n_cores-fold. It is process-global,
+        # so the readers ``fn`` calls must not set it: they also run on the
+        # driver (query.wand's driver executor).
+        pa.set_cpu_count(1)
         for batch in batches:
             for i in batch["id"]:
                 yield fn(ps[int(i)])
@@ -539,7 +548,6 @@ def merge_index(
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        pa.set_cpu_count(1)
         final = _seg_dir(out_dir, p, 0)
         if os.path.exists(os.path.join(final, "manifest.json")):
             return _manifest_row(_read_manifest(final), skipped=True)

@@ -8,26 +8,41 @@ read. Term df comes from a term-IN filtered pyarrow read of
 term_stats.parquet on the driver, so it launches no job either.
 
 Every physical query (term ``topk``, boolean ``search``, ``phrase_topk``,
-``payload_topk``) is then ONE Spark job of ONE stage: Range ->
-MapInPandas -> TakeOrderedAndProject. The Range holds one row per segment
-partition p and is split into min(P, defaultParallelism) tasks
-(segments.per_partition). Each task loops over its partitions; for each,
-it reads the committed postings.parquet files with pyarrow (column pruning
-+ the query's term filter; row groups prune on ``term`` because postings
-are written sorted), in (gen, file row) order, and runs the query kind's
-per-partition function. The global merge is ORDER BY score DESC, docid ASC
-LIMIT k (TakeOrderedAndProject -- Spark's built-in two-phase top-k, the
-analogue of Solr's PURPOSE_GET_TOP_IDS merge,
-QueryComponent.java:833-1040).
+``payload_topk``) runs one per-partition function for each segment
+partition p: read p's committed postings.parquet files with pyarrow (column
+pruning + the query's term filter; row groups prune on ``term`` because
+postings are written sorted, but a segment below pyarrow's default
+row-group size is one row group), in (gen, file row) order, and score them.
+The global merge keeps the top k by (score desc, docid asc). Two executors
+run that same function (``PhysicalIndex._topk``):
 
-Inside the task, the BM25 query kinds share one per-segment top-k path
+- Driver executor: a driver loop over the partitions, the top-k cut in
+  numpy, and the result handed back as a LocalRelation, so collecting it
+  launches NO Spark job -- as Solr serves a shard's query in-process
+  (SolrIndexSearcher), and as Spark's ConvertToLocalRelation runs small
+  plans on the driver.
+- Spark executor: ONE job of ONE stage, Range -> MapInPandas ->
+  TakeOrderedAndProject. The Range holds one row per partition and is split
+  into min(P, defaultParallelism) tasks (segments.per_partition); the merge
+  is Spark's built-in two-phase top-k, the analogue of Solr's
+  PURPOSE_GET_TOP_IDS merge (QueryComponent.java:833-1040).
+
+The choice uses only what the searcher already holds: a query runs on the
+driver when the snapshot has at most DRIVER_MAX_SEGMENT_FILES segment files,
+its scan terms' global dfs sum to at most DRIVER_MAX_POSTINGS, and it has no
+``prefix*`` clause (whose postings volume is unknown without a dictionary
+scan). Empty results (stopword-only or absent-term queries) are
+LocalRelations too. A fuzzy clause still launches its ``fuzzy_candidates``
+probe job over term_stats.
+
+Per partition, the BM25 query kinds share one per-segment top-k path
 (``_segment_topk``): each generation's postings rows go to the kind's own
 scorer, which returns (ordinals, scores); the path keeps every doc tied
 with the k-th best score and maps the survivors' ordinals to docids. The
 scorers are ``_term_scores`` (block-max WAND), ``_tree_scores`` (grouped
 boolean ordinal-set algebra) and ``_phrase_scores`` (positions).
 ``_payload_partition`` keeps one threshold across generations, so it runs
-its own partition loop and shares only the stage and the result frame.
+its own partition loop and shares only the executors and the result frame.
 
 The term scorer is the batch adaptation of block-max WAND (reference
 touch-points: Solr enables Lucene's WAND via minExactCount —
@@ -64,8 +79,9 @@ end, with an ord-IN filtered, row-group-pruned parquet read, purely to map
 the winning top-k ordinals back to docids: per-query IO is O(query postings
 + k), not O(corpus).
 
-Rank-identity across partition counts holds because scoring is per-doc
-exact and the tiebreak (score desc, docid asc) is total.
+Rank-identity across partition counts and across the two executors holds
+because scoring is per-doc exact and the tiebreak (score desc, docid asc)
+is total.
 """
 
 from __future__ import annotations
@@ -103,6 +119,14 @@ _PAYLOAD_COLS = [
     "block_max_tf", "pays", "block_pay_off", "block_max_pay",
 ]
 _NO_HITS = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
+# The driver executor's limits (PhysicalIndex._on_driver): the crossover
+# against the one-job stage measured on a 4-core host, where the stage costs
+# ~400 ms and spreads the partitions over 4 tasks, while the driver loop is
+# serial. Phrase queries cross first (~32 segment files, ~64k postings);
+# term queries later (~48-64 files, ~800k postings). Constants, not
+# options, as spark.sql.autoBroadcastJoinThreshold is a fixed default.
+DRIVER_MAX_SEGMENT_FILES = 32
+DRIVER_MAX_POSTINGS = 65_536
 
 
 def _contrib(tf, dl, k1: float, b: float, avgdl: float):
@@ -120,13 +144,8 @@ def _lookup_docids(
 ) -> np.ndarray:
     """Map segment-local ordinals to docids via a filtered parquet read
     (row-group pruned; the doc table is written with small row groups)."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    # Executor-side: parallelism comes from Spark tasks; pyarrow's own
-    # thread pool (defaults to ALL machine cores, PER task process) would
-    # oversubscribe the box n_tasks × n_cores-fold.
-    pa.set_cpu_count(1)
     tbl = pq.read_table(
         f"{_seg_dir(index_dir, p, gen)}/docs.parquet",
         columns=["ord", "docid"],
@@ -152,7 +171,6 @@ def _read_postings(
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    pa.set_cpu_count(1)  # executor-side, as in _lookup_docids
     term = pc.field("term")
     cond = term.isin(pa.array(terms, pa.string()))
     for pref in prefixes:
@@ -169,7 +187,7 @@ def _read_postings(
 def _result_frame(
     docids: list[np.ndarray], scores: list[np.ndarray]
 ) -> pd.DataFrame:
-    """One task's (docid, score) output, typed even when it is empty."""
+    """One partition's (docid, score) output, typed even when it is empty."""
     if not docids:
         return pd.DataFrame({"docid": pd.Series(dtype="int64"),
                              "score": pd.Series(dtype="float64")})
@@ -598,8 +616,10 @@ class PhysicalIndex:
     pins its segments; a generation committed later is seen after a reopen,
     which ``open_index`` decides from the commit token. A searcher whose
     term_stats files a later commit replaced raises rather than mix that
-    commit's df with its own N. Each query runs as one Spark job of one
-    stage over the snapshot (module docstring).
+    commit's df with its own N. Each query runs over the snapshot on one
+    of two executors, chosen by its size (``_topk``; module docstring): a
+    driver loop whose result launches no Spark job, or one Spark job of one
+    stage.
     """
 
     # Driver-side per-term df cache cap. Query workloads touch a tiny,
@@ -681,7 +701,7 @@ class PhysicalIndex:
         def score_gen(pg: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
             return _term_scores(pg, weights, k, k1, b, avgdl, use_wand)
 
-        return self._spark_topk(
+        return self._topk(
             _SCORE_COLS, list(weights), [], k, partial(_segment_topk, score_gen, k)
         )
 
@@ -836,7 +856,7 @@ class PhysicalIndex:
         def score_gen(pg: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
             return _tree_scores(pg, root, k1, b, avgdl)
 
-        return self._spark_topk(
+        return self._topk(
             _SCORE_COLS, sorted(scan_terms), sorted(scan_prefixes), k,
             partial(_segment_topk, score_gen, k),
         )
@@ -867,7 +887,7 @@ class PhysicalIndex:
         def score_gen(pg: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
             return _phrase_scores(pg, terms, offsets, slop, w, k1, b, avgdl)
 
-        return self._spark_topk(
+        return self._topk(
             _PHRASE_COLS, sorted(set(terms)), [], k,
             partial(_segment_topk, score_gen, k),
         )
@@ -893,14 +913,38 @@ class PhysicalIndex:
         t = term.lower()
         if not t or not self._df_for_terms([t]):
             return self._empty()
-        return self._spark_topk(
+        return self._topk(
             _PAYLOAD_COLS, [t], [], k, partial(_payload_partition, func, k)
         )
 
     def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame([], _RESULT_SCHEMA)
+        return self._local_result(*_NO_HITS)
 
-    def _spark_topk(
+    def _local_result(self, docids: np.ndarray, scores: np.ndarray) -> DataFrame:
+        """A result the driver already holds, as a LocalRelation: collecting
+        it launches no Spark job. A pyarrow Table, not a pandas frame: an
+        empty pandas frame takes the RDD path (one job), and the pandas path
+        depends on the session's Arrow conf."""
+        import pyarrow as pa
+
+        tbl = pa.table({"docid": pa.array(docids, pa.int64()),
+                        "score": pa.array(scores, pa.float64())})
+        return self.spark.createDataFrame(tbl, _RESULT_SCHEMA)
+
+    def _on_driver(self, terms: list[str], prefixes: list[str]) -> bool:
+        """The executor choice, from what the searcher already holds: the
+        snapshot's segment-file count and the query's summed global df
+        (cached by the caller's df lookup). A prefix clause's postings
+        volume is unknown without a dictionary scan, so it takes Spark."""
+        n_files = sum(map(len, self.segments.values()))
+        n_postings = sum(self._df_for_terms(terms).values())
+        return (
+            not prefixes
+            and n_files <= DRIVER_MAX_SEGMENT_FILES
+            and n_postings <= DRIVER_MAX_POSTINGS
+        )
+
+    def _topk(
         self,
         columns: list[str],
         terms: list[str],
@@ -908,17 +952,24 @@ class PhysicalIndex:
         k: int,
         partition,
     ) -> DataFrame:
-        """The Spark shape of every physical query, one job of one stage:
-        per snapshot partition p (``per_partition``), read p's postings
-        ``columns`` for ``terms``/``prefixes`` and run
-        ``partition(pdf, index_dir, p)``; then ORDER BY score DESC,
-        docid ASC LIMIT k (TakeOrderedAndProject)."""
+        """Every physical query's execution: per snapshot partition p, read
+        p's postings ``columns`` for ``terms``/``prefixes`` and run
+        ``partition(pdf, index_dir, p)``; then keep the top k by
+        (score desc, docid asc). Small queries (``_on_driver``) run the
+        partitions in a driver loop and return a LocalRelation, no Spark
+        job; the rest run as one job of one stage (``per_partition``, then
+        TakeOrderedAndProject)."""
         index_dir, segments = self.index_dir, self.segments
 
         def score(p: int) -> pd.DataFrame:
             pdf = _read_postings(index_dir, p, segments[p], columns, terms, prefixes)
             return partition(pdf, index_dir, p)
 
+        if self._on_driver(terms, prefixes):
+            out = pd.concat([score(p) for p in sorted(segments)])
+            docids, scores = out["docid"].to_numpy(), out["score"].to_numpy()
+            order = np.lexsort((docids, -scores))[:k]
+            return self._local_result(docids[order], scores[order])
         scored = per_partition(self.spark, sorted(segments), score, _RESULT_SCHEMA)
         return scored.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
 

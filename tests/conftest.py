@@ -48,4 +48,14 @@ def count_jobs(spark):
     return run
 
 
+@pytest.fixture
+def spark_executor(monkeypatch):
+    """Force every physical query (query.wand) onto the one-job Spark
+    executor, whatever the index and query size."""
+    from solr_spark.query import wand
+
+    monkeypatch.setattr(wand, "DRIVER_MAX_SEGMENT_FILES", -1)
+    monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", -1)
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

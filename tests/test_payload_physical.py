@@ -120,8 +120,9 @@ def test_payload_topk_absent_and_bad_func(pay_setup, spark):
         ix.payload_topk("t0", "median")
 
 
-def test_payload_topk_is_one_job(pay_setup, spark, count_jobs):
-    """From the call to collect(), with a cold term cache: one Spark job."""
+def test_payload_topk_is_one_job(pay_setup, spark, count_jobs, spark_executor):
+    """On the Spark executor, from the call to collect(), with a cold term
+    cache: one Spark job."""
     from solr_spark.query.wand import PhysicalIndex
 
     _, idx_dir, _ = pay_setup

@@ -196,15 +196,16 @@ def test_open_launches_no_job(spark, idx_dir, count_jobs):
     ("search", lambda ix: ix.search("+spark +join -slow data", k=10)),
     ("phrase_topk", lambda ix: ix.phrase_topk("spark join", k=10, slop=2)),
 ])
-def test_query_is_one_job(spark, idx_dir, count_jobs, kind, call):
-    """From the call to collect(), with a cold term cache: one Spark job."""
+def test_query_is_one_job(spark, idx_dir, count_jobs, spark_executor, kind, call):
+    """On the Spark executor, from the call to collect(), with a cold term
+    cache: one Spark job."""
     ix = PhysicalIndex(spark, idx_dir)
     rows, jobs = count_jobs(lambda: call(ix).collect())
     assert rows and len(jobs) == 1, (kind, jobs)
 
 
 def test_query_tasks_capped_at_parallelism(spark, docs, count_jobs,
-                                           tmp_path_factory):
+                                           spark_executor, tmp_path_factory):
     """A 32-partition index runs min(32, defaultParallelism) tasks, not 32."""
     d = str(tmp_path_factory.mktemp("p32") / "phys")
     build_index_dir(docs, d, n_partitions=32, analyzer="simple",
