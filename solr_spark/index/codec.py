@@ -1,4 +1,5 @@
-"""Posting-list codec: delta + variable-byte compression with block metadata.
+"""Segment format and posting-list codec: delta + variable-byte compression
+with block metadata.
 
 Re-expresses the role of Lucene's Lucene90 postings format (public file-format
 docs; the reference selects the codec in
@@ -10,15 +11,20 @@ decoding it (the basis of block-max WAND). Lucene bit-packs full blocks (FOR)
 and varbytes the tail; we varbyte everything — simpler, and the scan cost at
 query time is dominated by Arrow/parquet IO, not the decode loop.
 
-Everything is vectorized numpy (no per-posting Python): encode is O(maxbytes)
-masked passes, decode likewise.
+This module owns the segment files' format: ``POSTINGS_SCHEMA`` (one row
+per term) and ``DOCS_SCHEMA`` (one row per doc), which segments.py writes
+after an int32 ``gen`` column, and the blob layouts inside them. As Lucene's
+flush and merge stream every term through one codec consumer,
+``encode_postings`` encodes every term of a segment in one vectorized pass
+over flat per-token streams, straight into an Arrow table. Everything is
+vectorized numpy (no per-term or per-posting Python): encode is
+O(maxbytes) masked passes over the whole segment, decode likewise per blob.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 import numpy as np
+import pyarrow as pa
 
 BLOCK_SIZE = 128
 
@@ -72,127 +78,147 @@ def vb_decode(buf: bytes | np.ndarray) -> np.ndarray:
     return vals
 
 
-@dataclass
-class EncodedPostings:
-    """One term's compressed posting list + block skip metadata.
+POSTINGS_SCHEMA = pa.schema([
+    ("term", pa.string()),
+    ("df", pa.int64()),
+    ("ttf", pa.int64()),
+    # Varbyte, one value per posting: doc-ord gaps (the first absolute), tfs.
+    ("gaps", pa.binary()),
+    ("tfs", pa.binary()),
+    # One norm byte per posting, like Lucene's impacts: scoring never reads
+    # the doc table.
+    ("norms", pa.binary()),
+    # Per 128-posting block: first ord and byte offsets into gaps/tfs (a
+    # block decodes alone), max tf and min norm byte (its BM25 bound).
+    ("block_first_ord", pa.list_(pa.int64())),
+    ("block_gap_off", pa.list_(pa.int64())),
+    ("block_tf_off", pa.list_(pa.int64())),
+    ("block_max_tf", pa.list_(pa.int64())),
+    ("block_min_norm", pa.list_(pa.int64())),
+    # Positions (.pos role): per posting, the first absolute, then gaps.
+    ("poss", pa.binary()),
+    # Payloads (.pay role): one float32 per position; per block, its byte
+    # offset and max payload, the payload scorer's bound (max/first/average
+    # <= it; sum <= max tf times it). Empty and zeros without payloads.
+    ("pays", pa.binary()),
+    ("block_pay_off", pa.list_(pa.int64())),
+    ("block_max_pay", pa.list_(pa.float64())),
+])
+DOCS_SCHEMA = pa.schema([
+    ("ord", pa.int64()),
+    ("docid", pa.int64()),
+    ("dl", pa.int64()),
+    ("norm", pa.int32()),
+])
 
-    gaps/tfs are varbyte blobs; block_* arrays have one entry per 128-posting
-    block and hold exactly what the block-max scorers read: byte offsets
-    into the blobs (so a block can be decoded without its predecessors), the
-    first ordinal (to rebase the delta cumsum), max tf and min norm byte
-    (impact bounds).
-    """
 
-    df: int
-    ttf: int
-    gaps: bytes
-    tfs: bytes
-    block_first_ord: np.ndarray  # int64, absolute ord of block's first posting
-    block_gap_off: np.ndarray  # int64 byte offset into gaps blob
-    block_tf_off: np.ndarray  # int64 byte offset into tfs blob
-    block_max_tf: np.ndarray  # int32
-    block_min_norm: np.ndarray  # uint8 (smaller norm byte == shorter doc)
-    # Term positions (Lucene .pos-file role): per posting, tf positions,
-    # first absolute then delta-encoded, all varbyte in one blob, decoded
-    # whole by the phrase scorer. Empty when the index is built without
-    # positions.
-    poss: bytes
-    # Per-position payloads (Lucene .pay-file role): one float32 per
-    # position, position-aligned with the poss blob (fixed width, so a
-    # block's payload slice is addressable by byte offset alone); per-block
-    # MAX payload is the impact bound a top-k payload scorer prunes with
-    # (max/first/average <= block_max_pay; sum <= block_max_tf *
-    # block_max_pay). Empty, with zero offsets and maxima, when built
-    # without payloads.
-    pays: bytes
-    block_pay_off: np.ndarray  # int64 byte offset into pays
-    block_max_pay: np.ndarray  # float32
+def _binary(blob: bytes, offsets: np.ndarray) -> pa.Array:
+    """One binary value per row: row i is ``blob[offsets[i]:offsets[i+1]]``."""
+    if len(blob) >= 2**31:  # pa.binary() offsets are int32
+        raise ValueError(f"{len(blob)}-byte postings column: use more partitions")
+    return pa.Array.from_buffers(
+        pa.binary(), offsets.size - 1,
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(blob)],
+    )
+
+
+def _lists(values: np.ndarray, offsets: np.ndarray) -> pa.Array:
+    """One list per row: row i is ``values[offsets[i]:offsets[i+1]]``."""
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values)
 
 
 def encode_postings(
+    terms,
+    code: np.ndarray,
     ords: np.ndarray,
-    tfs: np.ndarray,
     norms: np.ndarray,
-    positions: np.ndarray | None = None,
+    positions: np.ndarray,
     payloads: np.ndarray | None = None,
-) -> EncodedPostings:
-    """Encode one term's postings. ``ords`` must be strictly increasing
-    segment-local ordinals; ``norms[i]`` is the norm BYTE of doc ords[i];
-    ``positions`` (optional) is the FLAT concatenation of each posting's
-    sorted token positions (tfs[i] entries for posting i); ``payloads``
-    (optional, requires positions) is the position-aligned FLAT float
-    payload array.
+) -> pa.Table:
+    """Encode every term of a segment at once, from flat per-token streams:
+    token i is term ``terms[code[i]]`` (``terms`` sorted) at
+    ``positions[i]`` of doc ``ords[i]``, whose norm byte is ``norms[i]``,
+    with payload ``payloads[i]`` (optional). Returns the POSTINGS_SCHEMA
+    table, one row per term in ``terms`` order.
 
-    Single vectorized pass: the whole list is encoded once and per-block
-    byte offsets are read off the encoder's cumulative ends; block impact
-    stats come from maximum/minimum.reduceat. (A per-block Python loop here
-    dominated the index build profile at high concurrency.)
+    Each (term, ord)'s tokens must come in position order: one stable sort
+    on (term, ord) keeps it, and each run of equal (term, ord) is one
+    posting with tf = the run length. Then one varbyte pass each over all
+    doc gaps, tfs and position gaps — a term's first gap and a posting's
+    first position stay absolute — and every per-term blob and per-block
+    byte offset is read off the encoder's cumulative ends; block impact
+    stats come from maximum/minimum.reduceat over the block starts. A
+    stream without payloads writes empty ``pays`` and zero payload offsets
+    and maxima.
     """
-    n = ords.size
-    ords = np.ascontiguousarray(ords, dtype=np.int64)
-    tfs = np.ascontiguousarray(tfs, dtype=np.int64)
-    gaps = np.empty(n, dtype=np.uint64)
-    gaps[0] = ords[0]
-    gaps[1:] = np.diff(ords).astype(np.uint64)
+    if payloads is not None and payloads.size != positions.size:
+        raise ValueError(
+            f"payloads ({payloads.size}) must align 1:1 with positions "
+            f"({positions.size})"
+        )
+    order = np.lexsort((ords, code))
+    code, ords = code[order], np.asarray(ords, dtype=np.int64)[order]
+    new = np.ones(code.size, dtype=bool)
+    new[1:] = (code[1:] != code[:-1]) | (ords[1:] != ords[:-1])
+    tok = np.append(np.flatnonzero(new), code.size)  # token offset per posting
+    p_ord, tfs = ords[tok[:-1]], np.diff(tok)
+    norm = np.asarray(norms, dtype=np.uint8)[order][tok[:-1]]
+    # Per term, its posting offsets; per block, its posting offset and term.
+    post = np.searchsorted(code[tok[:-1]], np.arange(len(terms) + 1))
+    df = np.diff(post)
+    n_blocks = (df + BLOCK_SIZE - 1) // BLOCK_SIZE
+    blk = np.zeros(len(terms) + 1, dtype=np.int64)
+    np.cumsum(n_blocks, out=blk[1:])
+    b_term = np.repeat(np.arange(len(terms)), n_blocks)
+    b_post = post[b_term] + (np.arange(blk[-1]) - blk[b_term]) * BLOCK_SIZE
 
-    n_blocks = (n + BLOCK_SIZE - 1) // BLOCK_SIZE
-    starts = np.arange(n_blocks, dtype=np.int64) * BLOCK_SIZE
-    b_first = ords[::BLOCK_SIZE].copy()
-
+    gaps = p_ord.copy()
+    gaps[1:] -= p_ord[:-1]
+    gaps[post[:-1]] = p_ord[post[:-1]]
     gap_blob, gap_ends = _vb_encode_with_ends(gaps)
-    tf_blob, tf_ends = _vb_encode_with_ends(tfs.astype(np.uint64))
-    gap_off = np.zeros(n_blocks, dtype=np.int64)
-    tf_off = np.zeros(n_blocks, dtype=np.int64)
-    gap_off[1:] = gap_ends[starts[1:] - 1]
-    tf_off[1:] = tf_ends[starts[1:] - 1]
+    tf_blob, tf_ends = _vb_encode_with_ends(tfs)
+    gap_ends = np.append(0, gap_ends)  # byte offset where posting i's gap starts
+    tf_ends = np.append(0, tf_ends)
 
-    max_tf = np.maximum.reduceat(tfs, starts).astype(np.int32)
-    min_norm = np.minimum.reduceat(norms.astype(np.uint8), starts)
+    pos = np.asarray(positions, dtype=np.int64)[order]
+    pgaps = pos.copy()
+    pgaps[1:] -= pos[:-1]
+    pgaps[tok[:-1]] = pos[tok[:-1]]
+    pos_blob, pos_ends = _vb_encode_with_ends(pgaps)
+    pos_ends = np.append(0, pos_ends)
 
-    pos_blob = b""
-    pay_blob = b""
-    pay_off = np.zeros(n_blocks, dtype=np.int64)
-    max_pay = np.zeros(n_blocks, dtype=np.float32)
-    if positions is not None and positions.size:
-        flat = np.ascontiguousarray(positions, dtype=np.int64)
-        # Per-posting delta encoding in one vectorized pass: the first
-        # position of each posting stays absolute, the rest become gaps.
-        pstarts = np.zeros(n, dtype=np.int64)
-        pstarts[1:] = np.cumsum(tfs)[:-1]
-        pgaps = np.empty(flat.size, dtype=np.int64)
-        pgaps[0] = flat[0]
-        pgaps[1:] = flat[1:] - flat[:-1]
-        pgaps[pstarts] = flat[pstarts]
-        pos_blob = vb_encode(pgaps)
-        if payloads is not None:
-            pay = np.ascontiguousarray(payloads, dtype=np.float32)
-            if pay.size != flat.size:
-                raise ValueError(
-                    f"payloads ({pay.size}) must align 1:1 with positions "
-                    f"({flat.size})"
-                )
-            pay_blob = pay.tobytes()
-            # Fixed 4-byte width: a block's payload slice starts at 4x its
-            # first flat-position index.
-            pay_off[1:] = pstarts[starts[1:]] * 4
-            max_pay = np.maximum.reduceat(pay, pstarts[starts]).astype(
-                np.float32
-            )
+    t_tok = tok[post]  # token offset per term
+    b_tok = tok[b_post] - t_tok[b_term]  # token offset of a block in its term
+    if payloads is None:
+        pays = _binary(b"", np.zeros(len(terms) + 1, dtype=np.int64))
+        b_pay_off = np.zeros(blk[-1], dtype=np.int64)
+        b_max_pay = np.zeros(blk[-1], dtype=np.float64)
+    else:
+        pay = np.asarray(payloads, dtype=np.float32)[order]
+        # Fixed 4-byte width: a slice starts at 4x its first token offset.
+        pays = _binary(pay.tobytes(), t_tok * 4)
+        b_pay_off = b_tok * 4
+        b_max_pay = np.maximum.reduceat(pay, tok[b_post]).astype(np.float64)
 
-    return EncodedPostings(
-        df=n,
-        ttf=int(tfs.sum()),
-        gaps=gap_blob,
-        tfs=tf_blob,
-        block_first_ord=b_first,
-        block_gap_off=gap_off,
-        block_tf_off=tf_off,
-        block_max_tf=max_tf,
-        block_min_norm=min_norm,
-        poss=pos_blob,
-        pays=pay_blob,
-        block_pay_off=pay_off,
-        block_max_pay=max_pay,
+    return pa.Table.from_arrays(
+        [
+            pa.array(terms, pa.string()),
+            pa.array(df),
+            pa.array(np.diff(t_tok)),
+            _binary(gap_blob, gap_ends[post]),
+            _binary(tf_blob, tf_ends[post]),
+            _binary(norm.tobytes(), post),
+            _lists(p_ord[b_post], blk),
+            _lists(gap_ends[b_post] - gap_ends[post[b_term]], blk),
+            _lists(tf_ends[b_post] - tf_ends[post[b_term]], blk),
+            _lists(np.maximum.reduceat(tfs, b_post), blk),
+            _lists(np.minimum.reduceat(norm, b_post).astype(np.int64), blk),
+            _binary(pos_blob, pos_ends[t_tok]),
+            pays,
+            _lists(b_pay_off, blk),
+            _lists(b_max_pay, blk),
+        ],
+        schema=POSTINGS_SCHEMA,
     )
 
 

@@ -19,9 +19,10 @@ Mirrors the Lucene/Solr indexing lifecycle (SURVEY.md §3.2) Spark-first:
   (= ExactStatsCache, search/stats/ExactStatsCache.java:150-206, without
   the two-phase HTTP dance; Spark's partial+final combine makes hot terms
   cheap because each task emits at most one partial row per term),
-  plus corpus_stats.json (N, sumdl, avgdl, and the ``segments`` map of
-  committed generations), replaced atomically. Searchers and merges read
-  only the segments corpus_stats.json names.
+  plus corpus_stats.json (N, sumdl, avgdl, the ``segments`` map of
+  committed generations and the names of the term_stats part files),
+  replaced atomically. Searchers and merges read only the segments and
+  term_stats files corpus_stats.json names.
 - ``merge_index``: merge of generations within each partition
   (= TieredMergePolicy's role, index/TieredMergePolicyFactory.java:27):
   re-rank the union of docids, decode every generation's postings back to
@@ -29,30 +30,32 @@ Mirrors the Lucene/Solr indexing lifecycle (SURVEY.md §3.2) Spark-first:
   (``per_partition``, which the physical queries' Spark executor also
   uses).
 
-Build and merge share one postings writer (``_postings_table``), as
-Lucene's flush and merge share one codec consumer: flat per-token (term,
-ord, position[, payload]) streams in, one stable sort on (term, ord), one
-posting per (term, ord) run, one row per term out.
+Build and merge share one postings encoder (``codec.encode_postings``), as
+Lucene's flush and merge share one codec consumer: the build's analysis
+loop and the merge's decode both yield flat per-token (term, ord, norm,
+position[, payload]) streams, and the encoder turns every term of the
+segment into one Arrow table in one vectorized pass. ``_write_segment``
+writes that table and the doc table as they are, after a ``gen`` column.
 
 Layout (every column is read by a scorer, the merge or finalize_index):
     index_dir/
       corpus_stats.json              n_docs, sum_dl, avgdl, payloads, ...,
-                                     segments {p: [gen, ...]} (the commit)
+                                     segments {p: [gen, ...]} and
+                                     term_stats [part file, ...] (the commit)
       term_stats.parquet/            (term, df, ttf)
       seg/p=<P>/gen=<G>/
-        postings.parquet             one row per term, sorted by term:
-                                     gen, term, df, ttf, gaps, tfs, norms,
-                                     block_first_ord, block_gap_off,
-                                     block_tf_off, block_max_tf,
-                                     block_min_norm, poss, pays,
-                                     block_pay_off, block_max_pay
-        docs.parquet                 gen, ord, docid, dl, norm
+        postings.parquet             gen + codec.POSTINGS_SCHEMA, one row
+                                     per term, sorted by term
+        docs.parquet                 gen + codec.DOCS_SCHEMA
         manifest.json
 
 Scale notes: P is chosen so one partition's docs fit an executor (at 10^12
 docs → P in the tens of thousands; parquet + manifests shard naturally).
-Query-time reads prune on the ``term`` column via parquet row-group stats —
-postings are written sorted by term.
+Postings are sorted by term but written with pyarrow's default row-group
+size (1Mi rows), so each postings.parquet is one row group: a query reads
+its columns of every term row of the partition's committed segments and
+then filters them. Sizing the row groups waits on a large-index benchmark
+(ROADMAP).
 """
 
 from __future__ import annotations
@@ -66,25 +69,24 @@ from functools import partial
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from solr_spark.analysis.chain import ANALYZERS_POS
-from solr_spark.index.codec import decode_positions, encode_postings, vb_decode
+from solr_spark.index.codec import (
+    DOCS_SCHEMA,
+    decode_positions,
+    encode_postings,
+    vb_decode,
+)
 from solr_spark.index.norms import norm_byte_array
 
 MANIFEST_SCHEMA = (
     "p int, gen int, n_docs long, n_terms long, n_postings long, "
     "sum_dl long, docid_checksum long, skipped boolean, wall_s double, bytes long"
 )
-
-# postings.parquet columns after ``gen``: one row per term (``_term_row``).
-_POSTINGS_COLS = [
-    "term", "df", "ttf", "gaps", "tfs", "norms",
-    "block_first_ord", "block_gap_off", "block_tf_off",
-    "block_max_tf", "block_min_norm", "poss",
-    "pays", "block_pay_off", "block_max_pay",
-]
 
 _WS_RE = re.compile(r"\s+")
 _PART_RE = re.compile(r"p=(\d+)")
@@ -178,11 +180,10 @@ def _invert_partition(
     store_payloads: bool = False,
     payload_delimiter: str = "|",
     default_payload: float = 1.0,
-) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """Analyze + invert one partition. Returns (docs_table, postings_table).
-
-    docs_table: (ord, docid, dl, norm) sorted by docid (ord = rank).
-    postings_table: one row per term, columns per _POSTINGS_COLS.
+) -> tuple[pa.Table, pa.Table]:
+    """Analyze + invert one partition. Returns (docs, postings): the
+    DOCS_SCHEMA table sorted by docid (ord = rank), and encode_postings'
+    table of its tokens.
 
     ``store_payloads=True`` switches the analysis to the
     ``delimited_payload`` chain (whitespace ``term|payload`` tokens; the
@@ -210,78 +211,17 @@ def _invert_partition(
     rank = dict(zip(terms, range(len(terms))))
     code = np.fromiter(map(rank.__getitem__, streams[0]), np.int64, len(streams[0]))
     norms = norm_byte_array(dl)
-    postings = _postings_table(
-        terms, code, np.repeat(np.arange(len(docids)), dl), norms,
+    postings = encode_postings(
+        terms, code, np.repeat(np.arange(len(docids)), dl), np.repeat(norms, dl),
         np.asarray(streams[1], dtype=np.int64),
         np.asarray(streams[2], dtype=np.float32) if store_payloads else None,
     )
-    docs = pd.DataFrame(
-        {
-            "ord": np.arange(len(docids), dtype=np.int64),
-            "docid": docids,
-            "dl": dl,
-            "norm": norms.astype(np.int32),
-        }
+    docs = pa.Table.from_arrays(
+        [pa.array(np.arange(len(docids))), pa.array(docids), pa.array(dl),
+         pa.array(norms.astype(np.int32))],
+        schema=DOCS_SCHEMA,
     )
     return docs, postings
-
-
-def _postings_table(
-    terms, code: np.ndarray, ords: np.ndarray, norms: np.ndarray,
-    positions: np.ndarray, payloads: np.ndarray | None,
-) -> pd.DataFrame:
-    """The one postings writer of build and merge: flat per-token streams
-    (term code into the sorted ``terms``, doc ord, position[, payload]) to
-    the postings table, one ``_term_row`` per term.
-
-    Each (term, ord)'s tokens must come in position order; a stable sort
-    on (term, ord) keeps that order, so each run of equal (term, ord) is one
-    posting with tf = the run length. ``norms`` is indexed by ord."""
-    order = np.lexsort((ords, code))
-    code, ords, positions = code[order], ords[order], positions[order]
-    if payloads is not None:
-        payloads = payloads[order]
-    new = np.ones(code.size, dtype=bool)
-    new[1:] = (code[1:] != code[:-1]) | (ords[1:] != ords[:-1])
-    pcut = np.append(np.flatnonzero(new), code.size)  # token offset per posting
-    ords, tfs = ords[pcut[:-1]], np.diff(pcut)
-    cut = np.searchsorted(code[pcut[:-1]], np.arange(len(terms) + 1))
-    rows = [
-        _term_row(
-            term, ords[a:b], tfs[a:b], norms[ords[a:b]],
-            positions[pcut[a]:pcut[b]],
-            None if payloads is None else payloads[pcut[a]:pcut[b]],
-        )
-        for term, a, b in zip(terms, cut[:-1], cut[1:])
-    ]
-    return pd.DataFrame(rows, columns=_POSTINGS_COLS)
-
-
-def _term_row(
-    term: str,
-    ords: np.ndarray,
-    tfs: np.ndarray,
-    norms: np.ndarray,
-    positions: np.ndarray,
-    payloads: np.ndarray | None,
-) -> tuple:
-    """One postings row (the _POSTINGS_COLS) of a term's postings; block
-    offsets and maxima of an absent payload stream are zeros.
-
-    The norm byte rides WITH the postings (1 byte per posting, like
-    Lucene's impact pairs): scoring then never touches the doc table — the
-    doc table is consulted only to map the winning top-k ords back to
-    docids via a filtered read."""
-    enc = encode_postings(ords, tfs, norms, positions=positions, payloads=payloads)
-    return (
-        term, enc.df, enc.ttf, enc.gaps, enc.tfs, norms.tobytes(),
-        enc.block_first_ord.tolist(),
-        enc.block_gap_off.tolist(), enc.block_tf_off.tolist(),
-        enc.block_max_tf.tolist(),
-        enc.block_min_norm.astype(np.int32).tolist(),
-        enc.poss, enc.pays, enc.block_pay_off.tolist(),
-        [float(x) for x in enc.block_max_pay],
-    )
 
 
 def _docid_checksum(docids: np.ndarray) -> int:
@@ -295,11 +235,12 @@ def _read_manifest(seg_dir: str) -> dict:
 
 
 def _write_segment(
-    index_dir: str, p: int, gen: int, docs: pd.DataFrame, postings: pd.DataFrame,
+    index_dir: str, p: int, gen: int, docs: pa.Table, postings: pa.Table,
     docid_checksum: int, wall_s: float, store_payloads: bool = False,
 ) -> dict:
-    """Atomically commit one segment directory (tmp write + rename)."""
-    import pyarrow as pa
+    """Atomically commit one segment directory (tmp write + rename): the
+    DOCS_SCHEMA and POSTINGS_SCHEMA tables, each written as is after an
+    int32 ``gen`` column."""
     import pyarrow.parquet as pq
 
     # Executor-side: one pyarrow thread per task (Spark supplies the
@@ -308,29 +249,31 @@ def _write_segment(
     final = _seg_dir(index_dir, p, gen)
     tmp = final + ".tmp-" + uuid.uuid4().hex[:8]
     os.makedirs(tmp, exist_ok=True)
-    postings = postings.copy()
-    postings.insert(0, "gen", np.int32(gen))
-    docs = docs.copy()
-    docs.insert(0, "gen", np.int32(gen))
-    pq.write_table(pa.Table.from_pandas(postings, preserve_index=False),
-                   os.path.join(tmp, "postings.parquet"))
+
+    def with_gen(t: pa.Table) -> pa.Table:
+        return t.add_column(0, "gen", pa.array(np.full(t.num_rows, gen, np.int32)))
+
+    pq.write_table(with_gen(postings), os.path.join(tmp, "postings.parquet"))
     # Small row groups on the doc table: queries read it only to map top-k
     # ords -> docids with a row-group-pruned filtered read, so row-group
     # granularity IS the read granularity.
-    pq.write_table(pa.Table.from_pandas(docs, preserve_index=False),
-                   os.path.join(tmp, "docs.parquet"), row_group_size=16384)
+    pq.write_table(with_gen(docs), os.path.join(tmp, "docs.parquet"),
+                   row_group_size=16384)
+
+    def total(col: pa.ChunkedArray) -> int:
+        return pc.sum(col).as_py() or 0
+
     manifest = {
         "p": p,
         "gen": gen,
-        "n_docs": int(len(docs)),
-        "n_terms": int(len(postings)),
-        "n_postings": int(postings["df"].sum()) if len(postings) else 0,
-        "sum_dl": int(docs["dl"].sum()) if len(docs) else 0,
+        "n_docs": docs.num_rows,
+        "n_terms": postings.num_rows,
+        "n_postings": total(postings["df"]),
+        "sum_dl": total(docs["dl"]),
         "docid_checksum": int(docid_checksum),
         "payloads": bool(store_payloads),
-        "bytes": int(
-            postings["gaps"].map(len).sum() + postings["tfs"].map(len).sum()
-        ) if len(postings) else 0,
+        "bytes": total(pc.binary_length(postings["gaps"]))
+        + total(pc.binary_length(postings["tfs"])),
         "wall_s": round(wall_s, 3),
         "committed_at": time.time(),
     }
@@ -459,9 +402,10 @@ def finalize_index(
     """Commit: compute global exact stats over every segment on disk and
     publish them. corpus_stats.json is the commit point: its ``segments``
     map ``{p: [gen, ...]}`` names the committed segments, the only ones
-    searchers and merges read, and it is replaced atomically (tmp write +
-    rename). An index with no segment gets an empty term_stats and
-    ``n_docs`` 0."""
+    searchers and merges read, its ``term_stats`` list names the part files
+    of term_stats.parquet that hold their df, and it is replaced atomically
+    (tmp write + rename). An index with no segment gets an empty
+    term_stats and ``n_docs`` 0."""
     segs = _written_segments(index_dir)
     seg_dirs = [_seg_dir(index_dir, p, g) for p, gens in segs.items() for g in gens]
     if seg_dirs:
@@ -472,7 +416,8 @@ def finalize_index(
         )
     else:
         term_stats = spark.createDataFrame([], "term string, df long, ttf long")
-    term_stats.write.mode("overwrite").parquet(f"{index_dir}/term_stats.parquet")
+    ts_dir = f"{index_dir}/term_stats.parquet"
+    term_stats.write.mode("overwrite").parquet(ts_dir)
     manifests = [_read_manifest(d) for d in seg_dirs]
     n_docs = sum(m["n_docs"] for m in manifests)
     sum_dl = sum(m["sum_dl"] for m in manifests)
@@ -486,6 +431,12 @@ def finalize_index(
         "b": b,
         "generations": sorted({g for gens in segs.values() for g in gens}),
         "segments": segs,
+        # Spark names part files uniquely per write, so if this commit fails
+        # after the write above, the previous commit names files that are
+        # gone: searchers raise instead of pairing the new df with old N.
+        "term_stats": sorted(
+            f for f in os.listdir(ts_dir) if not f.startswith(("_", "."))
+        ),
     }
     tmp = f"{index_dir}/corpus_stats.json.tmp"
     with open(tmp, "w") as f:
@@ -536,16 +487,15 @@ def merge_index(
     Per partition, inside ``per_partition``'s one stage: re-rank the docid
     union of the generations the last commit names; decode every
     generation's postings back into flat per-token streams (term, new ord,
-    position[, payload]) and hand them to the build's postings writer
-    (``_postings_table``). Equivalent to a full Lucene forceMerge(1) per
-    shard.
+    position[, payload]) and encode them as the build does
+    (``codec.encode_postings``). Equivalent to a full Lucene forceMerge(1)
+    per shard.
     """
     stats = read_corpus_stats(index_dir)
     analyzer = analyzer or stats["analyzer"]
     segs = stats["segments"]
 
     def merge_one(p: int) -> pd.DataFrame:
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
         final = _seg_dir(out_dir, p, 0)
@@ -567,7 +517,7 @@ def merge_index(
             pq.read_table(f"{gd}/docs.parquet", columns=["ord", "docid", "dl", "norm"])
             for gd in gen_dirs
         ]
-        merged = pa.concat_tables(docs).to_pandas()
+        merged = pa.concat_tables(docs)
         doc_order = np.argsort(merged["docid"].to_numpy(), kind="stable")
         new_ord = np.empty(doc_order.size, dtype=np.int64)
         new_ord[doc_order] = np.arange(doc_order.size)
@@ -595,14 +545,18 @@ def merge_index(
                 ))
         uniq, term_code = np.unique(np.concatenate(terms), return_inverse=True)
         tf = np.concatenate(tfs)
-        merged = merged.iloc[doc_order].reset_index(drop=True)
-        merged["ord"] = np.arange(len(merged), dtype=np.int64)
+        merged = merged.take(doc_order)
+        merged = pa.Table.from_arrays(
+            [pa.array(np.arange(merged.num_rows))]
+            + [merged[c] for c in ("docid", "dl", "norm")],
+            schema=DOCS_SCHEMA,
+        )
         # Back to per-token streams, the shape the build's analysis yields.
-        postings = _postings_table(
+        tok_ords = np.repeat(np.concatenate(ords), tf)
+        postings = encode_postings(
             uniq, np.repeat(np.repeat(term_code, np.concatenate(dfs)), tf),
-            np.repeat(np.concatenate(ords), tf),
-            merged["norm"].to_numpy(dtype=np.uint8), np.concatenate(poss),
-            np.concatenate(pays) if payloads else None,
+            tok_ords, merged["norm"].to_numpy().astype(np.uint8)[tok_ords],
+            np.concatenate(poss), np.concatenate(pays) if payloads else None,
         )
         m = _write_segment(
             out_dir, p, 0, merged, postings,

@@ -1,18 +1,21 @@
 """Top-k BM25 over the physical segment index, with block-max pruning.
 
 Opening a searcher (``PhysicalIndex``) launches no Spark work: it reads
-corpus_stats.json, whose segment map names the last commit's segments, and
-that map is the searcher's snapshot, as Lucene's IndexSearcher pins its
-segments. A segment written but not yet committed (finalize_index) is not
-read. Term df comes from a term-IN filtered pyarrow read of
-term_stats.parquet on the driver, so it launches no job either.
+corpus_stats.json, whose segment map and term_stats file list name the
+last commit's segments and df files; they are the searcher's snapshot, as
+Lucene's IndexSearcher pins its segments. A segment written but not yet
+committed (finalize_index) is not read. Term df comes from a term-IN
+filtered pyarrow read of those term_stats files on the driver, so it
+launches no job either.
 
 Every physical query (term ``topk``, boolean ``search``, ``phrase_topk``,
 ``payload_topk``) runs one per-partition function for each segment
 partition p: read p's committed postings.parquet files with pyarrow (column
-pruning + the query's term filter; row groups prune on ``term`` because
-postings are written sorted, but a segment below pyarrow's default
-row-group size is one row group), in (gen, file row) order, and score them.
+pruning + the query's term filter), in (gen, file row) order, and score
+them. Each postings.parquet is written as one row group (pyarrow's default
+size, 1Mi rows), so the term filter prunes no row group: every query reads
+the requested columns of all term rows of the partition's committed
+segments and filters them in memory.
 The global merge keeps the top k by (score desc, docid asc). Two executors
 run that same function (``PhysicalIndex._topk``):
 
@@ -76,8 +79,10 @@ byte travels INSIDE the posting list (1 byte per posting, like Lucene's
 impact data), so scoring touches ONLY the query terms' postings rows —
 never the doc table. The doc table is read once per partition at the very
 end, with an ord-IN filtered, row-group-pruned parquet read, purely to map
-the winning top-k ordinals back to docids: per-query IO is O(query postings
-+ k), not O(corpus).
+the winning top-k ordinals back to docids. Per-query IO is therefore the
+requested postings columns of every committed segment (each postings file
+is one row group) plus the docs row groups holding the top-k ords; decode
+and scoring touch only the query terms' postings.
 
 Rank-identity across partition counts and across the two executors holds
 because scoring is per-doc exact and the tiebreak (score desc, docid asc)
@@ -611,15 +616,16 @@ class PhysicalIndex:
     """Point-in-time searcher over a physical index directory.
 
     Opening does no Spark work: it reads corpus_stats.json, whose
-    ``segments`` map names the committed segments, and lists term_stats'
-    part files. Those are the searcher's snapshot, as Lucene's IndexSearcher
-    pins its segments; a generation committed later is seen after a reopen,
-    which ``open_index`` decides from the commit token. A searcher whose
-    term_stats files a later commit replaced raises rather than mix that
-    commit's df with its own N. Each query runs over the snapshot on one
-    of two executors, chosen by its size (``_topk``; module docstring): a
-    driver loop whose result launches no Spark job, or one Spark job of one
-    stage.
+    ``segments`` map names the committed segments and whose ``term_stats``
+    list names the part files of their df. Those are the searcher's
+    snapshot, as Lucene's IndexSearcher pins its segments; a generation
+    committed later is seen after a reopen, which ``open_index`` decides
+    from the commit token. A searcher whose term_stats files are gone (a
+    later commit replaced them, or a failed one did) raises rather than mix
+    another commit's df with its own N. Each query runs over the snapshot
+    on one of two executors, chosen by its size (``_topk``; module
+    docstring): a driver loop whose result launches no Spark job, or one
+    Spark job of one stage.
     """
 
     # Driver-side per-term df cache cap. Query workloads touch a tiny,
@@ -634,10 +640,8 @@ class PhysicalIndex:
         self.commit_token = _commit_token(index_dir)
         self.stats = read_corpus_stats(index_dir)
         self.segments = self.stats["segments"]
-        ts = f"{index_dir}/term_stats.parquet"
         self._term_stats_files = [
-            f"{ts}/{f}" for f in sorted(os.listdir(ts))
-            if not f.startswith(("_", "."))
+            f"{index_dir}/term_stats.parquet/{f}" for f in self.stats["term_stats"]
         ]
         # term -> global df, or None for a term known absent from the corpus
         # (negative caching avoids re-reading for repeated OOV query terms).
@@ -648,8 +652,11 @@ class PhysicalIndex:
         """The snapshot's term_stats part files, still on disk."""
         if not all(map(os.path.exists, self._term_stats_files)):
             raise RuntimeError(
-                f"stale searcher over {self.index_dir}: a later commit "
-                "replaced its term_stats; reopen it with open_index"
+                f"stale searcher over {self.index_dir}: the term_stats files "
+                "its commit names are gone (a later commit replaced them, or "
+                "a finalize_index failed after writing new ones); re-run "
+                "finalize_index if the last one failed, then reopen it with "
+                "open_index"
             )
         return self._term_stats_files
 

@@ -59,3 +59,35 @@ def spark_executor(monkeypatch):
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture(scope="session")
+def encode_one():
+    """``encode_one(ords, tfs, norms, positions=None, payloads=None)``: one
+    term's postings (``norms[i]`` is posting i's norm byte; ``positions``
+    and ``payloads`` flat, tfs[i] entries for posting i) as per-token
+    streams through codec.encode_postings. Returns that term's row, list
+    columns as numpy arrays. Without ``positions``, posting i holds
+    positions 0..tfs[i]-1."""
+    from types import SimpleNamespace
+
+    import numpy as np
+
+    from solr_spark.index.codec import encode_postings
+
+    def run(ords, tfs, norms, positions=None, payloads=None):
+        tfs = np.asarray(tfs, dtype=np.int64)
+        if positions is None:
+            starts = np.cumsum(tfs) - tfs
+            positions = np.arange(tfs.sum()) - np.repeat(starts, tfs)
+        table = encode_postings(
+            ["t"], np.zeros(int(tfs.sum()), dtype=np.int64),
+            np.repeat(ords, tfs), np.repeat(norms, tfs),
+            np.asarray(positions), payloads,
+        )
+        (row,) = table.to_pylist()
+        return SimpleNamespace(**{
+            k: np.asarray(v) if isinstance(v, list) else v for k, v in row.items()
+        })
+
+    return run

@@ -7,7 +7,10 @@ import pytest
 
 from solr_spark.index.codec import (
     BLOCK_SIZE,
+    POSTINGS_SCHEMA,
     decode_blocks,
+    decode_payloads,
+    decode_positions,
     decode_postings,
     encode_postings,
     vb_decode,
@@ -16,12 +19,12 @@ from solr_spark.index.codec import (
 
 
 @pytest.mark.parametrize("n", [1, 2, 127, 128, 129, 1000, 4999])
-def test_roundtrip(n):
+def test_roundtrip(n, encode_one):
     rng = np.random.default_rng(n)
     ords = np.sort(rng.choice(10**7, size=n, replace=False)).astype(np.int64)
     tfs = rng.integers(1, 300, size=n).astype(np.int64)
     norms = rng.integers(0, 256, size=n).astype(np.uint8)
-    enc = encode_postings(ords, tfs, norms)
+    enc = encode_one(ords, tfs, norms)
     o2, t2 = decode_postings(enc.gaps, enc.tfs)
     assert np.array_equal(o2, ords)
     assert np.array_equal(t2, tfs)
@@ -29,13 +32,13 @@ def test_roundtrip(n):
     assert enc.ttf == tfs.sum()
 
 
-def test_partial_block_decode():
+def test_partial_block_decode(encode_one):
     rng = np.random.default_rng(0)
     n = 1500
     ords = np.sort(rng.choice(10**6, size=n, replace=False)).astype(np.int64)
     tfs = rng.integers(1, 50, size=n).astype(np.int64)
     norms = rng.integers(0, 256, size=n).astype(np.uint8)
-    enc = encode_postings(ords, tfs, norms)
+    enc = encode_one(ords, tfs, norms)
     nb = enc.block_first_ord.size
     assert nb == (n + BLOCK_SIZE - 1) // BLOCK_SIZE
     sel = np.array([0, 3, nb - 1])
@@ -62,7 +65,7 @@ def test_varbyte_extremes():
     assert vb_decode(b"").size == 0
 
 
-def test_property_full_codec_roundtrip():
+def test_property_full_codec_roundtrip(encode_one):
     """Hypothesis sweep over the whole encode/decode surface: arbitrary
     posting-list shapes (gap extremes, block-boundary sizes, tf spreads)
     round-trip postings + positions + payloads exactly, and every block's
@@ -70,8 +73,6 @@ def test_property_full_codec_roundtrip():
     fixed-seed tests above with generated edge shapes."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
-
-    from solr_spark.index.codec import decode_payloads, decode_positions
 
     @settings(max_examples=30, deadline=None)
     @given(
@@ -94,8 +95,8 @@ def test_property_full_codec_roundtrip():
         flat_pos = np.concatenate(pls)
         pays = rng.standard_normal(flat_pos.size).astype(np.float32)
 
-        enc = encode_postings(ords, tfs, norms, positions=flat_pos,
-                              payloads=pays)
+        enc = encode_one(ords, tfs, norms, positions=flat_pos,
+                         payloads=pays)
         o2, t2 = decode_postings(enc.gaps, enc.tfs)
         assert np.array_equal(o2, ords) and np.array_equal(t2, tfs)
         assert enc.df == n and enc.ttf == tfs.sum()
@@ -149,15 +150,7 @@ def test_property_varbyte_roundtrip():
     check()
 
 
-def test_positions_roundtrip():
-    import numpy as np
-
-    from solr_spark.index.codec import (
-        decode_positions,
-        decode_postings,
-        encode_postings,
-    )
-
+def test_positions_roundtrip(encode_one):
     rng = np.random.default_rng(7)
     n = 1000
     ords = np.sort(rng.choice(100000, n, replace=False)).astype(np.int64)
@@ -166,9 +159,72 @@ def test_positions_roundtrip():
     pls = [np.sort(rng.choice(500, int(t), replace=False)).astype(np.int64)
            for t in tfs]
     flat = np.concatenate(pls)
-    enc = encode_postings(ords, tfs, norms, positions=flat)
+    enc = encode_one(ords, tfs, norms, positions=flat)
     o2, t2 = decode_postings(enc.gaps, enc.tfs)
     f2, starts = decode_positions(enc.poss, t2)
     assert (f2 == flat).all()
     for i in (0, 1, 57, n - 1):
         assert (f2[starts[i]:starts[i] + tfs[i]] == pls[i]).all()
+
+
+def test_multi_term_partition_roundtrip():
+    """One encode_postings call over a partition whose terms straddle the
+    block boundaries (df 1, 127, 128, 129, 256, 257), with tf > 1,
+    positions and payloads, fed as per-token streams in analysis order
+    (doc, then position). Every row decodes whole and block by block, and
+    every block's metadata equals a numpy recomputation from the input."""
+    rng = np.random.default_rng(11)
+    n_docs = 600
+    doc_norm = rng.integers(0, 256, n_docs).astype(np.uint8)
+    dfs = {"d001": 1, "d127": 127, "d128": 128, "d129": 129, "d256": 256,
+           "d257": 257}
+    terms = sorted(dfs)
+    want, toks = {}, []
+    for c, t in enumerate(terms):
+        ords = np.sort(rng.choice(n_docs, dfs[t], replace=False))
+        tfs = rng.integers(1, 5, ords.size)
+        pos = [np.sort(rng.choice(1000, k, replace=False)) for k in tfs]
+        pays = [rng.standard_normal(k).astype(np.float32) for k in tfs]
+        want[t] = (ords, tfs, np.concatenate(pos), np.concatenate(pays))
+        toks += [(o, p, c, y) for o, ps, ys in zip(ords, pos, pays)
+                 for p, y in zip(ps, ys)]
+    toks.sort(key=lambda x: (x[0], x[1], x[2]))
+    o, p, c, y = (np.array(col) for col in zip(*toks))
+    table = encode_postings(terms, c, o, doc_norm[o], p,
+                            y.astype(np.float32))
+    assert table.schema == POSTINGS_SCHEMA
+    assert table["term"].to_pylist() == terms
+
+    for r in table.to_pylist():
+        ords, tfs, pos, pays = want[r["term"]]
+        n = ords.size
+        starts = np.arange(0, n, BLOCK_SIZE)
+        tstarts = np.cumsum(tfs) - tfs
+        assert r["df"] == n and r["ttf"] == tfs.sum()
+        o2, t2 = decode_postings(r["gaps"], r["tfs"])
+        assert np.array_equal(o2, ords) and np.array_equal(t2, tfs)
+        assert r["norms"] == doc_norm[ords].tobytes()
+        assert np.array_equal(decode_positions(r["poss"], t2)[0], pos)
+        assert np.array_equal(decode_payloads(r["pays"], t2)[0], pays)
+        assert r["block_first_ord"] == ords[starts].tolist()
+        assert r["block_max_tf"] == np.maximum.reduceat(tfs, starts).tolist()
+        assert r["block_min_norm"] == np.minimum.reduceat(
+            doc_norm[ords], starts).tolist()
+        assert r["block_pay_off"] == (tstarts[starts] * 4).tolist()
+        assert r["block_max_pay"] == np.maximum.reduceat(
+            pays, tstarts[starts]).tolist()
+        for b, lo in enumerate(starts):
+            ob, tb = decode_blocks(
+                r["gaps"], r["tfs"], np.array([b]),
+                np.array(r["block_first_ord"]), np.array(r["block_gap_off"]),
+                np.array(r["block_tf_off"]), r["df"],
+            )
+            assert np.array_equal(ob, ords[lo:lo + BLOCK_SIZE])
+            assert np.array_equal(tb, tfs[lo:lo + BLOCK_SIZE])
+
+    # A partition with no tokens (every doc empty or stopwords) is a typed
+    # empty table, with or without payloads.
+    none = np.empty(0, dtype=np.int64)
+    for pay in (None, np.empty(0, dtype=np.float32)):
+        empty = encode_postings([], none, none, none.astype(np.uint8), none, pay)
+        assert empty.num_rows == 0 and empty.schema == POSTINGS_SCHEMA

@@ -55,7 +55,7 @@ def pay_setup(spark, tmp_path_factory):
     return corpus, idx_dir, logical
 
 
-def test_codec_payload_roundtrip():
+def test_codec_payload_roundtrip(encode_one):
     ords = np.arange(0, 300, dtype=np.int64)
     tfs = (ords % 3 + 1).astype(np.int64)
     norms = np.full(300, 24, dtype=np.uint8)
@@ -64,7 +64,7 @@ def test_codec_payload_roundtrip():
     # positions must be sorted per posting, not globally — rebuild per doc
     pos = np.concatenate([np.sort(np.arange(t) * 2 + 1) for t in tfs])
     pay = (np.arange(npos) % 7).astype(np.float32) / 2.0
-    enc = encode_postings(ords, tfs, norms, positions=pos, payloads=pay)
+    enc = encode_one(ords, tfs, norms, positions=pos, payloads=pay)
     flat, starts = decode_payloads(enc.pays, tfs)
     assert np.array_equal(flat, pay)
     # block metadata: 300 postings -> 3 blocks; offsets address the stream
@@ -78,8 +78,8 @@ def test_codec_payload_roundtrip():
 def test_codec_payload_misalignment_raises():
     with pytest.raises(ValueError, match="align"):
         encode_postings(
-            np.array([0, 1]), np.array([1, 1]), np.zeros(2, np.uint8),
-            positions=np.array([0, 1]), payloads=np.array([1.0], np.float32),
+            ["t"], np.zeros(2, np.int64), np.array([0, 1]), np.zeros(2, np.uint8),
+            np.array([0, 1]), np.array([1.0], np.float32),
         )
 
 

@@ -483,7 +483,9 @@ def test_searcher_reads_only_committed_segments(spark, tmp_path_factory):
 def test_commit_write_failure_keeps_previous_commit(spark, tmp_path_factory,
                                                     monkeypatch):
     """A corpus_stats.json write that raises midway leaves the previous
-    commit readable (tmp write + rename), never a truncated file."""
+    commit readable (tmp write + rename), never a truncated file, and no
+    searcher answers from it with the failed commit's df; re-running
+    finalize_index commits."""
     import json
 
     from solr_spark.index.segments import read_corpus_stats
@@ -503,6 +505,126 @@ def test_commit_write_failure_keeps_previous_commit(spark, tmp_path_factory,
             finalize_index(spark, d, "simple")
     assert json.dump is dump
     assert read_corpus_stats(d) == before
-    assert PhysicalIndex(spark, d).stats["n_docs"] == 10
+    # The failed commit already replaced term_stats: a fresh searcher over
+    # the previous commit must raise, never score the new df with the old N
+    # (which returned 0 hits).
+    ix = PhysicalIndex(spark, d)
+    assert ix.stats["n_docs"] == 10
+    with pytest.raises(RuntimeError,
+                       match="stale searcher.*finalize_index.*open_index"):
+        ix.topk("alpha", k=50).collect()
     assert finalize_index(spark, d, "simple")["n_docs"] == 20
     assert len(PhysicalIndex(spark, d).topk("alpha", k=50).collect()) == 20
+
+
+# The segment files' schemas, pinned: column names and Arrow types as
+# build and merge have always written them, with no pandas metadata.
+_I64S = "list<int64>"
+_POSTINGS_FILE_SCHEMA = [
+    ("gen", "int32"), ("term", "string"), ("df", "int64"), ("ttf", "int64"),
+    ("gaps", "binary"), ("tfs", "binary"), ("norms", "binary"),
+    ("block_first_ord", _I64S), ("block_gap_off", _I64S),
+    ("block_tf_off", _I64S), ("block_max_tf", _I64S),
+    ("block_min_norm", _I64S), ("poss", "binary"), ("pays", "binary"),
+    ("block_pay_off", _I64S), ("block_max_pay", "list<double>"),
+]
+_DOCS_FILE_SCHEMA = [
+    ("gen", "int32"), ("ord", "int64"), ("docid", "int64"), ("dl", "int64"),
+    ("norm", "int32"),
+]
+
+
+def _type_name(t) -> str:
+    """An Arrow type's name, ignoring the list item's field name (parquet
+    reads it back as ``element``)."""
+    import pyarrow as pa
+
+    return f"list<{t.value_type}>" if pa.types.is_list(t) else str(t)
+
+
+def _assert_declared_schemas(index_dir):
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from solr_spark.index.codec import DOCS_SCHEMA, POSTINGS_SCHEMA
+
+    files = glob.glob(f"{index_dir}/seg/*/*/*.parquet")
+    assert files
+    for f in files:
+        declared, pinned = (
+            (POSTINGS_SCHEMA, _POSTINGS_FILE_SCHEMA)
+            if f.endswith("postings.parquet") else (DOCS_SCHEMA, _DOCS_FILE_SCHEMA)
+        )
+        schema = pq.read_schema(f)
+        assert schema == pa.schema([("gen", pa.int32())] + list(declared)), f
+        assert [(x.name, _type_name(x.type)) for x in schema] == pinned, f
+        assert schema.metadata is None, f
+
+
+def test_segment_files_have_declared_schema(spark, docs, idx_dir,
+                                            tmp_path_factory):
+    """Every postings.parquet and docs.parquet that a build or a merge
+    writes, with or without payloads, has exactly the declared schema."""
+    _assert_declared_schemas(idx_dir)
+    base = tmp_path_factory.mktemp("schema")
+    kw = dict(analyzer="simple", id_col="doc_id", text_col="text",
+              store_payloads=True)
+    for g in range(2):
+        build_segments(docs.where(F.col("doc_id") % 2 == g), str(base / "gens"),
+                       2, generation=g, **kw)
+    finalize_index(spark, str(base / "gens"), "simple")
+    merge_index(spark, str(base / "gens"), str(base / "merged"))
+    _assert_declared_schemas(base / "gens")
+    _assert_declared_schemas(base / "merged")
+
+
+def test_partition_without_tokens(spark, tmp_path_factory):
+    """A partition whose docs are all stopwords, empty or null writes a
+    typed, empty postings table: the index commits, answers every query
+    kind, and merges, also when that partition is in a later generation
+    over a first one with tokens everywhere."""
+    from solr_spark.index.segments import partition_col
+    from solr_spark.query.wand import open_index
+
+    base = tmp_path_factory.mktemp("notokens")
+    kw = dict(analyzer="text_en", id_col="doc_id", text_col="text")
+    part = {r[0]: r[1] for r in spark.range(60).select(
+        "id", partition_col("id", 2)).collect()}
+
+    def texts(ids, empty_p0):
+        return {i: ("the and of", "", None)[i % 3] if empty_p0 and part[i] == 0
+                else f"alpha beta w{i}" if i % 2 == 0 else f"alpha w{i}"
+                for i in ids}
+
+    def build(index_dir, docs, gen):
+        build_segments(spark.createDataFrame(
+            list(docs.items()), "doc_id long, text string"),
+            index_dir, 2, generation=gen, **kw)
+        finalize_index(spark, index_dir, "text_en")
+
+    def check(index_dir, docs):
+        ix = open_index(spark, index_dir)
+        assert ix.stats["n_docs"] == len(docs)
+        rows = ix.topk("alpha", k=100).collect()
+        hits = {i for i, t in docs.items() if t and "alpha" in t}
+        both = {i for i, t in docs.items() if t and "beta" in t}
+        assert {r["docid"] for r in rows} == hits
+        for got in (ix.search("+alpha +beta", k=100),
+                    ix.phrase_topk("alpha beta", k=100)):
+            assert {r["docid"] for r in got.collect()} == both
+        assert ix.topk("the and of", k=10).collect() == []
+        _assert_declared_schemas(index_dir)
+        return rows
+
+    for name, gens in (("one", [texts(range(30), True)]),
+                       ("later", [texts(range(30), False),
+                                  texts(range(30, 60), True)])):
+        d, docs = str(base / name), {}
+        for g, gen_docs in enumerate(gens):
+            build(d, gen_docs, g)
+            docs.update(gen_docs)
+        rows = check(d, docs)
+        merge_index(spark, d, f"{d}_merged")
+        assert check(f"{d}_merged", docs) == rows
