@@ -1531,8 +1531,8 @@ def _phys_index_dir(spark: SparkSession, sf_dir: str) -> str:
 
     from solr_spark.index.segments import build_index_dir
 
-    # v5: corpus_stats.json names the committed segments and term_stats files
-    d = f"/tmp/solr_spark_phys_v5_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
+    # v6: segment manifests record their analyzer; segment files carry no gen
+    d = f"/tmp/solr_spark_phys_v6_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
     if not os.path.exists(f"{d}/corpus_stats.json"):
         docs = _t(spark, sf_dir, "documents")
         build_index_dir(
@@ -7165,7 +7165,7 @@ def wand_payload_score_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from solr_spark.index.segments import build_index_dir
     from solr_spark.query.wand import open_index
 
-    d = f"/tmp/solr_spark_payphys_v5_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
+    d = f"/tmp/solr_spark_payphys_v6_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
     if not os.path.exists(f"{d}/corpus_stats.json"):
         docs = _t(spark, sf_dir, "documents")
         ptext = docs.select(

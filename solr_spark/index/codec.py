@@ -13,7 +13,7 @@ query time is dominated by Arrow/parquet IO, not the decode loop.
 
 This module owns the segment files' format: ``POSTINGS_SCHEMA`` (one row
 per term) and ``DOCS_SCHEMA`` (one row per doc), which segments.py writes
-after an int32 ``gen`` column, and the blob layouts inside them. As Lucene's
+exactly as declared, and the blob layouts inside them. As Lucene's
 flush and merge stream every term through one codec consumer,
 ``encode_postings`` encodes every term of a segment in one vectorized pass
 over flat per-token streams, straight into an Arrow table. Everything is

@@ -3,15 +3,15 @@
 Mirrors the Lucene/Solr indexing lifecycle (SURVEY.md §3.2) Spark-first:
 
 - ``build_segments``: one Spark shape, ``groupBy(partition_col)
-  .applyInPandas``, one SEGMENT per partition (the Arrow-vectorized
+  .applyInArrow``, one SEGMENT per partition (the Arrow-vectorized
   analogue of IndexWriter's flush: analyze, invert, compress posting lists,
   write files). Input already laid out by ``partition_col`` (persisted, or
   a table bucketed by docid hash) builds with no shuffle; any other layout
   is shuffled once on p. Each segment = postings.parquet + docs.parquet +
   manifest.json, committed by an atomic directory rename; the manifest
-  carries row counts, a docid checksum (lineage), sizes and timing
-  (metrics). RESUME = re-running the build skips every partition whose
-  manifest already exists — the per-partition checkpoint protocol that
+  carries row counts, a docid checksum (lineage), the analyzer, sizes
+  and timing (metrics). RESUME = re-running the build skips every partition
+  whose manifest already exists — the per-partition checkpoint protocol that
   replaces Solr's tlog replay
   (solr/core/src/java/org/apache/solr/update/UpdateLog.java:912-947).
 - ``finalize_index``: the commit. Global exact term stats (term, df, ttf)
@@ -22,20 +22,23 @@ Mirrors the Lucene/Solr indexing lifecycle (SURVEY.md §3.2) Spark-first:
   plus corpus_stats.json (N, sumdl, avgdl, the ``segments`` map of
   committed generations and the names of the term_stats part files),
   replaced atomically. Searchers and merges read only the segments and
-  term_stats files corpus_stats.json names.
+  term_stats files corpus_stats.json names. A commit refuses a segment
+  built with another analyzer: its terms would not match the queries.
 - ``merge_index``: merge of generations within each partition
   (= TieredMergePolicy's role, index/TieredMergePolicyFactory.java:27):
   re-rank the union of docids, decode every generation's postings back to
-  per-token streams, re-encode. Runs as one Spark job of one stage
-  (``per_partition``, which the physical queries' Spark executor also
-  uses).
+  per-token streams, re-encode, keeping the source commit's analyzer.
+  Runs as one Spark job of one stage (``per_partition``, Range ->
+  MapInArrow, which the physical queries' Spark executor also uses).
 
 Build and merge share one postings encoder (``codec.encode_postings``), as
 Lucene's flush and merge share one codec consumer: the build's analysis
 loop and the merge's decode both yield flat per-token (term, ord, norm,
 position[, payload]) streams, and the encoder turns every term of the
 segment into one Arrow table in one vectorized pass. ``_write_segment``
-writes that table and the doc table as they are, after a ``gen`` column.
+writes that table and the doc table exactly as they are: the ``gen=<G>``
+directory names the generation, as ``p=<P>`` names the partition. Arrow is
+the only data representation from the Spark boundary to the files.
 
 Layout (every column is read by a scorer, the merge or finalize_index):
     index_dir/
@@ -44,9 +47,9 @@ Layout (every column is read by a scorer, the merge or finalize_index):
                                      term_stats [part file, ...] (the commit)
       term_stats.parquet/            (term, df, ttf)
       seg/p=<P>/gen=<G>/
-        postings.parquet             gen + codec.POSTINGS_SCHEMA, one row
-                                     per term, sorted by term
-        docs.parquet                 gen + codec.DOCS_SCHEMA
+        postings.parquet             codec.POSTINGS_SCHEMA, one row per
+                                     term, sorted by term
+        docs.parquet                 codec.DOCS_SCHEMA
         manifest.json
 
 Scale notes: P is chosen so one partition's docs fit an executor (at 10^12
@@ -65,14 +68,13 @@ import os
 import re
 import time
 import uuid
-from functools import partial
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from solr_spark.analysis.chain import ANALYZERS_POS
 from solr_spark.index.codec import (
@@ -83,40 +85,39 @@ from solr_spark.index.codec import (
 )
 from solr_spark.index.norms import norm_byte_array
 
-MANIFEST_SCHEMA = (
-    "p int, gen int, n_docs long, n_terms long, n_postings long, "
-    "sum_dl long, docid_checksum long, skipped boolean, wall_s double, bytes long"
-)
+MANIFEST_SCHEMA = pa.schema([
+    ("p", pa.int32()), ("gen", pa.int32()), ("n_docs", pa.int64()),
+    ("n_terms", pa.int64()), ("n_postings", pa.int64()), ("sum_dl", pa.int64()),
+    ("docid_checksum", pa.int64()), ("skipped", pa.bool_()),
+    ("wall_s", pa.float64()), ("bytes", pa.int64()),
+])
 
 _WS_RE = re.compile(r"\s+")
 _PART_RE = re.compile(r"p=(\d+)")
 _GEN_RE = re.compile(r"gen=(\d+)")
 
 
-def _payload_tokens(
-    s: str, delim: str, default: float
-) -> list[tuple[str, int, float]]:
+def _payload_tokens(s: str) -> list[tuple[str, int, float]]:
     """The ``delimited_payload`` analysis chain: whitespace tokens carrying
     ``term|payload`` (Lucene WhitespaceTokenizer + DelimitedPayloadTokenFilter,
     the reference's ``*_dpf`` field type in
     solr/server/solr/configsets/_default/conf/managed-schema.xml), terms
-    lowercased for parity with query/payload.py's logical ingestion.
-    Positions are raw whitespace-token indexes — identical to posexplode
-    over split(text, r"\\s+") on the logical path."""
+    lowercased for parity with query/payload.py's logical ingestion; a
+    token without a parseable payload gets 1.0. Positions are raw
+    whitespace-token indexes — identical to posexplode over
+    split(text, r"\\s+") on the logical path."""
     out = []
     for i, tok in enumerate(_WS_RE.split(s)):
         if not tok:
             continue
-        parts = tok.split(delim)
+        parts = tok.split("|")
         term = parts[0].lower()
         if not term:
             continue
-        pay = default
-        if len(parts) > 1:
-            try:
-                pay = float(parts[1])
-            except ValueError:
-                pay = default
+        try:
+            pay = float(parts[1]) if len(parts) > 1 else 1.0
+        except ValueError:
+            pay = 1.0
         out.append((term, i, pay))
     return out
 
@@ -150,9 +151,11 @@ def _written_segments(index_dir: str) -> dict[int, list[int]]:
     return out
 
 
-def per_partition(spark: SparkSession, ps: list[int], fn, schema: str) -> DataFrame:
-    """``fn(p)`` (a pandas frame of ``schema``) for every segment partition
-    ``p`` in ``ps``, as ONE stage: Range -> MapInPandas with
+def per_partition(
+    spark: SparkSession, ps: list[int], fn, schema: pa.Schema
+) -> DataFrame:
+    """``fn(p)`` (an Arrow table of ``schema``) for every segment partition
+    ``p`` in ``ps``, as ONE stage: Range -> MapInArrow with
     min(len(ps), defaultParallelism) tasks, each looping over its slice of
     ``ps``. Never one task per partition: every wave of Python tasks pays a
     fixed cost (~150 ms on a 4-core host), and P is often many times the
@@ -160,8 +163,6 @@ def per_partition(spark: SparkSession, ps: list[int], fn, schema: str) -> DataFr
     n_tasks = max(1, min(len(ps), spark.sparkContext.defaultParallelism))
 
     def run(batches):
-        import pyarrow as pa
-
         # Once per task: Spark supplies the parallelism, and pyarrow's own
         # thread pool (all machine cores, per worker process) would
         # oversubscribe the host n_tasks x n_cores-fold. It is process-global,
@@ -169,17 +170,17 @@ def per_partition(spark: SparkSession, ps: list[int], fn, schema: str) -> DataFr
         # driver (query.wand's driver executor).
         pa.set_cpu_count(1)
         for batch in batches:
-            for i in batch["id"]:
-                yield fn(ps[int(i)])
+            for i in batch["id"].to_numpy():
+                yield from fn(ps[i]).to_batches()
 
-    return spark.range(len(ps), numPartitions=n_tasks).mapInPandas(run, schema)
+    return spark.range(len(ps), numPartitions=n_tasks).mapInArrow(
+        run, from_arrow_schema(schema)
+    )
 
 
 def _invert_partition(
-    docids: np.ndarray, texts: pd.Series, analyzer: str,
+    docids: np.ndarray, texts: list[str | None], analyzer: str,
     store_payloads: bool = False,
-    payload_delimiter: str = "|",
-    default_payload: float = 1.0,
 ) -> tuple[pa.Table, pa.Table]:
     """Analyze + invert one partition. Returns (docs, postings): the
     DOCS_SCHEMA table sorted by docid (ord = rank), and encode_postings'
@@ -192,11 +193,8 @@ def _invert_partition(
     """
     order = np.argsort(docids, kind="stable")
     docids = docids[order]
-    texts = texts.iloc[order]
-    analyze = (
-        partial(_payload_tokens, delim=payload_delimiter, default=default_payload)
-        if store_payloads else ANALYZERS_POS[analyzer]
-    )
+    texts = [texts[i] for i in order]
+    analyze = _payload_tokens if store_payloads else ANALYZERS_POS[analyzer]
     # One analysis loop for every chain: each chain yields (term, position
     # [, payload]) tuples, appended column-wise to flat per-token streams in
     # (ord, token) order; a doc's dl is its token count.
@@ -236,11 +234,12 @@ def _read_manifest(seg_dir: str) -> dict:
 
 def _write_segment(
     index_dir: str, p: int, gen: int, docs: pa.Table, postings: pa.Table,
-    docid_checksum: int, wall_s: float, store_payloads: bool = False,
+    docid_checksum: int, wall_s: float, analyzer: str,
+    store_payloads: bool = False,
 ) -> dict:
     """Atomically commit one segment directory (tmp write + rename): the
-    DOCS_SCHEMA and POSTINGS_SCHEMA tables, each written as is after an
-    int32 ``gen`` column."""
+    DOCS_SCHEMA and POSTINGS_SCHEMA tables, each written as is, and the
+    manifest, which records the ``analyzer`` the terms came from."""
     import pyarrow.parquet as pq
 
     # Executor-side: one pyarrow thread per task (Spark supplies the
@@ -250,14 +249,11 @@ def _write_segment(
     tmp = final + ".tmp-" + uuid.uuid4().hex[:8]
     os.makedirs(tmp, exist_ok=True)
 
-    def with_gen(t: pa.Table) -> pa.Table:
-        return t.add_column(0, "gen", pa.array(np.full(t.num_rows, gen, np.int32)))
-
-    pq.write_table(with_gen(postings), os.path.join(tmp, "postings.parquet"))
+    pq.write_table(postings, os.path.join(tmp, "postings.parquet"))
     # Small row groups on the doc table: queries read it only to map top-k
     # ords -> docids with a row-group-pruned filtered read, so row-group
     # granularity IS the read granularity.
-    pq.write_table(with_gen(docs), os.path.join(tmp, "docs.parquet"),
+    pq.write_table(docs, os.path.join(tmp, "docs.parquet"),
                    row_group_size=16384)
 
     def total(col: pa.ChunkedArray) -> int:
@@ -271,6 +267,7 @@ def _write_segment(
         "n_postings": total(postings["df"]),
         "sum_dl": total(docs["dl"]),
         "docid_checksum": int(docid_checksum),
+        "analyzer": analyzer,
         "payloads": bool(store_payloads),
         "bytes": total(pc.binary_length(postings["gaps"]))
         + total(pc.binary_length(postings["tfs"])),
@@ -305,17 +302,8 @@ def _write_segment(
     return manifest
 
 
-def _manifest_row(m: dict, skipped: bool) -> pd.DataFrame:
-    return pd.DataFrame(
-        [
-            {
-                "p": m["p"], "gen": m["gen"], "n_docs": m["n_docs"],
-                "n_terms": m["n_terms"], "n_postings": m["n_postings"],
-                "sum_dl": m["sum_dl"], "docid_checksum": m["docid_checksum"],
-                "skipped": skipped, "wall_s": m["wall_s"], "bytes": m["bytes"],
-            }
-        ]
-    )
+def _manifest_row(m: dict, skipped: bool) -> pa.Table:
+    return pa.Table.from_pylist([m | {"skipped": skipped}], MANIFEST_SCHEMA)
 
 
 def partition_col(id_col: str = "docid", n_partitions: int = 32):
@@ -324,10 +312,10 @@ def partition_col(id_col: str = "docid", n_partitions: int = 32):
 
 
 def _build_one(index_dir: str, generation: int, analyzer: str,
-               p: int, pdf: pd.DataFrame,
-               store_payloads: bool = False) -> pd.DataFrame:
+               p: int, group: pa.Table,
+               store_payloads: bool = False) -> pa.Table:
     final = _seg_dir(index_dir, p, generation)
-    docids = pdf["docid"].to_numpy(dtype=np.int64)
+    docids = group["docid"].to_numpy()
     checksum = _docid_checksum(docids)
     if os.path.exists(os.path.join(final, "manifest.json")):
         m = _read_manifest(final)
@@ -344,11 +332,11 @@ def _build_one(index_dir: str, generation: int, analyzer: str,
         return _manifest_row(m, skipped=True)
     t0 = time.time()
     docs, postings = _invert_partition(
-        docids, pdf["text"], analyzer, store_payloads=store_payloads,
+        docids, group["text"].to_pylist(), analyzer, store_payloads=store_payloads,
     )
     m = _write_segment(
         index_dir, p, generation, docs, postings, checksum, time.time() - t0,
-        store_payloads,
+        analyzer, store_payloads,
     )
     return _manifest_row(m, skipped=False)
 
@@ -362,7 +350,7 @@ def build_segments(
     id_col: str = "docid",
     text_col: str = "content",
     store_payloads: bool = False,
-) -> pd.DataFrame:
+):
     """Build one generation of segments from ``corpus`` (docid must be int64).
 
     Every segment stores term positions (Lucene's text-field default,
@@ -371,10 +359,11 @@ def build_segments(
     stream via the ``delimited_payload`` chain (whitespace ``term|payload``
     tokens — the ``analyzer`` argument is ignored), Lucene's .pay-file role.
 
-    Returns the manifest table (one row per partition; ``skipped=True`` rows
-    were already committed by a previous run — the resume path).
+    Returns the manifest table as a pandas frame (one row per partition;
+    ``skipped=True`` rows were already committed by a previous run — the
+    resume path).
 
-    One Spark shape: ``groupBy(partition_col).applyInPandas``, one segment
+    One Spark shape: ``groupBy(partition_col).applyInArrow``, one segment
     per group. Input already laid out by the partition expression (e.g.
     ``corpus.repartition(n, partition_col("docid", n))``, persisted) builds
     with no shuffle: Spark sees the required distribution is met and plans
@@ -384,12 +373,15 @@ def build_segments(
         F.col(id_col).cast("long").alias("docid"), F.col(text_col).alias("text")
     ).withColumn("p", partition_col("docid", n_partitions))
 
-    def writer(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def writer(key, group):
         return _build_one(
-            index_dir, generation, analyzer, int(key[0]), pdf, store_payloads,
+            index_dir, generation, analyzer, key[0].as_py(), group, store_payloads,
         )
 
-    return df.groupBy("p").applyInPandas(writer, MANIFEST_SCHEMA).toPandas()
+    return (
+        df.groupBy("p").applyInArrow(writer, from_arrow_schema(MANIFEST_SCHEMA))
+        .toPandas()
+    )
 
 
 def finalize_index(
@@ -405,9 +397,18 @@ def finalize_index(
     searchers and merges read, its ``term_stats`` list names the part files
     of term_stats.parquet that hold their df, and it is replaced atomically
     (tmp write + rename). An index with no segment gets an empty
-    term_stats and ``n_docs`` 0."""
+    term_stats and ``n_docs`` 0. A segment built with an analyzer other than
+    ``analyzer`` raises before anything is written: queries analyzed one
+    way would silently miss the terms it holds."""
     segs = _written_segments(index_dir)
     seg_dirs = [_seg_dir(index_dir, p, g) for p, gens in segs.items() for g in gens]
+    manifests = [_read_manifest(d) for d in seg_dirs]
+    for d, m in zip(seg_dirs, manifests, strict=True):
+        if m.get("analyzer") != analyzer:
+            raise ValueError(
+                f"segment {d} was built with analyzer {m.get('analyzer')!r}, "
+                f"not {analyzer!r}: rebuild it, or commit with its analyzer"
+            )
     if seg_dirs:
         term_stats = (
             spark.read.parquet(*[f"{d}/postings.parquet" for d in seg_dirs])
@@ -418,7 +419,6 @@ def finalize_index(
         term_stats = spark.createDataFrame([], "term string, df long, ttf long")
     ts_dir = f"{index_dir}/term_stats.parquet"
     term_stats.write.mode("overwrite").parquet(ts_dir)
-    manifests = [_read_manifest(d) for d in seg_dirs]
     n_docs = sum(m["n_docs"] for m in manifests)
     sum_dl = sum(m["sum_dl"] for m in manifests)
     stats = {
@@ -479,10 +479,18 @@ def build_index_dir(
 # ---------------------------------------------------------------------------
 
 
-def merge_index(
-    spark: SparkSession, index_dir: str, out_dir: str, analyzer: str | None = None
-) -> dict:
-    """Merge all generations of every partition into gen=0 under ``out_dir``.
+def _blob(col: pa.ChunkedArray) -> np.ndarray:
+    """A binary column's values end to end, as one uint8 slice of its value
+    buffer, zero-copy for a one-chunk column (the blob columns are never
+    null)."""
+    a = col.combine_chunks()
+    lo, hi = np.frombuffer(a.buffers()[1], np.int32, len(a) + 1, a.offset * 4)[[0, -1]]
+    return np.frombuffer(a.buffers()[2], np.uint8)[lo:hi]
+
+
+def merge_index(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
+    """Merge all generations of every partition into gen=0 under ``out_dir``,
+    under the source commit's analyzer.
 
     Per partition, inside ``per_partition``'s one stage: re-rank the docid
     union of the generations the last commit names; decode every
@@ -492,10 +500,10 @@ def merge_index(
     per shard.
     """
     stats = read_corpus_stats(index_dir)
-    analyzer = analyzer or stats["analyzer"]
+    analyzer = stats["analyzer"]
     segs = stats["segments"]
 
-    def merge_one(p: int) -> pd.DataFrame:
+    def merge_one(p: int) -> pa.Table:
         import pyarrow.parquet as pq
 
         final = _seg_dir(out_dir, p, 0)
@@ -532,17 +540,15 @@ def merge_index(
             # Each term's gap list restarts at an absolute ord, as each
             # posting's position list restarts at an absolute position, so
             # decode_positions decodes the whole column in one pass.
-            o = decode_positions(b"".join(t["gaps"].to_pylist()), df)[0]
-            tf = vb_decode(b"".join(t["tfs"].to_pylist())).astype(np.int64)
+            o = decode_positions(_blob(t["gaps"]), df)[0]
+            tf = vb_decode(_blob(t["tfs"])).astype(np.int64)
             terms.append(t["term"].to_numpy())
             dfs.append(df)
             ords.append(remap[o])
             tfs.append(tf)
-            poss.append(decode_positions(b"".join(t["poss"].to_pylist()), tf)[0])
+            poss.append(decode_positions(_blob(t["poss"]), tf)[0])
             if payloads:
-                pays.append(np.frombuffer(
-                    b"".join(t["pays"].to_pylist()), dtype=np.float32
-                ))
+                pays.append(_blob(t["pays"]).view(np.float32))
         uniq, term_code = np.unique(np.concatenate(terms), return_inverse=True)
         tf = np.concatenate(tfs)
         merged = merged.take(doc_order)
@@ -561,7 +567,7 @@ def merge_index(
         m = _write_segment(
             out_dir, p, 0, merged, postings,
             _docid_checksum(merged["docid"].to_numpy()), time.time() - t0,
-            store_payloads=payloads,
+            analyzer, store_payloads=payloads,
         )
         return _manifest_row(m, skipped=False)
 

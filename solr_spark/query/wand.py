@@ -10,9 +10,11 @@ launches no job either.
 
 Every physical query (term ``topk``, boolean ``search``, ``phrase_topk``,
 ``payload_topk``) runs one per-partition function for each segment
-partition p: read p's committed postings.parquet files with pyarrow (column
-pruning + the query's term filter), in (gen, file row) order, and score
-them. Each postings.parquet is written as one row group (pyarrow's default
+partition p: for each of p's committed segments, generation by generation,
+read its postings.parquet with pyarrow (column pruning + the query's term
+filter) as a list of rows, and score them. Arrow is the only table from
+the file to the Spark boundary: no pandas frame is built. Each
+postings.parquet is written as one row group (pyarrow's default
 size, 1Mi rows), so the term filter prunes no row group: every query reads
 the requested columns of all term rows of the partition's committed
 segments and filters them in memory.
@@ -24,7 +26,7 @@ run that same function (``PhysicalIndex._topk``):
   launches NO Spark job -- as Solr serves a shard's query in-process
   (SolrIndexSearcher), and as Spark's ConvertToLocalRelation runs small
   plans on the driver.
-- Spark executor: ONE job of ONE stage, Range -> MapInPandas ->
+- Spark executor: ONE job of ONE stage, Range -> MapInArrow ->
   TakeOrderedAndProject. The Range holds one row per partition and is split
   into min(P, defaultParallelism) tasks (segments.per_partition); the merge
   is Spark's built-in two-phase top-k, the analogue of Solr's
@@ -39,13 +41,14 @@ LocalRelations too. A fuzzy clause still launches its ``fuzzy_candidates``
 probe job over term_stats.
 
 Per partition, the BM25 query kinds share one per-segment top-k path
-(``_segment_topk``): each generation's postings rows go to the kind's own
+(``_segment_topk``): each segment's postings rows go to the kind's own
 scorer, which returns (ordinals, scores); the path keeps every doc tied
 with the k-th best score and maps the survivors' ordinals to docids. The
 scorers are ``_term_scores`` (block-max WAND), ``_tree_scores`` (grouped
 boolean ordinal-set algebra) and ``_phrase_scores`` (positions).
 ``_payload_partition`` keeps one threshold across generations, so it runs
-its own partition loop and shares only the executors and the result frame.
+its own partition loop and shares only the executors and the result
+builder (``_result``).
 
 The term scorer is the batch adaptation of block-max WAND (reference
 touch-points: Solr enables Lucene's WAND via minExactCount —
@@ -79,7 +82,8 @@ byte travels INSIDE the posting list (1 byte per posting, like Lucene's
 impact data), so scoring touches ONLY the query terms' postings rows —
 never the doc table. The doc table is read once per partition at the very
 end, with an ord-IN filtered, row-group-pruned parquet read, purely to map
-the winning top-k ordinals back to docids. Per-query IO is therefore the
+the winning top-k ordinals back to docids (a searchsorted over the sorted
+``ord`` column). Per-query IO is therefore the
 requested postings columns of every committed segment (each postings file
 is one row group) plus the docs row groups holding the top-k ords; decode
 and scoring touch only the query terms' postings.
@@ -95,7 +99,7 @@ import os
 from functools import cached_property, partial
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -109,17 +113,17 @@ from solr_spark.index.norms import DECODE_TABLE
 from solr_spark.index.segments import _seg_dir, per_partition, read_corpus_stats
 from solr_spark.query.bm25 import fold_term_weights, idf
 
-_RESULT_SCHEMA = "docid long, score double"
+_RESULT_SCHEMA = pa.schema([("docid", pa.int64()), ("score", pa.float64())])
 # Postings columns each query kind reads (parquet column pruning: only
 # phrase queries read the positions, only payload queries the payloads).
 _SCORE_COLS = [
-    "gen", "term", "df", "gaps", "tfs", "norms",
+    "term", "df", "gaps", "tfs", "norms",
     "block_first_ord", "block_gap_off", "block_tf_off",
     "block_max_tf", "block_min_norm",
 ]
-_PHRASE_COLS = ["gen", "term", "gaps", "tfs", "norms", "poss"]
+_PHRASE_COLS = ["term", "gaps", "tfs", "norms", "poss"]
 _PAYLOAD_COLS = [
-    "gen", "term", "df", "gaps", "tfs",
+    "term", "df", "gaps", "tfs",
     "block_first_ord", "block_gap_off", "block_tf_off",
     "block_max_tf", "pays", "block_pay_off", "block_max_pay",
 ]
@@ -144,35 +148,26 @@ def _decode_all(r) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return o, t, norms
 
 
-def _lookup_docids(
-    index_dir: str, p: int, gen: int, ords: np.ndarray
-) -> np.ndarray:
+def _lookup_docids(seg_dir: str, ords: np.ndarray) -> np.ndarray:
     """Map segment-local ordinals to docids via a filtered parquet read
-    (row-group pruned; the doc table is written with small row groups)."""
+    (row-group pruned; the doc table is written with small row groups, in
+    ``ord`` order, so the read rows are sorted by ord)."""
     import pyarrow.parquet as pq
 
     tbl = pq.read_table(
-        f"{_seg_dir(index_dir, p, gen)}/docs.parquet",
+        f"{seg_dir}/docs.parquet",
         columns=["ord", "docid"],
-        filters=[("ord", "in", [int(o) for o in ords])],
+        filters=[("ord", "in", ords.tolist())],
         use_threads=False,
     )
-    m = dict(zip(tbl["ord"].to_pylist(), tbl["docid"].to_pylist()))
-    return np.array([m[int(o)] for o in ords], dtype=np.int64)
+    return tbl["docid"].to_numpy()[np.searchsorted(tbl["ord"].to_numpy(), ords)]
 
 
 def _read_postings(
-    index_dir: str,
-    p: int,
-    gens: list[int],
-    columns: list[str],
-    terms: list[str],
-    prefixes: list[str],
-) -> pd.DataFrame:
-    """Partition ``p``'s postings rows whose term is in ``terms`` or starts
-    with one of ``prefixes``, read generation by generation (ascending) in
-    file row order."""
-    import pyarrow as pa
+    seg_dir: str, columns: list[str], terms: list[str], prefixes: list[str]
+) -> list[dict]:
+    """One segment's postings rows whose term is in ``terms`` or starts
+    with one of ``prefixes``, in file row order."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -180,38 +175,29 @@ def _read_postings(
     cond = term.isin(pa.array(terms, pa.string()))
     for pref in prefixes:
         cond = cond | pc.starts_with(term, pref)
-    return pa.concat_tables(
-        pq.read_table(
-            f"{_seg_dir(index_dir, p, gen)}/postings.parquet",
-            columns=columns, filters=cond, use_threads=False,
-        )
-        for gen in gens
-    ).to_pandas()
+    return pq.read_table(
+        f"{seg_dir}/postings.parquet",
+        columns=columns, filters=cond, use_threads=False,
+    ).to_pylist()
 
 
-def _result_frame(
-    docids: list[np.ndarray], scores: list[np.ndarray]
-) -> pd.DataFrame:
-    """One partition's (docid, score) output, typed even when it is empty."""
-    if not docids:
-        return pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                             "score": pd.Series(dtype="float64")})
-    return pd.DataFrame(
-        {"docid": np.concatenate(docids), "score": np.concatenate(scores)}
+def _result(docids: np.ndarray, scores: np.ndarray) -> pa.Table:
+    """(docid, score) rows as the result table: a partition's output, the
+    driver executor's cut and the LocalRelation all take this shape."""
+    return pa.Table.from_arrays(
+        [pa.array(docids, pa.int64()), pa.array(scores, pa.float64())],
+        schema=_RESULT_SCHEMA,
     )
 
 
-def _segment_topk(
-    score_gen, k: int, postings: pd.DataFrame, index_dir: str, p: int
-) -> pd.DataFrame:
-    """The per-segment top-k path of every BM25 query kind: score each
-    generation of partition ``p`` with ``score_gen`` (its postings rows ->
-    (ordinals, scores)), keep the segment's top k, and map the kept
-    ordinals to docids."""
-    out_docids: list[np.ndarray] = []
-    out_scores: list[np.ndarray] = []
-    for gen, pg in postings.groupby("gen", sort=True):
-        ords, scores = score_gen(pg)
+def _segment_topk(score_gen, k: int, read, seg_dirs: list[str]) -> pa.Table:
+    """The per-segment top-k path of every BM25 query kind: score each of a
+    partition's segments with ``score_gen`` (its postings rows, from
+    ``read`` -> (ordinals, scores)), keep the segment's top k, and map the
+    kept ordinals to docids."""
+    out_docids, out_scores = [_NO_HITS[0]], [_NO_HITS[1]]
+    for seg_dir in seg_dirs:
+        ords, scores = score_gen(read(seg_dir))
         if scores.size > k:
             # Keep EVERY doc tied with the k-th best score (argpartition alone
             # picks an arbitrary subset of boundary ties, which could drop a
@@ -221,13 +207,13 @@ def _segment_topk(
             keep = scores >= kth
             ords, scores = ords[keep], scores[keep]
         if ords.size:
-            out_docids.append(_lookup_docids(index_dir, p, int(gen), ords))
+            out_docids.append(_lookup_docids(seg_dir, ords))
             out_scores.append(scores)
-    return _result_frame(out_docids, out_scores)
+    return _result(np.concatenate(out_docids), np.concatenate(out_scores))
 
 
 def _term_scores(
-    pg: pd.DataFrame,
+    pg: list[dict],
     weights: dict[str, float],
     k: int,
     k1: float,
@@ -238,7 +224,7 @@ def _term_scores(
     """Block-max WAND over one generation's postings rows of the query
     terms (steps 1-4 of the module docstring)."""
     rows = []
-    for _, r in pg.iterrows():
+    for r in pg:
         w = weights[r["term"]]
         bmax_tf = np.asarray(r["block_max_tf"], dtype=np.float64)
         bmin_dl = DECODE_TABLE[np.asarray(r["block_min_norm"], dtype=np.int64)]
@@ -335,7 +321,7 @@ def _phrase_count(
 
 
 def _phrase_scores(
-    pg: pd.DataFrame,
+    pg: list[dict],
     terms: list[str],
     offsets: list[int],
     slop: int,
@@ -349,7 +335,7 @@ def _phrase_scores(
     get the conjunction candidates, then a per-candidate position check.
     Work is O(postings of the phrase terms)."""
     uniq = sorted(set(terms))
-    by_term = {r["term"]: r for _, r in pg.iterrows()}
+    by_term = {r["term"]: r for r in pg}
     if any(t not in by_term for t in uniq):
         return _NO_HITS  # a phrase term absent from this segment: no match here
     dec: dict[str, tuple] = {}
@@ -494,11 +480,11 @@ def _eval_node(
 
 
 def _tree_scores(
-    pg: pd.DataFrame, root: dict, k1: float, b: float, avgdl: float
+    pg: list[dict], root: dict, k1: float, b: float, avgdl: float
 ) -> tuple[np.ndarray, np.ndarray]:
     """Grouped boolean scoring of one generation: decode every scanned term
     once, evaluate the tree with ordinal-set algebra."""
-    decoded = {r["term"]: _decode_all(r) for _, r in pg.iterrows()}
+    decoded = {r["term"]: _decode_all(r) for r in pg}
     size = max((int(o[-1]) + 1 for o, _, _ in decoded.values() if o.size),
                default=0)
     if size == 0:
@@ -511,12 +497,11 @@ def _tree_scores(
 _PAYLOAD_BOUNDED = {"max", "sum", "average", "first"}
 
 
-def _payload_partition(
-    func: str, k: int, pdf: pd.DataFrame, index_dir: str, p: int
-) -> pd.DataFrame:
-    """Top-k (docid, score) for ONE term's payload postings in one segment
-    partition, score = ``func`` over the payloads at the term's positions
-    (PayloadScoreQParserPlugin.java, includeSpanScore=false).
+def _payload_partition(func: str, k: int, read, seg_dirs: list[str]) -> pa.Table:
+    """Top-k (docid, score) for ONE term's payload postings (``read`` from
+    each of ``seg_dirs``) in one segment partition, score = ``func`` over
+    the payloads at the term's positions (PayloadScoreQParserPlugin.java,
+    includeSpanScore=false).
 
     Block-max pruning on the payload stream (no Lucene analogue — payload
     queries there always decode every matching doc): each block's stored
@@ -527,7 +512,7 @@ def _payload_partition(
     blocks.
     """
     cands_ord: list[np.ndarray] = []
-    cands_gen: list[np.ndarray] = []
+    cands_seg: list[np.ndarray] = []
     cands_score: list[np.ndarray] = []
     kth = -np.inf  # k-th best score seen so far (score-only threshold)
     n_kept = 0
@@ -540,12 +525,12 @@ def _payload_partition(
             return -np.inf
         return float(np.partition(allsc, allsc.size - k)[allsc.size - k])
 
-    for _, r in pdf.iterrows():  # one row per generation holding this term
+    rows = [(i, r) for i, seg_dir in enumerate(seg_dirs) for r in read(seg_dir)]
+    for seg_i, r in rows:  # one row per segment holding this term
         if len(r["pays"] or b"") == 0:
             raise ValueError(
                 "payload query on an index built without store_payloads"
             )
-        gen = int(r["gen"])
         pays = np.frombuffer(r["pays"], dtype=np.float32)
         bmp = np.asarray(r["block_max_pay"], dtype=np.float64)
         n_blocks = bmp.size
@@ -582,7 +567,7 @@ def _payload_partition(
             else:  # first
                 sc = seg[offs].astype(np.float64)
             cands_ord.append(ords_b)
-            cands_gen.append(np.full(ords_b.size, gen, dtype=np.int64))
+            cands_seg.append(np.full(ords_b.size, seg_i, dtype=np.int64))
             cands_score.append(sc)
             n_kept += ords_b.size
             if n_kept >= k:
@@ -592,24 +577,24 @@ def _payload_partition(
                 if len(cands_score) > 8:
                     keep = [s >= kth for s in cands_score]
                     cands_ord = [o[m] for o, m in zip(cands_ord, keep, strict=True)]
-                    cands_gen = [g[m] for g, m in zip(cands_gen, keep, strict=True)]
+                    cands_seg = [g[m] for g, m in zip(cands_seg, keep, strict=True)]
                     cands_score = [
                         s[m] for s, m in zip(cands_score, keep, strict=True)
                     ]
 
     if not cands_score:
-        return _result_frame([], [])
+        return _result(*_NO_HITS)
     ords = np.concatenate(cands_ord)
-    gens = np.concatenate(cands_gen)
+    segs = np.concatenate(cands_seg)
     scores = np.concatenate(cands_score)
     mask = scores >= (kth if n_kept >= k else -np.inf)
-    ords, gens, scores = ords[mask], gens[mask], scores[mask]
+    ords, segs, scores = ords[mask], segs[mask], scores[mask]
     docids = np.empty(ords.size, dtype=np.int64)
-    for g in np.unique(gens):
-        gm = gens == g
-        docids[gm] = _lookup_docids(index_dir, p, int(g), ords[gm])
+    for g in np.unique(segs):
+        gm = segs == g
+        docids[gm] = _lookup_docids(seg_dirs[g], ords[gm])
     order = np.lexsort((docids, -scores))[:k]
-    return _result_frame([docids[order]], [scores[order]])
+    return _result(docids[order], scores[order])
 
 
 class PhysicalIndex:
@@ -705,7 +690,7 @@ class PhysicalIndex:
         if not weights or n == 0:
             return self._empty()
 
-        def score_gen(pg: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+        def score_gen(pg: list[dict]) -> tuple[np.ndarray, np.ndarray]:
             return _term_scores(pg, weights, k, k1, b, avgdl, use_wand)
 
         return self._topk(
@@ -860,7 +845,7 @@ class PhysicalIndex:
         if not scan_terms and not scan_prefixes:
             return self._empty()
 
-        def score_gen(pg: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+        def score_gen(pg: list[dict]) -> tuple[np.ndarray, np.ndarray]:
             return _tree_scores(pg, root, k1, b, avgdl)
 
         return self._topk(
@@ -891,7 +876,7 @@ class PhysicalIndex:
             return self._empty()
         w = sum(idf(n, dfs[t]) for t in terms)
 
-        def score_gen(pg: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+        def score_gen(pg: list[dict]) -> tuple[np.ndarray, np.ndarray]:
             return _phrase_scores(pg, terms, offsets, slop, w, k1, b, avgdl)
 
         return self._topk(
@@ -931,12 +916,9 @@ class PhysicalIndex:
         """A result the driver already holds, as a LocalRelation: collecting
         it launches no Spark job. A pyarrow Table, not a pandas frame: an
         empty pandas frame takes the RDD path (one job), and the pandas path
-        depends on the session's Arrow conf."""
-        import pyarrow as pa
-
-        tbl = pa.table({"docid": pa.array(docids, pa.int64()),
-                        "score": pa.array(scores, pa.float64())})
-        return self.spark.createDataFrame(tbl, _RESULT_SCHEMA)
+        depends on the session's Arrow conf. Spark takes the schema from
+        the table's own."""
+        return self.spark.createDataFrame(_result(docids, scores))
 
     def _on_driver(self, terms: list[str], prefixes: list[str]) -> bool:
         """The executor choice, from what the searcher already holds: the
@@ -959,21 +941,24 @@ class PhysicalIndex:
         k: int,
         partition,
     ) -> DataFrame:
-        """Every physical query's execution: per snapshot partition p, read
-        p's postings ``columns`` for ``terms``/``prefixes`` and run
-        ``partition(pdf, index_dir, p)``; then keep the top k by
+        """Every physical query's execution: per snapshot partition p, run
+        ``partition(read, seg_dirs)`` over p's committed segment dirs, where
+        ``read(seg_dir)`` gives a segment's postings ``columns`` rows for
+        ``terms``/``prefixes``; then keep the top k by
         (score desc, docid asc). Small queries (``_on_driver``) run the
         partitions in a driver loop and return a LocalRelation, no Spark
         job; the rest run as one job of one stage (``per_partition``, then
         TakeOrderedAndProject)."""
         index_dir, segments = self.index_dir, self.segments
+        read = partial(
+            _read_postings, columns=columns, terms=terms, prefixes=prefixes
+        )
 
-        def score(p: int) -> pd.DataFrame:
-            pdf = _read_postings(index_dir, p, segments[p], columns, terms, prefixes)
-            return partition(pdf, index_dir, p)
+        def score(p: int) -> pa.Table:
+            return partition(read, [_seg_dir(index_dir, p, g) for g in segments[p]])
 
         if self._on_driver(terms, prefixes):
-            out = pd.concat([score(p) for p in sorted(segments)])
+            out = pa.concat_tables(score(p) for p in sorted(segments))
             docids, scores = out["docid"].to_numpy(), out["score"].to_numpy()
             order = np.lexsort((docids, -scores))[:k]
             return self._local_result(docids[order], scores[order])

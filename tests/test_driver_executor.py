@@ -225,3 +225,28 @@ def test_driver_query_leaves_arrow_cpu_count(spark, code_dir):
         assert pa.cpu_count() == 3
     finally:
         pa.set_cpu_count(before)
+
+
+def test_driver_executor_builds_no_pandas_frame(spark, code_dir, pay_dir,
+                                                monkeypatch):
+    """From the call to collect(), a driver-executed query of every kind,
+    and an empty one, stays in Arrow: no pandas DataFrame is built,
+    concatenated or iterated row by row."""
+    calls = []
+
+    def counted(name, fn):
+        def wrapper(*args, **kwargs):
+            calls.append(name)
+            return fn(*args, **kwargs)
+        return wrapper
+
+    monkeypatch.setattr(pd.DataFrame, "__init__",
+                        counted("DataFrame", pd.DataFrame.__init__))
+    monkeypatch.setattr(pd, "concat", counted("concat", pd.concat))
+    monkeypatch.setattr(pd.DataFrame, "iterrows",
+                        counted("iterrows", pd.DataFrame.iterrows))
+    code, pay = PhysicalIndex(spark, code_dir), PhysicalIndex(spark, pay_dir)
+    for kind, call in QUERY_CALLS + EMPTY_CALLS[:1]:
+        assert bool(call(code).collect()) == (kind in dict(QUERY_CALLS)), kind
+    assert len(pay.payload_topk("t0", "sum", k=5).collect()) == 5
+    assert calls == []

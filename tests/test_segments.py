@@ -518,10 +518,11 @@ def test_commit_write_failure_keeps_previous_commit(spark, tmp_path_factory,
 
 
 # The segment files' schemas, pinned: column names and Arrow types as
-# build and merge have always written them, with no pandas metadata.
+# build and merge have always written them, with no pandas metadata and no
+# per-row generation (the gen=<G> directory names it).
 _I64S = "list<int64>"
 _POSTINGS_FILE_SCHEMA = [
-    ("gen", "int32"), ("term", "string"), ("df", "int64"), ("ttf", "int64"),
+    ("term", "string"), ("df", "int64"), ("ttf", "int64"),
     ("gaps", "binary"), ("tfs", "binary"), ("norms", "binary"),
     ("block_first_ord", _I64S), ("block_gap_off", _I64S),
     ("block_tf_off", _I64S), ("block_max_tf", _I64S),
@@ -529,8 +530,7 @@ _POSTINGS_FILE_SCHEMA = [
     ("block_pay_off", _I64S), ("block_max_pay", "list<double>"),
 ]
 _DOCS_FILE_SCHEMA = [
-    ("gen", "int32"), ("ord", "int64"), ("docid", "int64"), ("dl", "int64"),
-    ("norm", "int32"),
+    ("ord", "int64"), ("docid", "int64"), ("dl", "int64"), ("norm", "int32"),
 ]
 
 
@@ -545,7 +545,6 @@ def _type_name(t) -> str:
 def _assert_declared_schemas(index_dir):
     import glob
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from solr_spark.index.codec import DOCS_SCHEMA, POSTINGS_SCHEMA
@@ -558,7 +557,7 @@ def _assert_declared_schemas(index_dir):
             if f.endswith("postings.parquet") else (DOCS_SCHEMA, _DOCS_FILE_SCHEMA)
         )
         schema = pq.read_schema(f)
-        assert schema == pa.schema([("gen", pa.int32())] + list(declared)), f
+        assert schema == declared, f
         assert [(x.name, _type_name(x.type)) for x in schema] == pinned, f
         assert schema.metadata is None, f
 
@@ -628,3 +627,45 @@ def test_partition_without_tokens(spark, tmp_path_factory):
         rows = check(d, docs)
         merge_index(spark, d, f"{d}_merged")
         assert check(f"{d}_merged", docs) == rows
+
+
+def _running_docs(spark, ids):
+    return spark.createDataFrame([(i, f"running doc{i}") for i in ids],
+                                 "doc_id long, text string")
+
+
+def test_commit_refuses_segments_of_another_analyzer(spark, tmp_path_factory):
+    """Gen 0 built with ``simple`` and gen 1 with ``text_en``, all holding
+    "running": a ``simple`` commit would find only gen 0's docs, so
+    finalize_index raises instead, before it writes anything."""
+    import os
+
+    d = str(tmp_path_factory.mktemp("mixed_analyzers") / "idx")
+    for g, analyzer in enumerate(["simple", "text_en"]):
+        build_segments(_running_docs(spark, range(10 * g, 10 * g + 10)), d, 2,
+                       analyzer, g, "doc_id", "text")
+    with pytest.raises(ValueError, match="analyzer 'text_en', not 'simple'"):
+        finalize_index(spark, d, "simple")
+    assert not os.path.exists(f"{d}/corpus_stats.json")
+    assert not os.path.exists(f"{d}/term_stats.parquet")
+
+
+def test_merge_keeps_the_source_analyzer(spark, tmp_path_factory):
+    """A merge re-encodes the source's terms, so it records the analyzer
+    they came from: it takes no analyzer of its own, and the merged index
+    answers as the source does."""
+    from solr_spark.index.segments import _read_manifest, _seg_dir
+    from solr_spark.query.wand import open_index
+
+    base = tmp_path_factory.mktemp("merge_analyzer")
+    d, out = str(base / "idx"), str(base / "merged")
+    build_index_dir(_running_docs(spark, range(20)), d, 2, "simple",
+                    id_col="doc_id", text_col="text")
+    with pytest.raises(TypeError):
+        merge_index(spark, d, out, analyzer="text_en")
+    stats = merge_index(spark, d, out)
+    assert stats["analyzer"] == "simple"
+    assert {_read_manifest(_seg_dir(out, p, 0))["analyzer"]
+            for p in stats["segments"]} == {"simple"}
+    for ix in (open_index(spark, d), open_index(spark, out)):
+        assert len(ix.topk("running", k=50).collect()) == 20
