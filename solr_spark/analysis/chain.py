@@ -13,6 +13,8 @@ The chains mirror the reference configset text types
   pure SQL (``regexp_split_to_array(lower(text), '[^a-z0-9]+')``); the engine
   is analyzer-parametric, so the same indexing/scoring code paths are
   exercised under both chains.
+- ``delimited_payload``: whitespace ``term|payload`` tokens (Lucene
+  DelimitedPayloadTokenFilter, the reference's ``*_dpf`` field type).
 
 Filter semantics (public Lucene behavior):
 - StopFilter(ignoreCase=true) drops stopwords BEFORE lowercasing in the
@@ -38,6 +40,7 @@ from solr_spark.analysis.stopwords import ENGLISH_STOP_WORDS
 from solr_spark.analysis.tokenizer import standard_tokenize
 
 _SIMPLE_SPLIT_RE = re.compile(r"[^a-z0-9]+")
+_WS_RE = re.compile(r"\s+")
 
 
 def simple_tokenize(text: str) -> list[str]:
@@ -69,10 +72,37 @@ def text_en(text: str) -> list[str]:
     return out
 
 
+def delimited_payload_tokens(text: str) -> list[tuple[str, int, float]]:
+    """(term, position, payload) triples of the ``delimited_payload`` chain:
+    whitespace tokens carrying ``term|payload``, terms lowercased for parity
+    with query/payload.py's logical ingestion; a token without a parseable
+    payload gets 1.0. Positions are raw whitespace-token indexes, identical
+    to posexplode over split(text, r"\\s+") on the logical path."""
+    out = []
+    for i, tok in enumerate(_WS_RE.split(text)):
+        if not tok:
+            continue
+        parts = tok.split("|")
+        term = parts[0].lower()
+        if not term:
+            continue
+        try:
+            pay = float(parts[1]) if len(parts) > 1 else 1.0
+        except ValueError:
+            pay = 1.0
+        out.append((term, i, pay))
+    return out
+
+
+def delimited_payload(text: str) -> list[str]:
+    return [t for t, _, _ in delimited_payload_tokens(text)]
+
+
 ANALYZERS: dict[str, Callable[[str], list[str]]] = {
     "simple": simple_tokenize,
     "text_general": text_general,
     "text_en": text_en,
+    "delimited_payload": delimited_payload,
 }
 
 
@@ -100,10 +130,15 @@ def text_en_pos(text: str) -> list[tuple[str, int]]:
     return out
 
 
+def delimited_payload_pos(text: str) -> list[tuple[str, int]]:
+    return [(t, i) for t, i, _ in delimited_payload_tokens(text)]
+
+
 ANALYZERS_POS: dict[str, Callable[[str], list[tuple[str, int]]]] = {
     "simple": simple_tokenize_pos,
     "text_general": text_general_pos,
     "text_en": text_en_pos,
+    "delimited_payload": delimited_payload_pos,
 }
 
 

@@ -1531,8 +1531,8 @@ def _phys_index_dir(spark: SparkSession, sf_dir: str) -> str:
 
     from solr_spark.index.segments import build_index_dir
 
-    # v6: segment manifests record their analyzer; segment files carry no gen
-    d = f"/tmp/solr_spark_phys_v6_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
+    # v7: one term-stats file per generation, summed by the searcher
+    d = f"/tmp/solr_spark_phys_v7_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
     if not os.path.exists(f"{d}/corpus_stats.json"):
         docs = _t(spark, sf_dir, "documents")
         build_index_dir(
@@ -7165,7 +7165,7 @@ def wand_payload_score_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from solr_spark.index.segments import build_index_dir
     from solr_spark.query.wand import open_index
 
-    d = f"/tmp/solr_spark_payphys_v6_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
+    d = f"/tmp/solr_spark_payphys_v7_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
     if not os.path.exists(f"{d}/corpus_stats.json"):
         docs = _t(spark, sf_dir, "documents")
         ptext = docs.select(
@@ -7179,8 +7179,8 @@ def wand_payload_score_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("ptext"),
         )
         build_index_dir(
-            ptext, d, n_partitions=8, id_col="docid", text_col="ptext",
-            store_payloads=True,
+            ptext, d, n_partitions=8, analyzer="delimited_payload",
+            id_col="docid", text_col="ptext",
         )
     out = open_index(spark, d).payload_topk("spark", func="sum", k=10)
     return out.select(F.col("docid").alias("doc_id"), "score")

@@ -253,18 +253,6 @@ def decode_positions(poss: bytes, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarr
     return cs - rebase, starts
 
 
-def decode_payloads(pays: bytes, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Full decode of a payloads blob (position-aligned float32). Returns
-    (flat float32, starts): posting i's payloads are
-    ``flat[starts[i] : starts[i] + tfs[i]]``. Zero-copy: the blob IS the
-    array."""
-    tfs = np.ascontiguousarray(tfs, dtype=np.int64)
-    starts = np.zeros(tfs.size, dtype=np.int64)
-    if tfs.size:
-        starts[1:] = np.cumsum(tfs)[:-1]
-    return np.frombuffer(pays, dtype=np.float32), starts
-
-
 def decode_blocks(
     enc_gaps: bytes,
     enc_tfs: bytes,

@@ -14,16 +14,16 @@ Mirrors the Lucene/Solr indexing lifecycle (SURVEY.md §3.2) Spark-first:
   whose manifest already exists — the per-partition checkpoint protocol that
   replaces Solr's tlog replay
   (solr/core/src/java/org/apache/solr/update/UpdateLog.java:912-947).
-- ``finalize_index``: the commit. Global exact term stats (term, df, ttf)
-  via one column-pruned groupBy over segment stats columns
-  (= ExactStatsCache, search/stats/ExactStatsCache.java:150-206, without
-  the two-phase HTTP dance; Spark's partial+final combine makes hot terms
-  cheap because each task emits at most one partial row per term),
-  plus corpus_stats.json (N, sumdl, avgdl, the ``segments`` map of
-  committed generations and the names of the term_stats part files),
-  replaced atomically. Searchers and merges read only the segments and
-  term_stats files corpus_stats.json names. A commit refuses a segment
-  built with another analyzer: its terms would not match the queries.
+- ``finalize_index``: the commit, on the driver with no Spark job:
+  corpus_stats.json (N, sumdl, avgdl, the ``segments`` map of committed
+  generations), replaced atomically, as Lucene's ``segments_N`` names a
+  commit's segments. The first commit that names generation G writes G's
+  (term, df, ttf) with pyarrow, and no commit rewrites it; searchers sum
+  df over their commit's generation files (as IndexSearcher sums docFreq
+  over its segments, and ExactStatsCache, search/stats/
+  ExactStatsCache.java:150-206, over shards), so every searcher is
+  point-in-time. A commit refuses a segment built with another analyzer:
+  its terms would not match the queries.
 - ``merge_index``: merge of generations within each partition
   (= TieredMergePolicy's role, index/TieredMergePolicyFactory.java:27):
   re-rank the union of docids, decode every generation's postings back to
@@ -42,10 +42,11 @@ the only data representation from the Spark boundary to the files.
 
 Layout (every column is read by a scorer, the merge or finalize_index):
     index_dir/
-      corpus_stats.json              n_docs, sum_dl, avgdl, payloads, ...,
-                                     segments {p: [gen, ...]} and
-                                     term_stats [part file, ...] (the commit)
-      term_stats.parquet/            (term, df, ttf)
+      corpus_stats.json              n_docs, sum_dl, avgdl, analyzer, ...,
+                                     generations and segments {p: [gen, ...]}
+                                     (the commit)
+      term_stats.parquet/<G>.parquet (term, df, ttf) of generation G's
+                                     segments, sorted by term
       seg/p=<P>/gen=<G>/
         postings.parquet             codec.POSTINGS_SCHEMA, one row per
                                      term, sorted by term
@@ -76,7 +77,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
-from solr_spark.analysis.chain import ANALYZERS_POS
+from solr_spark.analysis.chain import ANALYZERS_POS, delimited_payload_tokens
 from solr_spark.index.codec import (
     DOCS_SCHEMA,
     decode_positions,
@@ -92,34 +93,8 @@ MANIFEST_SCHEMA = pa.schema([
     ("wall_s", pa.float64()), ("bytes", pa.int64()),
 ])
 
-_WS_RE = re.compile(r"\s+")
 _PART_RE = re.compile(r"p=(\d+)")
 _GEN_RE = re.compile(r"gen=(\d+)")
-
-
-def _payload_tokens(s: str) -> list[tuple[str, int, float]]:
-    """The ``delimited_payload`` analysis chain: whitespace tokens carrying
-    ``term|payload`` (Lucene WhitespaceTokenizer + DelimitedPayloadTokenFilter,
-    the reference's ``*_dpf`` field type in
-    solr/server/solr/configsets/_default/conf/managed-schema.xml), terms
-    lowercased for parity with query/payload.py's logical ingestion; a
-    token without a parseable payload gets 1.0. Positions are raw
-    whitespace-token indexes — identical to posexplode over
-    split(text, r"\\s+") on the logical path."""
-    out = []
-    for i, tok in enumerate(_WS_RE.split(s)):
-        if not tok:
-            continue
-        parts = tok.split("|")
-        term = parts[0].lower()
-        if not term:
-            continue
-        try:
-            pay = float(parts[1]) if len(parts) > 1 else 1.0
-        except ValueError:
-            pay = 1.0
-        out.append((term, i, pay))
-    return out
 
 
 def _seg_dir(index_dir: str, p: int, gen: int) -> str:
@@ -180,25 +155,23 @@ def per_partition(
 
 def _invert_partition(
     docids: np.ndarray, texts: list[str | None], analyzer: str,
-    store_payloads: bool = False,
 ) -> tuple[pa.Table, pa.Table]:
     """Analyze + invert one partition. Returns (docs, postings): the
     DOCS_SCHEMA table sorted by docid (ord = rank), and encode_postings'
     table of its tokens.
 
-    ``store_payloads=True`` switches the analysis to the
-    ``delimited_payload`` chain (whitespace ``term|payload`` tokens; the
-    ``analyzer`` argument is ignored) and writes the position-aligned
-    payload stream — the Lucene .pay-file role.
+    The ``delimited_payload`` analyzer also writes each position's payload
+    (the position-aligned payload stream, the Lucene .pay-file role).
     """
     order = np.argsort(docids, kind="stable")
     docids = docids[order]
     texts = [texts[i] for i in order]
-    analyze = _payload_tokens if store_payloads else ANALYZERS_POS[analyzer]
+    payloads = analyzer == "delimited_payload"
+    analyze = delimited_payload_tokens if payloads else ANALYZERS_POS[analyzer]
     # One analysis loop for every chain: each chain yields (term, position
     # [, payload]) tuples, appended column-wise to flat per-token streams in
     # (ord, token) order; a doc's dl is its token count.
-    streams: tuple[list, ...] = ([], [], []) if store_payloads else ([], [])
+    streams: tuple[list, ...] = ([], [], []) if payloads else ([], [])
     dl = np.zeros(len(docids), dtype=np.int64)
     for ord_, s in enumerate(texts):
         toks = analyze(s) if s is not None else ()
@@ -212,7 +185,7 @@ def _invert_partition(
     postings = encode_postings(
         terms, code, np.repeat(np.arange(len(docids)), dl), np.repeat(norms, dl),
         np.asarray(streams[1], dtype=np.int64),
-        np.asarray(streams[2], dtype=np.float32) if store_payloads else None,
+        np.asarray(streams[2], dtype=np.float32) if payloads else None,
     )
     docs = pa.Table.from_arrays(
         [pa.array(np.arange(len(docids))), pa.array(docids), pa.array(dl),
@@ -235,7 +208,6 @@ def _read_manifest(seg_dir: str) -> dict:
 def _write_segment(
     index_dir: str, p: int, gen: int, docs: pa.Table, postings: pa.Table,
     docid_checksum: int, wall_s: float, analyzer: str,
-    store_payloads: bool = False,
 ) -> dict:
     """Atomically commit one segment directory (tmp write + rename): the
     DOCS_SCHEMA and POSTINGS_SCHEMA tables, each written as is, and the
@@ -268,7 +240,6 @@ def _write_segment(
         "sum_dl": total(docs["dl"]),
         "docid_checksum": int(docid_checksum),
         "analyzer": analyzer,
-        "payloads": bool(store_payloads),
         "bytes": total(pc.binary_length(postings["gaps"]))
         + total(pc.binary_length(postings["tfs"])),
         "wall_s": round(wall_s, 3),
@@ -312,8 +283,7 @@ def partition_col(id_col: str = "docid", n_partitions: int = 32):
 
 
 def _build_one(index_dir: str, generation: int, analyzer: str,
-               p: int, group: pa.Table,
-               store_payloads: bool = False) -> pa.Table:
+               p: int, group: pa.Table) -> pa.Table:
     final = _seg_dir(index_dir, p, generation)
     docids = group["docid"].to_numpy()
     checksum = _docid_checksum(docids)
@@ -331,12 +301,10 @@ def _build_one(index_dir: str, generation: int, analyzer: str,
             )
         return _manifest_row(m, skipped=True)
     t0 = time.time()
-    docs, postings = _invert_partition(
-        docids, group["text"].to_pylist(), analyzer, store_payloads=store_payloads,
-    )
+    docs, postings = _invert_partition(docids, group["text"].to_pylist(), analyzer)
     m = _write_segment(
         index_dir, p, generation, docs, postings, checksum, time.time() - t0,
-        analyzer, store_payloads,
+        analyzer,
     )
     return _manifest_row(m, skipped=False)
 
@@ -349,15 +317,13 @@ def build_segments(
     generation: int = 0,
     id_col: str = "docid",
     text_col: str = "content",
-    store_payloads: bool = False,
 ):
     """Build one generation of segments from ``corpus`` (docid must be int64).
 
     Every segment stores term positions (Lucene's text-field default,
-    DOCS_AND_FREQS_AND_POSITIONS), which phrase queries read.
-    ``store_payloads=True`` additionally writes the position-aligned payload
-    stream via the ``delimited_payload`` chain (whitespace ``term|payload``
-    tokens — the ``analyzer`` argument is ignored), Lucene's .pay-file role.
+    DOCS_AND_FREQS_AND_POSITIONS), which phrase queries read. The
+    ``delimited_payload`` analyzer (whitespace ``term|payload`` tokens) also
+    writes the position-aligned payload stream, Lucene's .pay-file role.
 
     Returns the manifest table as a pandas frame (one row per partition;
     ``skipped=True`` rows were already committed by a previous run — the
@@ -374,14 +340,25 @@ def build_segments(
     ).withColumn("p", partition_col("docid", n_partitions))
 
     def writer(key, group):
-        return _build_one(
-            index_dir, generation, analyzer, key[0].as_py(), group, store_payloads,
-        )
+        return _build_one(index_dir, generation, analyzer, key[0].as_py(), group)
 
     return (
         df.groupBy("p").applyInArrow(writer, from_arrow_schema(MANIFEST_SCHEMA))
         .toPandas()
     )
+
+
+def _gen_partitions(segs: dict[int, list[int]]) -> dict[int, list[int]]:
+    """``{gen: [p, ...]}`` ascending, from a ``{p: [gen, ...]}`` segment map."""
+    out: dict[int, list[int]] = {}
+    for p in sorted(segs):
+        for g in segs[p]:
+            out.setdefault(g, []).append(p)
+    return dict(sorted(out.items()))
+
+
+def _term_stats_file(index_dir: str, gen: int) -> str:
+    return os.path.join(index_dir, "term_stats.parquet", f"{gen}.parquet")
 
 
 def finalize_index(
@@ -391,15 +368,19 @@ def finalize_index(
     k1: float = 1.2,
     b: float = 0.75,
 ) -> dict:
-    """Commit: compute global exact stats over every segment on disk and
-    publish them. corpus_stats.json is the commit point: its ``segments``
-    map ``{p: [gen, ...]}`` names the committed segments, the only ones
-    searchers and merges read, its ``term_stats`` list names the part files
-    of term_stats.parquet that hold their df, and it is replaced atomically
-    (tmp write + rename). An index with no segment gets an empty
-    term_stats and ``n_docs`` 0. A segment built with an analyzer other than
-    ``analyzer`` raises before anything is written: queries analyzed one
-    way would silently miss the terms it holds."""
+    """Commit every segment on disk, with no Spark job (``spark`` is
+    unused). corpus_stats.json is the commit point: its ``segments`` map
+    ``{p: [gen, ...]}`` names the committed segments, the only ones
+    searchers and merges read, and it is replaced atomically (tmp write +
+    rename). A generation's term-stats file is written by the first commit
+    that names it, sorted by term, and reused by later ones. An index with
+    no segment commits ``n_docs`` 0 and names no file. Raises before
+    anything is written on a segment built with an analyzer other than
+    ``analyzer`` (queries analyzed one way would silently miss its terms)
+    or a committed generation whose partitions changed (its file would no
+    longer match it)."""
+    import pyarrow.parquet as pq
+
     segs = _written_segments(index_dir)
     seg_dirs = [_seg_dir(index_dir, p, g) for p, gens in segs.items() for g in gens]
     manifests = [_read_manifest(d) for d in seg_dirs]
@@ -409,35 +390,46 @@ def finalize_index(
                 f"segment {d} was built with analyzer {m.get('analyzer')!r}, "
                 f"not {analyzer!r}: rebuild it, or commit with its analyzer"
             )
-    if seg_dirs:
-        term_stats = (
-            spark.read.parquet(*[f"{d}/postings.parquet" for d in seg_dirs])
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
-        )
-    else:
-        term_stats = spark.createDataFrame([], "term string, df long, ttf long")
-    ts_dir = f"{index_dir}/term_stats.parquet"
-    term_stats.write.mode("overwrite").parquet(ts_dir)
+    gens = _gen_partitions(segs)
+    committed = (
+        _gen_partitions(read_corpus_stats(index_dir)["segments"])
+        if os.path.exists(f"{index_dir}/corpus_stats.json") else {}
+    )
+    for g, ps in gens.items():
+        if committed.get(g, ps) != ps:
+            raise ValueError(
+                f"generation {g} changed after it was committed (partitions "
+                f"{committed[g]}, now {ps}): build the new rows as a new "
+                "generation"
+            )
+    for g in gens.keys() - committed.keys():
+        t = pa.concat_tables(
+            pq.read_table(f"{_seg_dir(index_dir, p, g)}/postings.parquet",
+                          columns=["term", "df", "ttf"])
+            for p in gens[g]
+        ).group_by("term").aggregate([("df", "sum"), ("ttf", "sum")])
+        # Written under a "."-name, which pyarrow's directory discovery
+        # skips, then renamed into place.
+        final = _term_stats_file(index_dir, g)
+        tmp = os.path.join(os.path.dirname(final), f".{g}.tmp-{uuid.uuid4().hex[:8]}")
+        os.makedirs(os.path.dirname(final), exist_ok=True)
+        pq.write_table(pa.table(
+            {"term": t["term"], "df": t["df_sum"], "ttf": t["ttf_sum"]}
+        ).sort_by("term"), tmp)
+        os.replace(tmp, final)
     n_docs = sum(m["n_docs"] for m in manifests)
     sum_dl = sum(m["sum_dl"] for m in manifests)
     stats = {
         "n_docs": n_docs,
         "sum_dl": sum_dl,
-        "payloads": all(m.get("payloads", False) for m in manifests),
         "avgdl": (sum_dl / n_docs) if n_docs else 0.0,
         "analyzer": analyzer,
         "k1": k1,
         "b": b,
-        "generations": sorted({g for gens in segs.values() for g in gens}),
+        "generations": list(gens),
         "segments": segs,
-        # Spark names part files uniquely per write, so if this commit fails
-        # after the write above, the previous commit names files that are
-        # gone: searchers raise instead of pairing the new df with old N.
-        "term_stats": sorted(
-            f for f in os.listdir(ts_dir) if not f.startswith(("_", "."))
-        ),
     }
+    os.makedirs(index_dir, exist_ok=True)  # an empty build writes no segment
     tmp = f"{index_dir}/corpus_stats.json.tmp"
     with open(tmp, "w") as f:
         json.dump(stats, f)
@@ -463,13 +455,11 @@ def build_index_dir(
     text_col: str = "content",
     k1: float = 1.2,
     b: float = 0.75,
-    store_payloads: bool = False,
 ) -> dict:
     """build_segments + finalize_index in one call. Idempotent/resumable."""
     build_segments(
         corpus, index_dir, n_partitions, analyzer,
         generation=0, id_col=id_col, text_col=text_col,
-        store_payloads=store_payloads,
     )
     return finalize_index(corpus.sparkSession, index_dir, analyzer, k1, b)
 
@@ -502,6 +492,7 @@ def merge_index(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
     stats = read_corpus_stats(index_dir)
     analyzer = stats["analyzer"]
     segs = stats["segments"]
+    payloads = analyzer == "delimited_payload"
 
     def merge_one(p: int) -> pa.Table:
         import pyarrow.parquet as pq
@@ -511,14 +502,6 @@ def merge_index(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
             return _manifest_row(_read_manifest(final), skipped=True)
         t0 = time.time()
         gen_dirs = [_seg_dir(index_dir, p, g) for g in segs[p]]
-        flags = {_read_manifest(gd).get("payloads", False) for gd in gen_dirs}
-        if len(flags) > 1:
-            raise RuntimeError(
-                f"merge p={p}: generations mix store_payloads=True and False "
-                "— a merged stream would silently misalign; rebuild them all "
-                "with one setting"
-            )
-        payloads = flags.pop()
         cols = ["term", "df", "gaps", "tfs", "poss"] + ["pays"] * payloads
 
         docs = [
@@ -567,7 +550,7 @@ def merge_index(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
         m = _write_segment(
             out_dir, p, 0, merged, postings,
             _docid_checksum(merged["docid"].to_numpy()), time.time() - t0,
-            analyzer, store_payloads=payloads,
+            analyzer,
         )
         return _manifest_row(m, skipped=False)
 

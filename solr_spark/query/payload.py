@@ -21,7 +21,7 @@ Spark shape — everything is whole-stage-codegen JVM expressions:
   is O(postings of the query term).
 
 The PHYSICAL path serializes payloads too (the reference's .pay-file
-role): ``build_index_dir(..., store_payloads=True)`` writes a
+role): ``build_index_dir(..., analyzer="delimited_payload")`` writes a
 position-aligned float32 payload stream with per-block max-payload impact
 metadata, and ``PhysicalIndex.payload_topk`` scores top-k with block-max
 pruning over it (index/codec.py, query/wand.py:_payload_partition).

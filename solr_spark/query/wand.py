@@ -1,12 +1,12 @@
 """Top-k BM25 over the physical segment index, with block-max pruning.
 
 Opening a searcher (``PhysicalIndex``) launches no Spark work: it reads
-corpus_stats.json, whose segment map and term_stats file list name the
-last commit's segments and df files; they are the searcher's snapshot, as
-Lucene's IndexSearcher pins its segments. A segment written but not yet
-committed (finalize_index) is not read. Term df comes from a term-IN
-filtered pyarrow read of those term_stats files on the driver, so it
-launches no job either.
+corpus_stats.json, whose segments and generations are the searcher's
+snapshot, as Lucene's IndexSearcher pins its segments. A segment written
+but not yet committed (finalize_index) is not read. A term's df is summed
+over the snapshot's per-generation term_stats files, which no commit
+rewrites, by a term-IN filtered pyarrow read on the driver: no job, and
+the same answer whatever is committed after the searcher opened.
 
 Every physical query (term ``topk``, boolean ``search``, ``phrase_topk``,
 ``payload_topk``) runs one per-partition function for each segment
@@ -110,7 +110,9 @@ from solr_spark.index.codec import (
     decode_postings,
 )
 from solr_spark.index.norms import DECODE_TABLE
-from solr_spark.index.segments import _seg_dir, per_partition, read_corpus_stats
+from solr_spark.index.segments import (
+    _seg_dir, _term_stats_file, per_partition, read_corpus_stats,
+)
 from solr_spark.query.bm25 import fold_term_weights, idf
 
 _RESULT_SCHEMA = pa.schema([("docid", pa.int64()), ("score", pa.float64())])
@@ -527,10 +529,6 @@ def _payload_partition(func: str, k: int, read, seg_dirs: list[str]) -> pa.Table
 
     rows = [(i, r) for i, seg_dir in enumerate(seg_dirs) for r in read(seg_dir)]
     for seg_i, r in rows:  # one row per segment holding this term
-        if len(r["pays"] or b"") == 0:
-            raise ValueError(
-                "payload query on an index built without store_payloads"
-            )
         pays = np.frombuffer(r["pays"], dtype=np.float32)
         bmp = np.asarray(r["block_max_pay"], dtype=np.float64)
         n_blocks = bmp.size
@@ -601,16 +599,13 @@ class PhysicalIndex:
     """Point-in-time searcher over a physical index directory.
 
     Opening does no Spark work: it reads corpus_stats.json, whose
-    ``segments`` map names the committed segments and whose ``term_stats``
-    list names the part files of their df. Those are the searcher's
-    snapshot, as Lucene's IndexSearcher pins its segments; a generation
-    committed later is seen after a reopen, which ``open_index`` decides
-    from the commit token. A searcher whose term_stats files are gone (a
-    later commit replaced them, or a failed one did) raises rather than mix
-    another commit's df with its own N. Each query runs over the snapshot
-    on one of two executors, chosen by its size (``_topk``; module
-    docstring): a driver loop whose result launches no Spark job, or one
-    Spark job of one stage.
+    ``segments`` and ``generations`` (the segments and their term-stats
+    files, which no commit rewrites) are the searcher's snapshot, as
+    Lucene's IndexSearcher pins its segments. A generation committed later
+    is seen after a reopen, which ``open_index`` decides from the commit
+    token. Each query runs over the snapshot on one of two executors,
+    chosen by its size (``_topk``; module docstring): a driver loop whose
+    result launches no Spark job, or one Spark job of one stage.
     """
 
     # Driver-side per-term df cache cap. Query workloads touch a tiny,
@@ -625,45 +620,38 @@ class PhysicalIndex:
         self.commit_token = _commit_token(index_dir)
         self.stats = read_corpus_stats(index_dir)
         self.segments = self.stats["segments"]
-        self._term_stats_files = [
-            f"{index_dir}/term_stats.parquet/{f}" for f in self.stats["term_stats"]
+        self._df_files = [
+            _term_stats_file(index_dir, g) for g in self.stats["generations"]
         ]
         # term -> global df, or None for a term known absent from the corpus
         # (negative caching avoids re-reading for repeated OOV query terms).
         # Insertion-ordered dict doubles as the LRU eviction order.
         self._term_df_cache: dict[str, int | None] = {}
 
-    def _stats_files(self) -> list[str]:
-        """The snapshot's term_stats part files, still on disk."""
-        if not all(map(os.path.exists, self._term_stats_files)):
-            raise RuntimeError(
-                f"stale searcher over {self.index_dir}: the term_stats files "
-                "its commit names are gone (a later commit replaced them, or "
-                "a finalize_index failed after writing new ones); re-run "
-                "finalize_index if the last one failed, then reopen it with "
-                "open_index"
-            )
-        return self._term_stats_files
-
     @cached_property
     def _term_stats(self) -> DataFrame:
-        """term_stats as a Spark frame, built only for the fuzzy probe."""
-        return self.spark.read.parquet(*self._stats_files()).select("term", "df")
+        """(term, global df) as a Spark frame, built only for the fuzzy probe."""
+        return (
+            self.spark.read.parquet(*self._df_files)
+            .groupBy("term").agg(F.sum("df").alias("df"))
+        )
 
     def _df_for_terms(self, terms: list[str]) -> dict[str, int]:
-        """Global df for ``terms`` via a term-IN filtered pyarrow read of
-        the snapshot's term_stats files — no Spark job, and never a full
-        dictionary collect."""
+        """Global df for ``terms``: a term-IN filtered pyarrow read of the
+        snapshot's term_stats files, summed per term — no Spark job, and
+        never a full dictionary collect."""
         missing = [t for t in terms if t not in self._term_df_cache]
         if missing:
             import pyarrow.parquet as pq
 
-            tbl = pq.read_table(
-                self._stats_files(),
-                columns=["term", "df"],
-                filters=[("term", "in", missing)],
-            )
-            found = dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
+            found = {}
+            if self._df_files:
+                tbl = pq.read_table(
+                    self._df_files,
+                    columns=["term", "df"],
+                    filters=[("term", "in", missing)],
+                ).group_by("term").aggregate([("df", "sum")])
+                found = dict(zip(tbl["term"].to_pylist(), tbl["df_sum"].to_pylist()))
             for t in missing:
                 self._term_df_cache[t] = found.get(t)
             while len(self._term_df_cache) > self.TERM_CACHE_MAX:
@@ -897,10 +885,10 @@ class PhysicalIndex:
             raise ValueError(
                 f"unknown payload function {func!r}; one of {PAYLOAD_FUNCS}"
             )
-        if not self.stats.get("payloads", False):
+        if self.stats["analyzer"] != "delimited_payload":
             raise ValueError(
                 "payload query needs payloads: this index was built with "
-                "store_payloads=False"
+                f"analyzer {self.stats['analyzer']!r}, not 'delimited_payload'"
             )
         t = term.lower()
         if not t or not self._df_for_terms([t]):

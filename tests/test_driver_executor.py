@@ -76,11 +76,11 @@ def pay_dir(spark, tmp_path_factory):
     pdf = pd.DataFrame(rows, columns=["docid", "text"])
     corpus = spark.createDataFrame(pdf)
     d = str(tmp_path_factory.mktemp("drvpay") / "idx")
-    kw = dict(id_col="docid", text_col="text", store_payloads=True)
+    kw = dict(analyzer="delimited_payload", id_col="docid", text_col="text")
     _build(corpus.where(F.col("docid") % 2 == 0), d, 4, **kw)
     build_segments(corpus.where(F.col("docid") % 2 == 1), d, n_partitions=4,
                    generation=1, **kw)
-    finalize_index(spark, d)
+    finalize_index(spark, d, "delimited_payload")
     return d
 
 

@@ -16,12 +16,13 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from solr_spark.index.codec import decode_payloads, encode_postings
+from solr_spark.index.codec import encode_postings
 from solr_spark.index.segments import build_index_dir, merge_index
 from solr_spark.query.payload import delimited_payload_postings, payload_score
 from solr_spark.query.wand import open_index
 
 FUNCS = ["max", "min", "sum", "average", "first"]
+PAY = "delimited_payload"
 
 
 def _payload_corpus(spark, n=400, seed=7):
@@ -45,8 +46,8 @@ def pay_setup(spark, tmp_path_factory):
     corpus.count()
     idx_dir = str(tmp_path_factory.mktemp("payidx") / "idx")
     build_index_dir(
-        corpus, idx_dir, n_partitions=4, id_col="docid", text_col="text",
-        store_payloads=True,
+        corpus, idx_dir, n_partitions=4, analyzer=PAY, id_col="docid",
+        text_col="text",
     )
     logical = delimited_payload_postings(
         corpus, id_col="docid", text_col="text"
@@ -65,8 +66,7 @@ def test_codec_payload_roundtrip(encode_one):
     pos = np.concatenate([np.sort(np.arange(t) * 2 + 1) for t in tfs])
     pay = (np.arange(npos) % 7).astype(np.float32) / 2.0
     enc = encode_one(ords, tfs, norms, positions=pos, payloads=pay)
-    flat, starts = decode_payloads(enc.pays, tfs)
-    assert np.array_equal(flat, pay)
+    assert np.array_equal(np.frombuffer(enc.pays, np.float32), pay)
     # block metadata: 300 postings -> 3 blocks; offsets address the stream
     assert enc.block_pay_off.size == 3
     pstarts = np.zeros(300, dtype=np.int64)
@@ -139,7 +139,7 @@ def test_payload_query_on_payloadless_index(spark, tmp_path_factory):
     build_index_dir(plain, d, n_partitions=2,
                     id_col="docid", text_col="content")
     ix = open_index(spark, d)
-    with pytest.raises(ValueError, match="store_payloads"):
+    with pytest.raises(ValueError, match="'simple', not 'delimited_payload'"):
         ix.payload_topk("def", "max")
 
 
@@ -152,22 +152,20 @@ def test_merge_preserves_payloads(spark, tmp_path_factory):
     c2 = _payload_corpus(spark, n=120, seed=2).select(
         (F.col("docid") + 120).alias("docid"), "text"
     )
-    build_segments(c1, idx_dir, n_partitions=2, generation=0,
-                   id_col="docid", text_col="text", store_payloads=True)
-    build_segments(c2, idx_dir, n_partitions=2, generation=1,
-                   id_col="docid", text_col="text", store_payloads=True)
-    finalize_index(spark, idx_dir)
+    kw = dict(analyzer=PAY, id_col="docid", text_col="text")
+    build_segments(c1, idx_dir, n_partitions=2, generation=0, **kw)
+    build_segments(c2, idx_dir, n_partitions=2, generation=1, **kw)
+    finalize_index(spark, idx_dir, PAY)
     merge_index(spark, idx_dir, out_dir)
     # The merged segments are exactly those of one build of both corpora.
-    build_index_dir(c1.unionByName(c2), f"{base}/one", n_partitions=2,
-                    id_col="docid", text_col="text", store_payloads=True)
+    build_index_dir(c1.unionByName(c2), f"{base}/one", n_partitions=2, **kw)
     for p in range(2):
         for f in ("postings.parquet", "docs.parquet"):
             seg = f"seg/p={p:05d}/gen=0/{f}"
             assert pq.read_table(f"{out_dir}/{seg}").equals(
                 pq.read_table(f"{base}/one/{seg}"))
     ix = open_index(spark, out_dir)
-    assert ix.stats["payloads"] is True
+    assert ix.stats["analyzer"] == PAY
     got = ix.payload_topk("t0", func="max", k=10).toPandas()
     logical = delimited_payload_postings(
         c1.unionByName(c2), id_col="docid", text_col="text"
@@ -187,10 +185,27 @@ def test_payload_partition_invariance(spark, tmp_path_factory):
     frames = []
     for nparts in (1, 4):
         d = str(tmp_path_factory.mktemp(f"payinv{nparts}") / "idx")
-        build_index_dir(corpus, d, n_partitions=nparts,
-                        id_col="docid", text_col="text", store_payloads=True)
+        build_index_dir(corpus, d, n_partitions=nparts, analyzer=PAY,
+                        id_col="docid", text_col="text")
         frames.append(
             open_index(spark, d).payload_topk("t0", "sum", k=12).toPandas()
         )
     assert frames[0]["docid"].tolist() == frames[1]["docid"].tolist()
     assert np.allclose(frames[0]["score"], frames[1]["score"])
+
+
+def test_term_queries_use_the_payload_chain(spark, tmp_path_factory):
+    """An index built with the delimited_payload analyzer records it, so
+    term queries are analyzed by the chain that indexed the terms:
+    "foo-bar" is one token, found by topk as by payload_topk."""
+    d = str(tmp_path_factory.mktemp("paychain") / "idx")
+    docs = spark.createDataFrame(
+        [(0, "Hello,|2.0 world|1.5"), (1, "foo-bar|3.0 baz|1.0")],
+        "docid long, text string")
+    build_index_dir(docs, d, n_partitions=2, analyzer=PAY, id_col="docid",
+                    text_col="text")
+    ix = open_index(spark, d)
+    assert ix.stats["analyzer"] == PAY
+    assert [r["docid"] for r in ix.topk("foo-bar", k=10).collect()] == [1]
+    assert [r["docid"] for r in ix.topk("hello,", k=10).collect()] == [0]
+    assert [tuple(r) for r in ix.payload_topk("foo-bar", k=10).collect()] == [(1, 3.0)]

@@ -125,12 +125,12 @@ def test_merge_equals_one_shot_build(spark, docs, tmp_path_factory, payloads):
     import pyarrow.parquet as pq
 
     base = tmp_path_factory.mktemp("mergeref")
-    kw = dict(analyzer="simple", id_col="doc_id", text_col="text",
-              store_payloads=payloads)
+    analyzer = "delimited_payload" if payloads else "simple"
+    kw = dict(analyzer=analyzer, id_col="doc_id", text_col="text")
     for g in range(3):
         build_segments(docs.where(F.col("doc_id") % 3 == g), str(base / "gens"),
                        2, generation=g, **kw)
-    finalize_index(spark, str(base / "gens"), "simple")
+    finalize_index(spark, str(base / "gens"), analyzer)
     merge_index(spark, str(base / "gens"), str(base / "merged"))
     build_index_dir(docs, str(base / "one"), n_partitions=2, **kw)
     for p in range(2):
@@ -288,10 +288,14 @@ def test_resume_with_changed_input_raises(docs, tmp_path_factory):
                        "doc_id", "text")
 
 
+def _hex_rows(df):
+    return [(int(r[0]), float(r[1]).hex()) for r in df.collect()]
+
+
 def test_searcher_never_mixes_commits(spark, tmp_path_factory):
-    """A searcher opened before a later commit must not score with that
-    commit's df and its own N (at 10 docs vs df 40, idf < 0 and every hit
-    was dropped): it raises until reopened, and the reopened searcher
+    """A searcher opened before a later commit answers from its own commit,
+    bit-identically, never with that commit's df and its own N (at 10 docs
+    vs df 40, idf < 0 and every hit was dropped); a reopened searcher
     answers over the new commit."""
     from solr_spark.query.wand import open_index
 
@@ -300,17 +304,19 @@ def test_searcher_never_mixes_commits(spark, tmp_path_factory):
     build_index_dir(spark.createDataFrame(
         [(i, f"alpha w{i}") for i in range(10)], "doc_id long, text string"),
         d, n_partitions=2, **kw)
+    # "alpha" alone goes into old's df cache before the commit; "w3" and the
+    # fuzzy clause's candidates are looked up after it.
+    calls = (lambda ix: ix.topk("alpha w3", k=50),
+             lambda ix: ix.search("alpha~1", k=50))
+    want = [_hex_rows(call(PhysicalIndex(spark, d))) for call in calls]
+    assert [len(w) for w in want] == [10, 10]
     old = open_index(spark, d)
     assert len(old.topk("alpha", k=50).collect()) == 10
     build_segments(spark.createDataFrame(
         [(i, f"alpha x{i}") for i in range(10, 40)], "doc_id long, text string"),
         d, 2, generation=1, **kw)
     finalize_index(spark, d, "simple")
-    # "alpha" alone is in old's df cache from its own commit; "w3" is not.
-    for call in (lambda: old.topk("alpha w3", k=50),
-                 lambda: old.search("alpha~1", k=50)):
-        with pytest.raises(RuntimeError, match="stale searcher.*open_index"):
-            call().collect()
+    assert [_hex_rows(call(old)) for call in calls] == want
     assert len(open_index(spark, d).topk("alpha", k=50).collect()) == 40
 
 
@@ -437,20 +443,6 @@ def test_physical_fuzzy_matches_logical(spark, idx_dir, logical):
         assert got == want and got
 
 
-def test_merge_mixed_payloads_raises(spark, docs, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("mixed") / "multi")
-    m = str(tmp_path_factory.mktemp("mixed") / "merged")
-    build_segments(docs.where(F.col("doc_id") % 2 == 0), d, n_partitions=2,
-                   analyzer="simple", id_col="doc_id", text_col="text",
-                   generation=0, store_payloads=False)
-    build_segments(docs.where(F.col("doc_id") % 2 == 1), d, n_partitions=2,
-                   analyzer="simple", id_col="doc_id", text_col="text",
-                   generation=1, store_payloads=True)
-    finalize_index(spark, d, analyzer="simple")
-    with pytest.raises(Exception, match="store_payloads"):
-        merge_index(spark, d, m)
-
-
 def _alpha_index(spark, d):
     """10 docs over 2 partitions, every one holding "alpha", committed; and
     a second generation of 10 more written by a sink that has not
@@ -483,8 +475,8 @@ def test_searcher_reads_only_committed_segments(spark, tmp_path_factory):
 def test_commit_write_failure_keeps_previous_commit(spark, tmp_path_factory,
                                                     monkeypatch):
     """A corpus_stats.json write that raises midway leaves the previous
-    commit readable (tmp write + rename), never a truncated file, and no
-    searcher answers from it with the failed commit's df; re-running
+    commit readable (tmp write + rename), never a truncated file: a fresh
+    searcher answers from it, never with the failed commit's df; re-running
     finalize_index commits."""
     import json
 
@@ -505,16 +497,103 @@ def test_commit_write_failure_keeps_previous_commit(spark, tmp_path_factory,
             finalize_index(spark, d, "simple")
     assert json.dump is dump
     assert read_corpus_stats(d) == before
-    # The failed commit already replaced term_stats: a fresh searcher over
-    # the previous commit must raise, never score the new df with the old N
-    # (which returned 0 hits).
+    # The failed commit already wrote gen 1's term stats, which the previous
+    # commit does not name: scoring them with the old N returned 0 hits.
     ix = PhysicalIndex(spark, d)
     assert ix.stats["n_docs"] == 10
-    with pytest.raises(RuntimeError,
-                       match="stale searcher.*finalize_index.*open_index"):
-        ix.topk("alpha", k=50).collect()
+    assert len(ix.topk("alpha", k=50).collect()) == 10
     assert finalize_index(spark, d, "simple")["n_docs"] == 20
     assert len(PhysicalIndex(spark, d).topk("alpha", k=50).collect()) == 20
+
+
+def _summed_term_stats(index_dir):
+    """{term: (df, ttf)} summed over the commit's per-generation files."""
+    import pyarrow.parquet as pq
+
+    from solr_spark.index.segments import _term_stats_file, read_corpus_stats
+
+    out = {}
+    for g in read_corpus_stats(index_dir)["generations"]:
+        for r in pq.read_table(_term_stats_file(index_dir, g)).to_pylist():
+            df, ttf = out.get(r["term"], (0, 0))
+            out[r["term"]] = (df + r["df"], ttf + r["ttf"])
+    return out
+
+
+def _term_stats_from_scratch(spark, index_dir):
+    """{term: (df, ttf)} of one Spark groupBy over every committed segment."""
+    from solr_spark.index.segments import _seg_dir, read_corpus_stats
+
+    segs = read_corpus_stats(index_dir)["segments"]
+    rows = (
+        spark.read.parquet(*[f"{_seg_dir(index_dir, p, g)}/postings.parquet"
+                             for p, gens in segs.items() for g in gens])
+        .groupBy("term").agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
+        .collect()
+    )
+    return {r["term"]: (r["df"], r["ttf"]) for r in rows}
+
+
+def test_commit_writes_each_generation_once(spark, docs, count_jobs,
+                                            tmp_path_factory):
+    """After every one of N commits and after a merge, the per-generation
+    term-stats files summed per term equal a from-scratch aggregate over
+    the committed postings, and reading the directory gives the same df
+    total. Each commit launches no Spark job and rewrites no file an
+    earlier commit named; the merge launches only its merge job."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    base = tmp_path_factory.mktemp("gen_stats")
+    d = str(base / "idx")
+    kw = dict(analyzer="simple", id_col="doc_id", text_col="text")
+    named = {}
+    for g in range(4):
+        build_segments(docs.where(F.col("doc_id") % 4 == g), d, 4, generation=g, **kw)
+        stats, jobs = count_jobs(lambda: finalize_index(spark, d, "simple"))
+        assert jobs == [] and stats["generations"] == list(range(g + 1))
+        ts = f"{d}/term_stats.parquet"
+        assert sorted(os.listdir(ts)) == [f"{i}.parquet" for i in range(g + 1)]
+        for f in os.listdir(ts):
+            st = os.stat(f"{ts}/{f}")
+            assert named.setdefault(f, (st.st_ino, st.st_mtime_ns)) == (
+                st.st_ino, st.st_mtime_ns), f
+        want = _term_stats_from_scratch(spark, d)
+        assert _summed_term_stats(d) == want
+        assert pq.read_table(f"{d}/term_stats.parquet")["df"].to_numpy().sum() == sum(
+            df for df, _ in want.values())
+    merged = str(base / "merged")
+    stats, jobs = count_jobs(lambda: merge_index(spark, d, merged))
+    assert len(jobs) == 1 and stats["generations"] == [0]
+    assert _summed_term_stats(merged) == _term_stats_from_scratch(spark, merged) == want
+
+
+def test_commit_refuses_a_changed_generation(spark, tmp_path_factory):
+    """A committed generation that gained a partition (here gen 0 resumed
+    over more rows, which landed in a partition gen 0 had no segment in)
+    would no longer match its term-stats file: finalize_index raises
+    before it writes anything."""
+    import os
+
+    from solr_spark.index.segments import partition_col
+
+    d = str(tmp_path_factory.mktemp("changed_gen") / "idx")
+    part = {r[0]: r[1] for r in spark.range(200).select(
+        "id", partition_col("id", 4)).collect()}
+    first = [i for i in part if part[i] < 2]
+    build_segments(_running_docs(spark, first), d, 4, "simple", 0, "doc_id", "text")
+    finalize_index(spark, d, "simple")
+    with open(f"{d}/corpus_stats.json", "rb") as f:
+        commit = f.read()
+    listing = sorted(os.listdir(f"{d}/term_stats.parquet"))
+    build_segments(_running_docs(spark, first + [i for i in part if part[i] == 2]),
+                   d, 4, "simple", 0, "doc_id", "text")
+    with pytest.raises(ValueError, match="generation 0 changed after it was committed"):
+        finalize_index(spark, d, "simple")
+    with open(f"{d}/corpus_stats.json", "rb") as f:
+        assert f.read() == commit
+    assert sorted(os.listdir(f"{d}/term_stats.parquet")) == listing
 
 
 # The segment files' schemas, pinned: column names and Arrow types as
@@ -568,12 +647,11 @@ def test_segment_files_have_declared_schema(spark, docs, idx_dir,
     writes, with or without payloads, has exactly the declared schema."""
     _assert_declared_schemas(idx_dir)
     base = tmp_path_factory.mktemp("schema")
-    kw = dict(analyzer="simple", id_col="doc_id", text_col="text",
-              store_payloads=True)
+    kw = dict(analyzer="delimited_payload", id_col="doc_id", text_col="text")
     for g in range(2):
         build_segments(docs.where(F.col("doc_id") % 2 == g), str(base / "gens"),
                        2, generation=g, **kw)
-    finalize_index(spark, str(base / "gens"), "simple")
+    finalize_index(spark, str(base / "gens"), "delimited_payload")
     merge_index(spark, str(base / "gens"), str(base / "merged"))
     _assert_declared_schemas(base / "gens")
     _assert_declared_schemas(base / "merged")
@@ -637,17 +715,19 @@ def _running_docs(spark, ids):
 def test_commit_refuses_segments_of_another_analyzer(spark, tmp_path_factory):
     """Gen 0 built with ``simple`` and gen 1 with ``text_en``, all holding
     "running": a ``simple`` commit would find only gen 0's docs, so
-    finalize_index raises instead, before it writes anything."""
+    finalize_index raises instead, before it writes anything. So it does
+    over a gen 1 built with ``delimited_payload``, whose payload stream a
+    merge of both generations would misalign."""
     import os
 
-    d = str(tmp_path_factory.mktemp("mixed_analyzers") / "idx")
-    for g, analyzer in enumerate(["simple", "text_en"]):
-        build_segments(_running_docs(spark, range(10 * g, 10 * g + 10)), d, 2,
-                       analyzer, g, "doc_id", "text")
-    with pytest.raises(ValueError, match="analyzer 'text_en', not 'simple'"):
-        finalize_index(spark, d, "simple")
-    assert not os.path.exists(f"{d}/corpus_stats.json")
-    assert not os.path.exists(f"{d}/term_stats.parquet")
+    for other in ("text_en", "delimited_payload"):
+        d = str(tmp_path_factory.mktemp("mixed_analyzers") / "idx")
+        for g, analyzer in enumerate(["simple", other]):
+            build_segments(_running_docs(spark, range(10 * g, 10 * g + 10)),
+                           d, 2, analyzer, g, "doc_id", "text")
+        with pytest.raises(ValueError, match=f"analyzer '{other}', not 'simple'"):
+            finalize_index(spark, d, "simple")
+        assert os.listdir(d) == ["seg"]
 
 
 def test_merge_keeps_the_source_analyzer(spark, tmp_path_factory):

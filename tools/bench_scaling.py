@@ -15,7 +15,8 @@ surface of the engine.
 
 Usage: python tools/bench_scaling.py [--cpus 1,4] [--repeat 40]
        python tools/bench_scaling.py --mode jvm [--cpus 1,4] [--repeat 40]
-Writes tools-local JSON and prints a summary table.
+Prints the summary as JSON on stdout and writes no file; redirect stdout
+to record a run.
 
 ``--mode jvm`` runs a PURE-JVM control job (parquet scan → split/lower/
 explode → term aggregation: the whole-stage-codegen analogue of the index
@@ -243,8 +244,7 @@ print(json.dumps({
 
 def run_level(cpus: int, repeat: int, mode: str = "engine") -> dict:
     env = dict(os.environ)
-    env.update({"CPUS": str(cpus), "REPEAT": str(repeat), "REPO": os.path.abspath("."),
-                "SOLR_SPARK_DRIVER_MEM": env.get("SOLR_SPARK_DRIVER_MEM", "24g")})
+    env.update({"CPUS": str(cpus), "REPEAT": str(repeat), "REPO": os.path.abspath(".")})
     with tempfile.NamedTemporaryFile("w", suffix=".py", delete=False) as f:
         f.write("import tempfile\n" + {"jvm": _JVM_WORKER, "pipeline": _PIPELINE_WORKER}.get(mode, _WORKER))
         path = f.name
@@ -290,13 +290,6 @@ def main() -> None:
             {r["topk_signature"] for r in results}
         ) == 1,
     }
-    out = {
-        "engine": "tools/scaling_result.json",
-        "jvm": "tools/jvm_baseline_result.json",
-        "pipeline": "tools/pipeline_scaling_result.json",
-    }[args.mode]
-    with open(out, "w") as f:
-        json.dump(summary, f, indent=2)
     print(json.dumps(summary, indent=2))
 
 
