@@ -715,19 +715,38 @@ def _running_docs(spark, ids):
 def test_commit_refuses_segments_of_another_analyzer(spark, tmp_path_factory):
     """Gen 0 built with ``simple`` and gen 1 with ``text_en``, all holding
     "running": a ``simple`` commit would find only gen 0's docs, so
-    finalize_index raises instead, before it writes anything. So it does
-    over a gen 1 built with ``delimited_payload``, whose payload stream a
-    merge of both generations would misalign."""
+    finalize_index raises instead, before it writes anything."""
     import os
 
-    for other in ("text_en", "delimited_payload"):
-        d = str(tmp_path_factory.mktemp("mixed_analyzers") / "idx")
-        for g, analyzer in enumerate(["simple", other]):
-            build_segments(_running_docs(spark, range(10 * g, 10 * g + 10)),
-                           d, 2, analyzer, g, "doc_id", "text")
-        with pytest.raises(ValueError, match=f"analyzer '{other}', not 'simple'"):
-            finalize_index(spark, d, "simple")
-        assert os.listdir(d) == ["seg"]
+    d = str(tmp_path_factory.mktemp("mixed_analyzers") / "idx")
+    for g, analyzer in enumerate(["simple", "text_en"]):
+        build_segments(_running_docs(spark, range(10 * g, 10 * g + 10)), d, 2,
+                       analyzer, g, "doc_id", "text")
+    with pytest.raises(ValueError, match="analyzer 'text_en', not 'simple'"):
+        finalize_index(spark, d, "simple")
+    assert os.listdir(d) == ["seg"]
+
+
+def test_merge_mixed_payloads_raises(spark, docs, tmp_path_factory):
+    """A payload generation is a ``delimited_payload`` generation: beside a
+    ``simple`` one, whose postings carry no payload stream, no commit under
+    either analyzer is made, so no merge can misalign the two."""
+    import os
+
+    d = str(tmp_path_factory.mktemp("mixed") / "multi")
+    m = str(tmp_path_factory.mktemp("mixed") / "merged")
+    analyzers = ["simple", "delimited_payload"]
+    for g, analyzer in enumerate(analyzers):
+        build_segments(docs.where(F.col("doc_id") % 2 == g), d, n_partitions=2,
+                       analyzer=analyzer, id_col="doc_id", text_col="text",
+                       generation=g)
+    for analyzer, other in zip(analyzers, analyzers[::-1], strict=True):
+        with pytest.raises(ValueError, match=f"analyzer '{other}', not '{analyzer}'"):
+            finalize_index(spark, d, analyzer)
+    assert os.listdir(d) == ["seg"]
+    with pytest.raises(FileNotFoundError, match="corpus_stats.json"):
+        merge_index(spark, d, m)
+    assert not os.path.exists(m)
 
 
 def test_merge_keeps_the_source_analyzer(spark, tmp_path_factory):
