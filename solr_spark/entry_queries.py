@@ -1531,8 +1531,8 @@ def _phys_index_dir(spark: SparkSession, sf_dir: str) -> str:
 
     from solr_spark.index.segments import build_index_dir
 
-    # v7: one term-stats file per generation, summed by the searcher
-    d = f"/tmp/solr_spark_phys_v7_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
+    # v8: a commit names only generations marked complete
+    d = f"/tmp/solr_spark_phys_v8_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
     if not os.path.exists(f"{d}/corpus_stats.json"):
         docs = _t(spark, sf_dir, "documents")
         build_index_dir(
@@ -7165,7 +7165,7 @@ def wand_payload_score_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from solr_spark.index.segments import build_index_dir
     from solr_spark.query.wand import open_index
 
-    d = f"/tmp/solr_spark_payphys_v7_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
+    d = f"/tmp/solr_spark_payphys_v8_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
     if not os.path.exists(f"{d}/corpus_stats.json"):
         docs = _t(spark, sf_dir, "documents")
         ptext = docs.select(
@@ -8579,12 +8579,28 @@ def _customer_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Gift-wrapping hull walk + minimal-disk candidates as SQL (oracles for
 # the geometry entries; the recursive walk reproduces the engine's CCW
 # vertex order exactly because both sides compute the identical doubles).
+# The walk is O(h*n^2), so ``pts`` first drops every point strictly inside
+# the quadrilateral of the four diagonal extremes (min/max of x+y and x-y,
+# in CCW order): such a point is strictly inside the hull, so it is no hull
+# vertex and lies on no hull edge. ``hull`` is materialized because the
+# disk query reads it ~10 times and DuckDB would re-run the walk for each.
 _HULL_WALK = """
-pts AS (
+raw AS (
   SELECT DISTINCT
          ((c_custkey * 7919 % 36000) / 100.0 - 180.0) AS x,
          ((c_custkey * 9973 % 18000) / 100.0 - 90.0) AS y
   FROM customer),
+e0 AS (SELECT x, y FROM raw ORDER BY x + y, x, y LIMIT 1),
+e1 AS (SELECT x, y FROM raw ORDER BY x - y DESC, x, y LIMIT 1),
+e2 AS (SELECT x, y FROM raw ORDER BY x + y DESC, x, y LIMIT 1),
+e3 AS (SELECT x, y FROM raw ORDER BY x - y, x, y LIMIT 1),
+pts AS (
+  SELECT r.x, r.y
+  FROM raw r, e0, e1, e2, e3
+  WHERE NOT ((e1.x - e0.x) * (r.y - e0.y) - (e1.y - e0.y) * (r.x - e0.x) > 0
+         AND (e2.x - e1.x) * (r.y - e1.y) - (e2.y - e1.y) * (r.x - e1.x) > 0
+         AND (e3.x - e2.x) * (r.y - e2.y) - (e3.y - e2.y) * (r.x - e2.x) > 0
+         AND (e0.x - e3.x) * (r.y - e3.y) - (e0.y - e3.y) * (r.x - e3.x) > 0)),
 start AS (SELECT x, y FROM pts ORDER BY x, y LIMIT 1),
 walk AS (
   SELECT 0 AS step, s.x, s.y, s.x AS sx, s.y AS sy FROM start s
@@ -8604,7 +8620,7 @@ walk AS (
     ORDER BY q.x, q.y LIMIT 1) nxt
   WHERE w.step < 200 AND NOT (w.step > 0 AND w.x = w.sx AND w.y = w.sy)
 ),
-hull AS (SELECT step AS i, x, y FROM walk
+hull AS MATERIALIZED (SELECT step AS i, x, y FROM walk
          WHERE NOT (step > 0 AND x = sx AND y = sy))"""
 
 HULL_SQL = f"""

@@ -2,17 +2,24 @@
 
 Mirrors the Lucene/Solr indexing lifecycle (SURVEY.md §3.2) Spark-first:
 
-- ``build_segments``: one Spark shape, ``groupBy(partition_col)
-  .applyInArrow``, one SEGMENT per partition (the Arrow-vectorized
+- ``build_segments``: one SEGMENT per partition (the Arrow-vectorized
   analogue of IndexWriter's flush: analyze, invert, compress posting lists,
-  write files). Input already laid out by ``partition_col`` (persisted, or
-  a table bucketed by docid hash) builds with no shuffle; any other layout
-  is shuffled once on p. Each segment = postings.parquet + docs.parquet +
-  manifest.json, committed by an atomic directory rename; the manifest
-  carries row counts, a docid checksum (lineage), the analyzer, sizes
-  and timing (metrics). RESUME = re-running the build skips every partition
-  whose manifest already exists — the per-partition checkpoint protocol that
-  replaces Solr's tlog replay
+  write files), by one of two executors running the same per-partition
+  function. A small build (at most DRIVER_BUILD_MAX_PARTITIONS partitions,
+  and an input whose bounded collect holds at most DRIVER_BUILD_MAX_DOCS
+  rows and DRIVER_BUILD_MAX_BYTES bytes) runs in a driver loop after that
+  one collect job, as Solr indexes an update request in the request thread
+  (DirectUpdateHandler2.addDoc). Any other build is one Spark shape,
+  ``groupBy(partition_col).applyInArrow``: input already laid out by
+  ``partition_col`` (persisted, or a table bucketed by docid hash) builds
+  with no shuffle; any other layout is shuffled once on p. Each segment =
+  postings.parquet + docs.parquet + manifest.json, committed by an atomic
+  directory rename; the manifest carries row counts, a docid checksum
+  (lineage), the analyzer, sizes and timing (metrics). Once every
+  partition is written, ``seg/_complete/<G>`` marks the generation
+  complete; only complete generations are committed. RESUME = re-running
+  the build skips every partition whose manifest already exists — the
+  per-partition checkpoint protocol that replaces Solr's tlog replay
   (solr/core/src/java/org/apache/solr/update/UpdateLog.java:912-947).
 - ``finalize_index``: the commit, on the driver with no Spark job:
   corpus_stats.json (N, sumdl, avgdl, the ``segments`` map of committed
@@ -47,6 +54,7 @@ Layout (every column is read by a scorer, the merge or finalize_index):
                                      (the commit)
       term_stats.parquet/<G>.parquet (term, df, ttf) of generation G's
                                      segments, sorted by term
+      seg/_complete/<G>              empty: generation G is fully written
       seg/p=<P>/gen=<G>/
         postings.parquet             codec.POSTINGS_SCHEMA, one row per
                                      term, sorted by term
@@ -101,15 +109,31 @@ def _seg_dir(index_dir: str, p: int, gen: int) -> str:
     return os.path.join(index_dir, "seg", f"p={p:05d}", f"gen={gen}")
 
 
+def _complete_dir(index_dir: str) -> str:
+    return os.path.join(index_dir, "seg", "_complete")
+
+
+def _mark_complete(index_dir: str, gen: int) -> None:
+    """Mark generation ``gen`` complete (an empty file named ``gen``): every
+    one of its partitions is written, so the next ``finalize_index`` may
+    commit it. Rewriting the marker (a replay that resumed the generation)
+    changes nothing."""
+    os.makedirs(_complete_dir(index_dir), exist_ok=True)
+    open(os.path.join(_complete_dir(index_dir), str(gen)), "w").close()
+
+
 def _written_segments(index_dir: str) -> dict[int, list[int]]:
-    """Each partition's written generations, ``{p: [gen, ...]}`` ascending:
-    what the next ``finalize_index`` commits.
+    """Each partition's written segments of complete generations,
+    ``{p: [gen, ...]}`` ascending: what the next ``finalize_index`` commits.
 
     A segment dir counts as written when its name is exactly ``gen=<int>``
     and it holds manifest.json, which ``_write_segment`` writes before the
     atomic rename. A ``gen=<G>.tmp-<hex>`` dir left by a build killed before
-    its rename is therefore never committed."""
+    its rename is therefore never committed, nor is a generation whose
+    build has not yet marked it complete (``_mark_complete``)."""
     seg = os.path.join(index_dir, "seg")
+    done = _complete_dir(index_dir)
+    complete = set(os.listdir(done)) if os.path.isdir(done) else set()
     out: dict[int, list[int]] = {}
     for pname in sorted(os.listdir(seg)) if os.path.isdir(seg) else ():
         pm = _PART_RE.fullmatch(pname)
@@ -119,7 +143,8 @@ def _written_segments(index_dir: str) -> dict[int, list[int]]:
         gens = sorted(
             int(gm.group(1))
             for gm in map(_GEN_RE.fullmatch, os.listdir(pdir))
-            if gm and os.path.exists(os.path.join(pdir, gm.group(0), "manifest.json"))
+            if gm and gm.group(1) in complete
+            and os.path.exists(os.path.join(pdir, gm.group(0), "manifest.json"))
         )
         if gens:
             out[int(pm.group(1))] = gens
@@ -214,9 +239,6 @@ def _write_segment(
     manifest, which records the ``analyzer`` the terms came from."""
     import pyarrow.parquet as pq
 
-    # Executor-side: one pyarrow thread per task (Spark supplies the
-    # parallelism; a per-process all-cores arrow pool oversubscribes).
-    pa.set_cpu_count(1)
     final = _seg_dir(index_dir, p, gen)
     tmp = final + ".tmp-" + uuid.uuid4().hex[:8]
     os.makedirs(tmp, exist_ok=True)
@@ -282,6 +304,17 @@ def partition_col(id_col: str = "docid", n_partitions: int = 32):
     return F.pmod(F.xxhash64(id_col), F.lit(n_partitions)).cast("int")
 
 
+# The driver build's limits (build_segments), from the crossover against the
+# Spark build measured on a 4-core host over ~1.1 KB code-corpus docs: the
+# serial driver loop is faster up to ~3k docs (~3.3 MiB) at 4 and 32
+# partitions, and slower from ~4k docs (~4.4 MiB), where the 4 Spark tasks
+# overtake it. The byte cap, Solr's ramBufferSizeMB role, binds for larger
+# docs. Constants, not options, like query.wand's DRIVER_MAX_SEGMENT_FILES.
+DRIVER_BUILD_MAX_PARTITIONS = 32
+DRIVER_BUILD_MAX_DOCS = 2048
+DRIVER_BUILD_MAX_BYTES = 4 << 20
+
+
 def _build_one(index_dir: str, generation: int, analyzer: str,
                p: int, group: pa.Table) -> pa.Table:
     final = _seg_dir(index_dir, p, generation)
@@ -327,10 +360,19 @@ def build_segments(
 
     Returns the manifest table as a pandas frame (one row per partition;
     ``skipped=True`` rows were already committed by a previous run — the
-    resume path).
+    resume path). Once every partition is written, the generation is marked
+    complete (``_mark_complete``): only then may a commit name it.
 
-    One Spark shape: ``groupBy(partition_col).applyInArrow``, one segment
-    per group. Input already laid out by the partition expression (e.g.
+    Two executors run the same per-partition ``_build_one``, so they write
+    byte-identical segments. A small build runs on the driver, as Solr
+    indexes an update request in its request thread: with at most
+    DRIVER_BUILD_MAX_PARTITIONS partitions (known with no job), the input is
+    read once by a bounded collect, ``limit(DRIVER_BUILD_MAX_DOCS + 1)
+    .toArrow()`` (one job: no shuffle on p, no Python worker), and if it
+    holds at most DRIVER_BUILD_MAX_DOCS rows and DRIVER_BUILD_MAX_BYTES
+    bytes, a driver loop builds each partition. Every other build is one Spark
+    shape, ``groupBy(partition_col).applyInArrow``, one segment per group.
+    Input already laid out by the partition expression (e.g.
     ``corpus.repartition(n, partition_col("docid", n))``, persisted) builds
     with no shuffle: Spark sees the required distribution is met and plans
     no Exchange. Any other layout is shuffled once on p.
@@ -338,14 +380,28 @@ def build_segments(
     df = corpus.select(
         F.col(id_col).cast("long").alias("docid"), F.col(text_col).alias("text")
     ).withColumn("p", partition_col("docid", n_partitions))
-
-    def writer(key, group):
-        return _build_one(index_dir, generation, analyzer, key[0].as_py(), group)
-
-    return (
-        df.groupBy("p").applyInArrow(writer, from_arrow_schema(MANIFEST_SCHEMA))
-        .toPandas()
+    small = (
+        df.limit(DRIVER_BUILD_MAX_DOCS + 1).toArrow()
+        if n_partitions <= DRIVER_BUILD_MAX_PARTITIONS else None
     )
+    if (small is not None and small.num_rows <= DRIVER_BUILD_MAX_DOCS
+            and small.nbytes <= DRIVER_BUILD_MAX_BYTES):
+        manifests = pa.concat_tables([MANIFEST_SCHEMA.empty_table()] + [
+            _build_one(index_dir, generation, analyzer, p,
+                       small.filter(pc.equal(small["p"], p)))
+            for p in sorted(pc.unique(small["p"]).to_pylist())
+        ]).to_pandas()
+    else:
+        def writer(key, group):
+            # One pyarrow thread per task: Spark supplies the parallelism,
+            # and a per-process all-cores pool would oversubscribe the host.
+            pa.set_cpu_count(1)
+            return _build_one(index_dir, generation, analyzer, key[0].as_py(), group)
+
+        manifests = df.groupBy("p").applyInArrow(
+            writer, from_arrow_schema(MANIFEST_SCHEMA)).toPandas()
+    _mark_complete(index_dir, generation)
+    return manifests
 
 
 def _gen_partitions(segs: dict[int, list[int]]) -> dict[int, list[int]]:
@@ -368,8 +424,9 @@ def finalize_index(
     k1: float = 1.2,
     b: float = 0.75,
 ) -> dict:
-    """Commit every segment on disk, with no Spark job (``spark`` is
-    unused). corpus_stats.json is the commit point: its ``segments`` map
+    """Commit every written segment of every complete generation (one its
+    build marked complete), with no Spark job (``spark`` is unused).
+    corpus_stats.json is the commit point: its ``segments`` map
     ``{p: [gen, ...]}`` names the committed segments, the only ones
     searchers and merges read, and it is replaced atomically (tmp write +
     rename). A generation's term-stats file is written by the first commit
@@ -555,4 +612,5 @@ def merge_index(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
         return _manifest_row(m, skipped=False)
 
     per_partition(spark, sorted(segs), merge_one, MANIFEST_SCHEMA).collect()
+    _mark_complete(out_dir, 0)
     return finalize_index(spark, out_dir, analyzer, stats["k1"], stats["b"])

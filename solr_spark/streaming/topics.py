@@ -86,9 +86,12 @@ def incremental_index_sink(
     batch_id maps to the generation number, so replays of a failed batch hit
     the manifest-resume path (already-committed partitions are skipped) —
     exactly-once segment publication on top of Spark's at-least-once
-    foreachBatch contract. Segments become searchable at finalize_index,
-    the commit. Run merge_index periodically to compact generations (the
-    TieredMergePolicy role)."""
+    foreachBatch contract. A micro-batch within build_segments' driver
+    limits is built on the driver after one Spark job, its bounded
+    collect; a larger one is the Spark build. The generation is marked
+    complete once all its partitions are written, and becomes searchable
+    at the next finalize_index, the commit. Run merge_index periodically
+    to compact generations (the TieredMergePolicy role)."""
     from solr_spark.index.segments import build_segments
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:

@@ -58,6 +58,16 @@ def spark_executor(monkeypatch):
     monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", -1)
 
 
+@pytest.fixture
+def spark_build(monkeypatch):
+    """Force every build_segments onto the Spark executor
+    (groupBy(p).applyInArrow), whatever the partition count and input size:
+    no bounded-collect probe job runs first."""
+    from solr_spark.index import segments
+
+    monkeypatch.setattr(segments, "DRIVER_BUILD_MAX_PARTITIONS", -1)
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 

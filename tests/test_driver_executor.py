@@ -212,16 +212,22 @@ def test_threshold_counts_segment_files_and_postings(spark, sf_dirs, monkeypatch
     assert not ix._on_driver(["spark", "join"], [])
 
 
-def test_driver_query_leaves_arrow_cpu_count(spark, code_dir):
-    """The pyarrow readers no longer pin the process-global thread pool to
-    one thread: that is set once per Spark task (segments.per_partition),
-    so a driver-executed query leaves the driver's pool as it was."""
+def test_driver_query_leaves_arrow_cpu_count(spark, code_dir, sf_docs,
+                                             tmp_path):
+    """The pyarrow readers and the segment writer no longer pin the
+    process-global thread pool to one thread: that is set once per Spark
+    task (segments.per_partition and the build's applyInArrow writer), so a
+    driver-executed query or build leaves the driver's pool as it was."""
     before = pa.cpu_count()
     pa.set_cpu_count(3)
     try:
         ix = PhysicalIndex(spark, code_dir)
         assert ix.topk("def return self", k=10).collect()
         assert ix.phrase_topk("import gabawo pamako", k=10).collect()
+        assert pa.cpu_count() == 3
+        m = build_segments(sf_docs.limit(50), str(tmp_path / "idx"), 4,
+                           id_col="doc_id", text_col="text")
+        assert m["n_docs"].sum() == 50 and not m["skipped"].any()
         assert pa.cpu_count() == 3
     finally:
         pa.set_cpu_count(before)

@@ -141,7 +141,7 @@ def test_merge_equals_one_shot_build(spark, docs, tmp_path_factory, payloads):
 
 
 def test_bucketed_build_equivalent(spark, docs, idx_dir, count_jobs,
-                                   tmp_path_factory):
+                                   spark_build, tmp_path_factory):
     """Persisted input laid out by partition_col builds in ONE stage with no
     shuffle; other input is shuffled once; both answer identically."""
     from solr_spark.index.segments import partition_col
@@ -454,6 +454,34 @@ def _alpha_index(spark, d):
     build_segments(spark.createDataFrame(
         [(i, f"alpha x{i}") for i in range(10, 20)], "doc_id long, text string"),
         d, 2, generation=1, **kw)
+
+
+def test_commit_skips_a_generation_still_being_written(spark, tmp_path_factory):
+    """A commit made while generation 1 is still being written (one of its
+    two partitions is, and its build has not marked it complete) keeps the
+    previous commit's n_docs and top-10; once the build has written every
+    partition, the next commit names the generation."""
+    import pyarrow.compute as pc
+
+    from solr_spark.index.segments import _build_one, partition_col
+
+    d = str(tmp_path_factory.mktemp("partial_gen") / "idx")
+    kw = dict(analyzer="simple", id_col="doc_id", text_col="text")
+    build_index_dir(spark.createDataFrame(
+        [(i, f"alpha w{i}") for i in range(10)], "doc_id long, text string"),
+        d, n_partitions=2, **kw)
+    want = _hex_rows(PhysicalIndex(spark, d).topk("alpha", k=10))
+    gen1 = spark.createDataFrame(
+        [(i, f"alpha x{i}") for i in range(10, 20)], "doc_id long, text string")
+    rows = gen1.select(F.col("doc_id").alias("docid"), "text",
+                       partition_col("doc_id", 2).alias("p")).toArrow()
+    _build_one(d, 1, "simple", 0, rows.filter(pc.equal(rows["p"], 0)))
+    assert finalize_index(spark, d, "simple")["n_docs"] == 10
+    ix = PhysicalIndex(spark, d)
+    assert ix.stats["generations"] == [0]
+    assert _hex_rows(ix.topk("alpha", k=10)) == want
+    build_segments(gen1, d, 2, generation=1, **kw)
+    assert finalize_index(spark, d, "simple")["n_docs"] == 20
 
 
 def test_searcher_reads_only_committed_segments(spark, tmp_path_factory):

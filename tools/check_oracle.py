@@ -8,11 +8,11 @@ Usage: python tools/check_oracle.py [sf_dir] [name_filter...]
                                     [--skip name ...] [--resume-log file]
 
 --skip drops entries whose name contains any given substring (for
-oracles that are impractical at a large sf, e.g. the cubic geometry
-CTEs); --resume-log skips entries already reported ok/okR in a previous
-run's log, so an interrupted sweep continues where it stopped. The first
-line printed is ``sf_dir <path>``; a resume log whose header is missing or
-names a different sf_dir is refused (exit 2).
+oracles that are impractical at a large sf); --resume-log skips entries
+already reported ok/okR in a previous run's log, so an interrupted sweep
+continues where it stopped. The first line printed is ``sf_dir <path>``;
+a resume log whose header is missing or names a different sf_dir is
+refused (exit 2).
 """
 
 from __future__ import annotations
