@@ -15,6 +15,7 @@ import json
 import os
 
 import pytest
+from conftest import SF_DIR
 from pyspark.sql import functions as F
 
 from solr_spark.index import segments
@@ -25,7 +26,7 @@ from solr_spark.index.segments import (
 )
 from solr_spark.streaming.topics import incremental_index_sink
 
-SF_DOCS = "/root/testdata/sf0.001/documents.parquet"
+SF_DOCS = f"{SF_DIR}/documents.parquet"
 
 
 @pytest.fixture(scope="module")
