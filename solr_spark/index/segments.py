@@ -6,9 +6,9 @@ Mirrors the Lucene/Solr indexing lifecycle (SURVEY.md §3.2) Spark-first:
   analogue of IndexWriter's flush: analyze, invert, compress posting lists,
   write files), by one of two executors running the same per-partition
   function. A small build (at most DRIVER_BUILD_MAX_PARTITIONS partitions,
-  and an input whose bounded collect holds at most DRIVER_BUILD_MAX_DOCS
-  rows and DRIVER_BUILD_MAX_BYTES bytes) runs in a driver loop after that
-  one collect job, as Solr indexes an update request in the request thread
+  and an input of at most DRIVER_BUILD_MAX_DOCS rows and
+  DRIVER_BUILD_MAX_BYTES of text) runs in a driver loop after a bounded
+  collect job, as Solr indexes an update request in the request thread
   (DirectUpdateHandler2.addDoc). Any other build is one Spark shape,
   ``groupBy(partition_col).applyInArrow``: input already laid out by
   ``partition_col`` (persisted, or a table bucketed by docid hash) builds
@@ -305,14 +305,21 @@ def partition_col(id_col: str = "docid", n_partitions: int = 32):
 
 
 # The driver build's limits (build_segments), from the crossover against the
-# Spark build measured on a 4-core host over ~1.1 KB code-corpus docs: the
-# serial driver loop is faster up to ~3k docs (~3.3 MiB) at 4 and 32
-# partitions, and slower from ~4k docs (~4.4 MiB), where the 4 Spark tasks
-# overtake it. The byte cap, Solr's ramBufferSizeMB role, binds for larger
-# docs. Constants, not options, like query.wand's DRIVER_MAX_SEGMENT_FILES.
+# Spark build measured on a 4-core host (parquet input, text_en, 4 and 32
+# partitions). Over ~1.1 KB docs the serial driver loop is faster up to ~3k
+# docs (~3.3 MiB) and slower from ~4k docs (~4.4 MiB), where the 4 Spark
+# tasks overtake it; over 16 KB and 64 KB docs it is faster or level up to
+# ~3 MiB of text and slower from ~3.9 MiB. The byte cap binds for docs
+# longer than ~1.5 KB. Constants, not options, like query.wand's
+# DRIVER_MAX_SEGMENT_FILES.
 DRIVER_BUILD_MAX_PARTITIONS = 32
 DRIVER_BUILD_MAX_DOCS = 2048
-DRIVER_BUILD_MAX_BYTES = 4 << 20
+DRIVER_BUILD_MAX_BYTES = 3 << 20
+# The probe brings back a doc's text only up to this length, so it copies
+# at most (DRIVER_BUILD_MAX_DOCS + 1) x 16 KiB = 32 MiB to the driver
+# whatever the input; a build within the caps that holds a longer doc reads
+# its input a second time.
+DRIVER_BUILD_PROBE_DOC_BYTES = 16 << 10
 
 
 def _build_one(index_dir: str, generation: int, analyzer: str,
@@ -366,12 +373,15 @@ def build_segments(
     Two executors run the same per-partition ``_build_one``, so they write
     byte-identical segments. A small build runs on the driver, as Solr
     indexes an update request in its request thread: with at most
-    DRIVER_BUILD_MAX_PARTITIONS partitions (known with no job), the input is
-    read once by a bounded collect, ``limit(DRIVER_BUILD_MAX_DOCS + 1)
-    .toArrow()`` (one job: no shuffle on p, no Python worker), and if it
-    holds at most DRIVER_BUILD_MAX_DOCS rows and DRIVER_BUILD_MAX_BYTES
-    bytes, a driver loop builds each partition. Every other build is one Spark
-    shape, ``groupBy(partition_col).applyInArrow``, one segment per group.
+    DRIVER_BUILD_MAX_PARTITIONS partitions (known with no job), a bounded
+    collect, ``limit(DRIVER_BUILD_MAX_DOCS + 1).toArrow()`` (one job: no
+    shuffle on p, no Python worker), brings back each doc's text length and
+    the text of each doc of at most DRIVER_BUILD_PROBE_DOC_BYTES. If the
+    input holds at most DRIVER_BUILD_MAX_DOCS rows and DRIVER_BUILD_MAX_BYTES
+    of text, a driver loop builds each partition; if it holds a longer doc,
+    a second bounded collect first reads the whole input. Every other build
+    (one over a cap pays the probe job first) is one Spark shape,
+    ``groupBy(partition_col).applyInArrow``, one segment per group.
     Input already laid out by the partition expression (e.g.
     ``corpus.repartition(n, partition_col("docid", n))``, persisted) builds
     with no shuffle: Spark sees the required distribution is met and plans
@@ -380,12 +390,16 @@ def build_segments(
     df = corpus.select(
         F.col(id_col).cast("long").alias("docid"), F.col(text_col).alias("text")
     ).withColumn("p", partition_col("docid", n_partitions))
-    small = (
-        df.limit(DRIVER_BUILD_MAX_DOCS + 1).toArrow()
-        if n_partitions <= DRIVER_BUILD_MAX_PARTITIONS else None
-    )
+    small = None
+    if n_partitions <= DRIVER_BUILD_MAX_PARTITIONS:
+        n = F.coalesce(F.octet_length("text"), F.lit(0))
+        text = F.when(n <= DRIVER_BUILD_PROBE_DOC_BYTES, F.col("text"))
+        small = df.select("docid", text.alias("text"), "p", n.alias("n")) \
+            .limit(DRIVER_BUILD_MAX_DOCS + 1).toArrow()
     if (small is not None and small.num_rows <= DRIVER_BUILD_MAX_DOCS
-            and small.nbytes <= DRIVER_BUILD_MAX_BYTES):
+            and (pc.sum(small["n"]).as_py() or 0) <= DRIVER_BUILD_MAX_BYTES):
+        if (pc.max(small["n"]).as_py() or 0) > DRIVER_BUILD_PROBE_DOC_BYTES:
+            small = df.limit(DRIVER_BUILD_MAX_DOCS + 1).toArrow()
         manifests = pa.concat_tables([MANIFEST_SCHEMA.empty_table()] + [
             _build_one(index_dir, generation, analyzer, p,
                        small.filter(pc.equal(small["p"], p)))
@@ -435,7 +449,8 @@ def finalize_index(
     anything is written on a segment built with an analyzer other than
     ``analyzer`` (queries analyzed one way would silently miss its terms)
     or a committed generation whose partitions changed (its file would no
-    longer match it)."""
+    longer match it) or that is no longer written and marked complete (an
+    index built before completion markers: rebuild it)."""
     import pyarrow.parquet as pq
 
     segs = _written_segments(index_dir)
@@ -459,6 +474,11 @@ def finalize_index(
                 f"{committed[g]}, now {ps}): build the new rows as a new "
                 "generation"
             )
+    if lost := sorted(committed.keys() - gens.keys()):
+        raise ValueError(
+            f"generations {lost} of the last commit have no written segment "
+            f"or no completion marker under {_complete_dir(index_dir)}"
+        )
     for g in gens.keys() - committed.keys():
         t = pa.concat_tables(
             pq.read_table(f"{_seg_dir(index_dir, p, g)}/postings.parquet",

@@ -87,8 +87,9 @@ def incremental_index_sink(
     the manifest-resume path (already-committed partitions are skipped) —
     exactly-once segment publication on top of Spark's at-least-once
     foreachBatch contract. A micro-batch within build_segments' driver
-    limits is built on the driver after one Spark job, its bounded
-    collect; a larger one is the Spark build. The generation is marked
+    limits is built on the driver after its bounded collect (one Spark
+    job, two if a doc is longer than 16 KiB); a larger one is the Spark
+    build. The generation is marked
     complete once all its partitions are written, and becomes searchable
     at the next finalize_index, the commit. Run merge_index periodically
     to compact generations (the TieredMergePolicy role)."""

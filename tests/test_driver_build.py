@@ -1,11 +1,12 @@
 """The segment build's two executors (index.segments ``build_segments``).
 
 A build of at most DRIVER_BUILD_MAX_PARTITIONS partitions whose input
-holds at most DRIVER_BUILD_MAX_DOCS rows runs ``_build_one`` in a driver
-loop after one bounded-collect job; every other build is the Spark
-``groupBy(p).applyInArrow`` stage. Both run the same per-partition
-function, so the files they write must be byte-identical: for every
-analyzer, a partition with no tokens, and 1, 4 and 32 partitions.
+holds at most DRIVER_BUILD_MAX_DOCS rows and DRIVER_BUILD_MAX_BYTES of text
+runs ``_build_one`` in a driver loop after a bounded-collect job; every
+other build is the Spark ``groupBy(p).applyInArrow`` stage. Both run the
+same per-partition function, so the files they write must be
+byte-identical: for every analyzer, a partition with no tokens, and 1, 4
+and 32 partitions.
 """
 
 from __future__ import annotations
@@ -130,10 +131,14 @@ def test_resume_and_lineage_on_both_executors(spark, sf_rows, monkeypatch,
         build_segments(changed, d, 4)
 
 
+@pytest.mark.parametrize("case", ["docs_over", "bytes_over", "long_docs"])
 def test_sink_commit_job_counts(spark, sf_rows, count_jobs, monkeypatch,
-                                tmp_path):
-    """A 10-doc micro-batch under the cap is one job (its bounded collect);
-    over the cap, the probe job is followed by the Spark build's jobs."""
+                                tmp_path, case):
+    """A 10-doc micro-batch under the caps is one job (its bounded collect).
+    Over either cap, the probe job is followed by the Spark build's jobs.
+    Within the caps but with a doc longer than DRIVER_BUILD_PROBE_DOC_BYTES,
+    the driver build reads its input twice. The probe never brings back a
+    text longer than that, and every build writes the same files."""
     batch = spark.createDataFrame(sf_rows[:10], "docid long, content string")
     sink = incremental_index_sink(str(tmp_path / "small"), n_partitions=4)
     _, jobs = count_jobs(lambda: sink(batch, 1))
@@ -144,13 +149,28 @@ def test_sink_commit_job_counts(spark, sf_rows, count_jobs, monkeypatch,
         m.setattr(segments, "DRIVER_BUILD_MAX_PARTITIONS", -1)
         _, spark_jobs = count_jobs(lambda: incremental_index_sink(
             str(tmp_path / "spark"), n_partitions=4)(batch, 1))
-    monkeypatch.setattr(segments, "DRIVER_BUILD_MAX_DOCS", 9)
-    _, over = count_jobs(lambda: incremental_index_sink(
-        str(tmp_path / "over"), n_partitions=4)(batch, 1))
-    assert len(over) == 1 + len(spark_jobs) >= 2
-    for d in ("over", "spark"):
+    lengths = sorted(len(t.encode()) for _, t in sf_rows[:10])
+    cap, value, want = {
+        "docs_over": ("DRIVER_BUILD_MAX_DOCS", 9, 1 + len(spark_jobs)),
+        "bytes_over": ("DRIVER_BUILD_MAX_BYTES", sum(lengths) - 1,
+                       1 + len(spark_jobs)),
+        "long_docs": ("DRIVER_BUILD_PROBE_DOC_BYTES", lengths[5], 2),
+    }[case]
+    monkeypatch.setattr(segments, cap, value)
+    probed = []
+    to_arrow = type(batch).toArrow
+    monkeypatch.setattr(type(batch), "toArrow",
+                        lambda self: probed.append(to_arrow(self)) or probed[-1])
+    _, jobs = count_jobs(lambda: incremental_index_sink(
+        str(tmp_path / case), n_partitions=4)(batch, 1))
+    assert len(jobs) == want
+    texts = probed[0]["text"].to_pylist()
+    assert max(len(t.encode()) for t in texts if t) \
+        <= segments.DRIVER_BUILD_PROBE_DOC_BYTES
+    assert (None in texts) == (case == "long_docs")
+    for d in (case, "spark"):
         finalize_index(spark, str(tmp_path / d))
-    assert _files(str(tmp_path / "over")) == _files(str(tmp_path / "spark"))
+    assert _files(str(tmp_path / case)) == _files(str(tmp_path / "spark"))
 
 
 def test_many_partitions_launch_no_probe(spark, sf_rows, count_jobs,

@@ -9,6 +9,7 @@ at 8 partitions, with and without block-max pruning.
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -20,6 +21,7 @@ from solr_spark.index.segments import (
     build_segments,
     finalize_index,
     merge_index,
+    read_corpus_stats,
 )
 from solr_spark.query.bm25 import bm25_topk
 from solr_spark.query.wand import PhysicalIndex, wand_topk
@@ -482,6 +484,20 @@ def test_commit_skips_a_generation_still_being_written(spark, tmp_path_factory):
     assert _hex_rows(ix.topk("alpha", k=10)) == want
     build_segments(gen1, d, 2, generation=1, **kw)
     assert finalize_index(spark, d, "simple")["n_docs"] == 20
+
+
+def test_commit_refuses_a_lost_generation(spark, tmp_path_factory):
+    """A generation the last commit names that is no longer marked complete
+    (an index written before completion markers) is refused, not dropped
+    from the next commit."""
+    d = str(tmp_path_factory.mktemp("lost_gen") / "idx")
+    build_index_dir(spark.createDataFrame(
+        [(i, f"alpha w{i}") for i in range(10)], "doc_id long, text string"),
+        d, n_partitions=2, id_col="doc_id", text_col="text")
+    os.remove(f"{d}/seg/_complete/0")
+    with pytest.raises(ValueError, match=r"generations \[0\] of the last commit"):
+        finalize_index(spark, d, "simple")
+    assert read_corpus_stats(d)["n_docs"] == 10
 
 
 def test_searcher_reads_only_committed_segments(spark, tmp_path_factory):
