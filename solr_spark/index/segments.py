@@ -64,10 +64,11 @@ Layout (every column is read by a scorer, the merge or finalize_index):
 Scale notes: P is chosen so one partition's docs fit an executor (at 10^12
 docs → P in the tens of thousands; parquet + manifests shard naturally).
 Postings are sorted by term but written with pyarrow's default row-group
-size (1Mi rows), so each postings.parquet is one row group: a query reads
-its columns of every term row of the partition's committed segments and
-then filters them. Sizing the row groups waits on a large-index benchmark
-(ROADMAP).
+size (1Mi rows), so each postings.parquet is one row group. A query reads
+only the row groups whose term range could hold a query term
+(query.wand.SegmentReader), so today it reads every term row of a segment
+whose term range it meets. Sizing the row groups waits on a large-index
+benchmark (ROADMAP).
 """
 
 from __future__ import annotations
@@ -244,9 +245,9 @@ def _write_segment(
     os.makedirs(tmp, exist_ok=True)
 
     pq.write_table(postings, os.path.join(tmp, "postings.parquet"))
-    # Small row groups on the doc table: queries read it only to map top-k
-    # ords -> docids with a row-group-pruned filtered read, so row-group
-    # granularity IS the read granularity.
+    # The doc table is written in ord order (ord = row number), which lets
+    # a query's SegmentReader map ords -> docids by indexing its docid
+    # column; its 16Ki-row groups are part of the segment format.
     pq.write_table(docs, os.path.join(tmp, "docs.parquet"),
                    row_group_size=16384)
 

@@ -5,19 +5,26 @@ corpus_stats.json, whose segments and generations are the searcher's
 snapshot, as Lucene's IndexSearcher pins its segments. A segment written
 but not yet committed (finalize_index) is not read. A term's df is summed
 over the snapshot's per-generation term_stats files, which no commit
-rewrites, by a term-IN filtered pyarrow read on the driver: no job, and
-the same answer whatever is committed after the searcher opened.
+rewrites, by a pyarrow read of their row groups that could hold the terms
+on the driver: no job, and the same answer whatever is committed after the
+searcher opened.
 
 Every physical query (term ``topk``, boolean ``search``, ``phrase_topk``,
 ``payload_topk``) runs one per-partition function for each segment
 partition p: for each of p's committed segments, generation by generation,
-read its postings.parquet with pyarrow (column pruning + the query's term
-filter) as a list of rows, and score them. Arrow is the only table from
-the file to the Spark boundary: no pandas frame is built. Each
-postings.parquet is written as one row group (pyarrow's default
-size, 1Mi rows), so the term filter prunes no row group: every query reads
-the requested columns of all term rows of the partition's committed
-segments and filters them in memory.
+read its postings rows for the query's terms as a list of rows, and score
+them. A segment is read through its ``SegmentReader``, opened once per
+process and file identity and kept in a bounded LRU (``_reader``), as
+Lucene's SegmentReader is shared by every searcher that names the segment:
+it holds the postings file's footer, with each row group's term
+[min, max], and the segment's ord -> docid column. A postings read takes,
+with column pruning, only the row groups whose range could hold a query
+term or prefix (``ParquetFile.read_row_groups``, no pyarrow Dataset), then
+masks the rows by term; a segment whose ranges hold none is not opened.
+Arrow is the only table from the file to the Spark boundary: no pandas
+frame is built. Each postings.parquet is written today as one row group
+(pyarrow's default size, 1Mi rows), so a read takes all of a segment's
+term rows unless the segment's whole term range misses the query.
 The global merge keeps the top k by (score desc, docid asc). Two executors
 run that same function (``PhysicalIndex._topk``):
 
@@ -80,13 +87,12 @@ as Lucene's PhraseQuery.rewrite turns it into a TermQuery.
 Scores use the SmallFloat-QUANTIZED doc length (Lucene parity). The norm
 byte travels INSIDE the posting list (1 byte per posting, like Lucene's
 impact data), so scoring touches ONLY the query terms' postings rows —
-never the doc table. The doc table is read once per partition at the very
-end, with an ord-IN filtered, row-group-pruned parquet read, purely to map
-the winning top-k ordinals back to docids (a searchsorted over the sorted
-``ord`` column). Per-query IO is therefore the
-requested postings columns of every committed segment (each postings file
-is one row group) plus the docs row groups holding the top-k ords; decode
-and scoring touch only the query terms' postings.
+never the doc table. The doc table's docid column is read once per
+segment reader, in ord order, and maps each segment's winning top-k
+ordinals back to docids by indexing (``docids[ords]``). Per-query IO is
+therefore the requested postings columns of the row groups that could hold
+a query term, in the segments whose term range does; decode and scoring
+touch only the query terms' postings.
 
 Rank-identity across partition counts and across the two executors holds
 because scoring is per-doc exact and the tiebreak (score desc, docid asc)
@@ -96,6 +102,8 @@ is total.
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
 from functools import cached_property, partial
 
 import numpy as np
@@ -150,37 +158,135 @@ def _decode_all(r) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return o, t, norms
 
 
-def _lookup_docids(seg_dir: str, ords: np.ndarray) -> np.ndarray:
-    """Map segment-local ordinals to docids via a filtered parquet read
-    (row-group pruned; the doc table is written with small row groups, in
-    ``ord`` order, so the read rows are sorted by ord)."""
-    import pyarrow.parquet as pq
-
-    tbl = pq.read_table(
-        f"{seg_dir}/docs.parquet",
-        columns=["ord", "docid"],
-        filters=[("ord", "in", ords.tolist())],
-        use_threads=False,
+def _may_hold(lo: str, hi: str, terms: list[str], prefixes: list[str]) -> bool:
+    """Whether a row group whose terms span [lo, hi] could hold one of
+    ``terms`` or a term starting with one of ``prefixes``. The terms with
+    prefix ``pref`` are one contiguous run from ``pref`` upward, so the
+    range meets it iff hi >= pref and lo is at most pref or in the run."""
+    return any(lo <= t <= hi for t in terms) or any(
+        hi >= pref and (lo <= pref or lo.startswith(pref)) for pref in prefixes
     )
-    return tbl["docid"].to_numpy()[np.searchsorted(tbl["ord"].to_numpy(), ords)]
 
 
-def _read_postings(
-    seg_dir: str, columns: list[str], terms: list[str], prefixes: list[str]
-) -> list[dict]:
-    """One segment's postings rows whose term is in ``terms`` or starts
-    with one of ``prefixes``, in file row order."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
+class TermFile:
+    """A parquet file sorted by ``term`` (a segment's postings.parquet, a
+    generation's term-stats file), opened once: its footer and each row
+    group's term [min, max] from the footer's statistics. A read takes only
+    the row groups whose range could hold a requested term, as Lucene's
+    term dictionary points into the postings file instead of scanning it."""
 
-    term = pc.field("term")
-    cond = term.isin(pa.array(terms, pa.string()))
-    for pref in prefixes:
-        cond = cond | pc.starts_with(term, pref)
-    return pq.read_table(
-        f"{seg_dir}/postings.parquet",
-        columns=columns, filters=cond, use_threads=False,
-    ).to_pylist()
+    def __init__(self, path: str):
+        import pyarrow.parquet as pq
+
+        self.path = path
+        self.footer = pq.read_metadata(path)
+        col = self.footer.schema.names.index("term")
+        # (row group, its term range) of each non-empty row group; the range
+        # is None without min/max statistics (a writer may drop them for
+        # long values), and such a group is read whatever the terms are.
+        self.ranges: list[tuple[int, tuple[str, str] | None]] = []
+        for i in range(self.footer.num_row_groups):
+            rg = self.footer.row_group(i)
+            if rg.num_rows:
+                st = rg.column(col).statistics
+                has = st is not None and st.has_min_max
+                self.ranges.append((i, (st.min, st.max) if has else None))
+        self.nbytes = self.footer.serialized_size
+
+    @staticmethod
+    def files(path: str) -> list[str]:
+        return [path]
+
+    def read(
+        self, columns: list[str], terms: list[str], prefixes: list[str]
+    ) -> pa.Table | None:
+        """The rows whose term is in ``terms`` or starts with one of
+        ``prefixes``, in file row order; None, without opening the file,
+        when no row group's range could hold one."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        groups = [
+            i for i, r in self.ranges
+            if r is None or _may_hold(*r, terms, prefixes)
+        ]
+        if not groups:
+            return None
+        with pq.ParquetFile(self.path, metadata=self.footer) as f:
+            tbl = f.read_row_groups(groups, columns=columns, use_threads=False)
+        term = tbl["term"]
+        mask = pc.is_in(term, value_set=pa.array(terms, pa.string()))
+        for pref in prefixes:
+            mask = pc.or_(mask, pc.starts_with(term, pref))
+        return tbl.filter(mask)
+
+
+class SegmentReader:
+    """One committed segment's read state, opened once per file identity
+    (``_reader``): its postings file (``TermFile``) and its ord -> docid
+    column. Both builders write docs.parquet in ord order with ord = row
+    number, so ``docids[ords]`` maps a segment's winning ordinals."""
+
+    def __init__(self, seg_dir: str):
+        import pyarrow.parquet as pq
+
+        self.postings = TermFile(f"{seg_dir}/postings.parquet")
+        self.docids = pq.read_table(
+            f"{seg_dir}/docs.parquet", columns=["docid"], use_threads=False
+        )["docid"].to_numpy()
+        self.nbytes = self.postings.nbytes + self.docids.nbytes
+
+    @staticmethod
+    def files(seg_dir: str) -> list[str]:
+        return [f"{seg_dir}/postings.parquet", f"{seg_dir}/docs.parquet"]
+
+    def rows(
+        self, columns: list[str], terms: list[str], prefixes: list[str]
+    ) -> list[dict]:
+        """The segment's postings ``columns`` rows for ``terms`` and
+        ``prefixes``, in file row order."""
+        tbl = self.postings.read(columns, terms, prefixes)
+        return [] if tbl is None else tbl.to_pylist()
+
+
+# Every reader this process opened (driver, or a Spark Python worker),
+# least recently used first: path -> (file identity, reader). One entry per
+# path, so a path rewritten in place replaces its reader. The cached bytes
+# (footers and docid columns) are bounded by a constant.
+_READERS: OrderedDict[str, tuple[tuple, SegmentReader | TermFile]] = OrderedDict()
+_CACHE_LOCK = threading.Lock()
+READER_CACHE_BYTES = 64 << 20
+_reader_bytes = 0
+
+
+def _file_id(path: str) -> tuple[int, int, int]:
+    st = os.stat(path)
+    return st.st_ino, st.st_mtime_ns, st.st_size
+
+
+def _reader(cls, path: str):
+    """The reader of ``path`` -- ``SegmentReader`` of a segment dir or
+    ``TermFile`` of a term-stats file -- from the process-level LRU, opened
+    only when no reader of the path's current files is cached (an unchanged
+    segment keeps its reader across queries and searcher reopens, as
+    Lucene's DirectoryReader.openIfChanged keeps its SegmentReaders)."""
+    global _reader_bytes
+    ident = tuple(map(_file_id, cls.files(path)))
+    with _CACHE_LOCK:
+        hit = _READERS.get(path)
+        if hit is not None and hit[0] == ident:
+            _READERS.move_to_end(path)
+            return hit[1]
+    reader = cls(path)
+    with _CACHE_LOCK:
+        old = _READERS.pop(path, None)
+        if old is not None:
+            _reader_bytes -= old[1].nbytes
+        _READERS[path] = (ident, reader)
+        _reader_bytes += reader.nbytes
+        while _reader_bytes > READER_CACHE_BYTES and len(_READERS) > 1:
+            _reader_bytes -= _READERS.popitem(last=False)[1][1].nbytes
+    return reader
 
 
 def _result(docids: np.ndarray, scores: np.ndarray) -> pa.Table:
@@ -192,14 +298,14 @@ def _result(docids: np.ndarray, scores: np.ndarray) -> pa.Table:
     )
 
 
-def _segment_topk(score_gen, k: int, read, seg_dirs: list[str]) -> pa.Table:
+def _segment_topk(score_gen, k: int, read, readers: list[SegmentReader]) -> pa.Table:
     """The per-segment top-k path of every BM25 query kind: score each of a
     partition's segments with ``score_gen`` (its postings rows, from
     ``read`` -> (ordinals, scores)), keep the segment's top k, and map the
     kept ordinals to docids."""
     out_docids, out_scores = [_NO_HITS[0]], [_NO_HITS[1]]
-    for seg_dir in seg_dirs:
-        ords, scores = score_gen(read(seg_dir))
+    for reader in readers:
+        ords, scores = score_gen(read(reader))
         if scores.size > k:
             # Keep EVERY doc tied with the k-th best score (argpartition alone
             # picks an arbitrary subset of boundary ties, which could drop a
@@ -209,7 +315,7 @@ def _segment_topk(score_gen, k: int, read, seg_dirs: list[str]) -> pa.Table:
             keep = scores >= kth
             ords, scores = ords[keep], scores[keep]
         if ords.size:
-            out_docids.append(_lookup_docids(seg_dir, ords))
+            out_docids.append(reader.docids[ords])
             out_scores.append(scores)
     return _result(np.concatenate(out_docids), np.concatenate(out_scores))
 
@@ -499,9 +605,11 @@ def _tree_scores(
 _PAYLOAD_BOUNDED = {"max", "sum", "average", "first"}
 
 
-def _payload_partition(func: str, k: int, read, seg_dirs: list[str]) -> pa.Table:
+def _payload_partition(
+    func: str, k: int, read, readers: list[SegmentReader]
+) -> pa.Table:
     """Top-k (docid, score) for ONE term's payload postings (``read`` from
-    each of ``seg_dirs``) in one segment partition, score = ``func`` over
+    each of ``readers``) in one segment partition, score = ``func`` over
     the payloads at the term's positions (PayloadScoreQParserPlugin.java,
     includeSpanScore=false).
 
@@ -527,7 +635,7 @@ def _payload_partition(func: str, k: int, read, seg_dirs: list[str]) -> pa.Table
             return -np.inf
         return float(np.partition(allsc, allsc.size - k)[allsc.size - k])
 
-    rows = [(i, r) for i, seg_dir in enumerate(seg_dirs) for r in read(seg_dir)]
+    rows = [(i, r) for i, reader in enumerate(readers) for r in read(reader)]
     for seg_i, r in rows:  # one row per segment holding this term
         pays = np.frombuffer(r["pays"], dtype=np.float32)
         bmp = np.asarray(r["block_max_pay"], dtype=np.float64)
@@ -590,7 +698,7 @@ def _payload_partition(func: str, k: int, read, seg_dirs: list[str]) -> pa.Table
     docids = np.empty(ords.size, dtype=np.int64)
     for g in np.unique(segs):
         gm = segs == g
-        docids[gm] = _lookup_docids(seg_dirs[g], ords[gm])
+        docids[gm] = readers[g].docids[ords[gm]]
     order = np.lexsort((docids, -scores))[:k]
     return _result(docids[order], scores[order])
 
@@ -637,21 +745,19 @@ class PhysicalIndex:
         )
 
     def _df_for_terms(self, terms: list[str]) -> dict[str, int]:
-        """Global df for ``terms``: a term-IN filtered pyarrow read of the
-        snapshot's term_stats files, summed per term — no Spark job, and
+        """Global df for ``terms``: the rows for ``terms`` of the snapshot's
+        term_stats files (``TermFile`` readers: only the row groups whose
+        term range could hold one), summed per term — no Spark job, and
         never a full dictionary collect."""
         missing = [t for t in terms if t not in self._term_df_cache]
         if missing:
-            import pyarrow.parquet as pq
-
-            found = {}
-            if self._df_files:
-                tbl = pq.read_table(
-                    self._df_files,
-                    columns=["term", "df"],
-                    filters=[("term", "in", missing)],
-                ).group_by("term").aggregate([("df", "sum")])
-                found = dict(zip(tbl["term"].to_pylist(), tbl["df_sum"].to_pylist()))
+            found: dict[str, int] = {}
+            for path in self._df_files:
+                tbl = _reader(TermFile, path).read(["term", "df"], missing, [])
+                if tbl is None:
+                    continue
+                for t, df in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()):
+                    found[t] = found.get(t, 0) + df
             for t in missing:
                 self._term_df_cache[t] = found.get(t)
             while len(self._term_df_cache) > self.TERM_CACHE_MAX:
@@ -930,20 +1036,24 @@ class PhysicalIndex:
         partition,
     ) -> DataFrame:
         """Every physical query's execution: per snapshot partition p, run
-        ``partition(read, seg_dirs)`` over p's committed segment dirs, where
-        ``read(seg_dir)`` gives a segment's postings ``columns`` rows for
-        ``terms``/``prefixes``; then keep the top k by
-        (score desc, docid asc). Small queries (``_on_driver``) run the
-        partitions in a driver loop and return a LocalRelation, no Spark
+        ``partition(read, readers)`` over the ``SegmentReader``s of p's
+        committed segments, where ``read(reader)`` gives a segment's
+        postings ``columns`` rows for ``terms``/``prefixes``; then keep the
+        top k by (score desc, docid asc). Small queries (``_on_driver``) run
+        the partitions in a driver loop and return a LocalRelation, no Spark
         job; the rest run as one job of one stage (``per_partition``, then
-        TakeOrderedAndProject)."""
+        TakeOrderedAndProject). Either way the readers come from the
+        running process's reader cache (``_reader``)."""
         index_dir, segments = self.index_dir, self.segments
-        read = partial(
-            _read_postings, columns=columns, terms=terms, prefixes=prefixes
-        )
+
+        def read(reader: SegmentReader) -> list[dict]:
+            return reader.rows(columns, terms, prefixes)
 
         def score(p: int) -> pa.Table:
-            return partition(read, [_seg_dir(index_dir, p, g) for g in segments[p]])
+            return partition(read, [
+                _reader(SegmentReader, _seg_dir(index_dir, p, g))
+                for g in segments[p]
+            ])
 
         if self._on_driver(terms, prefixes):
             out = pa.concat_tables(score(p) for p in sorted(segments))
@@ -954,7 +1064,12 @@ class PhysicalIndex:
         return scored.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
 
 
-_READER_CACHE: dict[tuple[str, str], PhysicalIndex] = {}
+# open_index's searchers, least recently opened or reused first, keyed by
+# (Spark application, index dir). A constant bound, as with _READERS: a
+# process that opens many index dirs (and deletes them) keeps only the last
+# few searchers and their df caches.
+_SEARCHERS: OrderedDict[tuple[str, str], PhysicalIndex] = OrderedDict()
+SEARCHER_CACHE_MAX = 8
 
 
 def _commit_token(index_dir: str) -> tuple:
@@ -971,12 +1086,20 @@ def open_index(spark: SparkSession, index_dir: str) -> PhysicalIndex:
     directory and invalidated by commit token: after incremental_index_sink
     adds a generation or merge_index rewrites the directory, the next open
     sees a changed token and reopens (fresh N/avgdl/df + file listing) —
-    the analogue of Solr's openSearcher-on-commit."""
+    the analogue of Solr's openSearcher-on-commit. The new searcher reads
+    the segments the new commit still names through their cached readers
+    (``_reader``). At most SEARCHER_CACHE_MAX searchers are kept."""
     key = (spark.sparkContext.applicationId, index_dir)
-    cached = _READER_CACHE.get(key)
+    with _CACHE_LOCK:
+        cached = _SEARCHERS.get(key)
     if cached is None or cached.commit_token != _commit_token(index_dir):
-        _READER_CACHE[key] = PhysicalIndex(spark, index_dir)
-    return _READER_CACHE[key]
+        cached = PhysicalIndex(spark, index_dir)
+    with _CACHE_LOCK:
+        _SEARCHERS[key] = cached
+        _SEARCHERS.move_to_end(key)
+        while len(_SEARCHERS) > SEARCHER_CACHE_MAX:
+            _SEARCHERS.popitem(last=False)
+    return cached
 
 
 def wand_topk(
