@@ -115,11 +115,15 @@ def _replicate_docs(spark, docs, n_docs: int, factor: int, n_parts: int,
 
 
 def _growth_decade(spark, docs, n_docs: int, tag: str, factor: int,
-                   n_parts: int, phys_parts: int, jobs) -> tuple[dict, dict]:
+                   n_parts: int, phys_parts: int, jobs, bm25=BM25_QUERIES[:1],
+                   sf_dir: str = "", entries=(), slop2: bool = False
+                   ) -> tuple[dict, dict]:
     """One single-run growth decade: the documents replicated ``factor``x
-    through the tightest representative subset — both index builds, one
-    BM25 probe per path, and the two heaviest pipeline ``jobs``. Returns
-    (per-query seconds, ``<tag>_*`` build stats)."""
+    through a representative subset — both index builds, the ``bm25``
+    queries, the catalog ``entries`` (over the replica, with ``sf_dir``'s
+    other tables linked in), one WAND probe (plus a slop-2 phrase probe
+    with ``slop2``), and the pipeline ``jobs``. Returns (per-query seconds,
+    ``<tag>_*`` build stats)."""
     from solr_spark.index.segments import build_index_dir
     from solr_spark.query.wand import open_index
 
@@ -136,10 +140,24 @@ def _growth_decade(spark, docs, n_docs: int, tag: str, factor: int,
 
     build_sec, idx = _timed(_build)
     stats[f"{tag}_index_build_sec"] = round(build_sec, 3)
-    terms = sorted(set(analyze("spark join data", "simple")))
-    sec, _ = _timed(lambda: bm25_topk(idx, terms, k=10,
-                                      quantize_norms=False).collect())
-    timings["bm25_3term"] = round(sec, 3)
+    for name, q in bm25:
+        terms = sorted(set(analyze(q, "simple")))
+        sec, _ = _timed(lambda: bm25_topk(idx, terms, k=10,
+                                          quantize_norms=False).collect())
+        timings[name] = round(sec, 3)
+    if entries:
+        from solr_spark.entry_queries import CATALOG, _IDX_CACHE
+
+        for t in ["region", "nation", "customer", "supplier", "part",
+                  "orders", "lineitem", "events", "embeddings"]:
+            src = f"{sf_dir}/{t}.parquet"
+            if os.path.exists(src):
+                os.symlink(os.path.abspath(src), f"{out_dir}/{t}.parquet")
+        _IDX_CACHE[(id(spark), out_dir)] = (idx, *idx.corpus_stats())
+        for name in entries:
+            sec, _ = _timed(lambda: CATALOG[name].fn(spark, out_dir).collect())
+            timings[name] = round(sec, 3)
+        del _IDX_CACHE[(id(spark), out_dir)]
     idx.postings.unpersist()
     idx.doclens.unpersist()
 
@@ -152,13 +170,17 @@ def _growth_decade(spark, docs, n_docs: int, tag: str, factor: int,
     ix = open_index(spark, phys_dir)
     sec, _ = _timed(lambda: ix.topk("spark join data", k=10).collect())
     timings["wand_bm25_3term"] = round(sec, 3)
+    if slop2:
+        sec, _ = _timed(
+            lambda: ix.phrase_topk("spark data", k=10, slop=2).collect())
+        timings["wand_phrase_slop2"] = round(sec, 3)
 
     for name, job in jobs:
         sec, _ = _timed(lambda: job(rdocs))
         timings[name] = round(sec, 3)
 
     stats[f"{tag}_n_docs"] = n
-    # docs/sec from the UNROUNDED seconds, same as the 10x decade
+    # docs/sec from the UNROUNDED build seconds
     stats[f"{tag}_docs_per_sec"] = round(n / build_sec, 1)
     stats[f"{tag}_phys_docs_per_sec"] = round(n / phys_sec, 1)
     shutil.rmtree(out_dir, ignore_errors=True)
@@ -351,59 +373,16 @@ def main() -> None:
     # replicated 10x with deterministic doc_id remapping (sf1-class, 50k
     # docs at the default sf0.1). Representative subset, single run each.
     # ------------------------------------------------------------------
-    sf1_dir = f"/tmp/solr_spark_bench_sf1_{os.getpid()}"
-    docs1, n1 = _replicate_docs(spark, docs, n_docs, 10, 64, sf1_dir)
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "embeddings"]:
-        src = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(src):
-            os.symlink(os.path.abspath(src), f"{sf1_dir}/{t}.parquet")
-
-    def _build1():
-        idx = build_index(docs1, id_col="doc_id", text_col="text",
-                          analyzer="simple")
-        _materialize_index(idx)
-        return idx
-
-    sf1_build_sec, idx1 = _timed(_build1)
-    n1_corpus, avgdl1 = idx1.corpus_stats()
-    _IDX_CACHE[(id(spark), sf1_dir)] = (idx1, n1_corpus, avgdl1)
-
-    timings_sf1: dict[str, float] = {}
-    for name, q in BM25_QUERIES[:2]:  # bm25_3term, bm25_window
-        terms = sorted(set(analyze(q, "simple")))
-        t0 = time.perf_counter()
-        bm25_topk(idx1, terms, k=10, quantize_norms=False).collect()
-        timings_sf1[name] = round(time.perf_counter() - t0, 3)
-    for name in ["facet_terms_source_matching", "collapse_by_source",
+    timings_sf1, sf1_stats = _growth_decade(
+        spark, docs, n_docs, "sf1", 10, 64, 32,
+        [("gopher_repetition_full", _gopher_job),
+         ("pack_chunks_full", _pack_job),
+         ("minhash_sigs_full", _minhash_job)],
+        bm25=BM25_QUERIES[:2], sf_dir=sf_dir,
+        entries=["facet_terms_source_matching", "collapse_by_source",
                  "significant_terms_spark", "terms_dictionary_top20",
-                 "phrase_adjacency", "phrase_slop", "edismax_pf"]:
-        t0 = time.perf_counter()
-        CATALOG[name].fn(spark, sf1_dir).collect()
-        timings_sf1[name] = round(time.perf_counter() - t0, 3)
-    for name, job in [("gopher_repetition_full", _gopher_job),
-                      ("pack_chunks_full", _pack_job),
-                      ("minhash_sigs_full", _minhash_job)]:
-        t0 = time.perf_counter()
-        job(docs1)
-        timings_sf1[name] = round(time.perf_counter() - t0, 3)
-    # physical build + WAND at 10x
-    phys1_dir = f"{sf1_dir}/phys"
-    t0 = time.perf_counter()
-    build_index_dir(docs1, phys1_dir, n_partitions=32, analyzer="simple",
-                    id_col="doc_id", text_col="text")
-    sf1_phys_build_sec = time.perf_counter() - t0
-    ix1 = open_index(spark, phys1_dir)
-    t0 = time.perf_counter()
-    ix1.topk("spark join data", k=10).collect()
-    timings_sf1["wand_bm25_3term"] = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    ix1.phrase_topk("spark data", k=10, slop=2).collect()
-    timings_sf1["wand_phrase_slop2"] = round(time.perf_counter() - t0, 3)
-    idx1.postings.unpersist()
-    idx1.doclens.unpersist()
-    del _IDX_CACHE[(id(spark), sf1_dir)]
-    shutil.rmtree(sf1_dir, ignore_errors=True)
+                 "phrase_adjacency", "phrase_slop", "edismax_pf"],
+        slop2=True)
 
     # ------------------------------------------------------------------
     # 100x growth-rate series (VERDICT r4 task #8): a SECOND decade —
@@ -453,11 +432,7 @@ def main() -> None:
                 "phys_docs_per_sec": round(n_docs / phys_build_sec, 1),
                 # 10x growth-rate series (single-run; see module docstring)
                 "queries_sf1": timings_sf1,
-                "sf1_n_docs": n1,
-                "sf1_index_build_sec": round(sf1_build_sec, 3),
-                "sf1_docs_per_sec": round(n1 / sf1_build_sec, 1),
-                "sf1_phys_build_sec": round(sf1_phys_build_sec, 3),
-                "sf1_phys_docs_per_sec": round(n1 / sf1_phys_build_sec, 1),
+                **sf1_stats,
                 # 100x growth-rate series (single-run second decade)
                 "queries_sf10": timings_sf10,
                 **sf10_stats,

@@ -13,4 +13,4 @@ from solr_spark.query.suggest import suggest, suggest_infix  # noqa: F401
 from solr_spark.query.thinparsers import (  # noqa: F401
     field_query, filters_query, nested_query,
 )
-from solr_spark.query.wand import open_index, wand_topk  # noqa: F401
+from solr_spark.query.wand import open_index  # noqa: F401

@@ -1100,26 +1100,3 @@ def open_index(spark: SparkSession, index_dir: str) -> PhysicalIndex:
         while len(_SEARCHERS) > SEARCHER_CACHE_MAX:
             _SEARCHERS.popitem(last=False)
     return cached
-
-
-def wand_topk(
-    spark: SparkSession,
-    index_dir: str,
-    query: str | list[str],
-    k: int = 10,
-    use_wand: bool = True,
-) -> DataFrame:
-    """Top-k (docid, score) from a physical index directory."""
-    return open_index(spark, index_dir).topk(query, k=k, use_wand=use_wand)
-
-
-def wand_phrase_topk(
-    spark: SparkSession,
-    index_dir: str,
-    phrase: str,
-    k: int = 10,
-    slop: int = 0,
-) -> DataFrame:
-    """Top-k phrase matches from a physical index directory."""
-    return open_index(spark, index_dir).phrase_topk(phrase, k=k, slop=slop)
-

@@ -60,7 +60,7 @@ def test_fuzzy_headroom_guard(spark):
     of the headroom raises; with enough headroom the oracle's order holds.
     Docs 103..100 quantize equal in falling raw order, so a raw top-12
     lacks doc 100, which the oracle ranks 10th."""
-    from solr_spark.entry_queries import _top10_over_headroom
+    from solr_spark.entry_queries.ranking import _top10_over_headroom
 
     rows = ([(i, 2.0 - i / 10) for i in range(9)]
             + [(103 - i, 1.00004 - i * 1e-5) for i in range(4)] + [(200, 0.5)])

@@ -24,7 +24,7 @@ from solr_spark.index.segments import (
     read_corpus_stats,
 )
 from solr_spark.query.bm25 import bm25_topk
-from solr_spark.query.wand import PhysicalIndex, wand_topk
+from solr_spark.query.wand import PhysicalIndex, open_index
 
 # "spark spark join": a repeated term is a separate clause (Lucene), so the
 # physical weight counts it twice, like the logical query_weights.
@@ -60,13 +60,13 @@ def _rows(df):
 @pytest.mark.parametrize("q", QUERIES)
 def test_wand_matches_dataframe(spark, idx_dir, logical, q):
     want = _rows(bm25_topk(logical, q.split(), k=10, quantize_norms=True))
-    got = _rows(wand_topk(spark, idx_dir, q, k=10))
+    got = _rows(open_index(spark, idx_dir).topk(q, k=10))
     assert got == want
 
 
 def test_wand_pruning_lossless(spark, idx_dir):
-    a = _rows(wand_topk(spark, idx_dir, "spark join data", k=10, use_wand=True))
-    b = _rows(wand_topk(spark, idx_dir, "spark join data", k=10, use_wand=False))
+    a = _rows(open_index(spark, idx_dir).topk("spark join data", k=10, use_wand=True))
+    b = _rows(open_index(spark, idx_dir).topk("spark join data", k=10, use_wand=False))
     assert a == b
 
 
@@ -75,8 +75,8 @@ def test_partition_count_invariance(spark, docs, idx_dir, tmp_path_factory):
     build_index_dir(docs, d1, n_partitions=1, analyzer="simple",
                     id_col="doc_id", text_col="text")
     for q in QUERIES[:2]:
-        assert _rows(wand_topk(spark, d1, q, k=10)) == _rows(
-            wand_topk(spark, idx_dir, q, k=10)
+        assert _rows(open_index(spark, d1).topk(q, k=10)) == _rows(
+            open_index(spark, idx_dir).topk(q, k=10)
         )
 
 
@@ -95,14 +95,14 @@ def test_merge_generations(spark, docs, idx_dir, tmp_path_factory):
                    "simple", 1, "doc_id", "text")
     finalize_index(spark, gen_dir, "simple")
     # Multi-gen index is queryable as-is...
-    want = _rows(wand_topk(spark, idx_dir, "spark join data", k=10))
-    assert _rows(wand_topk(spark, gen_dir, "spark join data", k=10)) == want
+    want = _rows(open_index(spark, idx_dir).topk("spark join data", k=10))
+    assert _rows(open_index(spark, gen_dir).topk("spark join data", k=10)) == want
     # ...and merging to one generation preserves results exactly.
     merged = str(tmp_path_factory.mktemp("idx") / "merged")
     stats = merge_index(spark, gen_dir, merged)
     assert stats["n_docs"] == 500
     assert stats["generations"] == [0]
-    assert _rows(wand_topk(spark, merged, "spark join data", k=10)) == want
+    assert _rows(open_index(spark, merged).topk("spark join data", k=10)) == want
     shutil.rmtree(gen_dir, ignore_errors=True)
 
 
@@ -168,10 +168,11 @@ def test_bucketed_build_equivalent(spark, docs, idx_dir, count_jobs,
     assert m["n_docs"].sum() == 500
     assert _stages(spark, jobs)[1] == 1
     laid_out.unpersist()
-    want = _rows(wand_topk(spark, idx_dir, "spark join data", k=10))
+    want = _rows(open_index(spark, idx_dir).topk("spark join data", k=10))
     for d in ("laid", "shuffled"):
         finalize_index(spark, str(base / d), "simple")
-        assert _rows(wand_topk(spark, str(base / d), "spark join data", k=10)) == want
+        got = open_index(spark, str(base / d)).topk("spark join data", k=10)
+        assert _rows(got) == want
 
 
 def test_open_no_full_dictionary_collect(spark, idx_dir):
@@ -275,7 +276,8 @@ def test_topk_tie_break_at_boundary(spark, tmp_path_factory):
     corpus = spark.createDataFrame(rows, "doc_id long, text string")
     build_index_dir(corpus, d, n_partitions=1, analyzer="simple",
                     id_col="doc_id", text_col="text")
-    got = [int(r.docid) for r in wand_topk(spark, d, "alpha beta", k=10).collect()]
+    top = open_index(spark, d).topk("alpha beta", k=10)
+    got = [int(r.docid) for r in top.collect()]
     assert got == list(range(10))
 
 
@@ -355,18 +357,15 @@ def test_wand_phrase_matches_dataframe(spark, idx_dir, logical, q, slop):
     """Physical phrase path must be rank- AND score-identical to the logical
     positions-join path (quantized norms on both)."""
     from solr_spark.query.phrase import phrase_topk
-    from solr_spark.query.wand import wand_phrase_topk
 
     want = _rows(phrase_topk(logical, q, k=10, slop=slop, quantize_norms=True))
-    got = _rows(wand_phrase_topk(spark, idx_dir, q, k=10, slop=slop))
+    got = _rows(open_index(spark, idx_dir).phrase_topk(q, k=10, slop=slop))
     assert got == want and got  # non-empty
 
 
 def test_merge_preserves_positions(spark, docs, tmp_path_factory):
     """Positions survive a generation merge: phrase results over the merged
     index equal those over the multi-generation index."""
-    from solr_spark.query.wand import wand_phrase_topk
-
     d = str(tmp_path_factory.mktemp("mergepos") / "multi")
     m = str(tmp_path_factory.mktemp("mergepos") / "merged")
     build_segments(docs.where(F.col("doc_id") % 2 == 0), d, n_partitions=4,
@@ -377,22 +376,20 @@ def test_merge_preserves_positions(spark, docs, tmp_path_factory):
                    generation=1)
     finalize_index(spark, d, analyzer="simple")
     merge_index(spark, d, m)
-    a = _rows(wand_phrase_topk(spark, d, "spark join", k=10))
-    bb = _rows(wand_phrase_topk(spark, m, "spark join", k=10))
+    a = _rows(open_index(spark, d).phrase_topk("spark join", k=10))
+    bb = _rows(open_index(spark, m).phrase_topk("spark join", k=10))
     assert a == bb and a
 
 
 def test_phrase_partition_count_invariance(spark, docs, idx_dir, tmp_path_factory):
     """Phrase results must be rank- and score-identical at 1 vs 8 segment
     partitions (the distributed-vs-control oracle, phrase edition)."""
-    from solr_spark.query.wand import wand_phrase_topk
-
     d1 = str(tmp_path_factory.mktemp("ph1") / "phys")
     build_index_dir(docs, d1, n_partitions=1, analyzer="simple",
                     id_col="doc_id", text_col="text")
     for q, slop in [("spark join", 0), ("spark join", 2)]:
-        a = _rows(wand_phrase_topk(spark, d1, q, k=10, slop=slop))
-        b = _rows(wand_phrase_topk(spark, idx_dir, q, k=10, slop=slop))
+        a = _rows(open_index(spark, d1).phrase_topk(q, k=10, slop=slop))
+        b = _rows(open_index(spark, idx_dir).phrase_topk(q, k=10, slop=slop))
         assert a == b and a
 
 

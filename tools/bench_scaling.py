@@ -162,7 +162,7 @@ sys.path.insert(0, os.environ["REPO"])
 from pyspark.sql import functions as F
 from solr_spark.session import get_spark
 from solr_spark.index.segments import build_index_dir
-from solr_spark.query.wand import wand_topk
+from solr_spark.query.wand import open_index
 
 cpus = int(os.environ["CPUS"])
 repeat = int(os.environ["REPEAT"])
@@ -232,7 +232,7 @@ lat = []
 results_sig = []
 for q in queries:
     t0 = time.perf_counter()
-    rows = wand_topk(spark, out, q, k=10).collect()
+    rows = open_index(spark, out).topk(q, k=10).collect()
     lat.append(time.perf_counter() - t0)
     results_sig.append([(r.docid, round(r.score, 6)) for r in rows])
 lat_sorted = sorted(lat)

@@ -48,7 +48,7 @@ def main() -> None:
         finalize_index,
         partition_col,
     )
-    from solr_spark.query.wand import wand_topk
+    from solr_spark.query.wand import open_index
     from solr_spark.session import get_spark
 
     spark = get_spark(app_name="submit_index_job")
@@ -88,7 +88,7 @@ def main() -> None:
     sigs, lat = [], []
     for _, q in REFERENCE_QUERIES:
         t0 = time.perf_counter()
-        rows = wand_topk(spark, args.out, q, k=10).collect()
+        rows = open_index(spark, args.out).topk(q, k=10).collect()
         lat.append(time.perf_counter() - t0)
         sigs.append([(r.docid, round(r.score, 6)) for r in rows])
     lat.sort()
