@@ -44,8 +44,18 @@ driver when the snapshot has at most DRIVER_MAX_SEGMENT_FILES segment files,
 its scan terms' global dfs sum to at most DRIVER_MAX_POSTINGS, and it has no
 ``prefix*`` clause (whose postings volume is unknown without a dictionary
 scan). Empty results (stopword-only or absent-term queries) are
-LocalRelations too. A fuzzy clause still launches its ``fuzzy_candidates``
-probe job over term_stats.
+LocalRelations too (one shared no-hits frame per searcher). A fuzzy clause
+still launches its ``fuzzy_candidates`` probe job over term_stats.
+
+Each searcher keeps a bounded LRU of its driver executor's results, as
+Solr's per-searcher queryResultCache (SolrIndexSearcher.getDocListC): the
+key is the compiled query (the folded term weights, the boolean tree, the
+phrase's terms, offsets, slop and weight, the payload function and term)
+plus k, so two strings that analyze alike share an entry. A repeat returns
+the same LocalRelation: no scoring and no new DataFrame. Results of more
+than RESULT_CACHE_MAX_ROWS rows and Spark executor results are not kept.
+The cache dies with the searcher, so a reopen after a commit starts empty
+(autowarmCount=0); ``cache_stats()`` reports it without a Spark job.
 
 Per partition, the BM25 query kinds share one per-segment top-k path
 (``_segment_topk``): each segment's postings rows go to the kind's own
@@ -146,6 +156,12 @@ _NO_HITS = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
 # options, as spark.sql.autoBroadcastJoinThreshold is a fixed default.
 DRIVER_MAX_SEGMENT_FILES = 32
 DRIVER_MAX_POSTINGS = 65_536
+# The result cache's bounds (PhysicalIndex._topk): Solr's default
+# queryResultMaxDocsCached, and entries per searcher. One entry held ~33 KiB
+# of JVM heap at k=10 and ~66 KiB at k=200, so SEARCHER_CACHE_MAX full
+# searchers stay under ~70 MiB.
+RESULT_CACHE_MAX_ROWS = 200
+RESULT_CACHE_MAX_ENTRIES = 128
 
 
 def _contrib(tf, dl, k1: float, b: float, avgdl: float):
@@ -713,7 +729,8 @@ class PhysicalIndex:
     is seen after a reopen, which ``open_index`` decides from the commit
     token. Each query runs over the snapshot on one of two executors,
     chosen by its size (``_topk``; module docstring): a driver loop whose
-    result launches no Spark job, or one Spark job of one stage.
+    result launches no Spark job, or one Spark job of one stage. Driver
+    results are kept in the searcher's result cache (``cache_stats``).
     """
 
     # Driver-side per-term df cache cap. Query workloads touch a tiny,
@@ -735,6 +752,17 @@ class PhysicalIndex:
         # (negative caching avoids re-reading for repeated OOV query terms).
         # Insertion-ordered dict doubles as the LRU eviction order.
         self._term_df_cache: dict[str, int | None] = {}
+        # compiled query key -> driver result, least recently used first.
+        self._results: OrderedDict[tuple, DataFrame] = OrderedDict()
+        self._result_counts = dict.fromkeys(
+            ("lookups", "hits", "inserts", "evictions"), 0)
+        self._results_lock = threading.Lock()
+
+    def cache_stats(self) -> dict[str, int]:
+        """The result cache's lookups, hits, inserts, evictions and size
+        (driver results only): no Spark job."""
+        with self._results_lock:
+            return {**self._result_counts, "size": len(self._results)}
 
     @cached_property
     def _term_stats(self) -> DataFrame:
@@ -782,13 +810,14 @@ class PhysicalIndex:
         dfs = self._df_for_terms(sorted(set(terms)))
         weights = dict(fold_term_weights(terms, dfs, n))
         if not weights or n == 0:
-            return self._empty()
+            return self._no_hits
 
         def score_gen(pg: list[dict]) -> tuple[np.ndarray, np.ndarray]:
             return _term_scores(pg, weights, k, k1, b, avgdl, use_wand)
 
         return self._topk(
-            _SCORE_COLS, list(weights), [], k, partial(_segment_topk, score_gen, k)
+            _SCORE_COLS, list(weights), [], k, partial(_segment_topk, score_gen, k),
+            ("topk", tuple(weights.items()), use_wand),
         )
 
     def _compile_flat(self, parsed, n: int) -> dict:
@@ -906,7 +935,7 @@ class PhysicalIndex:
         stats = self.stats
         k1, b, avgdl, n = stats["k1"], stats["b"], stats["avgdl"], stats["n_docs"]
         if n == 0:
-            return self._empty()
+            return self._no_hits
 
         def compile_node(q: str) -> dict:
             if "(" in q:
@@ -937,14 +966,14 @@ class PhysicalIndex:
 
         gather(root)
         if not scan_terms and not scan_prefixes:
-            return self._empty()
+            return self._no_hits
 
         def score_gen(pg: list[dict]) -> tuple[np.ndarray, np.ndarray]:
             return _tree_scores(pg, root, k1, b, avgdl)
 
         return self._topk(
             _SCORE_COLS, sorted(scan_terms), sorted(scan_prefixes), k,
-            partial(_segment_topk, score_gen, k),
+            partial(_segment_topk, score_gen, k), ("search", repr(root)),
         )
 
     def phrase_topk(self, phrase: str, k: int = 10, slop: int = 0) -> DataFrame:
@@ -960,14 +989,14 @@ class PhysicalIndex:
         k1, b, avgdl, n = stats["k1"], stats["b"], stats["avgdl"], stats["n_docs"]
         tp = analyze_pos(phrase, stats["analyzer"])
         if not tp or n == 0:
-            return self._empty()
+            return self._no_hits
         terms = [t for t, _ in tp]
         offsets = [p - tp[0][1] for _, p in tp]
         if len(terms) == 1:
             slop = 0
         dfs = self._df_for_terms(sorted(set(terms)))
         if any(t not in dfs for t in terms):
-            return self._empty()
+            return self._no_hits
         w = sum(idf(n, dfs[t]) for t in terms)
 
         def score_gen(pg: list[dict]) -> tuple[np.ndarray, np.ndarray]:
@@ -976,6 +1005,7 @@ class PhysicalIndex:
         return self._topk(
             _PHRASE_COLS, sorted(set(terms)), [], k,
             partial(_segment_topk, score_gen, k),
+            ("phrase", tuple(terms), tuple(offsets), slop, w),
         )
 
     def payload_topk(self, term: str, func: str = "max", k: int = 10) -> DataFrame:
@@ -998,12 +1028,16 @@ class PhysicalIndex:
             )
         t = term.lower()
         if not t or not self._df_for_terms([t]):
-            return self._empty()
+            return self._no_hits
         return self._topk(
-            _PAYLOAD_COLS, [t], [], k, partial(_payload_partition, func, k)
+            _PAYLOAD_COLS, [t], [], k, partial(_payload_partition, func, k),
+            ("payload", func, t),
         )
 
-    def _empty(self) -> DataFrame:
+    @cached_property
+    def _no_hits(self) -> DataFrame:
+        """The searcher's one empty result, shared by every query that
+        matches nothing before scoring."""
         return self._local_result(*_NO_HITS)
 
     def _local_result(self, docids: np.ndarray, scores: np.ndarray) -> DataFrame:
@@ -1034,6 +1068,7 @@ class PhysicalIndex:
         prefixes: list[str],
         k: int,
         partition,
+        key: tuple,
     ) -> DataFrame:
         """Every physical query's execution: per snapshot partition p, run
         ``partition(read, readers)`` over the ``SegmentReader``s of p's
@@ -1043,7 +1078,9 @@ class PhysicalIndex:
         the partitions in a driver loop and return a LocalRelation, no Spark
         job; the rest run as one job of one stage (``per_partition``, then
         TakeOrderedAndProject). Either way the readers come from the
-        running process's reader cache (``_reader``)."""
+        running process's reader cache (``_reader``). A driver result of at
+        most RESULT_CACHE_MAX_ROWS rows is kept under (``key``, k), and a
+        repeat of the key returns it unscored."""
         index_dir, segments = self.index_dir, self.segments
 
         def read(reader: SegmentReader) -> list[dict]:
@@ -1056,10 +1093,27 @@ class PhysicalIndex:
             ])
 
         if self._on_driver(terms, prefixes):
+            key = (key, k)
+            with self._results_lock:
+                self._result_counts["lookups"] += 1
+                hit = self._results.get(key)
+                if hit is not None:
+                    self._result_counts["hits"] += 1
+                    self._results.move_to_end(key)
+                    return hit
             out = pa.concat_tables(score(p) for p in sorted(segments))
             docids, scores = out["docid"].to_numpy(), out["score"].to_numpy()
             order = np.lexsort((docids, -scores))[:k]
-            return self._local_result(docids[order], scores[order])
+            result = self._local_result(docids[order], scores[order])
+            if order.size <= RESULT_CACHE_MAX_ROWS:
+                with self._results_lock:
+                    if key not in self._results:  # a concurrent miss kept it
+                        self._result_counts["inserts"] += 1
+                        self._results[key] = result
+                    while len(self._results) > RESULT_CACHE_MAX_ENTRIES:
+                        self._results.popitem(last=False)
+                        self._result_counts["evictions"] += 1
+            return result
         scored = per_partition(self.spark, sorted(segments), score, _RESULT_SCHEMA)
         return scored.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
 
