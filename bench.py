@@ -363,8 +363,13 @@ def main() -> None:
     timings["wand_phrase3_slop2"] = best_of(
         lambda: fresh().phrase_topk("spark data table", k=10, slop=2).collect()
     )
+    # The same query composed by Spark: the limit hands the driver's rows
+    # to the JVM (createDataFrame of its Arrow table) before the collect.
+    timings["wand_bm25_3term_jvm"] = best_of(
+        lambda: fresh().topk(BM25_QUERIES[0][1], k=10).limit(10).collect()
+    )
     # A repeat on one searcher: its result cache returns the first run's
-    # LocalRelation, so this times the collect alone.
+    # result object, so this times the local collect alone.
     ix = fresh()
     ix.topk(BM25_QUERIES[0][1], k=10).collect()
     timings["wand_bm25_3term_cached"] = best_of(

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from solr_spark.index.build import IndexTables
+from solr_spark.query.driver_result import empty_result
 
 K1_DEFAULT = 1.2
 B_DEFAULT = 0.75
@@ -158,7 +159,7 @@ def bm25_score_df(
     n_docs, avgdl = index.corpus_stats()
     weights = query_weights(index, terms, n_docs)
     if not weights or n_docs == 0:
-        return spark.createDataFrame([], "docid string, score double")
+        return empty_result(spark, "docid string, score double")
 
     wmap = weight_map_col(weights)
     dl_col = F.col("dl_quant") if quantize_norms else F.col("dl")
@@ -216,8 +217,8 @@ def explain_score(
     n_docs, avgdl = index.corpus_stats()
     weights = query_weights(index, terms, n_docs)
     if not weights or n_docs == 0:
-        return spark.createDataFrame(
-            [], "docid string, term string, tf long, df long, "
+        return empty_result(
+            spark, "docid string, term string, tf long, df long, "
             "idf double, contrib double"
         )
     wmap = weight_map_col(weights)

@@ -31,6 +31,7 @@ from solr_spark.query.bm25 import (
     tf_saturation,
     weight_map_col,
 )
+from solr_spark.query.driver_result import empty_result
 
 
 def build_multi_index(
@@ -75,7 +76,7 @@ def dismax_score_df(
     spark = some_index.postings.sparkSession
     analyzer = some_index.analyzer
     terms = sorted(set(analyze(query, analyzer)))
-    empty = spark.createDataFrame([], "docid long, score double")
+    empty = empty_result(spark, "docid long, score double")
     if not terms:
         return empty
 

@@ -36,6 +36,7 @@ from solr_spark.analysis.chain import analyze, analyze_pos
 from solr_spark.index.build import IndexTables
 from solr_spark.query.bm25 import B_DEFAULT, K1_DEFAULT, idf, tf_saturation
 from solr_spark.query.dismax import dismax_score_df
+from solr_spark.query.driver_result import empty_result
 from solr_spark.query.phrase import phrase_score_df, phrase_tf_col
 
 
@@ -148,7 +149,7 @@ def edismax_search(
     # dirty@2, not an adjacent bigram) — same rule as the parser's quoted
     # phrases (ExtendedDismaxQParser.addShingledPhraseQueries).
     terms_pos = analyze_pos(query, analyzer)
-    empty = spark.createDataFrame([], "docid long, score double")
+    empty = empty_result(spark, "docid long, score double")
     if not terms:
         return empty
 

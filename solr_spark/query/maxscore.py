@@ -26,6 +26,7 @@ from solr_spark.query.bm25 import (
     tf_saturation,
     weight_map_col,
 )
+from solr_spark.query.driver_result import empty_result
 
 
 def maxscore_search(
@@ -42,7 +43,7 @@ def maxscore_search(
     spark = index.postings.sparkSession
     n_docs, avgdl = index.corpus_stats()
     terms = sorted(set(analyze(query, index.analyzer)))
-    empty = spark.createDataFrame([], "docid long, score double")
+    empty = empty_result(spark, "docid long, score double")
     if not terms or n_docs == 0:
         return empty
     stats = {

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from solr_spark.index.build import IndexTables
 from solr_spark.query.bm25 import bm25_score_df, idf
+from solr_spark.query.driver_result import empty_result
 
 
 def interesting_terms(
@@ -65,7 +66,7 @@ def more_like_this(
         )
     ]
     if not terms:
-        return spark.createDataFrame([], "docid long, score double")
+        return empty_result(spark, "docid long, score double")
     scored = bm25_score_df(index, terms, quantize_norms=False)
     return (
         scored.where(F.col("docid") != F.lit(docid))

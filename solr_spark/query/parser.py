@@ -48,6 +48,7 @@ from solr_spark.query.bm25 import (
     tf_saturation,
     weight_map_col,
 )
+from solr_spark.query.driver_result import empty_result
 
 # --- lexer ------------------------------------------------------------------
 
@@ -356,7 +357,7 @@ def search(
     '+a +(b)'), matching Lucene's coord-less BooleanQuery conjunction.
     """
     spark = index.postings.sparkSession
-    empty = spark.createDataFrame([], "docid long, score double")
+    empty = empty_result(spark, "docid long, score double")
 
     if _parsed is None and "(" in query:
         import dataclasses

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from solr_spark.index.build import IndexTables
 from solr_spark.query.bm25 import B_DEFAULT, K1_DEFAULT, idf, tf_saturation
+from solr_spark.query.driver_result import empty_result
 
 
 def phrase_tf_col(
@@ -222,7 +223,7 @@ def phrase_score_df(
             .collect()
         }
     if n_docs == 0 or any(t not in stats for t in terms):
-        return spark.createDataFrame([], "docid long, score double")
+        return empty_result(spark, "docid long, score double")
     w = boost * sum(idf(n_docs, stats[t]) for t in terms)
     dl_col = F.col("dl_quant") if quantize_norms else F.col("dl")
     return (
@@ -324,7 +325,7 @@ def complex_phrase_topk(
     the union df — conservative, cheap, and oracle-reproducible).
     """
     spark = index.postings.sparkSession
-    empty = spark.createDataFrame([], "docid long, score double")
+    empty = empty_result(spark, "docid long, score double")
     raw = phrase.split()
     slots: list[str | list[str]] = []
     tstats = index.term_stats()
@@ -398,7 +399,7 @@ def phrase_topk(
     tp = analyze_pos(phrase, index.analyzer)
     spark = index.postings.sparkSession
     if not tp:
-        return spark.createDataFrame([], "docid long, score double")
+        return empty_result(spark, "docid long, score double")
     terms = [t for t, _ in tp]
     offsets = [p - tp[0][1] for _, p in tp]
     scored = phrase_score_df(

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from solr_spark.analysis.chain import analyze
 from solr_spark.index.build import IndexTables
+from solr_spark.query.driver_result import empty_result
 
 
 def phrases_identification(
@@ -60,8 +61,8 @@ def phrases_identification(
     spark = idx.postings.sparkSession
     toks = analyze(query, analyzer)
     if not toks:
-        return spark.createDataFrame(
-            [], "phrase string, pos_start int, pos_end int, score double"
+        return empty_result(
+            spark, "phrase string, pos_start int, pos_end int, score double"
         )
 
     terms = sorted(set(toks))

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 
 from solr_spark.index.build import IndexTables
 from solr_spark.query.bm25 import B_DEFAULT, K1_DEFAULT
+from solr_spark.query.driver_result import empty_result
 from solr_spark.query.parser import search
 
 _SPECIALS = set('+|-"()\\')
@@ -173,5 +174,5 @@ def simple_query(
     lowered = simple_to_lucene(q, default_operator)
     spark = index.postings.sparkSession
     if not lowered:
-        return spark.createDataFrame([], "docid long, score double")
+        return empty_result(spark, "docid long, score double")
     return search(index, lowered, k=k, k1=k1, b=b)

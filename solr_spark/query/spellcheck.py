@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from solr_spark.index.build import IndexTables
+from solr_spark.query.driver_result import empty_result
 
 
 def spellcheck(
@@ -65,8 +66,8 @@ def wordbreak_split(
     spark = index.postings.sparkSession
     w = word.lower()
     if len(w) < 2:
-        return spark.createDataFrame(
-            [], "left string, right string, df_left long, df_right long"
+        return empty_result(
+            spark, "left string, right string, df_left long, df_right long"
         )
     splits = spark.createDataFrame(
         [(w[:i], w[i:]) for i in range(1, len(w))], ["left", "right"]
@@ -99,8 +100,8 @@ def wordbreak_combine(
         for i in range(len(words) - 1)
     ]
     if not pairs:
-        return spark.createDataFrame(
-            [], "left string, right string, combined string, df long"
+        return empty_result(
+            spark, "left string, right string, combined string, df long"
         )
     pdf = spark.createDataFrame(pairs, ["left", "right", "combined"])
     t = index.term_stats().where(F.col("df") >= min_df).select(
@@ -148,7 +149,7 @@ def collate(
         if index.term_stats().where(F.col("term") == w.lower()).limit(1).count():
             cands.insert(0, w.lower())
         if not cands:
-            return spark.createDataFrame([], "collation string, hits long")
+            return empty_result(spark, "collation string, hits long")
         cand_lists.append(cands)
 
     combos = [

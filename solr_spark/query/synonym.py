@@ -26,6 +26,7 @@ from solr_spark.analysis.chain import analyze
 from solr_spark.analysis.synonyms import SynonymRules, expand_spans
 from solr_spark.index.build import IndexTables
 from solr_spark.query.bm25 import B_DEFAULT, K1_DEFAULT, idf, tf_saturation
+from solr_spark.query.driver_result import empty_result
 
 
 def synonym_search(
@@ -42,7 +43,7 @@ def synonym_search(
     from solr_spark.query.phrase import phrase_score_df
 
     spark = index.postings.sparkSession
-    empty = spark.createDataFrame([], "docid long, score double")
+    empty = empty_result(spark, "docid long, score double")
     toks = analyze(query, index.analyzer)
     if not toks:
         return empty

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from solr_spark.analysis.chain import analyze
 from solr_spark.index.build import IndexTables
+from solr_spark.query.driver_result import empty_result
 from solr_spark.query.parser import search
 
 
@@ -46,7 +47,7 @@ def field_query(
     toks = analyze(value, analyzer)
     if not toks:
         spark = index.postings.sparkSession
-        return spark.createDataFrame([], "docid long, score double")
+        return empty_result(spark, "docid long, score double")
     if len(toks) == 1:
         return search(index, toks[0], k=k)
     quoted = '"' + " ".join(toks) + '"'

@@ -29,10 +29,12 @@ The global merge keeps the top k by (score desc, docid asc). Two executors
 run that same function (``PhysicalIndex._topk``):
 
 - Driver executor: a driver loop over the partitions, the top-k cut in
-  numpy, and the result handed back as a LocalRelation, so collecting it
-  launches NO Spark job -- as Solr serves a shard's query in-process
-  (SolrIndexSearcher), and as Spark's ConvertToLocalRelation runs small
-  plans on the driver.
+  numpy, and the result handed back as the Arrow table it already is
+  (``driver_result.DriverResult``): collect, toArrow and toPandas read the
+  table with no JVM call and NO Spark job -- as Solr serves a shard's
+  query in-process (SolrIndexSearcher). Spark sees the rows, as a
+  LocalRelation, only when a caller composes the result (join, orderBy,
+  limit, write, ...).
 - Spark executor: ONE job of ONE stage, Range -> MapInArrow ->
   TakeOrderedAndProject. The Range holds one row per partition and is split
   into min(P, defaultParallelism) tasks (segments.per_partition); the merge
@@ -43,8 +45,8 @@ The choice uses only what the searcher already holds: a query runs on the
 driver when the snapshot has at most DRIVER_MAX_SEGMENT_FILES segment files,
 its scan terms' global dfs sum to at most DRIVER_MAX_POSTINGS, and it has no
 ``prefix*`` clause (whose postings volume is unknown without a dictionary
-scan). Empty results (stopword-only or absent-term queries) are
-LocalRelations too (one shared no-hits frame per searcher). A fuzzy clause
+scan). Empty results (stopword-only or absent-term queries) are driver
+results too (one shared no-hits result per searcher). A fuzzy clause
 still launches its ``fuzzy_candidates`` probe job over term_stats.
 
 Each searcher keeps a bounded LRU of its driver executor's results, as
@@ -52,7 +54,7 @@ Solr's per-searcher queryResultCache (SolrIndexSearcher.getDocListC): the
 key is the compiled query (the folded term weights, the boolean tree, the
 phrase's terms, offsets, slop and weight, the payload function and term)
 plus k, so two strings that analyze alike share an entry. A repeat returns
-the same LocalRelation: no scoring and no new DataFrame. Results of more
+the same driver result: no scoring and no new DataFrame. Results of more
 than RESULT_CACHE_MAX_ROWS rows and Spark executor results are not kept.
 The cache dies with the searcher, so a reopen after a commit starts empty
 (autowarmCount=0); ``cache_stats()`` reports it without a Spark job.
@@ -132,6 +134,7 @@ from solr_spark.index.segments import (
     _seg_dir, _term_stats_file, per_partition, read_corpus_stats,
 )
 from solr_spark.query.bm25 import fold_term_weights, idf
+from solr_spark.query.driver_result import DriverResult
 
 _RESULT_SCHEMA = pa.schema([("docid", pa.int64()), ("score", pa.float64())])
 # Postings columns each query kind reads (parquet column pruning: only
@@ -157,9 +160,10 @@ _NO_HITS = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
 DRIVER_MAX_SEGMENT_FILES = 32
 DRIVER_MAX_POSTINGS = 65_536
 # The result cache's bounds (PhysicalIndex._topk): Solr's default
-# queryResultMaxDocsCached, and entries per searcher. One entry held ~33 KiB
-# of JVM heap at k=10 and ~66 KiB at k=200, so SEARCHER_CACHE_MAX full
-# searchers stay under ~70 MiB.
+# queryResultMaxDocsCached, and entries per searcher. An entry holds its
+# Arrow table (16 bytes a row) and, once a caller composes it, its JVM
+# frame: ~33 KiB of JVM heap at k=10 and ~66 KiB at k=200, so
+# SEARCHER_CACHE_MAX full searchers stay under ~70 MiB.
 RESULT_CACHE_MAX_ROWS = 200
 RESULT_CACHE_MAX_ENTRIES = 128
 
@@ -307,7 +311,7 @@ def _reader(cls, path: str):
 
 def _result(docids: np.ndarray, scores: np.ndarray) -> pa.Table:
     """(docid, score) rows as the result table: a partition's output, the
-    driver executor's cut and the LocalRelation all take this shape."""
+    driver executor's cut and the driver result all take this shape."""
     return pa.Table.from_arrays(
         [pa.array(docids, pa.int64()), pa.array(scores, pa.float64())],
         schema=_RESULT_SCHEMA,
@@ -1038,15 +1042,7 @@ class PhysicalIndex:
     def _no_hits(self) -> DataFrame:
         """The searcher's one empty result, shared by every query that
         matches nothing before scoring."""
-        return self._local_result(*_NO_HITS)
-
-    def _local_result(self, docids: np.ndarray, scores: np.ndarray) -> DataFrame:
-        """A result the driver already holds, as a LocalRelation: collecting
-        it launches no Spark job. A pyarrow Table, not a pandas frame: an
-        empty pandas frame takes the RDD path (one job), and the pandas path
-        depends on the session's Arrow conf. Spark takes the schema from
-        the table's own."""
-        return self.spark.createDataFrame(_result(docids, scores))
+        return DriverResult(self.spark, _result(*_NO_HITS))
 
     def _on_driver(self, terms: list[str], prefixes: list[str]) -> bool:
         """The executor choice, from what the searcher already holds: the
@@ -1075,9 +1071,9 @@ class PhysicalIndex:
         committed segments, where ``read(reader)`` gives a segment's
         postings ``columns`` rows for ``terms``/``prefixes``; then keep the
         top k by (score desc, docid asc). Small queries (``_on_driver``) run
-        the partitions in a driver loop and return a LocalRelation, no Spark
-        job; the rest run as one job of one stage (``per_partition``, then
-        TakeOrderedAndProject). Either way the readers come from the
+        the partitions in a driver loop and return a ``DriverResult``, no
+        Spark job; the rest run as one job of one stage (``per_partition``,
+        then TakeOrderedAndProject). Either way the readers come from the
         running process's reader cache (``_reader``). A driver result of at
         most RESULT_CACHE_MAX_ROWS rows is kept under (``key``, k), and a
         repeat of the key returns it unscored."""
@@ -1104,7 +1100,8 @@ class PhysicalIndex:
             out = pa.concat_tables(score(p) for p in sorted(segments))
             docids, scores = out["docid"].to_numpy(), out["score"].to_numpy()
             order = np.lexsort((docids, -scores))[:k]
-            result = self._local_result(docids[order], scores[order])
+            result = DriverResult(
+                self.spark, _result(docids[order], scores[order]))
             if order.size <= RESULT_CACHE_MAX_ROWS:
                 with self._results_lock:
                     if key not in self._results:  # a concurrent miss kept it

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from solr_spark.analysis.chain import analyze
 from solr_spark.index.build import IndexTables
 from solr_spark.query.bm25 import B_DEFAULT, K1_DEFAULT
+from solr_spark.query.driver_result import empty_result
 
 
 def _const(df: DataFrame, score: float) -> DataFrame:
@@ -229,7 +230,7 @@ class _Compiler:
 
     def _empty(self) -> DataFrame:
         spark = self.index.postings.sparkSession
-        return spark.createDataFrame([], "docid long, score double")
+        return empty_result(spark, "docid long, score double")
 
 
 def xml_query(

@@ -49,6 +49,20 @@ def count_jobs(spark):
 
 
 @pytest.fixture
+def created(spark, monkeypatch):
+    """A spy on SparkSession.createDataFrame: ``created[0]`` counts calls."""
+    n = [0]
+    real = type(spark).createDataFrame
+
+    def spy(self, *args, **kwargs):
+        n[0] += 1
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(spark), "createDataFrame", spy)
+    return n
+
+
+@pytest.fixture
 def spark_executor(monkeypatch):
     """Force every physical query (query.wand) onto the one-job Spark
     executor, whatever the index and query size."""

@@ -1,8 +1,9 @@
 """The physical searcher's two executors (query.wand ``PhysicalIndex._topk``).
 
 Below the size threshold a query's per-partition closures run in a driver
-loop and the result is a LocalRelation, so collecting it launches no Spark
-job; above it the query is one job of one stage. Both run the same
+loop and the result is a ``DriverResult`` over the driver's Arrow table, so
+collecting it launches no Spark job (and composing it builds a
+LocalRelation, no job either); above it the query is one job of one stage. Both run the same
 per-partition function under the same (score desc, docid asc) order, so the
 (docid, score) lists must be float.hex-equal on every index shape: 1, 4 and
 32 partitions, two generations and their merge, payloads, and the code

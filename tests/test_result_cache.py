@@ -2,7 +2,7 @@
 
 A driver-executed result is kept per searcher, keyed by the compiled query
 and k, as Solr's per-searcher queryResultCache. A repeat returns the same
-LocalRelation: float.hex-identical to a fresh searcher's answer, with no
+driver result: float.hex-identical to a fresh searcher's answer, with no
 Spark job and no new DataFrame. Spark-executor results and results of more
 than RESULT_CACHE_MAX_ROWS rows are neither kept nor served, and a searcher
 reopened after a commit starts with an empty cache.
@@ -54,20 +54,6 @@ def pay_dir(spark, tmp_path_factory):
     build_index_dir(_docs(spark, rows), d, n_partitions=2,
                     analyzer="delimited_payload", id_col="docid", text_col="text")
     return d
-
-
-@pytest.fixture
-def created(spark, monkeypatch):
-    """A spy on SparkSession.createDataFrame: ``created[0]`` counts calls."""
-    n = [0]
-    real = type(spark).createDataFrame
-
-    def spy(self, *args, **kwargs):
-        n[0] += 1
-        return real(self, *args, **kwargs)
-
-    monkeypatch.setattr(type(spark), "createDataFrame", spy)
-    return n
 
 
 CALLS = [
@@ -189,11 +175,14 @@ def test_spark_results_and_large_results_are_not_cached(spark, sf_dir, count_job
     assert ix.cache_stats() == dict(lookups=1, hits=0, inserts=1, evictions=0,
                                     size=1)
 
+    # Two distinct results, neither handed to the JVM until composed.
     n = created[0]
     big = [ix.topk("table", k=300) for _ in range(2)]
-    assert big[0] is not big[1] and created[0] == n + 2
+    assert big[0] is not big[1] and created[0] == n
     rows = [_hex(df.collect()) for df in big]
     assert len(rows[0]) > wand.RESULT_CACHE_MAX_ROWS and rows[0] == rows[1]
+    assert created[0] == n
+    assert _hex(big[0].limit(300).collect()) == rows[0] and created[0] == n + 1
     assert ix.cache_stats() == dict(lookups=3, hits=0, inserts=1, evictions=0,
                                     size=1)
 

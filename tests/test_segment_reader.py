@@ -163,19 +163,16 @@ def test_stale_reader_never_served(spark, tmp_path, fresh_readers):
     got = {"topk": _hex(ix.topk("alpha delta", k=10).collect()),
            "phrase": _hex(ix.phrase_topk("alpha delta", k=10).collect())}
 
-    # A fresh process, with no cached reader: the driver executor's result
-    # as its Arrow table, no Spark session.
+    # A fresh process, with no cached reader and no Spark session: the
+    # driver executor's result read as its Arrow table.
     script = f"""
 import json, sys
 sys.path.insert(0, {ROOT!r})
 from solr_spark.query.wand import PhysicalIndex
 
-class Local:
-    def createDataFrame(self, table):
-        return table
-
-ix = PhysicalIndex(Local(), {idx!r})
-hexed = lambda t: [[r["docid"], float(r["score"]).hex()] for r in t.to_pylist()]
+ix = PhysicalIndex(object(), {idx!r})
+hexed = lambda df: [[r["docid"], float(r["score"]).hex()]
+                    for r in df.toArrow().to_pylist()]
 print(json.dumps({{"topk": hexed(ix.topk("alpha delta", k=10)),
                   "phrase": hexed(ix.phrase_topk("alpha delta", k=10))}}))
 """
